@@ -1064,28 +1064,6 @@ object Handlers {
       Iterator.single(Row(value)), _ => "SHOW")
   }
 
-  /** Result schema of a SHOW statement without executing it — used by
-    * extended-protocol Describe so clients get a RowDescription instead
-    * of NoData followed by surprise DataRows.
-    */
-  def showSchema(session: Session, sql: String): Option[StructType] = {
-    val toks = Compat.tokenize(sql).filter(_.kind != Compat.Ws)
-    if (toks.isEmpty || !toks.head.isWord("SHOW")) return None
-    val rest = toks.drop(1)
-    if (rest.isEmpty) return None
-    if (rest.head.isWord("ALL"))
-      Some(StructType(Seq(StructField("name", StringType),
-        StructField("setting", StringType), StructField("description", StringType))))
-    else {
-      val name =
-        if (rest.length >= 2 && rest(0).isWord("TIME") && rest(1).isWord("ZONE")) "TimeZone"
-        else if (rest.length >= 2 && rest(0).isWord("TRANSACTION") && rest(1).isWord("ISOLATION"))
-          "transaction_isolation"
-        else rest.head.text.toLowerCase
-      Some(StructType(Seq(StructField(name, StringType))))
-    }
-  }
-
   def showValue(session: Session, name: String): Option[String] = name match {
     case "server_version" => Some(PgFunctions.ServerVersion)
     case "server_version_num" => Some("170000")
@@ -1333,159 +1311,95 @@ object Handlers {
     // memory; per-query rebuild is the same read-your-writes shape)
     if (lower.contains("pg_stat_statements"))
       PgStatStatements.refreshView(spark)
-    // pg dialect type semantics: the analyzer rule (GraftExtensions
-    // sessions) fires inside withPg; the post-analysis apply covers
-    // terminal positions on sessions built without the extension
-    val df = PgSemantics(PgSemantics.withPg { spark.sql(rewritten) })
-    val timed =
-      if (lower.contains("pg_time_in") || lower.contains("make_time("))
-        tagTimeOutputs(df)
-      else df
-    val geod = if (lower.contains("st_")) tagGeometryOutputs(timed) else timed
-    if (lower.contains("range") || lower.contains("tsvector") ||
-      lower.contains("tsquery") || lower.contains("setweight") ||
-      lower.contains("strip") || lower.contains("enum_in") ||
-      lower.contains("inet") || lower.contains("cidr") ||
-      lower.contains("mask") || lower.contains("broadcast") ||
-      lower.contains("mac") || lower.contains("bit") ||
-      lower.contains("xml") || lower.contains("money") ||
-      lower.contains("trim_scale")) tagRangeOutputs(geod)
-    else geod
+    // pg dialect type semantics: GraftExtensions' analyzer rule fires
+    // inside withPg (PgServer.start refuses a session without it)
+    tagPgOutputs(PgSemantics.withPg { spark.sql(rewritten) })
   }
 
-  /** Tag range-returning output columns with `pg.oid_alias=<subtype>`
-    * so the wire reports pg's range OIDs (3904/3906/…) instead of
-    * text — per-column, since the subtype differs by constructor
-    * (combinators inherit it from their inputs). Same Alias-identity
-    * mechanism as [[tagUdfOutputs]].
+  /** pg type metadata for result columns a pg-typed UDF produces, so
+    * the wire reports the pg OID and text form: time (`pg_time_in`,
+    * `make_time`), geometry (the ST_* constructors), ranges (the
+    * subtype from the constructor — combinators inherit it from their
+    * inputs), tsvector/tsquery, inet/cidr/macaddr, bit, xml, money,
+    * variable-scale numeric and enum OIDs. Found in one walk of the
+    * analyzed plan by Alias identity, at any depth (so `SELECT t FROM
+    * (SELECT x::time AS t)` tags too); only when some output column
+    * matches does the plan gain one Project re-aliasing those columns
+    * with their metadata.
     */
-  private def tagRangeOutputs(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, ScalaUDF}
+  private def tagPgOutputs(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val plan = df.queryExecution.analyzed
+    val metas = plan.collect { case p =>
+      p.expressions.collect { case a: Alias => outputMeta(df.sparkSession, a).map(a.exprId -> _) }
+        .flatten
+    }.flatten.toMap
+    if (!plan.output.exists(a => metas.contains(a.exprId))) df
+    else org.apache.spark.sql.graftshim.DatasetShim.ofRows(df.sparkSession,
+      Project(plan.output.map { a =>
+        metas.get(a.exprId).fold[NamedExpression](a)(m => Alias(a, a.name)(explicitMetadata = Some(m)))
+      }, plan))
+  }
+
+  private val timeMeta = new MetadataBuilder().putString(PgType.PG_TYPE_KEY, "time").build()
+  private val geometryMeta = new MetadataBuilder().putString(PgType.PG_TYPE_KEY, "geometry").build()
+
+  /** Output-type alias (`pg.oid_alias`) of the non-range pg-typed UDFs. */
+  private val aliasSubs: Map[String, String] = graft.functions.TextSearchFunctions.tsSubs ++ Map(
+    "inet_in" -> "inet", "broadcast" -> "inet", "netmask" -> "inet",
+    "hostmask" -> "inet", "set_masklen" -> "inet", "inet_add" -> "inet",
+    "inet_sub" -> "inet", "inet_not" -> "inet", "inet_and" -> "inet",
+    "inet_or" -> "inet",
+    "cidr_in" -> "cidr", "network" -> "cidr", "inet_merge" -> "cidr",
+    "pg_set_masklen_cidr" -> "cidr",
+    "macaddr_in" -> "macaddr", "mac_trunc" -> "macaddr",
+    "mac_not" -> "macaddr", "mac_and" -> "macaddr", "mac_or" -> "macaddr",
+    "macaddr8_in" -> "macaddr8", "macaddr8_set7bit" -> "macaddr8",
+    "bit_in" -> "bit", "bit_in_hex" -> "bit", "pg_bit_cast" -> "bit",
+    "pg_int_to_bit" -> "bit", "pg_bit_and" -> "bit", "pg_bit_or" -> "bit",
+    "pg_bit_xor" -> "bit", "pg_bit_not" -> "bit", "pg_bit_shl" -> "bit",
+    "pg_bit_shr" -> "bit", "pg_bit_set" -> "bit",
+    "xml_in" -> "xml", "pg_xml_tag" -> "xml", "xmlcomment" -> "xml",
+    "pg_xmlpi" -> "xml", "pg_xml_forest_item" -> "xml",
+    "money_in" -> "money", "money_add" -> "money", "money_sub" -> "money",
+    "money_mul" -> "money", "money_div_num" -> "money",
+    "money_to_numeric" -> "numeric",
+    // variable-scale numeric results render their own text form
+    "trim_scale" -> "numeric")
+
+  /** The pg type metadata of an output expression, if a pg-typed UDF
+    * produces it (see [[tagPgOutputs]]). */
+  private def outputMeta(spark: SparkSession,
+      e: org.apache.spark.sql.catalyst.expressions.Expression): Option[Metadata] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal, ScalaUDF}
     import graft.functions.RangeFunctions.{combinators, constructorSubs}
-    def deepSub(e: Expression): Option[String] = e match {
-      case u: ScalaUDF if u.udfName.exists(n => constructorSubs.contains(n.toLowerCase)) =>
-        Some(constructorSubs(u.udfName.get.toLowerCase))
-      case other => other.children.iterator.map(deepSub).collectFirst { case Some(s) => s }
-    }
-    val tsSubs = graft.functions.TextSearchFunctions.tsSubs
-    val inetSubs = Map(
-      "inet_in" -> "inet", "broadcast" -> "inet", "netmask" -> "inet",
-      "hostmask" -> "inet", "set_masklen" -> "inet", "inet_add" -> "inet",
-      "inet_sub" -> "inet", "inet_not" -> "inet", "inet_and" -> "inet",
-      "inet_or" -> "inet",
-      "cidr_in" -> "cidr", "network" -> "cidr", "inet_merge" -> "cidr",
-      "pg_set_masklen_cidr" -> "cidr",
-      "macaddr_in" -> "macaddr", "mac_trunc" -> "macaddr",
-      "mac_not" -> "macaddr", "mac_and" -> "macaddr", "mac_or" -> "macaddr",
-      "macaddr8_in" -> "macaddr8", "macaddr8_set7bit" -> "macaddr8",
-      "bit_in" -> "bit", "bit_in_hex" -> "bit", "pg_bit_cast" -> "bit",
-      "pg_int_to_bit" -> "bit", "pg_bit_and" -> "bit", "pg_bit_or" -> "bit",
-      "pg_bit_xor" -> "bit", "pg_bit_not" -> "bit", "pg_bit_shl" -> "bit",
-      "pg_bit_shr" -> "bit", "pg_bit_set" -> "bit",
-      "xml_in" -> "xml", "pg_xml_tag" -> "xml", "xmlcomment" -> "xml",
-      "pg_xmlpi" -> "xml", "pg_xml_forest_item" -> "xml",
-      "money_in" -> "money", "money_add" -> "money", "money_sub" -> "money",
-      "money_mul" -> "money", "money_div_num" -> "money",
-      "money_to_numeric" -> "numeric",
-      // variable-scale numeric results render their own text form
-      "trim_scale" -> "numeric")
-    def subOf(e: Expression): Option[String] = e match {
-      case a: Alias => subOf(a.child)
-      case u: ScalaUDF =>
-        u.udfName.map(_.toLowerCase) match {
-          case Some(n) if constructorSubs.contains(n) => Some(constructorSubs(n))
-          case Some(n) if tsSubs.contains(n) => Some(tsSubs(n))
-          case Some(n) if inetSubs.contains(n) => Some(inetSubs(n))
-          case Some(n) if combinators.contains(n) => deepSub(u)
-          case Some("enum_in") => u.children.headOption.collect {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v, _) if v != null =>
-              "enum:" + v.toString
-          }
-          case _ => None
-        }
+    def udfName(e: Expression): Option[String] = e match {
+      case u: ScalaUDF => u.udfName.map(_.toLowerCase)
       case _ => None
     }
-    val subs = df.queryExecution.analyzed.collect { case p =>
-      p.expressions.collect {
-        case a: Alias => subOf(a).map(a.exprId -> _)
-      }.flatten
-    }.flatten.toMap
-    if (subs.isEmpty) df
-    else {
-      val out = df.queryExecution.analyzed.output
-      val tagIdx = out.zipWithIndex.collect {
-        case (a, i) if subs.contains(a.exprId) => (i, subs(a.exprId))
-      }
-      if (tagIdx.isEmpty) df
-      else {
-        val safe = df.toDF(out.indices.map(i => s"__g$i"): _*)
-        val tagged = tagIdx.foldLeft(safe) { case (d, (i, sub)) =>
-          val mb = new org.apache.spark.sql.types.MetadataBuilder()
-          if (sub.startsWith("enum:"))
-            graft.functions.PgEnums.lookup(df.sparkSession, sub.substring(5))
-              .foreach(e => mb.putLong(PgType.OID_NUM_KEY, e.oid.toLong))
-          else mb.putString(PgType.OID_ALIAS_KEY, sub)
-          d.withMetadata(s"__g$i", mb.build())
+    def rangeSub(e: Expression): Option[String] =
+      udfName(e).flatMap(constructorSubs.get)
+        .orElse(e.children.iterator.map(rangeSub).collectFirst { case Some(s) => s })
+    def aliased(pgType: String) =
+      new MetadataBuilder().putString(PgType.OID_ALIAS_KEY, pgType).build()
+    e match {
+      case a: Alias => outputMeta(spark, a.child)
+      case _ => udfName(e).flatMap {
+        case n if constructorSubs.contains(n) => Some(aliased(constructorSubs(n)))
+        case n if aliasSubs.contains(n) => Some(aliased(aliasSubs(n)))
+        case n if combinators.contains(n) => rangeSub(e).map(aliased)
+        case "enum_in" => e.children.headOption.collect {
+          case Literal(v, _) if v != null =>
+            val mb = new MetadataBuilder()
+            graft.functions.PgEnums.lookup(spark, v.toString)
+              .foreach(d => mb.putLong(PgType.OID_NUM_KEY, d.oid.toLong))
+            mb.build()
         }
-        tagged.toDF(out.map(_.name): _*)
+        case n if graft.functions.GeoFunctions.geometryReturning.contains(n) => Some(geometryMeta)
+        case "pg_time_in" | "make_time" => Some(timeMeta)
+        case _ => None
       }
-    }
-  }
-
-  private val timeMeta = new org.apache.spark.sql.types.MetadataBuilder()
-    .putString(PgType.PG_TYPE_KEY, "time").build()
-
-  private val geometryMeta = new org.apache.spark.sql.types.MetadataBuilder()
-    .putString(PgType.PG_TYPE_KEY, "geometry").build()
-
-  /** Tag result columns produced by geometry-returning ST_* UDFs with
-    * pg.type=geometry so the wire codec reports the GEOMETRY OID and
-    * renders hex EWKB — the output half of the geo surface (input
-    * half: Compat's `::geometry` rewrite + the ST constructors).
-    * Same Alias-identity mechanism as [[tagTimeOutputs]].
-    */
-  private def tagGeometryOutputs(df: DataFrame): DataFrame =
-    tagUdfOutputs(df, graft.functions.GeoFunctions.geometryReturning, geometryMeta)
-
-  /** Tag result columns produced by pg_time_in with pg.type=time so
-    * the wire codec reports OID 1083 and renders HH:MM:SS — the output
-    * half of the TIME pseudo-type (input half: Compat's `::time`
-    * rewrites). Detection is by expression identity: any output
-    * attribute whose defining Alias wraps a pg_time_in call, at any
-    * depth of the analyzed plan (so `SELECT t FROM (SELECT x::time AS
-    * t)` tags too).
-    */
-  private def tagTimeOutputs(df: DataFrame): DataFrame =
-    tagUdfOutputs(df, n => n.contains("pg_time_in") || n == "make_time", timeMeta)
-
-  private def tagUdfOutputs(df: DataFrame, names: Set[String],
-      meta: org.apache.spark.sql.types.Metadata): DataFrame =
-    tagUdfOutputs(df, (n: String) => names.contains(n.toLowerCase), meta)
-
-  private def tagUdfOutputs(df: DataFrame, matches: String => Boolean,
-      meta: org.apache.spark.sql.types.Metadata): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, ScalaUDF}
-    val timeIds = df.queryExecution.analyzed.collect { case p =>
-      p.expressions.collect {
-        case a: Alias if (a.child match {
-          case u: ScalaUDF => u.udfName.exists(matches)
-          case _ => false
-        }) => a.exprId
-      }
-    }.flatten.toSet
-    if (timeIds.isEmpty) df
-    else {
-      // withMetadata resolves by NAME, and auto-generated names like
-      // `pg_time_in(23:59:59.25)` contain dots that break resolution —
-      // rename positionally to safe names, tag, rename back (the final
-      // toDF's Aliases propagate child metadata, so the tag survives)
-      val out = df.queryExecution.analyzed.output
-      val tagIdx = out.zipWithIndex.collect {
-        case (a, i) if timeIds.contains(a.exprId) => i
-      }
-      val safe = df.toDF(out.indices.map(i => s"__g$i"): _*)
-      val tagged = tagIdx.foldLeft(safe)((d, i) => d.withMetadata(s"__g$i", meta))
-      tagged.toDF(out.map(_.name): _*)
     }
   }
 

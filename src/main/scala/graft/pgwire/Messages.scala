@@ -22,9 +22,21 @@ object Messages {
   case object GssRequest extends Startup
   final case class Cancel(pid: Int, secret: Int) extends Startup
 
+  /** pg's bounds on lengths an unauthenticated client declares: a
+    * startup packet is 8–10000 bytes (MAX_STARTUP_PACKET_LENGTH), any
+    * other message 4 bytes to 1 GB. */
+  val MaxStartupLen = 10000
+  val MaxMessageLen = 1 << 30
+
+  /** A declared length outside those bounds: the server closes the
+    * connection before allocating anything, as pg does. */
+  final class BadLength(what: String, len: Int)
+    extends java.io.IOException(s"invalid $what length $len")
+
   /** Read the untyped startup packet. */
   def readStartup(in: DataInputStream): Startup = {
     val len = in.readInt()
+    if (len < 8 || len > MaxStartupLen) throw new BadLength("startup packet", len)
     val code = in.readInt()
     code match {
       case SSL_REQUEST => SslRequest
@@ -65,6 +77,7 @@ object Messages {
     val tpe = in.read()
     if (tpe < 0) throw new EOFException()
     val len = in.readInt()
+    if (len < 4 || len > MaxMessageLen) throw new BadLength("message", len)
     val body = new Array[Byte](len - 4)
     in.readFully(body)
     Msg(tpe.toByte, body)

@@ -1,29 +1,23 @@
 package graft.pgwire
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.graftshim.DatasetShim
 import org.apache.spark.sql.types._
 
 /** Type-directed pg semantics that a TEXT rewrite cannot express —
-  * operand types are only known at analysis time. Two delivery layers:
-  *
-  *  1. [[PgSemantics.Resolution]] — an analyzer rule (injected by
-  *     `graft.GraftExtensions`) active ONLY inside
-  *     [[PgSemantics.withPg]]'s dynamic extent on the calling thread.
-  *     [[Handlers.runSql]] wraps every wire-path query in it, so pg
-  *     dialect semantics apply exactly to server/client SQL while
-  *     queries run through the plain Spark API (the oracle suite,
-  *     library users) keep Spark semantics. Running inside the
-  *     analyzer lets the rewritten types COMPOSE: `(d1 - d2) - 1`
-  *     resolves as int arithmetic because date−date becomes an int
-  *     before the outer subtraction resolves.
-  *  2. [[PgSemantics.apply]] — the same rewrites as a post-analysis
-  *     transform, for sessions built without the extension (terminal
-  *     positions only; composition needs layer 1).
+  * operand types are only known at analysis time.
+  * [[PgSemantics.Resolution]] is an analyzer rule (injected by
+  * `graft.GraftExtensions`, which `PgServer.start` requires) active
+  * ONLY inside [[PgSemantics.withPg]]'s dynamic extent on the calling
+  * thread. [[Handlers.runSql]] wraps every wire-path query in it, so pg
+  * dialect semantics apply exactly to server/client SQL while queries
+  * run through the plain Spark API (the oracle suite, library users)
+  * keep Spark semantics. Running inside the analyzer lets the
+  * rewritten types COMPOSE: `(d1 - d2) - 1` resolves as int arithmetic
+  * because date−date becomes an int before the outer subtraction
+  * resolves.
   *
   * The rules (all live-pg-15-pinned, PgParitySpec sweep #6):
   *
@@ -70,13 +64,6 @@ object PgSemantics {
   object Resolution extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan =
       if (!active) plan else rewriteExpressions(plan)
-  }
-
-  /** Post-analysis fallback for sessions without GraftExtensions. */
-  def apply(df: DataFrame): DataFrame = {
-    val plan = df.queryExecution.analyzed
-    val newPlan = rewriteExpressions(plan)
-    if (newPlan eq plan) df else DatasetShim.ofRows(df.sparkSession, newPlan)
   }
 
   private def rewriteExpressions(plan: LogicalPlan): LogicalPlan =

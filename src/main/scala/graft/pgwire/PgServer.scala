@@ -1,6 +1,6 @@
 package graft.pgwire
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.net.{InetSocketAddress, ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.{MessageDigest, SecureRandom}
@@ -45,7 +45,13 @@ final class PgServer(
 
   def boundPort: Int = server.getLocalPort
 
+  /** Refuses a session built without `graft.GraftExtensions`: pg
+    * dialect semantics (an analyzer rule) and the graft-native
+    * functions reach wire queries only through it. */
   def start(): Unit = {
+    if (!spark.sessionState.analyzer.extendedResolutionRules.contains(PgSemantics.Resolution))
+      throw new IllegalStateException("PgServer needs a session built with " +
+        "spark.sql.extensions=graft.GraftExtensions")
     server.bind(new InetSocketAddress(host, port))
     running = true
     // warehouse-backed DDL metadata: reload enums/sequences/indexes/
@@ -54,11 +60,6 @@ final class PgServer(
     PgCatalog.registerAll(spark)
     PgFunctions.registerAll(spark)
     PgStatStatements.installListener(spark)
-    // graft-native Catalyst expressions (vec_ldot & co., lev_banded)
-    // — wire clients get them even when the session was built without
-    // spark.sql.extensions=graft.GraftExtensions
-    graft.functions.VectorExpressions.install(spark)
-    graft.functions.StringExpressions.install(spark)
     val t = new Thread(() => acceptLoop(), "pgwire-accept")
     t.setDaemon(true)
     t.start()
@@ -75,7 +76,8 @@ final class PgServer(
         val sock = server.accept()
         connLimit.acquire()
         val t = new Thread(() => {
-          try handleConnection(sock)
+          // EOF, reset, TLS failure or a Messages.BadLength: drop it
+          try handleConnection(sock) catch { case _: java.io.IOException => }
           finally { connLimit.release(); try sock.close() catch { case NonFatal(_) => } }
         }, s"pgwire-conn-${connIds.get()}")
         t.setDaemon(true)
@@ -156,7 +158,6 @@ final class PgServer(
 
     NotifyBus.register(session)
     try messageLoop(in, out, session, jobGroup)
-    catch { case _: EOFException | _: SocketException => }
     finally {
       NotifyBus.deregister(session)
       cancelKeys.remove(connId)
@@ -309,33 +310,26 @@ final class PgServer(
           readyWithNotifications(out, session); out.flush()
         case 'H' => out.flush()
         case _ if ignoreTillSync => // skip until Sync after an error
-        case 'P' =>
-          try { handleParse(session, msg); Messages.parseComplete(out) }
-          catch { case e: Throwable => writeError(out, e); ignoreTillSync = true }
-        case 'B' =>
-          try { handleBind(session, msg); Messages.bindComplete(out) }
-          catch { case e: Throwable => writeError(out, e); ignoreTillSync = true }
-        case 'D' =>
-          try handleDescribe(out, session, msg)
-          catch { case e: Throwable => writeError(out, e); ignoreTillSync = true }
-        case 'E' =>
-          try handleExecute(out, session, jobGroup, msg)
-          catch { case e: Throwable =>
+        case tpe =>
+          // any extended-protocol error skips to Sync and, inside a
+          // transaction block, fails the block (pg's rule)
+          try tpe match {
+            case 'P' => handleParse(session, msg); Messages.parseComplete(out)
+            case 'B' => handleBind(session, msg); Messages.bindComplete(out)
+            case 'D' => handleDescribe(out, session, jobGroup, msg)
+            case 'E' => handleExecute(out, session, jobGroup, msg)
+            case 'C' =>
+              val kind = msg.body(0).toChar
+              val name = msg.cStringAt(1)
+              if (kind == 'S') session.prepared.remove(name)
+              else session.discardPortal(name)
+              Messages.closeComplete(out)
+            case 'F' => throw PgException("0A000", "function call protocol not supported")
+            case other => throw PgException("08P01", s"unsupported message type $other")
+          } catch { case e: Throwable =>
             writeError(out, e); ignoreTillSync = true
             if (session.txn == session.InTxn) session.txn = session.Failed
           }
-        case 'C' =>
-          val kind = msg.body(0).toChar
-          val name = msg.cStringAt(1)
-          if (kind == 'S') session.prepared.remove(name)
-          else session.discardPortal(name)
-          Messages.closeComplete(out)
-        case 'F' =>
-          writeError(out, PgException("0A000", "function call protocol not supported"))
-          ignoreTillSync = true
-        case other =>
-          writeError(out, PgException("08P01", s"unsupported message type $other"))
-          ignoreTillSync = true
       } finally {
         try out.flush()
         finally { writeLock.unlock(); session.busyProcessing = false }
@@ -607,10 +601,13 @@ final class PgServer(
     val sql = readCStr(in)
     val n = in.readShort()
     val clientOids = (0 until n).map(_ => in.readInt())
+    val toks = Compat.tokenize(sql).filter(_.kind != Compat.Ws)
+    if (toks.dropWhile(!_.is(";")).exists(!_.is(";")))
+      throw PgException("42601", "cannot insert multiple commands into a prepared statement")
     // merge client-declared types with $N::type cast inference
     // (reference: planner.rs:9-66 — explicit Cast(Placeholder) types
     // override, client hints win over inference)
-    val nParams = math.max(n.toInt, maxParamIndex(sql))
+    val nParams = math.max(n.toInt, maxParamIndex(toks))
     val inferred = Compat.inferParamOids(sql, nParams)
     var oids = (0 until nParams).map { i =>
       val client = if (i < clientOids.length) clientOids(i) else 0
@@ -625,8 +622,8 @@ final class PgServer(
     session.prepared(name) = session.Prepared(sql, oids, None)
   }
 
-  private def maxParamIndex(sql: String): Int =
-    Compat.tokenize(sql).collect {
+  private def maxParamIndex(toks: Seq[Compat.Tok]): Int =
+    toks.collect {
       case t if t.kind == Compat.Word && t.text.matches("\\$\\d+") =>
         t.text.substring(1).toInt
     }.maxOption.getOrElse(0)
@@ -638,29 +635,32 @@ final class PgServer(
     val nFmt = in.readShort()
     val paramFormats = (0 until nFmt).map(_ => in.readShort())
     val nParams = in.readShort()
-    val params = (0 until nParams).map { i =>
+    if (nFmt > 1 && nFmt != nParams)
+      throw PgException("08P01", s"bind message has $nFmt parameter formats but $nParams parameters")
+    val prep = session.prepared.getOrElse(stmtName,
+      throw PgException("26000", s"""prepared statement "$stmtName" does not exist"""))
+    if (nParams != prep.paramOids.length)
+      throw PgException("08P01", s"bind message supplies $nParams parameters, but prepared " +
+        s"""statement "$stmtName" requires ${prep.paramOids.length}""")
+    val literals = (0 until nParams).map { i =>
       val len = in.readInt()
-      if (len < 0) null
-      else { val b = new Array[Byte](len); in.readFully(b); b }
+      if (len > in.available())
+        throw PgException("08P01", "insufficient data left in message")
+      val bytes = if (len < 0) null else { val b = new Array[Byte](len); in.readFully(b); b }
+      val oid = if (prep.paramOids(i) != 0) prep.paramOids(i) else PgType.TEXT
+      paramToLiteral(bytes, oid, formatAt(paramFormats, i))
     }
     val nResFmt = in.readShort()
     val resultFormats = (0 until nResFmt).map(_ => in.readShort())
-    val prep = session.prepared.getOrElse(stmtName,
-      throw PgException("26000", s"""prepared statement "$stmtName" does not exist"""))
-    val literals = params.zipWithIndex.map { case (bytes, i) =>
-      val oid = if (i < prep.paramOids.length && prep.paramOids(i) != 0) prep.paramOids(i) else PgType.TEXT
-      val fmt: Short =
-        if (paramFormats.isEmpty) 0
-        else if (paramFormats.length == 1) paramFormats.head
-        else paramFormats(i)
-      paramToLiteral(bytes, oid, fmt)
-    }
     val boundSql = substituteParams(prep.sql, literals)
     // re-Bind over an existing name discards the old portal's stream
     session.discardPortal(portalName)
-    session.portals(portalName) =
-      session.Portal(prep, boundSql, resultFormats, None)
+    session.portals(portalName) = session.Portal(prep, boundSql, resultFormats)
   }
+
+  /** Format code of item `i` from a 0-, 1- or n-entry format list. */
+  private def formatAt(formats: Seq[Short], i: Int): Short =
+    if (formats.isEmpty) 0 else if (formats.length == 1) formats.head else formats(i)
 
   /** Array parameter OIDs → Spark element type (reference supports 9
     * array param types; arrow-pg/src/datatypes/df.rs).
@@ -807,7 +807,7 @@ final class PgServer(
   }
 
   private def handleDescribe(out: DataOutputStream, session: Session,
-      msg: Messages.Msg): Unit = {
+      jobGroup: String, msg: Messages.Msg): Unit = {
     val kind = msg.body(0).toChar
     val name = msg.cStringAt(1)
     if (kind == 'S') {
@@ -822,34 +822,60 @@ final class PgServer(
     } else {
       val portal = session.portals.getOrElse(name,
         throw PgException("34000", s"""portal "$name" does not exist"""))
-      Handlers.showSchema(session, portal.boundSql)
-        .orElse(schemaOf(portal.boundSql)) match {
-        case Some(schema) =>
-          val fmts = portal.resultFormats
-          Messages.rowDescription(out, PgType.rowDescription(schema,
-            i => if (fmts.isEmpty) 0 else if (fmts.length == 1) fmts.head else fmts(i)))
-        case None => Messages.noData(out)
+      // a row-returning statement runs here, once: the RowDescription
+      // comes from the result Execute then streams. DML runs only at
+      // Execute, so a described-but-unexecuted write never happens.
+      if (portal.result.isEmpty && rowHead(portal.boundSql).isDefined)
+        Handlers.withTimeout(spark, session, jobGroup)(openPortal(session, portal))
+      portal.result match {
+        case Some(RowSet(schema, _, _, _)) =>
+          Messages.rowDescription(out,
+            PgType.rowDescription(schema, formatAt(portal.resultFormats, _)))
+        case _ => Messages.noData(out)
       }
     }
   }
 
-  private def describeSchema(sql: String, oids: Seq[Int]): Option[StructType] = {
-    val probed = substituteParams(sql, oids.map(nullLiteralOf))
-    schemaOf(probed)
+  private val rowHeads =
+    Set("SELECT", "WITH", "VALUES", "TABLE", "SHOW", "EXPLAIN", "DESCRIBE", "FETCH")
+  private val writeWords = Set("INSERT", "UPDATE", "DELETE", "MERGE")
+
+  /** The head keyword of a statement whose result is rows: a
+    * row-returning head, and no data-modifying clause (`WITH … INSERT`)
+    * behind a WITH. */
+  private def rowHead(sql: String): Option[String] = {
+    val words = Compat.tokenize(sql).iterator
+      .filter(_.kind == Compat.Word).map(_.text.toUpperCase)
+    words.nextOption().filter(h =>
+      rowHeads.contains(h) && (h != "WITH" || !words.exists(writeWords.contains)))
   }
 
-  /** Analysis-only schema (no job runs — spark.sql is lazy for
-    * row-returning plans; DDL/DML would execute, so restrict to
-    * obviously row-returning heads).
-    */
-  private def schemaOf(sql: String): Option[StructType] = {
-    val head = sql.trim.split("\\s+").headOption.map(_.toUpperCase).getOrElse("")
-    if (!Set("SELECT", "WITH", "VALUES", "TABLE", "SHOW", "EXPLAIN", "DESCRIBE", "FETCH").contains(head))
-      return None
-    if (head == "SHOW" || head == "FETCH") return None // session-dependent
-    try Some(Handlers.runSql(spark, sql).schema)
-    catch { case NonFatal(_) => None }
+  /** Run the portal's statement (under the caller's statement timeout)
+    * and keep its result on the portal for Execute to send. */
+  private def openPortal(session: Session, portal: Session#Portal): PgResult = {
+    val r = Handlers.execute(spark, session, portal.boundSql, Some(auth), hooks)
+    r match {
+      case rs: RowSet if portal.resultFormats.length > 1 &&
+          portal.resultFormats.length != rs.schema.length =>
+        rs.onDiscard()
+        throw PgException("08P01", s"bind message has ${portal.resultFormats.length} " +
+          s"result formats but query has ${rs.schema.length} columns")
+      case _ =>
+    }
+    portal.result = Some(r)
+    r
   }
+
+  /** Analysis-only schema of a prepared statement, its parameters
+    * bound to typed NULLs. No job runs: spark.sql is lazy for
+    * row-returning plans, and only those get here (DDL/DML would
+    * execute; SHOW and FETCH read session state, so describe as NoData).
+    */
+  private def describeSchema(sql: String, oids: Seq[Int]): Option[StructType] =
+    rowHead(sql).filter(h => h != "SHOW" && h != "FETCH").flatMap { _ =>
+      try Some(Handlers.runSql(spark, substituteParams(sql, oids.map(nullLiteralOf))).schema)
+      catch { case NonFatal(_) => None }
+    }
 
   private def handleExecute(out: DataOutputStream, session: Session,
       jobGroup: String, msg: Messages.Msg): Unit = {
@@ -858,40 +884,33 @@ final class PgServer(
     val maxRows = in.readInt()
     val portal = session.portals.getOrElse(name,
       throw PgException("34000", s"""portal "$name" does not exist"""))
-    val fmts = portal.resultFormats
-    def fmtAt(i: Int): Short =
-      if (fmts.isEmpty) 0 else if (fmts.length == 1) fmts.head else fmts(i)
-
     Handlers.withTimeout(spark, session, jobGroup) {
-      if (portal.result.isEmpty) {
-        Handlers.execute(spark, session, portal.boundSql, Some(auth), hooks) match {
-          case EmptyQuery =>
-            Messages.emptyQueryResponse(out); return
-          case Complete(tag, push) =>
-            push.foreach { case (k, v) => Messages.parameterStatus(out, k, v) }
-            Messages.commandComplete(out, tag); return
-          case RowSet(schema, rows, tagFor, onDiscard) =>
-            portal.result = Some((schema, rows))
-            portal.tagFor = tagFor
-            portal.onDiscard = onDiscard
-        }
-      }
-      val (schema, rows) = portal.result.get
-      var n = 0L
-      var suspended = false
-      while (rows.hasNext && !suspended) {
-        Messages.dataRow(out, encodeRow(rows.next(), schema, session, fmtAt))
-        n += 1
-        if (maxRows > 0 && n >= maxRows && rows.hasNext) suspended = true
-      }
-      if (suspended) Messages.portalSuspended(out)
-      else {
-        // pg's CommandComplete after a multi-Execute portal counts only
-        // the FINAL batch, not the cumulative portal total (postgres.c
-        // exec_execute_message reports this PortalRun's nprocessed) —
-        // found by the pgjdbc setFetchSize conversation test
-        Messages.commandComplete(out, portal.tagFor(n))
-        portal.result = None
+      portal.result.getOrElse(openPortal(session, portal)) match {
+        case EmptyQuery =>
+          portal.result = None
+          Messages.emptyQueryResponse(out)
+        case Complete(tag, push) =>
+          portal.result = None
+          push.foreach { case (k, v) => Messages.parameterStatus(out, k, v) }
+          Messages.commandComplete(out, tag)
+        case RowSet(schema, rows, tagFor, _) =>
+          var n = 0L
+          var suspended = false
+          while (rows.hasNext && !suspended) {
+            Messages.dataRow(out,
+              encodeRow(rows.next(), schema, session, formatAt(portal.resultFormats, _)))
+            n += 1
+            if (maxRows > 0 && n >= maxRows && rows.hasNext) suspended = true
+          }
+          if (suspended) Messages.portalSuspended(out)
+          else {
+            // pg's CommandComplete after a multi-Execute portal counts only
+            // the FINAL batch, not the cumulative portal total (postgres.c
+            // exec_execute_message reports this PortalRun's nprocessed) —
+            // found by the pgjdbc setFetchSize conversation test
+            Messages.commandComplete(out, tagFor(n))
+            portal.result = None
+          }
       }
     }
   }

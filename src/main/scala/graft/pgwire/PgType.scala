@@ -69,7 +69,7 @@ object PgType {
     "regrole" -> 4096, "regnamespace" -> 4089, "regconfig" -> 3734,
     "regdictionary" -> 3769, "regcollation" -> 4191,
     // range types (pg §8.17) — StringType columns carrying canonical
-    // range text, tagged by Handlers.tagRangeOutputs
+    // range text, tagged by Handlers.tagPgOutputs
     "int4range" -> 3904, "numrange" -> 3906, "tsrange" -> 3908,
     "tstzrange" -> 3910, "daterange" -> 3912, "int8range" -> 3926,
     // text-search types (pg ch. 12), same canonical-text model

@@ -176,23 +176,25 @@ final class Session(val connId: Int, val user: String, val database: String) {
 
   // ---- extended-protocol prepared statements & portals -------------------
   final case class Prepared(sql: String, paramOids: Seq[Int], schema: Option[StructType])
-  final case class Portal(prepared: Prepared, boundSql: String,
-      resultFormats: Seq[Short], var result: Option[(StructType, Iterator[Row])]) {
-    /** CommandComplete tag builder, set when execution starts. */
-    var tagFor: Long => String = n => s"SELECT $n"
-    /** Resource release for a suspended stream (idempotent; set from
-      * RowSet.onDiscard when execution starts). Called on portal
-      * Close, re-Bind over the same name, and session teardown. */
-    var onDiscard: () => Unit = () => ()
+  final case class Portal(prepared: Prepared, boundSql: String, resultFormats: Seq[Short]) {
+    /** The statement's result once it has run: opened by Describe for a
+      * row-returning statement, else by the first Execute. A RowSet
+      * streams across Executes until drained; None before the statement
+      * runs and after its result has been sent. */
+    var result: Option[PgResult] = None
   }
   val prepared: mutable.Map[String, Prepared] = mutable.Map.empty
   val portals: mutable.Map[String, Portal] = mutable.Map.empty
 
-  /** Discard one portal's backing resources (safe on any portal). */
+  /** Discard one portal, releasing an undrained stream's resources
+    * (RowSet.onDiscard) — on portal Close, re-Bind over the same name,
+    * and session teardown. */
   def discardPortal(name: String): Unit =
-    portals.remove(name).foreach { p =>
-      try p.onDiscard()
-      catch { case scala.util.control.NonFatal(_) => }
+    portals.remove(name).flatMap(_.result).foreach {
+      case rs: RowSet =>
+        try rs.onDiscard()
+        catch { case scala.util.control.NonFatal(_) => }
+      case _ =>
     }
 
   /** Session teardown: release every suspended portal's resources. */

@@ -281,4 +281,35 @@ class JdbcWireSpec extends SparkSpec with BeforeAndAfterAll {
     assert(exec(c, "COMMIT").txnStatus === 'I')
     c.close()
   }
+
+  test("Describe(P) opens the result Execute streams: nextval describes and draws once") {
+    val c = jdbcConnect()
+    assert(c.query("CREATE SEQUENCE jdbc_describe_seq").errors.isEmpty)
+    for (expected <- Seq("1", "2")) {
+      val r = exec(c, "SELECT nextval('jdbc_describe_seq') AS v")
+      assert(r.errors.isEmpty, r.errors)
+      assert(!r.noData, "a row-returning portal describes as a RowDescription")
+      assert(r.fields === Seq("v" -> 20))
+      assert(r.rows === Seq(Seq(Some(expected))))
+    }
+    c.close()
+  }
+
+  test("Describe(P) of an INSERT answers NoData and writes nothing until Execute") {
+    val c = jdbcConnect()
+    assert(c.query("CREATE TABLE jdbc_describe_ins (id INT)").errors.isEmpty)
+    c.parse("S_ins", "INSERT INTO jdbc_describe_ins VALUES (1)")
+    c.bind("P_ins", "S_ins", Nil)
+    c.describe('P', "P_ins")
+    val d = c.sync()
+    assert(d.errors.isEmpty, d.errors)
+    assert(d.noData)
+    def count(): Seq[Seq[Option[String]]] =
+      c.query("SELECT count(*) FROM jdbc_describe_ins").rows
+    assert(count() === Seq(Seq(Some("0"))))
+    c.execute("P_ins")
+    assert(c.sync().tags === Seq("INSERT 0 1"))
+    assert(count() === Seq(Seq(Some("1"))))
+    c.close()
+  }
 }

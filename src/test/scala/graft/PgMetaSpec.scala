@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalatest.BeforeAndAfterAll
 
 import graft.pgwire._
+import graft.ChildJvm.{logTail, spawn}
 
 /** VERDICT r16 item 1 — the last single-JVM assumption: DDL registry
   * state (enums, sequences, plain indexes, matviews, views, comments,
@@ -84,31 +85,6 @@ class PgMetaSpec extends SparkSpec with BeforeAndAfterAll {
     finally PgMeta.detach()
     super.afterAll()
   }
-
-  /** Launch a test-classpath child JVM (the REAL-second-JVM half of
-    * the proof); stdout+stderr land in the returned log file. */
-  private def spawn(main: String, args: String*): (Process, java.nio.file.Path) = {
-    val java = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    // same add-opens set build.sbt gives forked JVMs (Spark 4 on JDK 17)
-    val opens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val log = Files.createTempFile("pgmeta-child", ".log")
-    val cmd = Seq(java, "-Xmx2g", "-cp", cp) ++ opens ++ Seq(main) ++ args
-    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      .redirectOutput(log.toFile).start()
-    (p, log)
-  }
-  private def logTail(log: java.nio.file.Path): String =
-    scala.util.Try(new String(Files.readAllBytes(log), "UTF-8").takeRight(2000))
-      .getOrElse("<no log>")
 
   test("a second JVM over the same meta root reproduces the DDL surface value-for-value") {
     // single-JVM expectations captured FIRST (the child must match)

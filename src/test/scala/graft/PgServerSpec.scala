@@ -72,23 +72,15 @@ class PgServerSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("graft-native vector functions are callable over the wire") {
-    // the shared session already carries graft.GraftExtensions, which
-    // would make this pass vacuously — exercise PgServer.start's own
-    // install path on a session whose registry LACKS the function
-    val bare = spark.newSession()
-    bare.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_ldot"))
-    val srv2 = new graft.pgwire.PgServer(bare)
-    srv2.start()
-    try {
-      val c = new Client(srv2.boundPort)
-      c.startup()
-      val r = c.query(
-        "SELECT vec_ldot(CAST(array(1, 2, 3) AS ARRAY<BIGINT>), " +
-          "CAST(array(4, 5, 6) AS ARRAY<BIGINT>)) AS d")
-      assert(r.rows === Seq(Seq(Some("32"))))
-      c.close()
-    } finally srv2.stop()
+    // GraftExtensions injects them; PgServer.start refuses a session
+    // without it (see "PgServer.start refuses a session without
+    // GraftExtensions")
+    val c = connect()
+    val r = c.query(
+      "SELECT vec_ldot(CAST(array(1, 2, 3) AS ARRAY<BIGINT>), " +
+        "CAST(array(4, 5, 6) AS ARRAY<BIGINT>)) AS d")
+    assert(r.rows === Seq(Seq(Some("32"))))
+    c.close()
   }
 
   test("multi-statement simple query returns one result set per statement") {
@@ -707,6 +699,114 @@ class PgServerSpec extends SparkSpec with BeforeAndAfterAll {
     c.close()
   }
 
+  test("Bind: a parameter-format list neither 0, 1 nor one per parameter is 08P01") {
+    val c = connect()
+    c.parse("bf1", "SELECT $1::int4 + $2::int4 + $3::int4 AS v")
+    c.bindFormats("", "bf1", Seq(0, 0), Seq(Some("1"), Some("2"), Some("3")), Nil)
+    c.execute("")
+    val r = c.sync()
+    assert(r.errors === Seq("08P01" -> "bind message has 2 parameter formats but 3 parameters"))
+    assert(r.txnStatus === 'I')
+    c.close()
+  }
+
+  test("Bind: a parameter count other than the statement's is 08P01") {
+    val c = connect()
+    c.parse("bc1", "SELECT $1::int4 + $2::int4 AS v")
+    c.bind("", "bc1", Seq(Some("1"), Some("2"), Some("3")))
+    c.execute("")
+    val r = c.sync()
+    assert(r.errors === Seq("08P01" ->
+      "bind message supplies 3 parameters, but prepared statement \"bc1\" requires 2"))
+    assert(r.rows.isEmpty)
+    c.close()
+  }
+
+  test("Bind: a result-format list neither 0, 1 nor one per column is 08P01 where the result opens") {
+    val c = connect()
+    c.parse("rf1", "SELECT 1 AS a, 2 AS b, 3 AS c")
+    val msg = "bind message has 2 result formats but query has 3 columns"
+    c.bind("", "rf1", Nil, resultFormats = Seq(0, 1))
+    c.describe('P', "")
+    c.execute("")
+    assert(c.sync().errors === Seq("08P01" -> msg))
+    c.bind("", "rf1", Nil, resultFormats = Seq(0, 1))
+    c.execute("")
+    assert(c.sync().errors === Seq("08P01" -> msg))
+    c.close()
+  }
+
+  test("an extended-protocol error fails the transaction block (Parse, Describe)") {
+    val c = connect()
+    assert(c.query("BEGIN").txnStatus === 'T')
+    c.parse("", "SELECT 1; SELECT 2")
+    val p = c.sync()
+    assert(p.errors.map(_._1) === Seq("42601"))
+    assert(p.txnStatus === 'E')
+    assert(c.query("SELECT 1").errors.map(_._1) === Seq("25P02"))
+    assert(c.query("ROLLBACK").txnStatus === 'I')
+    // a trailing terminator or comment is not a second command
+    c.parse("", "SELECT 1 AS v; -- done")
+    c.bind("", "", Nil)
+    c.execute("")
+    assert(c.sync().rows === Seq(Seq(Some("1"))))
+    assert(c.query("BEGIN").txnStatus === 'T')
+    c.describe('P', "no_such_portal")
+    val d = c.sync()
+    assert(d.errors.map(_._1) === Seq("34000"))
+    assert(d.txnStatus === 'E')
+    assert(c.query("ROLLBACK").txnStatus === 'I')
+    c.close()
+  }
+
+  /** Raw socket that has sent `bytes`; true once the server closed it. */
+  private def closedAfter(bytes: Array[Byte], startup: Boolean): Boolean = {
+    val s = new Socket("127.0.0.1", server.boundPort)
+    s.setSoTimeout(10000)
+    try {
+      val in = new DataInputStream(new BufferedInputStream(s.getInputStream))
+      val out = s.getOutputStream
+      if (startup) {
+        val b = new ByteArrayOutputStream()
+        val d = new DataOutputStream(b)
+        d.writeInt(196608); d.write("user\u0000postgres\u0000\u0000".getBytes(UTF_8))
+        out.write(java.nio.ByteBuffer.allocate(4).putInt(b.size + 4).array()); b.writeTo(out)
+        var tpe = 0
+        while (tpe != 'Z') { // through ReadyForQuery
+          tpe = in.read(); val body = new Array[Byte](in.readInt() - 4); in.readFully(body)
+        }
+      }
+      out.write(bytes); out.flush()
+      try in.read() == -1 catch { case _: java.net.SocketException => true } // FIN or RST
+    } finally s.close()
+  }
+
+  private def be(xs: Int*): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(4 * xs.length); xs.foreach(b.putInt); b.array()
+  }
+
+  test("out-of-bounds message lengths close the connection before any allocation") {
+    // a startup packet claiming 64 MB (pg's cap: 10000 bytes)
+    assert(closedAfter(be(64 << 20, 196608), startup = false))
+    assert(closedAfter(be(4, 196608), startup = false))
+    // typed messages: under the 4-byte header, over 1 GB
+    assert(closedAfter(Array[Byte]('Q') ++ be(2), startup = true))
+    assert(closedAfter(Array[Byte]('Q') ++ be((1 << 30) + 5), startup = true))
+    val c = connect()
+    assert(c.query("SELECT 1").rows === Seq(Seq(Some("1"))))
+    c.close()
+  }
+
+  test("PgServer.start refuses a session without GraftExtensions") {
+    val outFile = java.nio.file.Files.createTempFile("graft-plain-start", ".txt")
+    val (p, log) = ChildJvm.spawn("graft.PlainSessionStart", outFile.toString)
+    assert(p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS),
+      s"child JVM timed out\n${ChildJvm.logTail(log)}")
+    assert(p.exitValue() === 0, s"child JVM failed:\n${ChildJvm.logTail(log)}")
+    assert(java.nio.file.Files.readString(outFile) === "refused: PgServer needs a session " +
+      "built with spark.sql.extensions=graft.GraftExtensions")
+  }
+
   test("CancelRequest from a second socket kills the running statement (57014)") {
     val c = new Client(server.boundPort)
     val (pid, secret) = c.startup().backendKey.getOrElse(fail("no BackendKeyData"))
@@ -1207,5 +1307,24 @@ class PgServerSpec extends SparkSpec with BeforeAndAfterAll {
       .rows.head.head === Some("f"))
     c2.close()
     c.close()
+  }
+}
+
+/** Child JVM for PgServerSpec: builds a session WITHOUT
+  * graft.GraftExtensions (the test JVM's shared session has it, and a
+  * JVM hosts one SparkContext) and writes what `PgServer.start` did. */
+object PlainSessionStart {
+  def main(args: Array[String]): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-plain-wh").toString)
+      .getOrCreate()
+    val outcome =
+      try { new PgServer(spark).start(); "started" }
+      catch { case e: IllegalStateException => "refused: " + e.getMessage }
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(args(0)), outcome)
+    spark.stop()
   }
 }

@@ -62,9 +62,15 @@ final class Client(port: Int) {
 
   def bind(portal: String, stmt: String, params: Seq[Option[String]],
       resultFormats: Seq[Short] = Nil): Unit =
+    bindFormats(portal, stmt, Nil, params, resultFormats) // all params text
+
+  /** Bind with text values and a parameter-format list of any length
+    * (the server checks it against the parameter count). */
+  def bindFormats(portal: String, stmt: String, paramFormats: Seq[Short],
+      params: Seq[Option[String]], resultFormats: Seq[Short]): Unit =
     send('B') { o =>
       cstr(o, portal); cstr(o, stmt)
-      o.writeShort(0) // all params text
+      o.writeShort(paramFormats.length); paramFormats.foreach(f => o.writeShort(f))
       o.writeShort(params.length)
       params.foreach {
         case None => o.writeInt(-1)

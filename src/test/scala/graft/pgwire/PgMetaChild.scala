@@ -50,8 +50,6 @@ object PgMetaChildMain {
     PgMeta.attach(spark, metaDir)
     PgCatalog.registerAll(spark)
     PgFunctions.registerAll(spark)
-    graft.functions.VectorExpressions.install(spark)
-    graft.functions.StringExpressions.install(spark)
 
     val session = new Session(501, "postgres", "postgres")
     def run(sql: String): String =
