@@ -29,7 +29,7 @@ import org.apache.spark.sql.SparkSession
   *  - token counts replicate `size(split(trim(text), "\\s+"))`:
   *    Spark `trim` strips SPACES only, `split` is Java Pattern.split
   *    with limit -1 (leading/trailing empty tokens kept), Java `\s`
-  *    is ASCII [ \t\n\f\r];
+  *    is ASCII [ \t\n\x0B\f\r];
   *  - marker counts replicate `(length(p) - length(replace(p, m, ''))) /
   *    len(m)` — non-overlapping left-to-right occurrence count;
   *  - char counts are CODE POINTS (Spark `length`), and the

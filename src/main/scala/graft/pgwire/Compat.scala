@@ -7005,7 +7005,7 @@ object Compat {
     val n = sql.length
     var start = 0
     var i = 0
-    def peek(k: Int): Char = if (i + k < n) sql.charAt(i + k) else ' '
+    def peek(k: Int): Char = if (i + k < n) sql.charAt(i + k) else '\u0000'
     def wordBoundaryBefore: Boolean =
       i == 0 || { val p = sql.charAt(i - 1); !(p.isLetterOrDigit || p == '_') }
     while (i < n) {

@@ -4485,12 +4485,12 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
     def prevNonWs(p0: Int): Char = {
       var p = p0
       while (p >= 0 && raw.charAt(p).isWhitespace) p -= 1
-      if (p >= 0) raw.charAt(p) else ' '
+      if (p >= 0) raw.charAt(p) else '\u0000'
     }
     def nextNonWs(p0: Int): Char = {
       var p = p0
       while (p < n && raw.charAt(p).isWhitespace) p += 1
-      if (p < n) raw.charAt(p) else ' '
+      if (p < n) raw.charAt(p) else '\u0000'
     }
     while (i < n) {
       val c = raw.charAt(i)

@@ -2,6 +2,7 @@ package graft.pgwire
 
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException}
 import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.Row
 
 /** PostgreSQL wire protocol v3 message framing: readers for
   * client→server messages, writers for server→client messages
@@ -148,14 +149,23 @@ object Messages {
       }
     }
 
-  def dataRow(out: DataOutputStream, values: Seq[Option[Array[Byte]]]): Unit =
-    msg(out, 'D') { o =>
-      o.writeShort(values.length)
-      values.foreach {
-        case None => o.writeInt(-1)
-        case Some(b) => o.writeInt(b.length); o.write(b)
-      }
+  /** One result row as a DataRow, built in the connection's buffer by
+    * the result's [[RowWriter]] and written with one `write`. */
+  def dataRow(out: DataOutputStream, buf: WireBuf, w: RowWriter, row: Row): Unit = {
+    buf.begin('D'); w.write(row, buf); buf.send(out)
+  }
+
+  /** A DataRow of values already encoded (None = NULL). */
+  def dataRow(out: DataOutputStream, values: Seq[Option[Array[Byte]]]): Unit = {
+    val buf = WireBuf.scratch()
+    buf.begin('D')
+    buf.int2(values.length)
+    values.foreach {
+      case None => buf.int4(-1)
+      case Some(b) => buf.int4(b.length); buf.bytes(b)
     }
+    buf.send(out)
+  }
 
   def commandComplete(out: DataOutputStream, tag: String): Unit =
     msg(out, 'C')(cstr(_, tag))
@@ -230,8 +240,15 @@ object Messages {
       (0 until ncols).foreach(_ => o.writeShort(f))
     }
 
-  def copyData(out: DataOutputStream, bytes: Array[Byte]): Unit =
-    msg(out, 'd')(_.write(bytes))
+  def copyData(out: DataOutputStream, bytes: Array[Byte]): Unit = {
+    out.writeByte('d'); out.writeInt(bytes.length + 4); out.write(bytes)
+  }
+
+  /** One binary COPY tuple: the same bytes as a DataRow body, framed
+    * as CopyData. */
+  def copyData(out: DataOutputStream, buf: WireBuf, w: RowWriter, row: Row): Unit = {
+    buf.begin('d'); w.write(row, buf); buf.send(out)
+  }
 
   def copyDone(out: DataOutputStream): Unit = msg(out, 'c')(_ => ())
 }

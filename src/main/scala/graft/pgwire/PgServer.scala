@@ -277,6 +277,8 @@ final class PgServer(
     // notification drains at the next ReadyForQuery, pg's
     // between-transactions point — so responses never interleave.
     val writeLock = new java.util.concurrent.locks.ReentrantLock()
+    // result rows are built here, one message at a time
+    val buf = new WireBuf(8192)
     session.onNotify = () => {
       // idle INSIDE a transaction queues until the transaction ends
       // (live-pinned: the notification prints only after COMMIT)
@@ -304,7 +306,7 @@ final class PgServer(
       try msg.tpe.toChar match {
         case 'X' => return
         case 'Q' =>
-          handleSimpleQuery(in, out, session, jobGroup, msg.cStringAt(0))
+          handleSimpleQuery(in, out, buf, session, jobGroup, msg.cStringAt(0))
         case 'S' => // Sync
           ignoreTillSync = false
           readyWithNotifications(out, session); out.flush()
@@ -317,7 +319,7 @@ final class PgServer(
             case 'P' => handleParse(session, msg); Messages.parseComplete(out)
             case 'B' => handleBind(session, msg); Messages.bindComplete(out)
             case 'D' => handleDescribe(out, session, jobGroup, msg)
-            case 'E' => handleExecute(out, session, jobGroup, msg)
+            case 'E' => handleExecute(out, buf, session, jobGroup, msg)
             case 'C' =>
               val kind = msg.body(0).toChar
               val name = msg.cStringAt(1)
@@ -339,7 +341,7 @@ final class PgServer(
 
   // ---- simple query (reference: handlers.rs:154-233) ---------------------
 
-  private def handleSimpleQuery(in: DataInputStream, out: DataOutputStream,
+  private def handleSimpleQuery(in: DataInputStream, out: DataOutputStream, buf: WireBuf,
       session: Session, jobGroup: String, sql: String): Unit = {
     val statements = Compat.splitStatements(sql)
     if (statements.isEmpty) {
@@ -352,7 +354,7 @@ final class PgServer(
       if (!failed) {
         try Handlers.withTimeout(spark, session, jobGroup) {
           CopyOps.parse(stmt) match {
-            case Some(spec) => handleCopy(in, out, session, spec)
+            case Some(spec) => handleCopy(in, out, buf, session, spec)
             case None =>
           Handlers.execute(spark, session, stmt, Some(auth), hooks) match {
             case EmptyQuery => Messages.emptyQueryResponse(out)
@@ -361,9 +363,10 @@ final class PgServer(
               Messages.commandComplete(out, tag)
             case RowSet(schema, rows, tagFor, _) =>
               Messages.rowDescription(out, PgType.rowDescription(schema))
+              val w = RowWriter(schema, _ => 0, session.outputFmt)
               var n = 0L
               rows.foreach { row =>
-                Messages.dataRow(out, encodeTextRow(row, schema, session))
+                Messages.dataRow(out, buf, w, row)
                 n += 1
               }
               Messages.commandComplete(out, tagFor(n))
@@ -387,9 +390,8 @@ final class PgServer(
     * [[Handlers.execute]], so RBAC, query hooks, statement timeout and
     * transaction state apply exactly as for plain SELECT/INSERT.
     */
-  private def handleCopy(in: DataInputStream, out: DataOutputStream,
+  private def handleCopy(in: DataInputStream, out: DataOutputStream, buf: WireBuf,
       session: Session, spec: CopyOps.CopySpec): Unit = {
-    val fmt = sessionFmt(session)
     if (!spec.fromStdin) {
       // ---- COPY ... TO STDOUT ----
       val sql = spec.source match {
@@ -407,23 +409,10 @@ final class PgServer(
           // uses (byte-replay-pinned there), -1 trailer
           Messages.copyOutResponse(out, schema.fields.length, binary = true)
           Messages.copyData(out, CopyOps.binaryHeader)
+          val w = RowWriter(schema, _ => 1, TextEncoder.Fmt.default)
           var n = 0L
           rows.foreach { row =>
-            val b = new java.io.ByteArrayOutputStream()
-            b.write(BinaryEncoder.be2(schema.fields.length))
-            schema.fields.zipWithIndex.foreach { case (f, i) =>
-              val v = if (row.isNullAt(i)) null else row.get(i)
-              val enc =
-                if (v != null && PgType.isTimeField(f))
-                  Some(BinaryEncoder.be8(v.asInstanceOf[Long] / 1000))
-                else BinaryEncoder.encode(v, f.dataType)
-              enc match {
-                case None => b.write(BinaryEncoder.be4(-1))
-                case Some(bb) =>
-                  b.write(BinaryEncoder.be4(bb.length)); b.write(bb)
-              }
-            }
-            Messages.copyData(out, b.toByteArray)
+            Messages.copyData(out, buf, w, row)
             n += 1
           }
           Messages.copyData(out, BinaryEncoder.be2(-1))
@@ -435,9 +424,11 @@ final class PgServer(
           if (spec.header)
             Messages.copyData(out, CopyOps.encodeLine(
               schema.fields.toSeq.map(f => Some(f.name)), spec).getBytes(UTF_8))
+          val fmt = session.outputFmt
+          val cols = schema.fields.map(TextEncoder.writer(_, fmt))
           rows.foreach { row =>
-            val fields = schema.fields.zipWithIndex.toSeq.map { case (f, i) =>
-              TextEncoder.encodeField(if (row.isNullAt(i)) null else row.get(i), f, fmt)
+            val fields = cols.indices.map { i =>
+              if (row.isNullAt(i)) None else Some(TextEncoder.text(cols(i), row.get(i)))
             }
             Messages.copyData(out, CopyOps.encodeLine(fields, spec).getBytes(UTF_8))
             n += 1
@@ -527,41 +518,6 @@ final class PgServer(
           case _ => throw PgException("XX000", "COPY insert did not complete")
         }
       } finally spark.catalog.dropTempView(viewName)
-    }
-  }
-
-  /** Session timezone GUC → ZoneId (UTC on anything unparseable). */
-  private def sessionZone(session: Session): java.time.ZoneId =
-    try java.time.ZoneId.of(session.gucs.getOrElse("timezone", "UTC"))
-    catch { case NonFatal(_) => java.time.ZoneOffset.UTC }
-
-  /** Output-format GUC bundle for this session (FormatOptions). */
-  private def sessionFmt(session: Session): TextEncoder.Fmt =
-    TextEncoder.Fmt.fromGucs(sessionZone(session),
-      session.gucs.get("datestyle"),
-      session.gucs.get("bytea_output"),
-      session.gucs.get("extra_float_digits"))
-
-  private def encodeTextRow(row: Row, schema: StructType,
-      session: Session): Seq[Option[Array[Byte]]] = {
-    val fmt = sessionFmt(session)
-    schema.fields.zipWithIndex.toSeq.map { case (f, i) =>
-      TextEncoder.encodeField(if (row.isNullAt(i)) null else row.get(i), f, fmt)
-        .map(_.getBytes(UTF_8))
-    }
-  }
-
-  private def encodeRow(row: Row, schema: StructType, session: Session,
-      formats: Int => Short): Seq[Option[Array[Byte]]] = {
-    val fmt = sessionFmt(session)
-    schema.fields.zipWithIndex.toSeq.map { case (f, i) =>
-      val v = if (row.isNullAt(i)) null else row.get(i)
-      if (formats(i) == 1) {
-        // TIME binary = micros-since-midnight int8
-        if (v != null && PgType.isTimeField(f))
-          Some(BinaryEncoder.be8(v.asInstanceOf[Long] / 1000))
-        else BinaryEncoder.encode(v, f.dataType)
-      } else TextEncoder.encodeField(v, f, fmt).map(_.getBytes(UTF_8))
     }
   }
 
@@ -877,7 +833,7 @@ final class PgServer(
       catch { case NonFatal(_) => None }
     }
 
-  private def handleExecute(out: DataOutputStream, session: Session,
+  private def handleExecute(out: DataOutputStream, buf: WireBuf, session: Session,
       jobGroup: String, msg: Messages.Msg): Unit = {
     val in = msg.in
     val name = readCStr(in)
@@ -894,11 +850,13 @@ final class PgServer(
           push.foreach { case (k, v) => Messages.parameterStatus(out, k, v) }
           Messages.commandComplete(out, tag)
         case RowSet(schema, rows, tagFor, _) =>
+          // built per Execute, not per portal: pg formats at output
+          // time, so a SET DateStyle between two Executes applies
+          val w = RowWriter(schema, formatAt(portal.resultFormats, _), session.outputFmt)
           var n = 0L
           var suspended = false
           while (rows.hasNext && !suspended) {
-            Messages.dataRow(out,
-              encodeRow(rows.next(), schema, session, formatAt(portal.resultFormats, _)))
+            Messages.dataRow(out, buf, w, rows.next())
             n += 1
             if (maxRows > 0 && n >= maxRows && rows.hasNext) suspended = true
           }

@@ -32,6 +32,16 @@ final class Session(val connId: Int, val user: String, val database: String) {
     "max_identifier_length" -> "63",
     "client_encoding" -> "UTF8")
 
+  /** The output-format GUCs as the result encoders read them (pg
+    * FormatOptions); a TimeZone that does not parse reads as UTC. */
+  def outputFmt: TextEncoder.Fmt = {
+    val zone =
+      try java.time.ZoneId.of(gucs.getOrElse("timezone", "UTC"))
+      catch { case scala.util.control.NonFatal(_) => java.time.ZoneOffset.UTC }
+    TextEncoder.Fmt.fromGucs(zone, gucs.get("datestyle"), gucs.get("bytea_output"),
+      gucs.get("extra_float_digits"))
+  }
+
   /** statement_timeout in millis; 0 = none. */
   var statementTimeoutMs: Long = 0L
 

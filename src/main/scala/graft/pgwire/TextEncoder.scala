@@ -2,23 +2,27 @@ package graft.pgwire
 
 import java.sql.{Date, Timestamp}
 import java.time.{Duration, Instant, LocalDate, LocalDateTime, Period, ZoneOffset}
-import java.time.format.DateTimeFormatter
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.CalendarInterval
 
-/** Spark Row values → PostgreSQL text-format wire strings, following
+/** Spark Row values → PostgreSQL text-format wire bytes, following
   * pg's own output conventions (the reference delegates this to
   * pgwire's ToSqlText; behavior matrix at
   * arrow-pg/src/encoder.rs:536-738 and list_encoder.rs/struct_encoder.rs).
   *
-  * Null is represented as None (the DataRow writes -1 length).
+  * [[writer]] resolves a column's text form once (field metadata, type,
+  * the output-format GUCs); the result path ([[RowWriter]]) then appends
+  * each value straight into the connection's [[WireBuf]]. The per-value
+  * functions ([[encodeField]], [[encode]], [[formatFloat]], …) are
+  * adapters over the same writers; null is None there.
   */
 object TextEncoder {
 
   /** Output-format GUCs (pg FormatOptions; reference delegates to
     * pgwire's ToSqlText + FormatOptions, encoder.rs:259-534):
-    * DateStyle (style + field order), bytea_output, extra_float_digits.
+    * TimeZone, DateStyle (style + field order), bytea_output,
+    * extra_float_digits.
     *
     * extra_float_digits ≥ 1 → shortest-round-trip (pg 12+ default);
     * ≤ 0 → `%.*g` with 15+n (float8) / 6+n (float4) significant digits.
@@ -52,203 +56,285 @@ object TextEncoder {
     }
   }
 
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
-  private val dateFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd")
+  // ---- per-value adapters -------------------------------------------------
 
-  /** pg TIME text from nanos-since-midnight (the SURVEY §1 TIME
-    * encoding: LongType + pg.type=time metadata).
-    */
-  def encodeTime(nanos: Long): String = {
-    val us = nanos / 1000
-    val h = us / 3600000000L
-    val m = (us % 3600000000L) / 60000000L
-    val s = (us % 60000000L) / 1000000L
-    val frac = us % 1000000L
-    val base = "%02d:%02d:%02d".format(h, m, s)
-    if (frac == 0) base
-    else base + "." + "%06d".format(frac).reverse.dropWhile(_ == '0').reverse
-  }
-
-  /** Field-aware encode: honors pg.type=time metadata and the session
-    * timezone for timestamptz (pg renders TIMESTAMPTZ at the TimeZone
-    * GUC with its UTC offset; reference: set_show.rs TimeZone handling).
+  /** Field-aware encode: honors pg.type=time/geometry metadata and the
+    * session timezone for timestamptz (pg renders TIMESTAMPTZ at the
+    * TimeZone GUC with its UTC offset; reference: set_show.rs TimeZone
+    * handling).
     */
   def encodeField(v: Any, f: StructField, zone: java.time.ZoneId): Option[String] =
     encodeField(v, f, Fmt(zone = zone))
 
   def encodeField(v: Any, f: StructField,
       fmt: Fmt = Fmt.default): Option[String] =
-    if (v == null) None
-    else if (PgType.isTimeField(f)) Some(encodeTime(v.asInstanceOf[Long]))
-    // geometry (EWKB bytes): text form is uppercase hex EWKB, exactly
-    // PostGIS's geometry output function (reference geo surface,
-    // arrow-pg/src/geo_encoder.rs — its WKB arrays render the same way)
-    else if (PgType.isGeometryField(f))
-      Some(graft.functions.Geo.bytesToHex(v.asInstanceOf[Array[Byte]]))
-    else f.dataType match {
-      case TimestampType =>
-        val instant = v match {
-          case t: Timestamp => t.toInstant
-          case t: Instant => t
-        }
-        Some(formatTsTz(instant, fmt))
-      case _ => encode(v, f.dataType, fmt)
-    }
-
-  /** pg timestamptz text at a zone: "yyyy-MM-dd HH:mm:ss[.ffffff]±HH[:MM]". */
-  def formatTsTz(instant: Instant, zone: java.time.ZoneId): String =
-    formatTsTz(instant, Fmt(zone = zone))
-
-  def formatTsTz(instant: Instant, fmt: Fmt): String = {
-    val zoned = instant.atZone(fmt.zone)
-    val base = formatTs(zoned.toLocalDateTime, fmt)
-    val totalSec = zoned.getOffset.getTotalSeconds
-    val sign = if (totalSec < 0) "-" else "+"
-    val abs = math.abs(totalSec)
-    val hh = abs / 3600
-    val mm = (abs % 3600) / 60
-    base + sign + "%02d".format(hh) + (if (mm != 0) ":%02d".format(mm) else "")
-  }
+    if (v == null || f.dataType == NullType) None
+    else Some(text(writer(f, fmt), v))
 
   /** Encode one value of the given Spark type to pg text format. */
   def encode(v: Any, dt: DataType, fmt: Fmt = Fmt.default): Option[String] =
-    if (v == null) None
-    else Some(dt match {
-      case NullType => return None
-      case BooleanType => if (v.asInstanceOf[Boolean]) "t" else "f"
-      case ByteType | ShortType | IntegerType | LongType => v.toString
-      case FloatType => formatFloat(v.asInstanceOf[Float].toDouble, isFloat4 = true, fmt.extraFloatDigits)
-      case DoubleType => formatFloat(v.asInstanceOf[Double], isFloat4 = false, fmt.extraFloatDigits)
-      case _: DecimalType => v.asInstanceOf[java.math.BigDecimal].toPlainString
-      case StringType | _: CharType | _: VarcharType => v.toString
-      case BinaryType => formatBytea(v.asInstanceOf[Array[Byte]], fmt.byteaEscape)
-      case DateType => v match {
-        case d: Date => formatDate(d.toLocalDate, fmt)
-        case d: LocalDate => formatDate(d, fmt)
-      }
-      case TimestampNTZType => v match {
-        case t: LocalDateTime => formatTs(t, fmt)
-        case t: Timestamp => formatTs(t.toLocalDateTime, fmt)
-      }
-      case TimestampType => v match {
-        // session tz is UTC throughout; pg prints tz-aware values with offset
-        case t: Timestamp => formatTs(t.toInstant.atOffset(ZoneOffset.UTC).toLocalDateTime, fmt) + "+00"
-        case t: Instant => formatTs(t.atOffset(ZoneOffset.UTC).toLocalDateTime, fmt) + "+00"
-      }
-      case dt: DayTimeIntervalType =>
-        // a day-leading type renders its whole days as pg days
-        // ('35 days', not '840:00:00') — see dayTimeParts
-        val us = v.asInstanceOf[Duration].toNanos / 1000
-        val (dd, rest) = graft.functions.PgFormatExpressions.dayTimeParts(us, dt)
-        formatInterval(0, dd, rest)
-      case _: YearMonthIntervalType => formatYearMonthInterval(v.asInstanceOf[Period])
-      case CalendarIntervalType =>
-        val ci = v.asInstanceOf[CalendarInterval]
-        formatInterval(ci.months, ci.days, ci.microseconds)
-      case ArrayType(el, _) => encodeArray(v.asInstanceOf[scala.collection.Seq[Any]], el, fmt)
-      case st: StructType => encodeStruct(v.asInstanceOf[Row], st)
-      case MapType(kt, vt, _) => encodeMap(v.asInstanceOf[scala.collection.Map[Any, Any]], kt, vt)
-      case other => throw new IllegalArgumentException(s"Unsupported type $other")
-    })
+    if (v == null || dt == NullType) None
+    else Some(text(writer(dt, fmt), v))
 
-  private def formatTs(t: LocalDateTime): String = formatTs(t, Fmt.default)
+  /** pg array text: {a,b,NULL}. */
+  def encodeArray(els: scala.collection.Seq[Any], elType: DataType,
+      fmt: Fmt = Fmt.default): String =
+    text(writer(ArrayType(elType), fmt), els)
 
-  private def formatTs(t: LocalDateTime, fmt: Fmt): String = {
-    val micros = t.getNano / 1000
-    val frac =
-      if (micros == 0) ""
-      else "." + "%06d".format(micros).reverse.dropWhile(_ == '0').reverse
-    val time = "%02d:%02d:%02d".format(t.getHour, t.getMinute, t.getSecond) + frac
-    fmt.dateStyle match {
-      case "iso" => t.format(tsFmt) + frac
-      case "german" => formatDate(t.toLocalDate, fmt) + " " + time
-      case "sql" => formatDate(t.toLocalDate, fmt) + " " + time
-      case "postgres" =>
+  /** pg TIME text from nanos-since-midnight (the SURVEY §1 TIME
+    * encoding: LongType + pg.type=time metadata). */
+  def encodeTime(nanos: Long): String = text(TimeText, nanos)
+
+  /** pg float text as a String; see [[writeFloat]]. */
+  def formatFloat(d: Double, isFloat4: Boolean, extraFloatDigits: Int = 1): String = {
+    val b = WireBuf.scratch()
+    writeFloat(d, isFloat4, extraFloatDigits, b)
+    b.toString
+  }
+
+  /** One non-null value's text through a column writer. */
+  def text(w: ColWriter, v: Any): String = {
+    val b = WireBuf.scratch()
+    w.write(v, b)
+    b.toString
+  }
+
+  // ---- column writers -----------------------------------------------------
+
+  /** The text writer of a result column: pg.type metadata first (TIME,
+    * geometry), then the Spark type. */
+  def writer(f: StructField, fmt: Fmt): ColWriter =
+    if (PgType.isTimeField(f)) TimeText
+    // geometry (EWKB bytes): text form is uppercase hex EWKB, exactly
+    // PostGIS's geometry output function (reference geo surface,
+    // arrow-pg/src/geo_encoder.rs — its WKB arrays render the same way)
+    else if (PgType.isGeometryField(f)) GeometryText
+    else writer(f.dataType, fmt)
+
+  /** The text writer of a Spark type; array elements, record fields and
+    * map entries use the same output-format settings. */
+  def writer(dt: DataType, fmt: Fmt): ColWriter = dt match {
+    case BooleanType => BoolText
+    case ByteType | ShortType | IntegerType | LongType => IntText
+    case FloatType =>
+      (v, b) => writeFloat(v.asInstanceOf[Float].toDouble, isFloat4 = true, fmt.extraFloatDigits, b)
+    case DoubleType =>
+      (v, b) => writeFloat(v.asInstanceOf[Double], isFloat4 = false, fmt.extraFloatDigits, b)
+    case _: DecimalType => DecimalText
+    case StringType | _: CharType | _: VarcharType => StringText
+    case BinaryType => if (fmt.byteaEscape) ByteaEscapeText else ByteaHexText
+    case DateType => dateText(new DateTimeFmt(fmt))
+    case TimestampNTZType => timestampText(new DateTimeFmt(fmt))
+    case TimestampType => new TimestampTzText(new DateTimeFmt(fmt), fmt.zone)
+    case dt: DayTimeIntervalType => dayTimeText(dt)
+    case _: YearMonthIntervalType => YearMonthText
+    case CalendarIntervalType => CalendarIntervalText
+    case ArrayType(el, _) => new ArrayText(el, writer(el, fmt))
+    case st: StructType => new RecordText(st.fields.map(f => f.dataType == NullType),
+      st.fields.map(f => writer(f.dataType, fmt)))
+    case MapType(kt, vt, _) => new MapText(writer(kt, fmt), writer(vt, fmt))
+    case other => (_, _) => throw new IllegalArgumentException(s"Unsupported type $other")
+  }
+
+  private val BoolText: ColWriter = (v, b) => b.byte(if (v.asInstanceOf[Boolean]) 't' else 'f')
+  private val IntText: ColWriter = (v, b) => b.digits(v.asInstanceOf[Number].longValue)
+  private val DecimalText: ColWriter =
+    (v, b) => b.ascii(v.asInstanceOf[java.math.BigDecimal].toPlainString)
+  private val StringText: ColWriter = (v, b) => b.utf8(v.toString)
+
+  /** bytea_output = hex: `\x` and two lowercase hex digits a byte. */
+  private val ByteaHexText: ColWriter = (v, b) => {
+    b.byte('\\'); b.byte('x')
+    hex(v.asInstanceOf[Array[Byte]], "0123456789abcdef", b)
+  }
+
+  private def hex(bs: Array[Byte], digits: String, b: WireBuf): Unit = {
+    var i = 0
+    while (i < bs.length) {
+      b.byte(digits.charAt((bs(i) >> 4) & 0xf)); b.byte(digits.charAt(bs(i) & 0xf))
+      i += 1
+    }
+  }
+
+  /** bytea_output = escape: printables verbatim, backslash doubled,
+    * the rest octal-escaped. */
+  private val ByteaEscapeText: ColWriter = (v, b) => {
+    val bs = v.asInstanceOf[Array[Byte]]
+    var i = 0
+    while (i < bs.length) {
+      val c = bs(i) & 0xff
+      if (c == '\\') { b.byte('\\'); b.byte('\\') }
+      else if (c >= 32 && c <= 126) b.byte(c)
+      else { b.byte('\\'); b.byte('0' + (c >> 6)); b.byte('0' + ((c >> 3) & 7)); b.byte('0' + (c & 7)) }
+      i += 1
+    }
+  }
+
+  private val GeometryText: ColWriter = (v, b) => hex(v.asInstanceOf[Array[Byte]], "0123456789ABCDEF", b)
+
+  /** TIME from nanos since midnight: HH:MM:SS[.ffffff]. */
+  private val TimeText: ColWriter = (v, b) => {
+    val us = v.asInstanceOf[Long] / 1000
+    b.padded(us / 3600000000L, 2); b.byte(':')
+    b.padded((us % 3600000000L) / 60000000L, 2); b.byte(':')
+    b.padded((us % 60000000L) / 1000000L, 2)
+    writeFraction(us % 1000000L, b)
+  }
+
+  /** `.ffffff` with trailing zeros dropped; nothing for zero. */
+  private def writeFraction(us: Long, b: WireBuf): Unit =
+    if (us != 0) {
+      var x = us
+      var width = 6
+      while (x % 10 == 0) { x /= 10; width -= 1 }
+      b.byte('.')
+      b.padded(x, width)
+    }
+
+  // ---- dates and timestamps ----------------------------------------------
+
+  /** DateStyle resolved once per column. */
+  private final class DateTimeFmt(fmt: Fmt) {
+    private val style = fmt.dateStyle match {
+      case "iso" => 0
+      case "german" => 1
+      case "sql" => 2
+      case "postgres" => 3
+    }
+    private val dmy = fmt.dateOrder == "dmy"
+
+    def date(epochDay: Long, b: WireBuf): Unit = {
+      val ymd = civil(epochDay)
+      val y = (ymd >> 16).toInt
+      val m = ((ymd >> 8) & 0xff).toInt
+      val d = (ymd & 0xff).toInt
+      style match {
+        case 0 =>
+          // DateTimeFormatter's `yyyy`: year of era, '+' past 9999
+          val yoe = if (y >= 1) y else 1 - y
+          if (yoe > 9999) b.byte('+')
+          b.padded(yoe, 4); b.byte('-'); b.padded(m, 2); b.byte('-'); b.padded(d, 2)
+        case 1 => b.padded(d, 2); b.byte('.'); b.padded(m, 2); b.byte('.'); b.padded(y, 4)
+        case _ =>
+          val sep = if (style == 2) '/' else '-'
+          b.padded(if (dmy) d else m, 2); b.byte(sep)
+          b.padded(if (dmy) m else d, 2); b.byte(sep); b.padded(y, 4)
+      }
+    }
+
+    /** Wall-clock timestamp from its local epoch second and nanos. */
+    def timestamp(localSecond: Long, nanos: Int, b: WireBuf): Unit = {
+      val epochDay = Math.floorDiv(localSecond, 86400L)
+      val sod = Math.floorMod(localSecond, 86400L)
+      if (style == 3) {
         // "Wed Mar 01 14:30:00 2024" (day-of-week style; deviation:
         // tz-aware values keep the ISO ±HH offset suffix rather than
         // a zone abbreviation)
-        val dow = t.getDayOfWeek.getDisplayName(
-          java.time.format.TextStyle.SHORT, java.util.Locale.ENGLISH)
-        val mon = t.getMonth.getDisplayName(
-          java.time.format.TextStyle.SHORT, java.util.Locale.ENGLISH)
-        s"$dow $mon %02d".format(t.getDayOfMonth) + s" $time ${t.getYear}"
+        val ymd = civil(epochDay)
+        b.ascii(dayNames(Math.floorMod(epochDay + 3, 7L).toInt)); b.byte(' ')
+        b.ascii(monthNames(((ymd >> 8) & 0xff).toInt - 1)); b.byte(' ')
+        b.padded(ymd & 0xff, 2); b.byte(' ')
+        time(sod, nanos, b); b.byte(' ')
+        b.digits(ymd >> 16)
+      } else {
+        date(epochDay, b); b.byte(' ')
+        time(sod, nanos, b)
+      }
+    }
+
+    private def time(sod: Long, nanos: Int, b: WireBuf): Unit = {
+      b.padded(sod / 3600, 2); b.byte(':')
+      b.padded(sod / 60 % 60, 2); b.byte(':')
+      b.padded(sod % 60, 2)
+      writeFraction(nanos / 1000, b)
     }
   }
 
-  /** pg DateStyle-aware DATE text. */
-  private def formatDate(d: LocalDate, fmt: Fmt): String = fmt.dateStyle match {
-    case "iso" => d.format(dateFmt)
-    case "german" => "%02d.%02d.%04d".format(d.getDayOfMonth, d.getMonthValue, d.getYear)
-    case "sql" =>
-      if (fmt.dateOrder == "dmy") "%02d/%02d/%04d".format(d.getDayOfMonth, d.getMonthValue, d.getYear)
-      else "%02d/%02d/%04d".format(d.getMonthValue, d.getDayOfMonth, d.getYear)
-    case "postgres" =>
-      if (fmt.dateOrder == "dmy") "%02d-%02d-%04d".format(d.getDayOfMonth, d.getMonthValue, d.getYear)
-      else "%02d-%02d-%04d".format(d.getMonthValue, d.getDayOfMonth, d.getYear)
+  private val dayNames = Array("Mon", "Tue", "Wed", "Thu", "Fri", "Sat", "Sun")
+  private val monthNames =
+    Array("Jan", "Feb", "Mar", "Apr", "May", "Jun", "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
+
+  /** Proleptic Gregorian (year, month, day) of an epoch day, packed as
+    * `year << 16 | month << 8 | day` (LocalDate.ofEpochDay's algorithm). */
+  private def civil(epochDay: Long): Long = {
+    var zeroDay = epochDay + 719528 - 60 // from 0000-03-01: leap day ends the cycle
+    var adjust = 0L
+    if (zeroDay < 0) {
+      val cycles = (zeroDay + 1) / 146097 - 1
+      adjust = cycles * 400
+      zeroDay += -cycles * 146097
+    }
+    var year = (400 * zeroDay + 591) / 146097
+    var doy = zeroDay - (365 * year + year / 4 - year / 100 + year / 400)
+    if (doy < 0) {
+      year -= 1
+      doy = zeroDay - (365 * year + year / 4 - year / 100 + year / 400)
+    }
+    year += adjust
+    val marchMonth0 = (doy.toInt * 5 + 2) / 153
+    val month = (marchMonth0 + 2) % 12 + 1
+    val day = doy.toInt - (marchMonth0 * 306 + 5) / 10 + 1
+    year += marchMonth0 / 10
+    (year << 16) | (month << 8) | day
   }
 
-  /** bytea_output: hex (default) or pg escape format (printables
-    * verbatim, backslash doubled, the rest octal-escaped). */
-  private def formatBytea(b: Array[Byte], escape: Boolean): String =
-    if (!escape) "\\x" + b.map("%02x".format(_)).mkString
-    else b.map { x =>
-      val c = x & 0xff
-      if (c == '\\') "\\\\"
-      else if (c >= 32 && c <= 126) c.toChar.toString
-      else "\\%03o".format(c)
-    }.mkString
+  private def dateText(dtf: DateTimeFmt): ColWriter = (v, b) => dtf.date(v match {
+    case d: Date => d.toLocalDate.toEpochDay
+    case d: LocalDate => d.toEpochDay
+  }, b)
 
-  /** pg float text (Ryu-style): shortest round-trip digits, plain
-    * decimal within the pg exponent window, `d.ddde±XX` outside it.
-    * pg prints `0.0001` (not `1.0E-4`) and `1e-05`; the decimal window
-    * is exponent ∈ [-4, 15] for float8 and [-4, 5] for float4
-    * (matching pg's float8out/float4out Ryu output).
-    */
-  def formatFloat(d: Double, isFloat4: Boolean, extraFloatDigits: Int = 1): String =
-    if (d.isNaN) "NaN"
-    else if (d.isPosInfinity) "Infinity"
-    else if (d.isNegInfinity) "-Infinity"
-    else if (d == 0.0) { if (1 / d < 0) "-0" else "0" }
-    else {
-      val neg = d < 0
-      // extra_float_digits ≥ 1 → shortest round-trip (Java's toString);
-      // ≤ 0 → pg's pre-Ryu `%.*g` with DIG+n significant digits
-      val ndig =
-        if (extraFloatDigits >= 1) 0
-        else math.max(1, (if (isFloat4) 6 else 15) + extraFloatDigits)
-      val s =
-        if (ndig > 0)
-          new java.math.BigDecimal(math.abs(d))
-            .round(new java.math.MathContext(ndig)).toString
-        else if (isFloat4) java.lang.Float.toString(math.abs(d).toFloat)
-        else java.lang.Double.toString(math.abs(d))
-      val (mant, exp) =
-        if (s.contains("E")) { val Array(m, e) = s.split("E"); (m, e.toInt) }
-        else (s, 0)
-      val dot = mant.indexOf('.')
-      val digits0 = mant.replace(".", "")
-      val intLen = if (dot < 0) mant.length else dot
-      val stripped = digits0.dropWhile(_ == '0')
-      val lead = digits0.length - stripped.length
-      val e10 = intLen + exp - lead - 1 // exponent of first significant digit
-      val sig0 = stripped.reverse.dropWhile(_ == '0').reverse
-      val sig = if (sig0.isEmpty) "0" else sig0
-      // %g switches to scientific at the precision; Ryu at the pg window
-      val maxDecimalExp =
-        if (ndig > 0) ndig - 1 else if (isFloat4) 5 else 15
-      val body =
-        if (e10 > maxDecimalExp || e10 < -4) {
-          val m = if (sig.length == 1) sig else sig.head + "." + sig.tail
-          m + "e" + (if (e10 < 0) "-" else "+") + "%02d".format(math.abs(e10))
-        } else if (e10 >= sig.length - 1) {
-          sig + "0" * (e10 - sig.length + 1)
-        } else if (e10 >= 0) {
-          sig.substring(0, e10 + 1) + "." + sig.substring(e10 + 1)
-        } else {
-          "0." + "0" * (-e10 - 1) + sig
-        }
-      (if (neg) "-" else "") + body
+  private def timestampText(dtf: DateTimeFmt): ColWriter = (v, b) => {
+    val t = v match {
+      case t: LocalDateTime => t
+      case t: Timestamp => t.toLocalDateTime
     }
+    dtf.timestamp(t.toLocalDate.toEpochDay * 86400L + t.toLocalTime.toSecondOfDay, t.getNano, b)
+  }
+
+  /** timestamptz at the session TimeZone, with its UTC offset:
+    * "yyyy-MM-dd HH:mm:ss[.ffffff]±HH[:MM]". */
+  private final class TimestampTzText(dtf: DateTimeFmt, zone: java.time.ZoneId) extends ColWriter {
+    private val rules = zone.getRules
+    private val fixed =
+      if (rules.isFixedOffset) rules.getOffset(Instant.EPOCH).getTotalSeconds else Int.MinValue
+
+    def write(v: Any, b: WireBuf): Unit = {
+      var sec = 0L
+      var nanos = 0
+      v match {
+        case t: Timestamp => sec = Math.floorDiv(t.getTime, 1000L); nanos = t.getNanos
+        case t: Instant => sec = t.getEpochSecond; nanos = t.getNano
+      }
+      val off =
+        if (fixed != Int.MinValue) fixed
+        else rules.getOffset(Instant.ofEpochSecond(sec, nanos)).getTotalSeconds
+      dtf.timestamp(sec + off, nanos, b)
+      val abs = math.abs(off)
+      b.byte(if (off < 0) '-' else '+')
+      b.padded(abs / 3600, 2)
+      if (abs % 3600 / 60 != 0) { b.byte(':'); b.padded(abs % 3600 / 60, 2) }
+    }
+  }
+
+  // ---- intervals ------------------------------------------------------------
+
+  private def dayTimeText(dt: DayTimeIntervalType): ColWriter = (v, b) => {
+    // a day-leading type renders its whole days as pg days
+    // ('35 days', not '840:00:00') — see dayTimeParts
+    val us = v.asInstanceOf[Duration].toNanos / 1000
+    val (dd, rest) = graft.functions.PgFormatExpressions.dayTimeParts(us, dt)
+    b.ascii(formatInterval(0, dd, rest))
+  }
+
+  private val YearMonthText: ColWriter = (v, b) => {
+    val p = v.asInstanceOf[Period]
+    b.ascii(formatInterval(p.getYears * 12 + p.getMonths, 0, 0))
+  }
+
+  private val CalendarIntervalText: ColWriter = (v, b) => {
+    val ci = v.asInstanceOf[CalendarInterval]
+    b.ascii(formatInterval(ci.months, ci.days, ci.microseconds))
+  }
 
   /** pg interval text, verbose-ish style: "1 year 2 mons 3 days 04:05:06".
     * pg pluralizes every value except exactly 1 ('-1 days', live-pg
@@ -276,59 +362,180 @@ object TextEncoder {
     sb.toString.trim
   }
 
-  private def formatDayTimeInterval(d: Duration): String =
-    formatInterval(0, 0, d.toNanos / 1000)
+  // ---- floats ---------------------------------------------------------------
 
-  private def formatYearMonthInterval(p: Period): String =
-    formatInterval(p.getYears * 12 + p.getMonths, 0, 0)
+  /** pg float text (Ryu-style): shortest round-trip digits, plain
+    * decimal within the pg exponent window, `d.ddde±XX` outside it.
+    * pg prints `0.0001` (not `1.0E-4`) and `1e-05`; the decimal window
+    * is exponent ∈ [-4, 15] for float8 and [-4, 5] for float4
+    * (matching pg's float8out/float4out Ryu output).
+    *
+    * One pass over the JDK's digit string finds the significant digits
+    * and the decimal exponent; they are then laid out in place.
+    */
+  def writeFloat(d: Double, isFloat4: Boolean, extraFloatDigits: Int, b: WireBuf): Unit =
+    if (d.isNaN) b.ascii("NaN")
+    else if (d.isPosInfinity) b.ascii("Infinity")
+    else if (d.isNegInfinity) b.ascii("-Infinity")
+    else if (d == 0.0) b.ascii(if (1 / d < 0) "-0" else "0")
+    else {
+      // extra_float_digits ≥ 1 → shortest round-trip (Java's toString);
+      // ≤ 0 → pg's pre-Ryu `%.*g` with DIG+n significant digits
+      val ndig =
+        if (extraFloatDigits >= 1) 0
+        else math.max(1, (if (isFloat4) 6 else 15) + extraFloatDigits)
+      val s =
+        if (ndig > 0)
+          new java.math.BigDecimal(math.abs(d))
+            .round(new java.math.MathContext(ndig)).toString
+        else if (isFloat4) java.lang.Float.toString(math.abs(d).toFloat)
+        else java.lang.Double.toString(math.abs(d))
+      // mantissa digits are numbered without the '.'; `dot` of them
+      // precede it, the significant ones run from `first` to `last`
+      var dot = -1
+      var nd = 0
+      var first = -1
+      var last = -1
+      var exp = 0
+      var i = 0
+      while (i < s.length) {
+        val c = s.charAt(i)
+        if (c == '.') dot = nd
+        else if (c == 'E') {
+          val neg = s.charAt(i + 1) == '-'
+          var j = if (neg || s.charAt(i + 1) == '+') i + 2 else i + 1
+          while (j < s.length) { exp = exp * 10 + (s.charAt(j) - '0'); j += 1 }
+          if (neg) exp = -exp
+          i = s.length
+        } else {
+          if (c != '0') { if (first < 0) first = nd; last = nd }
+          nd += 1
+        }
+        i += 1
+      }
+      val intLen = if (dot < 0) nd else dot
+      def digit(k: Int): Unit = b.byte(s.charAt(if (dot >= 0 && k >= dot) k + 1 else k))
+      def digits(from: Int, until: Int): Unit = { var k = from; while (k < until) { digit(k); k += 1 } }
+      val e10 = intLen + exp - first - 1 // exponent of the first significant digit
+      val sigLen = last - first + 1
+      // %g switches to scientific at the precision; Ryu at the pg window
+      val maxDecimalExp =
+        if (ndig > 0) ndig - 1 else if (isFloat4) 5 else 15
+      if (d < 0) b.byte('-')
+      if (e10 > maxDecimalExp || e10 < -4) {
+        digit(first)
+        if (sigLen > 1) { b.byte('.'); digits(first + 1, last + 1) }
+        b.byte('e'); b.byte(if (e10 < 0) '-' else '+'); b.padded(math.abs(e10), 2)
+      } else if (e10 >= sigLen - 1) {
+        digits(first, last + 1)
+        var z = e10 - sigLen + 1
+        while (z > 0) { b.byte('0'); z -= 1 }
+      } else if (e10 >= 0) {
+        digits(first, first + e10 + 1); b.byte('.'); digits(first + e10 + 1, last + 1)
+      } else {
+        b.byte('0'); b.byte('.')
+        var z = -e10 - 1
+        while (z > 0) { b.byte('0'); z -= 1 }
+        digits(first, last + 1)
+      }
+    }
+
+  // ---- composites -----------------------------------------------------------
+
+  /** Write one element with `w`, then wrap it in double quotes (escaping
+    * `"` and `\`) when [[needsQuote]] says so. */
+  private def quoted(w: ColWriter, v: Any, b: WireBuf, record: Boolean): Unit = {
+    val start = b.size
+    w.write(v, b)
+    val end = b.size
+    if (needsQuote(b, start, end, record)) {
+      val raw = b.copy(start, end)
+      b.truncate(start)
+      b.byte('"')
+      var i = 0
+      while (i < raw.length) {
+        if (raw(i) == '"' || raw(i) == '\\') b.byte('\\')
+        b.byte(raw(i))
+        i += 1
+      }
+      b.byte('"')
+    }
+  }
+
+  /** Array elements quote when empty, `NULL` in any case, or holding
+    * `,{}"\` or whitespace; record fields when empty or holding
+    * `,()"\` or whitespace. */
+  private def needsQuote(b: WireBuf, start: Int, end: Int, record: Boolean): Boolean =
+    if (start == end) true
+    else if (!record && end - start == 4 && b.string(start, end).equalsIgnoreCase("null")) true
+    else {
+      var i = start
+      var q = false
+      var wide = false
+      while (i < end && !q) {
+        val c = b.at(i)
+        if (c < 0) wide = true
+        else q = c == ',' || c == '"' || c == '\\' || c == ' ' ||
+          (c >= 9 && c <= 13) || (c >= 28 && c <= 31) ||
+          (if (record) c == '(' || c == ')' else c == '{' || c == '}')
+        i += 1
+      }
+      // non-ASCII whitespace (U+2003, U+3000, …) counts too
+      q || (wide && b.string(start, end).exists(Character.isWhitespace))
+    }
 
   /** pg array text: {a,b,NULL}; elements quoted when they contain
-    * specials (reference regression: `{NULL}` array — encoder.rs tests).
+    * specials (reference regression: `{NULL}` array — encoder.rs tests);
+    * nested sub-arrays render bare: pg multidim text is {{1,2},{3,4}}.
     */
-  def encodeArray(els: scala.collection.Seq[Any], elType: DataType,
-      fmt: Fmt = Fmt.default): String =
-    els.map { el =>
-      encode(el, elType, fmt) match {
-        case None => "NULL"
-        case Some(s) => quoteArrayElement(s, elType)
+  private final class ArrayText(el: DataType, w: ColWriter) extends ColWriter {
+    private val nullEl = el == NullType
+    private val bare = el.isInstanceOf[ArrayType]
+
+    def write(v: Any, b: WireBuf): Unit = {
+      b.byte('{')
+      var sep = false
+      v.asInstanceOf[scala.collection.Seq[Any]].foreach { e =>
+        if (sep) b.byte(',')
+        sep = true
+        if (e == null || nullEl) b.ascii("NULL")
+        else if (bare) w.write(e, b)
+        else quoted(w, e, b, record = false)
       }
-    }.mkString("{", ",", "}")
-
-  private def needsQuote(s: String): Boolean =
-    s.isEmpty || s.equalsIgnoreCase("null") ||
-      s.exists(c => c == ',' || c == '{' || c == '}' || c == '"' || c == '\\' || c.isWhitespace)
-
-  private def quoteArrayElement(s: String, elType: DataType): String = elType match {
-    // nested sub-arrays render bare: pg multidim text is {{1,2},{3,4}}
-    case _: ArrayType => s
-    case StringType | _: CharType | _: VarcharType | BinaryType | _: StructType |
-         CalendarIntervalType | _: DayTimeIntervalType | _: YearMonthIntervalType |
-         TimestampType | TimestampNTZType if needsQuote(s) || s.contains("\\x") =>
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    case _ if needsQuote(s) =>
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    case _ => s
+      b.byte('}')
+    }
   }
 
   /** pg composite text: (a,b); NULL fields empty; quoting like arrays
     * (reference: arrow-pg/src/struct_encoder.rs:74-160).
     */
-  def encodeStruct(row: Row, st: StructType): String =
-    st.fields.zipWithIndex.map { case (fld, i) =>
-      encode(if (row.isNullAt(i)) null else row.get(i), fld.dataType) match {
-        case None => ""
-        case Some(s) =>
-          if (s.isEmpty || s.exists(c => c == ',' || c == '(' || c == ')' || c == '"' || c == '\\' || c.isWhitespace))
-            "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-          else s
+  private final class RecordText(nullField: Array[Boolean], ws: Array[ColWriter]) extends ColWriter {
+    def write(v: Any, b: WireBuf): Unit = {
+      val row = v.asInstanceOf[Row]
+      b.byte('(')
+      var i = 0
+      while (i < ws.length) {
+        if (i > 0) b.byte(',')
+        if (!row.isNullAt(i) && !nullField(i)) quoted(ws(i), row.get(i), b, record = true)
+        i += 1
       }
-    }.mkString("(", ",", ")")
+      b.byte(')')
+    }
+  }
 
   /** Maps have no pg type; hstore-style "k"=>"v" text. */
-  def encodeMap(m: scala.collection.Map[Any, Any], kt: DataType, vt: DataType): String =
-    m.map { case (k, v) =>
-      val ks = encode(k, kt).getOrElse("NULL")
-      val vs = encode(v, vt).map(s => "\"" + s + "\"").getOrElse("NULL")
-      "\"" + ks + "\"=>" + vs
-    }.mkString(", ")
+  private final class MapText(kw: ColWriter, vw: ColWriter) extends ColWriter {
+    def write(v: Any, b: WireBuf): Unit = {
+      var sep = false
+      v.asInstanceOf[scala.collection.Map[Any, Any]].foreach { case (k, x) =>
+        if (sep) { b.byte(','); b.byte(' ') }
+        sep = true
+        b.byte('"')
+        if (k == null) b.ascii("NULL") else kw.write(k, b)
+        b.ascii("\"=>")
+        if (x == null) b.ascii("NULL")
+        else { b.byte('"'); vw.write(x, b); b.byte('"') }
+      }
+    }
+  }
 }

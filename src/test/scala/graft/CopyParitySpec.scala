@@ -62,6 +62,16 @@ class CopyParitySpec extends SparkSpec {
     super.afterAll()
   }
 
+  /** Run psql with its stdout redirected to `f` by the OS. Through
+    * scala.sys.process's `#>` the copy into the file runs on a thread
+    * that `!` may outlive, and a test read an empty file now and then. */
+  private def psqlTo(cmd: Seq[String], f: java.nio.file.Path): Int = {
+    val pb = new java.lang.ProcessBuilder(cmd: _*).redirectOutput(f.toFile)
+      .redirectError(java.lang.ProcessBuilder.Redirect.INHERIT)
+    pb.environment().put("PGCONNECT_TIMEOUT", "10")
+    pb.start().waitFor()
+  }
+
   /** COPY output from LIVE pg, raw bytes (file-redirected so psql's
     * line handling can't normalize anything).
     */
@@ -70,7 +80,7 @@ class CopyParitySpec extends SparkSpec {
     val cmd = Seq("/usr/bin/psql", "-X", "-q", "-h", "/tmp", "-p", pgPort.toString,
       "-U", "postgres", "-d", "postgres", "-v", "ON_ERROR_STOP=1",
       "-c", "SET timezone='UTC'", "-c", copySql)
-    val code = (Process(cmd, None, "PGCONNECT_TIMEOUT" -> "10") #> f.toFile).!
+    val code = psqlTo(cmd, f)
     assert(code == 0, s"live pg COPY failed: $copySql")
     val bytes = java.nio.file.Files.readAllBytes(f)
     java.nio.file.Files.deleteIfExists(f)
@@ -158,7 +168,7 @@ class CopyParitySpec extends SparkSpec {
     val cmd = Seq("/usr/bin/psql", "-X", "-q", "-h", "/tmp", "-p", pgPort.toString,
       "-U", "postgres", "-d", "postgres", "-v", "ON_ERROR_STOP=1",
       "-c", "SET timezone='UTC'", "-c", copySql)
-    val code = (Process(cmd, None, "PGCONNECT_TIMEOUT" -> "10") #> f.toFile).!
+    val code = psqlTo(cmd, f)
     assert(code == 0, s"live pg COPY failed: $copySql")
     val bytes = java.nio.file.Files.readAllBytes(f)
     java.nio.file.Files.deleteIfExists(f)

@@ -27,7 +27,7 @@ class PgFunctionSlice2Spec extends SparkSpec {
     assert(r.getString(2) === "\\001 \\\\\\177")
     assert(r.getString(3) === "abc")
     assert(r.getString(4) === "abc")
-    assert(r.getString(5) === "a\\b")
+    assert(r.getString(5) === "a\\b\u0001")
   }
 
   test("byte/bit accessors use pg numbering (LSB of byte 0 is bit 0)") {

@@ -5,7 +5,7 @@ import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable.ArrayBuffer
 import org.scalatest.BeforeAndAfterAll
-import graft.pgwire.PgServer
+import graft.pgwire.{BinaryEncoder, Handlers, Messages, PgServer, RowSet, Session, TextEncoder}
 
 /** End-to-end pgwire server tests over a raw socket — the Scala
   * analogue of the reference's MockClient harness
@@ -1306,6 +1306,117 @@ class PgServerSpec extends SparkSpec with BeforeAndAfterAll {
     assert(c2.query("SELECT 'abcdef' % 'abzzzz'")
       .rows.head.head === Some("f"))
     c2.close()
+    c.close()
+  }
+
+  // ---- result encoding: the per-result row writer vs the per-value encoders ----
+
+  /** One column per result type, nested NULLs inside the composites,
+    * and NULL columns of several types. */
+  private val matrixCols = Seq(
+    "true", "7::int2", "-42::int4", "(-9223372036854775807 - 1)::int8",
+    "1.5e-5::float4", "0.1::float8 + 0.2::float8", "1e16::float8", "'NaN'::float8",
+    "12345.678::numeric(10,3)", "'a b,\"c' || chr(92)", "'héllo ✓'::varchar(10)",
+    "decode('deadbeef5c41207f', 'hex')", "date '2024-03-05'",
+    "timestamp '2024-03-05 14:30:00.125'", "timestamptz '2024-07-01 12:00:00.5+00'",
+    "time '13:45:07.25'", "interval '1 year 2 mons 3 days 04:05:06'",
+    "ARRAY[1, NULL, 2]", "ARRAY['a b', NULL, '', 'NULL', 'q\"' || chr(92)]",
+    "ARRAY[timestamptz '2024-01-01 00:00:00+00']", "ARRAY[date '2024-01-02']",
+    "ARRAY[0.1::float8, 1e20::float8]",
+    "ROW(0.1::float8 + 0.2::float8, date '2024-01-02', 'x y', NULL::int4)",
+    "st_geomfromtext('POINT(1 2)')",
+    "NULL::int4", "NULL::text", "NULL::date", "NULL::timestamptz", "NULL::time")
+
+  private val matrixSql =
+    matrixCols.zipWithIndex.map { case (e, i) => s"$e AS c$i" }.mkString("SELECT ", ", ", "")
+
+  /** The DataRow bodies the per-value encoders give for `sql` under the
+    * `setup` statements: Handlers in-process, then
+    * TextEncoder.encodeField / BinaryEncoder.encodeField per value and
+    * Messages.dataRow per row. */
+  private def perValueRows(setup: Seq[String], sql: String, formats: Seq[Short]): Seq[Seq[Byte]] = {
+    val s = new Session(0, "postgres", "postgres")
+    setup.foreach(Handlers.execute(spark, s, _))
+    val RowSet(schema, rows, _, _) = Handlers.execute(spark, s, sql)
+    val fmt = s.outputFmt
+    rows.map { row =>
+      val vals = schema.fields.indices.map { i =>
+        val v = if (row.isNullAt(i)) null else row.get(i)
+        val binary = formats.nonEmpty && (if (formats.length == 1) formats.head else formats(i)) == 1
+        if (binary) BinaryEncoder.encodeField(v, schema(i))
+        else TextEncoder.encodeField(v, schema(i), fmt).map(_.getBytes(UTF_8))
+      }
+      val bo = new ByteArrayOutputStream()
+      Messages.dataRow(new DataOutputStream(bo), vals)
+      bo.toByteArray.toSeq.drop(5) // type byte + length
+    }.toSeq
+  }
+
+  test("DataRows from the row writer equal the per-value encoders across formats and settings") {
+    val styles = for (s <- Seq("ISO", "SQL", "Postgres", "German"); o <- Seq("MDY", "DMY")) yield s"$s, $o"
+    val zones = Seq("UTC", "America/New_York", "Asia/Kolkata")
+    val n = matrixCols.length
+    val formatSets = Seq(Seq.empty[Short], Seq[Short](1),
+      (0 until n).map(i => (i % 2).toShort), (0 until n).map(i => ((i + 1) % 2).toShort))
+    val c = connect()
+    var checked = 0
+    for ((style, k) <- styles.zipWithIndex; zone <- zones) {
+      val setup = Seq(s"SET DateStyle = '$style'", s"SET TimeZone = '$zone'",
+        s"SET bytea_output = '${if (k % 2 == 0) "hex" else "escape"}'",
+        s"SET extra_float_digits = ${Seq(1, 0, -3, 3)(k % 4)}")
+      setup.foreach(q => assert(c.query(q).errors.isEmpty, q))
+      formatSets.foreach { formats =>
+        c.parse("", matrixSql)
+        c.bind("", "", Nil, resultFormats = formats)
+        c.execute("")
+        val r = c.sync()
+        assert(r.errors.isEmpty, s"$setup $formats: ${r.errors}")
+        assert(r.dataRows.map(_.toSeq) === perValueRows(setup, matrixSql, formats),
+          s"$setup formats $formats")
+        checked += 1
+      }
+      // the simple-query path writes text through the same writer
+      val q = c.query(matrixSql)
+      assert(q.dataRows.map(_.toSeq) === perValueRows(setup, matrixSql, Nil), s"$setup simple query")
+    }
+    assert(checked === styles.length * zones.length * formatSets.length)
+    c.close()
+  }
+
+  test("timestamptz array elements render at the session TimeZone") {
+    val c = connect()
+    c.query("SET TimeZone = 'America/New_York'")
+    // live pg 15: {"2023-12-31 19:00:00-05"}
+    assert(c.query("SELECT ARRAY[timestamptz '2024-01-01 00:00:00+00'] AS a").rows ===
+      Seq(Seq(Some("{\"2023-12-31 19:00:00-05\"}"))))
+    c.close()
+  }
+
+  test("record fields follow DateStyle and extra_float_digits") {
+    val c = connect()
+    c.query("SET DateStyle = 'German'")
+    c.query("SET extra_float_digits = 0")
+    // live pg 15: (0.3,02.01.2024)
+    assert(c.query("SELECT ROW(0.1::float8 + 0.2::float8, date '2024-01-02') AS r").rows ===
+      Seq(Seq(Some("(0.3,02.01.2024)"))))
+    c.close()
+  }
+
+  test("a suspended portal's next Execute formats with the DateStyle set in between") {
+    val c = connect()
+    c.query("BEGIN")
+    c.parse("dates", "SELECT date '2024-01-02' + id AS d FROM t7 ORDER BY id")
+    c.bind("pd", "dates", Nil)
+    c.execute("pd", maxRows = 2)
+    c.parse("", "SET DateStyle = 'German'")
+    c.bind("", "", Nil)
+    c.execute("")
+    c.execute("pd", maxRows = 2)
+    val r = c.sync()
+    assert(r.errors.isEmpty, r.errors.toString)
+    // pg formats at output time: the second batch is German
+    assert(r.rows.map(_.head.get) === Seq("2024-01-02", "2024-01-03", "04.01.2024", "05.01.2024"))
+    c.query("COMMIT")
     c.close()
   }
 }

@@ -66,6 +66,95 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** The float text algorithm before the one-pass rewrite, verbatim:
+    * the oracle the rewrite must match byte for byte. */
+  private def formatFloatOracle(d: Double, isFloat4: Boolean, extraFloatDigits: Int = 1): String =
+    if (d.isNaN) "NaN"
+    else if (d.isPosInfinity) "Infinity"
+    else if (d.isNegInfinity) "-Infinity"
+    else if (d == 0.0) { if (1 / d < 0) "-0" else "0" }
+    else {
+      val neg = d < 0
+      // extra_float_digits ≥ 1 → shortest round-trip (Java's toString);
+      // ≤ 0 → pg's pre-Ryu `%.*g` with DIG+n significant digits
+      val ndig =
+        if (extraFloatDigits >= 1) 0
+        else math.max(1, (if (isFloat4) 6 else 15) + extraFloatDigits)
+      val s =
+        if (ndig > 0)
+          new java.math.BigDecimal(math.abs(d))
+            .round(new java.math.MathContext(ndig)).toString
+        else if (isFloat4) java.lang.Float.toString(math.abs(d).toFloat)
+        else java.lang.Double.toString(math.abs(d))
+      val (mant, exp) =
+        if (s.contains("E")) { val Array(m, e) = s.split("E"); (m, e.toInt) }
+        else (s, 0)
+      val dot = mant.indexOf('.')
+      val digits0 = mant.replace(".", "")
+      val intLen = if (dot < 0) mant.length else dot
+      val stripped = digits0.dropWhile(_ == '0')
+      val lead = digits0.length - stripped.length
+      val e10 = intLen + exp - lead - 1 // exponent of first significant digit
+      val sig0 = stripped.reverse.dropWhile(_ == '0').reverse
+      val sig = if (sig0.isEmpty) "0" else sig0
+      // %g switches to scientific at the precision; Ryu at the pg window
+      val maxDecimalExp =
+        if (ndig > 0) ndig - 1 else if (isFloat4) 5 else 15
+      val body =
+        if (e10 > maxDecimalExp || e10 < -4) {
+          val m = if (sig.length == 1) sig else sig.head + "." + sig.tail
+          m + "e" + (if (e10 < 0) "-" else "+") + "%02d".format(math.abs(e10))
+        } else if (e10 >= sig.length - 1) {
+          sig + "0" * (e10 - sig.length + 1)
+        } else if (e10 >= 0) {
+          sig.substring(0, e10 + 1) + "." + sig.substring(e10 + 1)
+        } else {
+          "0." + "0" * (-e10 - 1) + sig
+        }
+      (if (neg) "-" else "") + body
+    }
+
+  test("float text matches the pre-rewrite algorithm on 1M doubles and 1M floats") {
+    val efds = Seq(-15, 0, 1, 3)
+    def check(d: Double, isFloat4: Boolean): Unit = efds.foreach { efd =>
+      val got = TextEncoder.formatFloat(d, isFloat4, efd)
+      val want = formatFloatOracle(d, isFloat4, efd)
+      if (got != want)
+        fail(s"${if (isFloat4) "float4" else "float8"} $d at extra_float_digits=$efd: " +
+          s"got $got, want $want")
+    }
+    val edgeDoubles = Seq(0.0, -0.0, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      Double.MinPositiveValue, -Double.MinPositiveValue, java.lang.Double.MIN_NORMAL,
+      Double.MaxValue, Double.MinValue, 1e-4, 1e-5, 9.999e-5, 1e15, 1e16, 9.99999999999999e15,
+      123456789012345678.0, 0.1, 0.3, 0.1 + 0.2, 1.0 / 3, 2.0 / 3, 1.0, 10.0, 100.0, 1e22, 1e23,
+      5e-324, 4.9e-324, 2.2250738585072014e-308, 1.7976931348623157e308, 0.5, 1.5, 1e5, 1e6)
+    val edgeFloats = Seq(0.0f, -0.0f, Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity,
+      Float.MinPositiveValue, java.lang.Float.MIN_NORMAL, Float.MaxValue, Float.MinValue,
+      1e-4f, 1e-5f, 1e5f, 1e6f, 999999f, 99999.9f, 0.1f, 0.3f, 1.0f / 3, 16777216f, 3.4e38f)
+    (edgeDoubles ++ edgeDoubles.map(-_)).foreach(check(_, isFloat4 = false))
+    (edgeFloats ++ edgeFloats.map(-_)).foreach(f => check(f.toDouble, isFloat4 = true))
+    val rng = new java.util.Random(20240101L)
+    def decimalish(): Double = // short decimals: k / 10^j and k * 10^j
+      (rng.nextInt(2000001) - 1000000).toDouble * math.pow(10, rng.nextInt(41) - 20)
+    var i = 0
+    while (i < 1000000) {
+      val d = i % 4 match {
+        case 0 => java.lang.Double.longBitsToDouble(rng.nextLong()) // every exponent, subnormals, NaNs
+        case 1 => decimalish()
+        case 2 => (rng.nextDouble() - 0.5) * math.pow(10, rng.nextInt(44) - 22)
+        case _ => rng.nextLong().toDouble / (1L << rng.nextInt(63))
+      }
+      check(d, isFloat4 = false)
+      val f = i % 3 match {
+        case 0 => java.lang.Float.intBitsToFloat(rng.nextInt())
+        case 1 => decimalish().toFloat
+        case _ => ((rng.nextDouble() - 0.5) * math.pow(10, rng.nextInt(16) - 8)).toFloat
+      }
+      check(f.toDouble, isFloat4 = true)
+      i += 1
+    }
+  }
+
   test("quote_ident → parse_ident round-trips any identifier") {
     val ident = Gen.nonEmptyListOf(
       Gen.frequency(8 -> Gen.alphaNumChar, 1 -> Gen.const('_'),

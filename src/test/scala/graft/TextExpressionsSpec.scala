@@ -17,7 +17,7 @@ class TextExpressionsSpec extends SparkSpec {
 
   private val edge = Seq(
     "", " ", "   ", "\t", "a", " a ", "  a  b\t c\n", "\ta b\t",
-    "ab", "\f\r", "the cat and the dog of a house",
+    "a\u000bb", "\f\r", "the cat and the dog of a house",
     " the the a a ", "der hund und die katze und das haus",
     "el que la los", "le des la les", "a_b-c.d efg_2 !!",
     "你好世界这是中文", "mixed 中文 and english the of",

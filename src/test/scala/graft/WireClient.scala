@@ -20,7 +20,8 @@ final case class Reply(
     paramOids: Seq[Int],
     noData: Boolean,
     backendKey: Option[(Int, Int)], // (pid, secret) from BackendKeyData
-    notifications: Seq[(Int, String, String)] = Nil) // NotificationResponse (pid, channel, payload)
+    notifications: Seq[(Int, String, String)] = Nil, // NotificationResponse (pid, channel, payload)
+    dataRows: Seq[Array[Byte]] = Nil) // raw DataRow message bodies
 
 final class Client(port: Int) {
   private val sock = new Socket("127.0.0.1", port)
@@ -319,6 +320,7 @@ final class Client(port: Int) {
     var noData = false
     var backendKey: Option[(Int, Int)] = None
     val notifs = ArrayBuffer.empty[(Int, String, String)]
+    val raw = ArrayBuffer.empty[Array[Byte]]
     while (true) {
       val (tpe, body) = read()
       val b = java.nio.ByteBuffer.wrap(body)
@@ -330,7 +332,7 @@ final class Client(port: Int) {
         case 'Z' =>
           return Reply(fields, rows.toSeq, binRows.toSeq, tags.toSeq, errors.toSeq,
             params, body(0).toChar, empty, suspended, paramOids, noData, backendKey,
-            notifs.toSeq)
+            notifs.toSeq, raw.toSeq)
         case 'T' =>
           val n = b.getShort
           val fs = ArrayBuffer.empty[(String, Int)]
@@ -362,6 +364,7 @@ final class Client(port: Int) {
           }
           rows += textRow.toSeq
           binRows += vals.toSeq
+          raw += body
         case 'C' => tags += str(0)
         case 'E' =>
           // parse field map
