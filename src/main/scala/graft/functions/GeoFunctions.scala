@@ -24,16 +24,6 @@ object GeoFunctions {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  /** Names whose results are geometry values (the server tags these
-    * output columns `pg.type=geometry` for the wire codec).
-    */
-  val geometryReturning: Set[String] = Set(
-    "st_geomfromtext", "st_geometryfromtext", "st_geomfromewkt",
-    "st_geometry_in", "st_geomfromwkb", "st_geomfromewkb",
-    "st_geomfromtext2", "st_geomfromwkb2",
-    "st_makepoint", "st_point", "st_setsrid", "st_centroid",
-    "st_envelope", "st_makeline", "st_makeenvelope")
-
   private def g(b: Array[Byte]): Geom = fromEwkb(b)
 
   def registerAll(spark: SparkSession): Unit = {

@@ -29,36 +29,23 @@ object PgMiscExpressions {
     override def checkInputDataTypes(): TypeCheckResult = TypeCheckResult.TypeCheckSuccess
 
     @transient private lazy val name: UTF8String = UTF8String.fromString(
-      rangeSubtype(child).getOrElse(
+      rangeBound(child).orElse(graft.pgwire.PgSemantics.pgTypeOf(child).map {
+        case "time" => "time without time zone"
+        case t => t
+      }).getOrElse(
         graft.pgwire.PgFunctions.formatType(graft.pgwire.PgType.oidOf(child.dataType), -1)))
 
-    /** Range values are strings at the Spark level; recover the pg
-      * range type name from the producing UDF (constructors carry it,
-      * combinators take it from their inputs).
-      */
-    private def rangeSubtype(e: Expression): Option[String] = e match {
-      case a: org.apache.spark.sql.catalyst.expressions.Alias => rangeSubtype(a.child)
-      case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF =>
-        u.udfName.map(_.toLowerCase) match {
-          case Some(n) if RangeFunctions.constructorSubs.contains(n) =>
-            Some(RangeFunctions.constructorSubs(n))
-          case Some(n) if RangeFunctions.combinators.contains(n) =>
-            u.children.iterator.map(rangeSubtype).collectFirst { case Some(s) => s }
-          case Some(n) if TextSearchFunctions.tsSubs.contains(n) =>
-            Some(TextSearchFunctions.tsSubs(n))
-          case Some("range_lower" | "range_upper") =>
-            // accessors yield the range's ELEMENT type
-            u.children.iterator.map(rangeSubtype)
-              .collectFirst { case Some(s) => s }
-              .map {
-                case "int4range" => "integer"
-                case "int8range" => "bigint"
-                case "numrange" => "numeric"
-                case "daterange" => "date"
-                case "tsrange" => "timestamp without time zone"
-                case _ => "timestamp with time zone"
-              }
-          case _ => None
+    /** `lower(r)` / `upper(r)` yield the range's ELEMENT type. */
+    private def rangeBound(e: Expression): Option[String] = e match {
+      case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF
+          if u.udfName.exists(n => n == "range_lower" || n == "range_upper") =>
+        graft.pgwire.PgSemantics.pgTypeOf(u.children.head).map {
+          case "int4range" => "integer"
+          case "int8range" => "bigint"
+          case "numrange" => "numeric"
+          case "daterange" => "date"
+          case "tsrange" => "timestamp without time zone"
+          case _ => "timestamp with time zone"
         }
       case _ => None
     }

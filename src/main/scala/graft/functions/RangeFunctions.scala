@@ -457,11 +457,11 @@ object PgRanges {
     }
 }
 
-/** UDF pack + wire plumbing names for the range family. Compat
-  * rewrites pg's operator spellings (`@>`, `&&`, `-|-`, …) onto these
-  * when an operand is syntactically a range (constructor call or
-  * `::<sub>range` cast); Handlers tags range-returning output columns
-  * with `pg.oid_alias=<sub>range` so the wire reports pg's range OIDs.
+/** UDF pack for the range family. pg's operator spellings (`@>`,
+  * `&&`, `+`, `<`, …) reach these by operand type
+  * (`graft.pgwire.PgSemantics`; Compat maps the range-only `-|-`, `&<`,
+  * `&>`), and range-returning output columns report pg's range OIDs
+  * through `PgSemantics.pgTypeOf`.
   */
 object RangeFunctions extends Serializable {
   import PgRanges._
@@ -469,14 +469,6 @@ object RangeFunctions extends Serializable {
   private val installed =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** constructor/cast UDF name → subtype name (wire-OID tagging). */
-  val constructorSubs: Map[String, String] =
-    subs.keys.flatMap(n => Seq(n -> n, s"${n}3" -> n, s"${n}_in" -> n)).toMap
-
-  /** range→range combinators whose subtype comes from their inputs. */
-  val combinators: Set[String] =
-    Set("range_union", "range_intersect", "range_minus", "range_merge")
 
   private def r(s: String): R = parse(s)
 
@@ -563,7 +555,7 @@ object RangeFunctions extends Serializable {
     setOp("range_merge")(merge)
 
     // accessors (pg names where no Spark builtin collides; lower/upper
-    // collide with the string builtins → Compat dispatches to the
+    // collide with the string builtins → PgSemantics dispatches to the
     // range_-prefixed spellings when the argument is a range)
     u.register("range_lower", (s: String) =>
       if (s == null) null else { val x = r(s); if (x.empty) null else x.lo })

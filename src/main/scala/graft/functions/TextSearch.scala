@@ -1099,19 +1099,6 @@ object TextSearchFunctions extends Serializable {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]())
 
-  /** UDF name → wire type for output tagging. */
-  val tsSubs: Map[String, String] = Map(
-    "to_tsvector" -> "tsvector", "tsvector_in" -> "tsvector",
-    "strip" -> "tsvector", "setweight" -> "tsvector",
-    "setweight3" -> "tsvector", "ts_delete" -> "tsvector",
-    "ts_delete_arr" -> "tsvector", "ts_filter" -> "tsvector",
-    "tsvector_concat" -> "tsvector", "array_to_tsvector" -> "tsvector",
-    "to_tsquery" -> "tsquery", "plainto_tsquery" -> "tsquery",
-    "phraseto_tsquery" -> "tsquery", "websearch_to_tsquery" -> "tsquery",
-    "tsquery_in" -> "tsquery", "tsquery_and" -> "tsquery",
-    "tsquery_or" -> "tsquery", "tsquery_phrase" -> "tsquery",
-    "tsquery_phrase3" -> "tsquery")
-
   private def q(config: String, s: String): Option[TsQ] =
     parseTsQuery(config, s, lexize = true)
 

@@ -939,13 +939,9 @@ object Compat {
     rewriteRegexOps(ts)
     rewriteJsonbDeleteConcat(ts)
     rewriteArrayElemConcat(ts)
-    // range ops must precede the json pass: `@>`/`<@`/`&&` dispatch to
-    // the range functions only when an operand is syntactically a
-    // range; the json pass consumes whatever remains
-    rewriteRangeOps(ts)
-    rewriteRangeAccessors(ts)
+    rewriteFamilyOnlyOps(ts)
     rewriteEnumFns(ts)
-    rewriteInetOps(ts)
+    rewriteTextCalls(ts)
     rewriteTsOps(ts)
     // trgm operators run AFTER the text-search pass so a `<->` between
     // tsquery operands keeps its phrase-distance meaning; whatever
@@ -4958,6 +4954,12 @@ object Compat {
         if (close > 0) e = close
       }
     }
+    castsEnd(ts, e)
+  }
+
+  /** End of the value ending at `e0` with its trailing `::type` casts. */
+  private def castsEnd(ts: ArrayBuffer[Tok], e0: Int): Int = {
+    var e = e0
     var c = nextIdx(ts, e)
     while (c >= 0 && ts(c).is("::")) {
       val t = nextIdx(ts, c)
@@ -5014,112 +5016,39 @@ object Compat {
     }
   }
 
-  /** Range type names (pg §8.17) for cast/operator dispatch. */
+  /** Range type names (pg §8.17): `::<sub>range` casts and prefixed
+    * literals lower to their `<sub>range_in` parsers. */
   private[pgwire] val rangeTypeNames = Set(
     "int4range", "int8range", "numrange", "daterange", "tsrange", "tstzrange")
 
-  /** Function names whose results are range values — a syntactic
-    * range marker for operator dispatch (constructors, the `::` cast
-    * parsers, and the range→range combinators a chained rewrite has
-    * already produced).
+  /** Operator spellings Spark's parser rejects that belong to one pg
+    * type family — the range-only `-|-` `&<` `&>` and the inet-only
+    * `<<=` `>>=` — → that family's function, whatever the operands (pg
+    * has no other meaning for them, so two bare literals resolve too:
+    * live-pg sweep-30). The overloaded spellings (`@>`, `&&`, `<<`,
+    * `+`, `<`, …) dispatch on operand type in [[PgSemantics]].
     */
-  private val rangeMarkerFns: Set[String] =
-    rangeTypeNames ++ rangeTypeNames.map(_ + "3") ++
-      rangeTypeNames.map(_ + "_in") ++
-      Set("range_merge", "range_union", "range_intersect", "range_minus")
+  private val familyOnlyOps = Map(
+    "-|-" -> "range_adjacent", "&<" -> "range_not_extright",
+    "&>" -> "range_not_extleft",
+    "<<=" -> "inet_contained_eq", ">>=" -> "inet_contains_eq")
 
-  /** Does this token slice syntactically produce a range value — a
-    * range constructor/combinator call or a `::<sub>range` cast?
-    */
-  private def isRangey(ts: ArrayBuffer[Tok], from: Int, to: Int): Boolean = {
-    var i = from
-    while (i <= to && i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Word && rangeMarkerFns.contains(t.text.toLowerCase)) {
-        val n = nextIdx(ts, i)
-        if (n >= 0 && n <= to && ts(n).is("(")) return true
-      }
-      if (t.is("::")) {
-        val n = nextIdx(ts, i)
-        if (n >= 0 && n <= to && ts(n).kind == Word &&
-          rangeTypeNames.contains(ts(n).text.toLowerCase)) return true
-      }
-      i += 1
-    }
-    false
-  }
-
-  /** pg's range operators (`@>` `<@` `&&` `<<` `>>` `&<` `&>` `-|-`
-    * `+` `*` `-` and the ordering comparisons) → the range_* UDFs,
-    * dispatched SYNTACTICALLY: only when an operand is a range
-    * constructor call or `::<sub>range` cast (columns are plain text —
-    * Spark has no range type to dispatch on at runtime). Overloaded
-    * arithmetic/comparison/bitshift spellings require BOTH operands
-    * rangey; the range-only operators require either.
-    */
-  /** Cheap pre-check: any range marker word at all in the statement? */
-  private def hasRangeMarker(ts: ArrayBuffer[Tok]): Boolean =
-    ts.exists(t => t.kind == Word && rangeMarkerFns.contains(t.text.toLowerCase))
-
-  private def rewriteRangeOps(ts: ArrayBuffer[Tok]): Unit = {
-    if (!hasRangeMarker(ts)) return
-    val eitherSide = Map(
-      "@>" -> "range_contains", "<@" -> "range_contained",
-      "&&" -> "range_overlaps", "<<" -> "range_before",
-      ">>" -> "range_after", "&<" -> "range_not_extright",
-      "&>" -> "range_not_extleft", "-|-" -> "range_adjacent")
-    val bothSides = Map(
-      "+" -> "range_union", "*" -> "range_intersect", "-" -> "range_minus",
-      "<" -> "range_lt", "<=" -> "range_le",
-      ">" -> "range_gt", ">=" -> "range_ge")
+  private def rewriteFamilyOnlyOps(ts: ArrayBuffer[Tok]): Unit = {
     var i = 0
     while (i < ts.length) {
       val t = ts(i)
-      if (t.kind == Op && (eitherSide.contains(t.text) || bothSides.contains(t.text))) {
-        val rhs = nextIdx(ts, i)
+      if (t.kind == Op && familyOnlyOps.contains(t.text)) {
         val p = prevIdx(ts, i)
-        // unlike jsonb, range operands include bare numbers
-        // (`int4range(1,10) @> 5`, `3 <@ r`)
-        if (rhs >= 0 && p >= 0 && (isValueEnd(ts(p)) || ts(p).kind == Num) &&
-          (ts(rhs).kind == Str || ts(rhs).kind == Word ||
-            ts(rhs).kind == QIdent || ts(rhs).kind == Num)) {
-          val start = lhsStart(ts, p)
-          // rhs extent: a call/ARRAY constructor extends to its close,
-          // then absorb trailing ::type casts (the json-pass mechanics)
-          var rhs2 = rhs
-          if (ts(rhs2).kind == Word) {
-            val nxt = nextIdx(ts, rhs2)
-            if (nxt >= 0 && ts(nxt).is("(")) {
-              val close = matchParen(ts, nxt)
-              if (close > 0) rhs2 = close
-            }
-          }
-          var castOp = nextIdx(ts, rhs2)
-          while (castOp >= 0 && ts(castOp).is("::") && {
-            val ty = nextIdx(ts, castOp)
-            ty >= 0 && ts(ty).kind == Word
-          }) {
-            rhs2 = nextIdx(ts, castOp)
-            val b1 = nextIdx(ts, rhs2)
-            if (b1 >= 0 && ts(b1).is("(")) {
-              val b2 = matchParen(ts, b1); if (b2 > 0) rhs2 = b2
-            }
-            castOp = nextIdx(ts, rhs2)
-          }
-          val lRangey = isRangey(ts, start, p)
-          val rRangey = isRangey(ts, rhs, rhs2)
-          val hit =
-            if (bothSides.contains(t.text)) lRangey && rRangey
-            else lRangey || rRangey
-          if (hit) {
-            val fn = eitherSide.getOrElse(t.text, bothSides(t.text))
-            var opIdx = i
-            if (opIdx - 1 >= 0 && ts(opIdx - 1).kind == Ws) {
-              ts.remove(opIdx - 1); opIdx -= 1; rhs2 -= 1
-            }
-            ts.insert(rhs2 + 1, Tok(Op, ")"))
-            ts(opIdx) = Tok(Op, ",")
-            ts.insertAll(start, Seq(Tok(Word, fn), Tok(Op, "(")))
+        val rhs = nextIdx(ts, i)
+        if (p >= 0 && rhs >= 0 && (isValueEnd(ts(p)) || ts(p).kind == Num)) {
+          val end =
+            if (ts(rhs).is("(")) { val c = matchParen(ts, rhs); if (c > 0) castsEnd(ts, c) else -1 }
+            else valueEnd(ts, rhs)
+          if (end > 0) {
+            val start = lhsStart(ts, p)
+            ts.insert(end + 1, Tok(Op, ")"))
+            ts(i) = Tok(Op, ",")
+            ts.insertAll(start, Seq(Tok(Word, familyOnlyOps(t.text)), Tok(Op, "(")))
           }
         }
       }
@@ -5127,21 +5056,19 @@ object Compat {
     }
   }
 
-  /** `lower(r)` / `upper(r)` collide with the string builtins; when
-    * the single argument is syntactically a range, dispatch to the
-    * range accessors (pg resolves the same call by argument type).
+  /** `text(x)` is pg's function-style cast (Spark has no `text`
+    * function) → `CAST(x AS STRING)`.
     */
-  private def rewriteRangeAccessors(ts: ArrayBuffer[Tok]): Unit = {
-    if (!hasRangeMarker(ts)) return
+  private def rewriteTextCalls(ts: ArrayBuffer[Tok]): Unit = {
     var i = 0
     while (i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Word && (t.isWord("lower") || t.isWord("upper"))) {
+      if (ts(i).isWord("text")) {
         val open = nextIdx(ts, i)
-        if (open >= 0 && ts(open).is("(")) {
-          val close = matchParen(ts, open)
-          if (close > 0 && isRangey(ts, open + 1, close - 1))
-            ts(i) = Tok(Word, "range_" + t.text.toLowerCase)
+        val p = prevIdx(ts, i)
+        val close = if (open >= 0 && ts(open).is("(")) matchParen(ts, open) else -1
+        if (close > 0 && !(p >= 0 && (ts(p).is("::") || ts(p).is(".")))) {
+          ts.insertAll(close, Seq(Tok(Ws, " "), Tok(Word, "AS"), Tok(Ws, " "), Tok(Word, "STRING")))
+          ts(i) = Tok(Word, "CAST")
         }
       }
       i += 1
@@ -5644,273 +5571,6 @@ object Compat {
     }
   }
 
-  /** Functions whose results are inet/cidr values — syntactic
-    * markers for the network operator dispatch.
-    */
-  private val inetFns = Set("inet_in", "cidr_in", "network", "broadcast",
-    "netmask", "hostmask", "set_masklen", "pg_set_masklen_cidr",
-    "inet_merge", "inet_add", "inet_sub", "inet_not", "inet_and", "inet_or")
-
-  private val macFns = Set("macaddr_in", "macaddr8_in", "mac_trunc",
-    "mac_not", "mac_and", "mac_or", "macaddr8_set7bit")
-
-  private val moneyFns = Set("money_in", "money_add", "money_sub",
-    "money_mul", "money_div_num")
-
-  private def isMoneyish(ts: ArrayBuffer[Tok], from: Int, to: Int): Boolean = {
-    var i = from
-    while (i <= to && i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Word) {
-        val l = t.text.toLowerCase
-        if (moneyFns.contains(l)) {
-          val n = nextIdx(ts, i)
-          if (n >= 0 && n <= to && ts(n).is("(")) return true
-        }
-        if (moneyFns.exists(f => l.startsWith(f + "("))) return true
-      }
-      if (t.is("::")) {
-        val n = nextIdx(ts, i)
-        if (n >= 0 && n <= to && ts(n).kind == Word && ts(n).isWord("money"))
-          return true
-      }
-      i += 1
-    }
-    false
-  }
-
-  private def isMacish(ts: ArrayBuffer[Tok], from: Int, to: Int): Boolean = {
-    var i = from
-    while (i <= to && i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Word && macFns.contains(t.text.toLowerCase)) {
-        val n = nextIdx(ts, i)
-        if (n >= 0 && n <= to && ts(n).is("(")) return true
-      }
-      if (t.is("::")) {
-        val n = nextIdx(ts, i)
-        if (n >= 0 && n <= to && ts(n).kind == Word &&
-          (ts(n).isWord("macaddr") || ts(n).isWord("macaddr8"))) return true
-      }
-      i += 1
-    }
-    false
-  }
-
-  private def isInetish(ts: ArrayBuffer[Tok], from: Int, to: Int): Boolean = {
-    var i = from
-    while (i <= to && i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Word && inetFns.contains(t.text.toLowerCase)) {
-        val n = nextIdx(ts, i)
-        if (n >= 0 && n <= to && ts(n).is("(")) return true
-      }
-      if (t.is("::")) {
-        val n = nextIdx(ts, i)
-        if (n >= 0 && n <= to && ts(n).kind == Word &&
-          (ts(n).isWord("inet") || ts(n).isWord("cidr"))) return true
-      }
-      i += 1
-    }
-    false
-  }
-
-  /** pg's network operators (§9.12) → the inet_* UDFs, dispatched
-    * syntactically like the range/ts families. Also resolves the
-    * prefix `~`, `abbrev`/`text`/`set_masklen` argument shapes.
-    */
-  private def rewriteInetOps(ts: ArrayBuffer[Tok]): Unit = {
-    if (!ts.exists(t => (t.kind == Word && (inetFns.contains(t.text.toLowerCase) ||
-      macFns.contains(t.text.toLowerCase) ||
-      moneyFns.contains(t.text.toLowerCase) || t.isWord("inet") ||
-      t.isWord("cidr") || t.isWord("macaddr") || t.isWord("macaddr8") ||
-      t.isWord("money"))) ||
-      // <<= / >>= are inet-unique operator names in pg, so two bare
-      // unknown literals still resolve to inet (live-pg sweep-29);
-      // let the pass run even with no syntactic inet marker
-      (t.kind == Op && (t.text == "<<=" || t.text == ">>=")))) return
-    val eitherSide = Map(
-      "<<" -> "inet_contained_strict", "<<=" -> "inet_contained_eq",
-      ">>" -> "inet_contains_strict", ">>=" -> "inet_contains_eq")
-    val bothSides = Map(
-      "&&" -> "inet_overlap", "&" -> "inet_and", "|" -> "inet_or",
-      "<" -> "inet_lt", "<=" -> "inet_le", ">" -> "inet_gt", ">=" -> "inet_ge")
-    var i = 0
-    while (i < ts.length) {
-      val t = ts(i)
-      // `~` before an inet operand → bitwise NOT (the binary regex
-      // spellings were rewritten away earlier, so a surviving ~ next
-      // to an inet value is the prefix operator)
-      if (t.kind == Op && t.text == "~") {
-        val arg = nextIdx(ts, i)
-        if (arg >= 0 && (ts(arg).kind == Str || ts(arg).kind == Word)) {
-          var end = arg
-          if (ts(end).kind == Word) {
-            val nxt = nextIdx(ts, end)
-            if (nxt >= 0 && ts(nxt).is("(")) {
-              val close = matchParen(ts, nxt); if (close > 0) end = close
-            }
-          }
-          var castOp = nextIdx(ts, end)
-          while (castOp >= 0 && ts(castOp).is("::") && {
-            val ty = nextIdx(ts, castOp); ty >= 0 && ts(ty).kind == Word
-          }) { end = nextIdx(ts, castOp); castOp = nextIdx(ts, end) }
-          if (isInetish(ts, arg, end) || isMacish(ts, arg, end)) {
-            val fnNot = if (isMacish(ts, arg, end)) "mac_not" else "inet_not"
-            ts.insert(end + 1, Tok(Op, ")"))
-            ts.remove(i)
-            ts.insertAll(i, Seq(Tok(Word, fnNot), Tok(Op, "(")))
-          }
-        }
-      }
-      // +/- and the binary family
-      if (t.kind == Op && (eitherSide.contains(t.text) || bothSides.contains(t.text) ||
-        t.text == "+" || t.text == "-" || t.text == "*" || t.text == "/")) {
-        val rhs = nextIdx(ts, i)
-        val p = prevIdx(ts, i)
-        if (rhs >= 0 && p >= 0 && (isValueEnd(ts(p)) || ts(p).kind == Num) &&
-          (ts(rhs).kind == Str || ts(rhs).kind == Word ||
-            ts(rhs).kind == QIdent || ts(rhs).kind == Num || ts(rhs).is("("))) {
-          val start = lhsStart(ts, p)
-          var rhs2 = rhs
-          if (ts(rhs2).is("(")) {
-            val close = matchParen(ts, rhs2)
-            if (close > 0) rhs2 = close
-          } else if (ts(rhs2).kind == Word) {
-            val nxt = nextIdx(ts, rhs2)
-            if (nxt >= 0 && ts(nxt).is("(")) {
-              val close = matchParen(ts, nxt)
-              if (close > 0) rhs2 = close
-            }
-          }
-          var castOp = nextIdx(ts, rhs2)
-          while (castOp >= 0 && ts(castOp).is("::") && {
-            val ty = nextIdx(ts, castOp)
-            ty >= 0 && ts(ty).kind == Word
-          }) {
-            rhs2 = nextIdx(ts, castOp)
-            castOp = nextIdx(ts, rhs2)
-          }
-          val lIn = isInetish(ts, start, p)
-          val rIn = isInetish(ts, rhs, rhs2)
-          val lMac = isMacish(ts, start, p)
-          val rMac = isMacish(ts, rhs, rhs2)
-          val lMon = isMoneyish(ts, start, p)
-          val rMon = isMoneyish(ts, rhs, rhs2)
-          var monSwap = false
-          val fn =
-            if (lMon && rMon) t.text match {
-              case "+" => Some("money_add")
-              case "-" => Some("money_sub")
-              case "/" => Some("money_div_money")
-              case "<" => Some("money_lt")
-              case "<=" => Some("money_le")
-              case ">" => Some("money_gt")
-              case ">=" => Some("money_ge")
-              case _ => None
-            }
-            else if ((lMon || rMon) && t.text == "*") {
-              monSwap = rMon && !lMon // money argument goes first
-              Some("money_mul")
-            }
-            else if (lMon && t.text == "/") Some("money_div_num")
-            else if (lMac && rMac && t.text == "&") Some("mac_and")
-            else if (lMac && rMac && t.text == "|") Some("mac_or")
-            else
-            if (t.text == "+" && lIn) Some("inet_add")
-            else if (t.text == "-" && lIn && rIn) Some("inet_diff")
-            else if (t.text == "-" && lIn) Some("inet_sub")
-            else if (eitherSide.contains(t.text) && (lIn || rIn))
-              Some(eitherSide(t.text))
-            // pg resolves unknown <<= unknown (and >>=) to inet because
-            // the operator name is unique in the catalog; mirror that
-            // for two bare string literals only — typed columns keep
-            // erroring like pg's "operator does not exist: text <<= text"
-            else if ((t.text == "<<=" || t.text == ">>=") &&
-              ts(p).kind == Str && start == p &&
-              ts(rhs).kind == Str && rhs2 == rhs)
-              Some(eitherSide(t.text))
-            else if (bothSides.contains(t.text) && lIn && rIn)
-              Some(bothSides(t.text))
-            else None
-          fn.foreach { fnName =>
-            var opIdx = i
-            if (opIdx - 1 >= 0 && ts(opIdx - 1).kind == Ws) {
-              ts.remove(opIdx - 1); opIdx -= 1; rhs2 -= 1
-            }
-            if (monSwap) {
-              val lhsToks = ts.slice(start, opIdx).toVector
-              val rhsToks = ts.slice(opIdx + 1, rhs2 + 1).toVector
-              ts.remove(start, rhs2 + 1 - start)
-              ts.insertAll(start, ArrayBuffer(Tok(Word, fnName), Tok(Op, "(")) ++
-                rhsToks ++ ArrayBuffer(Tok(Op, ",")) ++ lhsToks ++ ArrayBuffer(Tok(Op, ")")))
-            } else {
-              ts.insert(rhs2 + 1, Tok(Op, ")"))
-              ts(opIdx) = Tok(Op, ",")
-              ts.insertAll(start, Seq(Tok(Word, fnName), Tok(Op, "(")))
-            }
-          }
-        }
-      }
-      // money::numeric escapes the currency text (the generic cast
-      // pass would decimal-parse "$1,234.56")
-      if (t.is("::")) {
-        val ty = nextIdx(ts, i)
-        val p2 = prevIdx(ts, i)
-        if (ty >= 0 && p2 >= 0 && ts(ty).kind == Word &&
-          (ts(ty).isWord("numeric") || ts(ty).isWord("decimal")) &&
-          isValueEnd(ts(p2))) {
-          val start2 = lhsStart(ts, p2)
-          if (isMoneyish(ts, start2, p2)) {
-            ts.remove(i, ty - i + 1)
-            ts.insert(p2 + 1, Tok(Op, ")"))
-            ts.insertAll(start2, Seq(Tok(Word, "money_to_numeric"), Tok(Op, "(")))
-          }
-        }
-      }
-      // trunc(macaddr) → the byte-zeroing form (numeric trunc keeps
-      // its meaning otherwise)
-      if (t.kind == Word && t.isWord("trunc")) {
-        val open = nextIdx(ts, i)
-        if (open >= 0 && ts(open).is("(")) {
-          val close = matchParen(ts, open)
-          if (close > 0 && isMacish(ts, open + 1, close - 1))
-            ts(i) = Tok(Word, "mac_trunc")
-        }
-      }
-      // argument-shape dispatch: abbrev/text/set_masklen over cidr/inet
-      if (t.kind == Word && (t.isWord("abbrev") || t.isWord("text") ||
-        t.isWord("set_masklen"))) {
-        val open = nextIdx(ts, i)
-        if (open >= 0 && ts(open).is("(")) {
-          val close = matchParen(ts, open)
-          if (close > 0) {
-            val inner = (open + 1, close - 1)
-            val cidrish = {
-              var j = inner._1
-              var hit = false
-              while (j <= inner._2 && !hit) {
-                if (ts(j).is("::") && {
-                  val n = nextIdx(ts, j); n >= 0 && n <= inner._2 && ts(n).isWord("cidr")
-                }) hit = true
-                if (ts(j).kind == Word && (ts(j).isWord("cidr_in") ||
-                  ts(j).isWord("network") || ts(j).isWord("inet_merge"))) hit = true
-                j += 1
-              }
-              hit
-            }
-            if (t.isWord("abbrev") && cidrish) ts(i) = Tok(Word, "pg_abbrev_cidr")
-            else if (t.isWord("set_masklen") && cidrish)
-              ts(i) = Tok(Word, "pg_set_masklen_cidr")
-            else if (t.isWord("text") && isInetish(ts, inner._1, inner._2))
-              ts(i) = Tok(Word, "pg_inet_text")
-          }
-        }
-      }
-      i += 1
-    }
-  }
-
   private def rewriteTsOps(ts: ArrayBuffer[Tok]): Unit = {
     if (!ts.exists(t => (t.kind == Word && (tsVectorFns.contains(t.text.toLowerCase) ||
       tsQueryFns.contains(t.text.toLowerCase) || t.isWord("tsvector") || t.isWord("tsquery"))) ||
@@ -6120,8 +5780,8 @@ object Compat {
         val p = prevIdx(ts, i)
         // `@>`/`<@` additionally take a bare NUMBER operand: pg's
         // range-vs-element containment (`r @> 3`, `3 <@ r`) — the
-        // dispatching pg_contains resolves element-ness by shape, and
-        // the analyzer retypes it on stored range columns
+        // analyzer retypes pg_contains by operand type (PgSemantics),
+        // and range_contains resolves element-ness by shape
         val elemOk = t.text == "@>" || t.text == "<@"
         if (rhs >= 0 && p >= 0 &&
           (isValueEnd(ts(p)) || (elemOk && ts(p).kind == Num)) &&

@@ -1316,90 +1316,40 @@ object Handlers {
     tagPgOutputs(PgSemantics.withPg { spark.sql(rewritten) })
   }
 
-  /** pg type metadata for result columns a pg-typed UDF produces, so
-    * the wire reports the pg OID and text form: time (`pg_time_in`,
-    * `make_time`), geometry (the ST_* constructors), ranges (the
-    * subtype from the constructor — combinators inherit it from their
-    * inputs), tsvector/tsquery, inet/cidr/macaddr, bit, xml, money,
-    * variable-scale numeric and enum OIDs. Found in one walk of the
-    * analyzed plan by Alias identity, at any depth (so `SELECT t FROM
-    * (SELECT x::time AS t)` tags too); only when some output column
-    * matches does the plan gain one Project re-aliasing those columns
-    * with their metadata.
+  /** pg type metadata for result columns whose pg type the Spark type
+    * does not tell, so the wire reports the pg OID and text form: time,
+    * geometry, ranges, tsvector/tsquery, inet/cidr/macaddr, bit, xml,
+    * money, variable-scale numeric and enum OIDs. Each output column's
+    * type comes from [[PgSemantics.pgTypeOf]] over the analyzed plan (so
+    * `SELECT t FROM (SELECT x::time AS t)` and view columns tag too);
+    * only when some output column needs it does the plan gain one
+    * Project re-aliasing those columns with their metadata.
     */
   private def tagPgOutputs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
     import org.apache.spark.sql.catalyst.plans.logical.Project
     val plan = df.queryExecution.analyzed
-    val metas = plan.collect { case p =>
-      p.expressions.collect { case a: Alias => outputMeta(df.sparkSession, a).map(a.exprId -> _) }
-        .flatten
-    }.flatten.toMap
-    if (!plan.output.exists(a => metas.contains(a.exprId))) df
+    val defs = PgSemantics.definedTypes(plan)
+    val metas = plan.output.map { a =>
+      if (Seq(PgType.OID_ALIAS_KEY, PgType.PG_TYPE_KEY, PgType.OID_NUM_KEY)
+        .exists(a.metadata.contains)) None
+      else defs(a.exprId).flatMap(pgTypeMeta(df.sparkSession, _))
+    }
+    if (metas.forall(_.isEmpty)) df
     else org.apache.spark.sql.graftshim.DatasetShim.ofRows(df.sparkSession,
-      Project(plan.output.map { a =>
-        metas.get(a.exprId).fold[NamedExpression](a)(m => Alias(a, a.name)(explicitMetadata = Some(m)))
+      Project(plan.output.zip(metas).map {
+        case (a, m) => m.fold[NamedExpression](a)(m => Alias(a, a.name)(explicitMetadata = Some(m)))
       }, plan))
   }
 
-  private val timeMeta = new MetadataBuilder().putString(PgType.PG_TYPE_KEY, "time").build()
-  private val geometryMeta = new MetadataBuilder().putString(PgType.PG_TYPE_KEY, "geometry").build()
-
-  /** Output-type alias (`pg.oid_alias`) of the non-range pg-typed UDFs. */
-  private val aliasSubs: Map[String, String] = graft.functions.TextSearchFunctions.tsSubs ++ Map(
-    "inet_in" -> "inet", "broadcast" -> "inet", "netmask" -> "inet",
-    "hostmask" -> "inet", "set_masklen" -> "inet", "inet_add" -> "inet",
-    "inet_sub" -> "inet", "inet_not" -> "inet", "inet_and" -> "inet",
-    "inet_or" -> "inet",
-    "cidr_in" -> "cidr", "network" -> "cidr", "inet_merge" -> "cidr",
-    "pg_set_masklen_cidr" -> "cidr",
-    "macaddr_in" -> "macaddr", "mac_trunc" -> "macaddr",
-    "mac_not" -> "macaddr", "mac_and" -> "macaddr", "mac_or" -> "macaddr",
-    "macaddr8_in" -> "macaddr8", "macaddr8_set7bit" -> "macaddr8",
-    "bit_in" -> "bit", "bit_in_hex" -> "bit", "pg_bit_cast" -> "bit",
-    "pg_int_to_bit" -> "bit", "pg_bit_and" -> "bit", "pg_bit_or" -> "bit",
-    "pg_bit_xor" -> "bit", "pg_bit_not" -> "bit", "pg_bit_shl" -> "bit",
-    "pg_bit_shr" -> "bit", "pg_bit_set" -> "bit",
-    "xml_in" -> "xml", "pg_xml_tag" -> "xml", "xmlcomment" -> "xml",
-    "pg_xmlpi" -> "xml", "pg_xml_forest_item" -> "xml",
-    "money_in" -> "money", "money_add" -> "money", "money_sub" -> "money",
-    "money_mul" -> "money", "money_div_num" -> "money",
-    "money_to_numeric" -> "numeric",
-    // variable-scale numeric results render their own text form
-    "trim_scale" -> "numeric")
-
-  /** The pg type metadata of an output expression, if a pg-typed UDF
-    * produces it (see [[tagPgOutputs]]). */
-  private def outputMeta(spark: SparkSession,
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Option[Metadata] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal, ScalaUDF}
-    import graft.functions.RangeFunctions.{combinators, constructorSubs}
-    def udfName(e: Expression): Option[String] = e match {
-      case u: ScalaUDF => u.udfName.map(_.toLowerCase)
-      case _ => None
-    }
-    def rangeSub(e: Expression): Option[String] =
-      udfName(e).flatMap(constructorSubs.get)
-        .orElse(e.children.iterator.map(rangeSub).collectFirst { case Some(s) => s })
-    def aliased(pgType: String) =
-      new MetadataBuilder().putString(PgType.OID_ALIAS_KEY, pgType).build()
-    e match {
-      case a: Alias => outputMeta(spark, a.child)
-      case _ => udfName(e).flatMap {
-        case n if constructorSubs.contains(n) => Some(aliased(constructorSubs(n)))
-        case n if aliasSubs.contains(n) => Some(aliased(aliasSubs(n)))
-        case n if combinators.contains(n) => rangeSub(e).map(aliased)
-        case "enum_in" => e.children.headOption.collect {
-          case Literal(v, _) if v != null =>
-            val mb = new MetadataBuilder()
-            graft.functions.PgEnums.lookup(spark, v.toString)
-              .foreach(d => mb.putLong(PgType.OID_NUM_KEY, d.oid.toLong))
-            mb.build()
-        }
-        case n if graft.functions.GeoFunctions.geometryReturning.contains(n) => Some(geometryMeta)
-        case "pg_time_in" | "make_time" => Some(timeMeta)
-        case _ => None
-      }
+  /** Column metadata that makes the wire report pg type `name`. */
+  private def pgTypeMeta(spark: SparkSession, name: String): Option[Metadata] = {
+    val mb = new MetadataBuilder()
+    name match {
+      case "time" | "geometry" => Some(mb.putString(PgType.PG_TYPE_KEY, name).build())
+      case a if PgType.aliasOids.contains(a) => Some(mb.putString(PgType.OID_ALIAS_KEY, a).build())
+      case e => graft.functions.PgEnums.lookup(spark, e)
+        .map(d => mb.putLong(PgType.OID_NUM_KEY, d.oid.toLong).build())
     }
   }
 
@@ -2268,8 +2218,10 @@ HINT:  Truncate table "$childT" at the same time, or use TRUNCATE ... CASCADE.""
         s"SELECT $proj FROM ( $rewritten )"
       case None => rewritten
     }
-    spark.sql(
-      s"CREATE OR REPLACE TEMPORARY VIEW `${name.replace("`", "``")}` AS $finalSql")
+    // the body is analyzed here and again at every use, both with pg
+    // semantics (operators dispatch on operand type in PgSemantics)
+    PgSemantics.withPg(spark.sql(
+      s"CREATE OR REPLACE TEMPORARY VIEW `${name.replace("`", "``")}` AS $finalSql"))
     PgViews.register(name, body, finalSql)
     PgCatalog.invalidate()
     Complete("CREATE VIEW")
@@ -3437,14 +3389,22 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
     val e = raw.trim
     val base =
       if (e.equalsIgnoreCase("DEFAULT")) defaultExprSql(f, connId) else e
-    val fam =
-      if (f.metadata.contains("pg.enum")) Some(f.metadata.getString("pg.enum"))
-      else if (f.metadata.contains(PgType.OID_ALIAS_KEY)) {
-        val a = f.metadata.getString(PgType.OID_ALIAS_KEY)
-        if (canonFamilies.contains(a)) Some(a) else None
-      } else None
-    fam.map(t => s"($base)::$t").getOrElse(s"($base)")
+    familyOf(f).map(t => s"($base)::$t").getOrElse(s"($base)")
   }
+
+  /** The stored family (canonical-text type or enum) of a column. */
+  private def familyOf(f: StructField): Option[String] =
+    if (f.metadata.contains("pg.enum")) Some(f.metadata.getString("pg.enum"))
+    else if (f.metadata.contains(PgType.OID_ALIAS_KEY)) {
+      val a = f.metadata.getString(PgType.OID_ALIAS_KEY)
+      if (canonFamilies.contains(a)) Some(a) else None
+    } else None
+
+  /** A [[dmlValueExpr]] in the column's stored type. A family value is
+    * already its canonical STRING; a CAST AS STRING over it would read
+    * as pg's inet→text cast (mask length shown). */
+  private def storedAs(f: StructField, value: String): String =
+    if (familyOf(f).isDefined) value else s"CAST(($value) AS ${f.dataType.sql})"
 
   /** Replace a catalog table's contents with `next`, spilling through
     * a temp directory: Spark rejects overwriting a table from a plan
@@ -3741,7 +3701,7 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
       // columns), OLD values for DELETE
       val newFields = schema.fields.map { f =>
         assigned.get(f.name)
-          .map(e => s"CAST(($e) AS ${f.dataType.sql}) AS ${qid(f.name)}")
+          .map(e => s"${storedAs(f, e)} AS ${qid(f.name)}")
           .getOrElse(s"$taQ.${qid(f.name)} AS ${qid(f.name)}")
       }.mkString(", ")
       val fStructs = fAliases.zipWithIndex.map { case (a, i) =>
@@ -4125,12 +4085,6 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
         }
         named.toSeq
       } else schema.fields.toSeq
-    def famOf(f: StructField): Option[String] =
-      if (f.metadata.contains("pg.enum")) Some(f.metadata.getString("pg.enum"))
-      else if (f.metadata.contains(PgType.OID_ALIAS_KEY)) {
-        val a = f.metadata.getString(PgType.OID_ALIAS_KEY)
-        if (canonFamilies.contains(a)) Some(a) else None
-      } else None
     val src0 = m.group(4).trim
     // VALUES introspection: row arity (pg's short positional insert
     // targets the leading columns) and per-position DEFAULT keywords
@@ -4147,7 +4101,7 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
         case Some(rs) if rs.head.length < cols.length => cols.take(rs.head.length)
         case _ => cols
       } else cols
-    val fams = colsEff.map(famOf)
+    val fams = colsEff.map(familyOf)
     val hasDefaultKw =
       valueRows.exists(_.exists(_.exists(_.equalsIgnoreCase("DEFAULT"))))
     // omitted columns with an implicit (serial) or declared default
@@ -4280,7 +4234,7 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
           s"__gf${serialFill.indexWhere(_.name == f.name)}"
         else if (f.metadata.contains("pg.serial")) serialSelectExpr(f)
         else defaultExprSql(f, connId)
-      famOf(f) match {
+      familyOf(f) match {
         case Some(fam) => s"($base)::$fam AS __gs$k"
         case None => s"$base AS __gs$k"
       }
@@ -5312,8 +5266,7 @@ HINT:  Ensure that no rows proposed for insertion within the same command have d
             val qual =
               if (rhs.equalsIgnoreCase("DEFAULT")) rhs
               else qualifyConflictExpr(rhs, table, insAlias, tgtSchema)
-            assigned(f.name) =
-              s"CAST(${dmlValueExpr(f, qual, session.connId)} AS ${f.dataType.sql})"
+            assigned(f.name) = storedAs(f, dmlValueExpr(f, qual, session.connId))
           }
           val qualWhere = whereText.map(w =>
             qualifyConflictExpr(w, table, insAlias, tgtSchema))

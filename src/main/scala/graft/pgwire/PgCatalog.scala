@@ -1211,7 +1211,8 @@ object PgCatalog {
       ("cm:" + PgComments.version)
     if (fingerprint == lastSnapshot.get(spark)) return
     lastSnapshot.put(spark, fingerprint)
-    val tables = names.map(n => n -> spark.table(n).schema)
+    // wire views analyze with pg semantics, as at every use
+    val tables = PgSemantics.withPg(names.map(n => n -> spark.table(n).schema))
     val ixRows = indexRows(tables)
     refreshIndexDefs(ixRows, tables)
     registerIndexDefUdfs(spark)

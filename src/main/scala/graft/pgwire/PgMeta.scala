@@ -248,8 +248,8 @@ object PgMeta {
       readLines(r.resolve("views.tsv")).foreach { l =>
         val Array(n, d, fin) = l.split("\t", 3)
         val name = dec(n)
-        spark.sql("CREATE OR REPLACE TEMPORARY VIEW `" +
-          name.replace("`", "``") + "` AS " + dec(fin))
+        PgSemantics.withPg(spark.sql("CREATE OR REPLACE TEMPORARY VIEW `" +
+          name.replace("`", "``") + "` AS " + dec(fin)))
         PgViews.register(name, dec(d), dec(fin))
       }
     } finally loading = false

@@ -36,6 +36,8 @@ import org.apache.spark.sql.types._
   *  - `date ± interval` → timestamp WITHOUT time zone (pg returns
   *    timestamp; Spark's DateAddInterval stays DATE, truncating the
   *    time-of-day part).
+  *  - range, network and money operators → the family functions, by
+  *    operand type ([[pgTypeOf]]; the families are STRING to Spark).
   *
   * Reference anchor: the reference engine inherits these from
   * DataFusion's pg-style arithmetic; here they are reconstructed
@@ -66,8 +68,14 @@ object PgSemantics {
       if (!active) plan else rewriteExpressions(plan)
   }
 
-  private def rewriteExpressions(plan: LogicalPlan): LogicalPlan =
+  private def rewriteExpressions(plan: LogicalPlan): LogicalPlan = {
+    val ops = new FamilyOps(plan)
     plan.transformAllExpressions {
+      // range, network and money operators by operand type — first,
+      // before the int-division and unknown-literal cases below claim
+      // the analyzer's casts over these STRING-carried values
+      case ops(call) => call
+
       // int / int (both casts analyzer-inserted) → truncating division
       case Divide(
             lc @ Cast(l, DoubleType, _, _),
@@ -423,66 +431,33 @@ object PgSemantics {
           if !st.resolved && child.resolved && child.dataType == StringType =>
         SecondsToTimestamp(Cast(child, DoubleType))
 
-      // ---- pg.type metadata operator dispatch (round 13) ----
-      // Stored columns created by pg-dialect DDL carry pg.oid_alias /
-      // pg.oid_num / pg.enum metadata. Operators over BARE such
-      // columns were token-dispatched to the json/array defaults (or
-      // left as string comparisons) because the text rewrite cannot
-      // see types — the attribute metadata IS the type here, so
-      // re-dispatch to the family functions without requiring a cast.
-
-      // `@>` / `<@` between range-text columns: pg_contains is the
-      // anyarray/jsonb default the token layer picked
-      case e: Expression
-          if e.children.length == 2 && e.children.forall(_.resolved) &&
-            Set("pg_contains", "pg_contained").contains(e.prettyName) &&
-            e.children.exists(c => metaAliasOf(c).exists(Compat.rangeTypeNames.contains)) =>
-        fnCall(
-          if (e.prettyName == "pg_contains") "range_contains" else "range_contained",
-          e.children.map(stripImplicitCasts))
-
-      // `&&` between range-text columns resolved to ArraysOverlap
-      case ArraysOverlap(l, r)
-          if l.resolved && r.resolved &&
-            Seq(l, r).exists(c => metaAliasOf(c).exists(Compat.rangeTypeNames.contains)) =>
-        fnCall("range_overlaps", Seq(stripImplicitCasts(l), stripImplicitCasts(r)))
-
-      // `@@` over a tsvector/tsquery column went to the jsonpath match
+      // ---- stored-column pg.type metadata (round 13) ----
+      // `@@` over a tsvector/tsquery value went to the jsonpath match
       case e: Expression
           if e.children.length >= 2 && e.children.take(2).forall(_.resolved) &&
             e.prettyName == "jsonb_path_match" &&
             e.children.take(2).exists(c =>
-              metaAliasOf(c).exists(a => a == "tsvector" || a == "tsquery")) => {
+              ops.typeOf(c).exists(a => a == "tsvector" || a == "tsquery")) => {
         val Seq(l, r) = e.children.take(2).map(stripImplicitCasts)
-        if (metaAliasOf(e.children.head).contains("tsvector")) fnCall("ts_match", Seq(l, r))
-        else if (metaAliasOf(e.children(1)).contains("tsvector")) fnCall("ts_match", Seq(r, l))
-        else if (metaAliasOf(e.children.head).contains("tsquery")) fnCall("ts_match", Seq(r, l))
+        if (ops.typeOf(e.children.head).contains("tsvector")) fnCall("ts_match", Seq(l, r))
+        else if (ops.typeOf(e.children(1)).contains("tsvector")) fnCall("ts_match", Seq(r, l))
+        else if (ops.typeOf(e.children.head).contains("tsquery")) fnCall("ts_match", Seq(r, l))
         else fnCall("ts_match", Seq(l, r))
       }
 
-      // `->` / `#>` over a stored jsonb column: the token layer emits
-      // the json (text-preserving) variant; jsonb re-serializes
-      // canonically (sweep-28)
+      // `->` / `#>` over a jsonb value: the token layer emits the json
+      // (text-preserving) variant; jsonb re-serializes canonically
+      // (sweep-28)
       case x: graft.functions.PgJsonExpressions.PgJsonExtractPath
           if !x.jsonb && x.children.nonEmpty && x.children.head.resolved &&
-            metaAliasOf(x.children.head).contains("jsonb") =>
+            ops.typeOf(x.children.head).contains("jsonb") =>
         x.copy(jsonb = true)
       case x: graft.functions.PgJsonExpressions.PgJsonArrayElements
-          if !x.jsonb && x.child.resolved &&
-            metaAliasOf(x.child).contains("jsonb") =>
+          if !x.jsonb && x.child.resolved && ops.typeOf(x.child).contains("jsonb") =>
         x.copy(jsonb = true)
       case x: graft.functions.PgJsonExpressions.PgJsonEach
-          if !x.jsonb && x.child.resolved &&
-            metaAliasOf(x.child).contains("jsonb") =>
+          if !x.jsonb && x.child.resolved && ops.typeOf(x.child).contains("jsonb") =>
         x.copy(jsonb = true)
-
-      // inet containment `<<` / `>>` parsed as integer shifts
-      case ShiftLeft(l, r)
-          if Seq(l, r).exists(c => metaAliasOf(c).exists(inetAliases.contains)) =>
-        fnCall("inet_contained_strict", Seq(stripImplicitCasts(l), stripImplicitCasts(r)))
-      case ShiftRight(l, r)
-          if Seq(l, r).exists(c => metaAliasOf(c).exists(inetAliases.contains)) =>
-        fnCall("inet_contains_strict", Seq(stripImplicitCasts(l), stripImplicitCasts(r)))
 
       // order comparisons over enum-typed columns: declared-label
       // order via the session ordinal map (pg §8.7.2)
@@ -519,15 +494,222 @@ object PgSemantics {
               .asInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction])))
       }
     }
+  }
 
-  private val inetAliases = Set("inet", "cidr")
+  // ---- the pg type of a value --------------------------------------------
 
-  /** The pg.oid_alias of the attribute behind an expression (looking
-    * through analyzer-inserted casts and aliases). */
-  private def metaAliasOf(e: Expression): Option[String] = {
-    val m = attrMeta(e)
-    if (m.contains(PgType.OID_ALIAS_KEY)) Some(m.getString(PgType.OID_ALIAS_KEY))
-    else None
+  /** pg type of a family function's result, by function name — the one
+    * table behind operator dispatch, RowDescription OIDs and
+    * `pg_typeof`. A range combinator takes its type from its range
+    * inputs ([[rangeCombinators]]); `enum_in` from its type-name
+    * argument. */
+  private val fnTypes: Map[String, String] =
+    Compat.rangeTypeNames.toSeq.flatMap(n => Seq(n -> n, s"${n}3" -> n, s"${n}_in" -> n))
+      .toMap ++ Map(
+      "to_tsvector" -> "tsvector", "tsvector_in" -> "tsvector",
+      "strip" -> "tsvector", "setweight" -> "tsvector",
+      "setweight3" -> "tsvector", "ts_delete" -> "tsvector",
+      "ts_delete_arr" -> "tsvector", "ts_filter" -> "tsvector",
+      "tsvector_concat" -> "tsvector", "array_to_tsvector" -> "tsvector",
+      "to_tsquery" -> "tsquery", "plainto_tsquery" -> "tsquery",
+      "phraseto_tsquery" -> "tsquery", "websearch_to_tsquery" -> "tsquery",
+      "tsquery_in" -> "tsquery", "tsquery_and" -> "tsquery",
+      "tsquery_or" -> "tsquery", "tsquery_phrase" -> "tsquery",
+      "tsquery_phrase3" -> "tsquery",
+      "inet_in" -> "inet", "broadcast" -> "inet", "netmask" -> "inet",
+      "hostmask" -> "inet", "set_masklen" -> "inet", "inet_add" -> "inet",
+      "inet_sub" -> "inet", "inet_not" -> "inet", "inet_and" -> "inet",
+      "inet_or" -> "inet",
+      "cidr_in" -> "cidr", "network" -> "cidr", "inet_merge" -> "cidr",
+      "pg_set_masklen_cidr" -> "cidr",
+      "macaddr_in" -> "macaddr", "mac_trunc" -> "macaddr",
+      "mac_not" -> "macaddr", "mac_and" -> "macaddr", "mac_or" -> "macaddr",
+      "macaddr8_in" -> "macaddr8", "macaddr8_set7bit" -> "macaddr8",
+      "bit_in" -> "bit", "bit_in_hex" -> "bit", "pg_bit_cast" -> "bit",
+      "pg_int_to_bit" -> "bit", "pg_bit_and" -> "bit", "pg_bit_or" -> "bit",
+      "pg_bit_xor" -> "bit", "pg_bit_not" -> "bit", "pg_bit_shl" -> "bit",
+      "pg_bit_shr" -> "bit", "pg_bit_set" -> "bit",
+      "xml_in" -> "xml", "pg_xml_tag" -> "xml", "xmlcomment" -> "xml",
+      "pg_xmlpi" -> "xml", "pg_xml_forest_item" -> "xml",
+      "money_in" -> "money", "money_add" -> "money", "money_sub" -> "money",
+      "money_mul" -> "money", "money_div_num" -> "money",
+      "money_to_numeric" -> "numeric",
+      // variable-scale numeric results render their own text form
+      "trim_scale" -> "numeric",
+      "pg_time_in" -> "time", "make_time" -> "time") ++
+      Seq("st_geomfromtext", "st_geometryfromtext", "st_geomfromewkt",
+        "st_geometry_in", "st_geomfromwkb", "st_geomfromewkb",
+        "st_geomfromtext2", "st_geomfromwkb2",
+        "st_makepoint", "st_point", "st_setsrid", "st_centroid",
+        "st_envelope", "st_makeline", "st_makeenvelope").map(_ -> "geometry")
+
+  private val rangeCombinators =
+    Set("range_union", "range_intersect", "range_minus", "range_merge")
+
+  /** The pg type of an analyzed expression, where its Spark type does
+    * not tell it (the family values are STRING): a stored column's
+    * `pg.oid_alias`, the family function that produced the value, or —
+    * through Alias, an analyzer-inserted same-type Cast and, by exprId,
+    * the subquery, CTE and view projections that define an attribute
+    * (`defs`, see [[definedTypes]]) — the expression behind it. */
+  def pgTypeOf(e: Expression,
+      defs: ExprId => Option[String] = _ => None): Option[String] = e match {
+    case a: AttributeReference =>
+      if (a.metadata.contains(PgType.OID_ALIAS_KEY))
+        Some(a.metadata.getString(PgType.OID_ALIAS_KEY))
+      else defs(a.exprId)
+    case Alias(c, _) => pgTypeOf(c, defs)
+    case c @ Cast(child, dt, _, _)
+        if notUserCast(c) && child.resolved && child.dataType == dt =>
+      pgTypeOf(child, defs)
+    case u: ScalaUDF => u.udfName.flatMap(n => fnType(n.toLowerCase, u.children, defs))
+    case f: graft.functions.Inet.InetFn => fnType(f.fnName, f.children, defs)
+    case _ => None
+  }
+
+  private def fnType(name: String, args: Seq[Expression],
+      defs: ExprId => Option[String]): Option[String] =
+    if (rangeCombinators.contains(name))
+      args.iterator.flatMap(pgTypeOf(_, defs)).find(Compat.rangeTypeNames.contains)
+    else if (name == "enum_in")
+      args.headOption.collect { case Literal(v, StringType) if v != null => v.toString }
+    else fnTypes.get(name)
+
+  /** pg types of the attributes a plan defines (its nodes' output
+    * Aliases, children first), so a reference to a subquery, CTE or
+    * view column finds the type of the expression behind it. */
+  def definedTypes(plan: LogicalPlan): ExprId => Option[String] = {
+    val types = scala.collection.mutable.HashMap.empty[ExprId, String]
+    plan.foreachUp(_.expressions.foreach {
+      case a: Alias => pgTypeOf(a.child, types.get).foreach(types(a.exprId) = _)
+      case _ =>
+    })
+    types.get
+  }
+
+  /** Family functions of the operators whose operands share one family. */
+  private val sameOps: Map[(String, String), String] = Map(
+    ("range", "&&") -> "range_overlaps", ("range", "<<") -> "range_before",
+    ("range", ">>") -> "range_after", ("range", "+") -> "range_union",
+    ("range", "*") -> "range_intersect", ("range", "-") -> "range_minus",
+    ("range", "<") -> "range_lt", ("range", "<=") -> "range_le",
+    ("range", ">") -> "range_gt", ("range", ">=") -> "range_ge",
+    ("inet", "&&") -> "inet_overlap", ("inet", "<<") -> "inet_contained_strict",
+    ("inet", ">>") -> "inet_contains_strict", ("inet", "-") -> "inet_diff",
+    ("inet", "&") -> "inet_and", ("inet", "|") -> "inet_or",
+    ("inet", "<") -> "inet_lt", ("inet", "<=") -> "inet_le",
+    ("inet", ">") -> "inet_gt", ("inet", ">=") -> "inet_ge",
+    ("macaddr", "&") -> "mac_and", ("macaddr", "|") -> "mac_or",
+    ("money", "+") -> "money_add", ("money", "-") -> "money_sub",
+    ("money", "/") -> "money_div_money",
+    ("money", "<") -> "money_lt", ("money", "<=") -> "money_le",
+    ("money", ">") -> "money_gt", ("money", ">=") -> "money_ge")
+
+  /** The family functions that pg's overloaded range, network and money
+    * operators resolve to, chosen by operand type — Spark parses the
+    * spellings (`+ - * / & | ~ << >> < <= > >=`, and the json pass's
+    * neutral calls for `@> <@ &&`: PgContains and arrays_overlap) and
+    * types them as STRING arithmetic, comparison or bit
+    * operations; this extractor matches the resolved or type-mismatched
+    * node, looking through the analyzer's casts. One instance per rule
+    * application: the plan's [[definedTypes]] are built on first use. */
+  private final class FamilyOps(plan: LogicalPlan) {
+    private lazy val defs = definedTypes(plan)
+
+    /** The pg type of an operand (analyzer-inserted casts stripped);
+      * every family this rule dispatches is a STRING to Spark. */
+    def typeOf(e: Expression): Option[String] = {
+      val v = stripImplicitCasts(e)
+      if (v.resolved && v.dataType == StringType) pgTypeOf(v, id => defs(id)) else None
+    }
+
+    private def family(e: Expression): Option[String] = typeOf(e).map {
+      case r if Compat.rangeTypeNames.contains(r) => "range"
+      case "cidr" => "inet"
+      case "macaddr8" => "macaddr"
+      case t => t
+    }
+
+    def unapply(e: Expression): Option[Expression] = e match {
+      case Add(l, r, _) => arith("+", l, r)
+      case Subtract(l, r, _) => arith("-", l, r)
+      case Multiply(l, r, _) => arith("*", l, r)
+      case Divide(l, r, _) => arith("/", l, r)
+      case c: BinaryComparison
+          if !c.isInstanceOf[EqualTo] && !c.isInstanceOf[EqualNullSafe] =>
+        same(c.symbol, c.left, c.right)
+      case ShiftLeft(l, r) => same("<<", l, r)
+      case ShiftRight(l, r) => same(">>", l, r)
+      case BitwiseAnd(l, r) => same("&", l, r)
+      case BitwiseOr(l, r) => same("|", l, r)
+      case ArraysOverlap(l, r) => same("&&", l, r)
+      // `@>` / `<@` (PgContains(container, contained)): a range on
+      // either side — range_contains tells range from element by shape
+      case graft.functions.PgJsonExpressions.PgContains(l, r)
+          if l.resolved && r.resolved &&
+            (family(l).contains("range") || family(r).contains("range")) =>
+        Some(fnCall("range_contains", Seq(stripImplicitCasts(l), stripImplicitCasts(r))))
+      case BitwiseNot(c) if c.resolved => family(c).collect {
+        case "inet" => fnCall("inet_not", Seq(stripImplicitCasts(c)))
+        case "macaddr" => fnCall("mac_not", Seq(stripImplicitCasts(c)))
+      }
+      case Upper(c) if c.resolved && family(c).contains("range") =>
+        Some(fnCall("range_upper", Seq(stripImplicitCasts(c))))
+      case Lower(c) if c.resolved && family(c).contains("range") =>
+        Some(fnCall("range_lower", Seq(stripImplicitCasts(c))))
+      case t: graft.functions.PgMiscExpressions.PgTrunc
+          if t.children.length == 1 && t.children.head.resolved &&
+            family(t.children.head).contains("macaddr") =>
+        Some(fnCall("mac_trunc", t.children.map(stripImplicitCasts)))
+      case f: graft.functions.Inet.InetFn
+          if (f.fnName == "abbrev" || f.fnName == "set_masklen") &&
+            f.children.head.resolved && typeOf(f.children.head).contains("cidr") =>
+        Some(fnCall(if (f.fnName == "abbrev") "pg_abbrev_cidr" else "pg_set_masklen_cidr",
+          f.children))
+      // inet/cidr → text (`::text`, `text(x)`) shows the mask length
+      case c @ Cast(x, StringType, _, _)
+          if !notUserCast(c) && x.resolved && family(x).contains("inet") =>
+        Some(fnCall("pg_inet_text", Seq(stripImplicitCasts(x))))
+      // money::numeric reads the currency text
+      case c @ Cast(x, _: DecimalType, _, _)
+          if !notUserCast(c) && x.resolved && family(x).contains("money") =>
+        Some(fnCall("money_to_numeric", Seq(stripImplicitCasts(x))))
+      case _ => None
+    }
+
+    /** `+ - * /`: the mixed-type forms (inet ± integer, money × / number),
+      * then the same-family ones. */
+    private def arith(op: String, l: Expression, r: Expression): Option[Expression] = {
+      if (!l.resolved || !r.resolved) return None
+      val (fl, fr) = (family(l), family(r))
+      def integral(e: Expression) = isIntegral(stripImplicitCasts(e).dataType)
+      def number(e: Expression) = stripImplicitCasts(e).dataType.isInstanceOf[NumericType]
+      def call(fn: String, a: Expression, b: Expression) =
+        Some(fnCall(fn, Seq(stripImplicitCasts(a), stripImplicitCasts(b))))
+      (op, fl, fr) match {
+        case ("+", Some("inet"), None) if integral(r) => call("inet_add", l, r)
+        case ("+", None, Some("inet")) if integral(l) => call("inet_add", r, l)
+        case ("-", Some("inet"), None) if integral(r) => call("inet_sub", l, r)
+        case ("*", Some("money"), None) if number(r) => call("money_mul", l, r)
+        case ("*", None, Some("money")) if number(l) => call("money_mul", r, l)
+        case ("/", Some("money"), None) if number(r) => call("money_div_num", l, r)
+        case _ => same(op, l, r)
+      }
+    }
+
+    /** Both operands of one family — or one typed and the other an
+      * unknown (string) literal, which pg reads as the typed side's type. */
+    private def same(op: String, l: Expression, r: Expression): Option[Expression] = {
+      if (!l.resolved || !r.resolved) return None
+      val fam = (family(l), family(r)) match {
+        case (Some(a), Some(b)) if a == b => Some(a)
+        case (Some(a), None) if implicitStrLit(r).isDefined => Some(a)
+        case (None, Some(b)) if implicitStrLit(l).isDefined => Some(b)
+        case _ => None
+      }
+      fam.flatMap(f => sameOps.get((f, op)))
+        .map(fn => fnCall(fn, Seq(stripImplicitCasts(l), stripImplicitCasts(r))))
+    }
   }
 
   /** The session enum type name of an enum-tagged column. */

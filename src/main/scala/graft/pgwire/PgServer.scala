@@ -644,7 +644,18 @@ final class PgServer(
         case PgType.FLOAT4 | PgType.FLOAT8 | PgType.NUMERIC =>
           if (!s.matches("[+-]?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?|NaN|[+-]?Infinity"))
             throw PgException("22P02", s"invalid number: $s")
-          s"CAST('$s' AS DOUBLE)"
+          if (oid == PgType.FLOAT4) s"CAST('$s' AS FLOAT)"
+          else if (oid == PgType.FLOAT8 || s.endsWith("NaN") || s.endsWith("Infinity"))
+            s"CAST('$s' AS DOUBLE)"
+          else {
+            // the value's own precision and scale, like pg's numeric
+            val d0 = new java.math.BigDecimal(s)
+            val d = if (d0.scale < 0) d0.setScale(0) else d0
+            val p = math.max(math.max(d.precision, d.scale), 1)
+            if (p > 38) throw PgException("22003",
+              s"numeric value $s has more than 38 digits")
+            s"CAST('${d.toPlainString}' AS DECIMAL($p,${d.scale}))"
+          }
         case PgType.BYTEA =>
           val hex = if (s.startsWith("\\x")) s.substring(2) else s
           s"X'$hex'"

@@ -327,6 +327,30 @@ class PgServerSpec extends SparkSpec with BeforeAndAfterAll {
     c.close()
   }
 
+  test("numeric and float4 text params keep their types (live pg 15)") {
+    val c = connect()
+    def bound(oid: Int, v: String): Reply = {
+      c.parse("", "SELECT $1", Seq(oid))
+      c.bind("", "", Seq(Some(v)))
+      c.describe('P', "")
+      c.execute("")
+      c.sync()
+    }
+    // numeric binds exactly, at the value's own precision and scale
+    val n = bound(1700, "12345678901234567890.123456789")
+    assert(n.errors === Nil, n.errors)
+    assert(n.fields.map(_._2) === Seq(1700))
+    assert(n.rows === Seq(Seq(Some("12345678901234567890.123456789"))))
+    assert(bound(1700, "1.5E+3").rows === Seq(Seq(Some("1500"))))
+    val f4 = bound(700, "1.5")
+    assert(f4.fields.map(_._2) === Seq(700))
+    assert(f4.rows === Seq(Seq(Some("1.5"))))
+    // NaN keeps the float8 binding; past 38 digits is out of range
+    assert(bound(1700, "NaN").rows === Seq(Seq(Some("NaN"))))
+    assert(bound(1700, "1" * 39).errors.map(_._1) === Seq("22003"))
+    c.close()
+  }
+
   test("FETCH FIRST ... WITH TIES keeps peer rows of the boundary") {
     val c = connect()
     val r = c.query(
