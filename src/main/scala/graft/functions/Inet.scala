@@ -261,6 +261,22 @@ object Inet extends Serializable {
     a.addr.compareTo(b.addr)
   }
 
+  /** A byte string whose unsigned order is [[cmp]]'s: family, network
+    * address, mask length, full address (fixed widths per family), so
+    * ORDER BY and min/max sort inet/cidr values as pg does. */
+  def sortKey(ip: Ip): Array[Byte] = {
+    val w = ip.bits / 8
+    def fixed(v: BigInteger): Array[Byte] = {
+      val b = v.toByteArray // big-endian, possibly one leading sign byte
+      val out = new Array[Byte](w)
+      val n = math.min(w, b.length)
+      System.arraycopy(b, b.length - n, out, w - n, n)
+      out
+    }
+    Array(ip.family.toByte) ++ fixed(network(ip).addr) ++ Array(ip.masklen.toByte) ++
+      fixed(ip.addr)
+  }
+
   // ---- macaddr / macaddr8 (pg §8.10) ---------------------------------------
 
   private def badMac(s: String, eight: Boolean): Nothing =
@@ -387,6 +403,7 @@ object Inet extends Serializable {
       bool2("inet_le")((a, b) => cmp(a, b) <= 0),
       bool2("inet_gt")((a, b) => cmp(a, b) > 0),
       bool2("inet_ge")((a, b) => cmp(a, b) >= 0),
+      ("inet_sort_key", BinaryType, 1, f1(s => sortKey(p(s)))),
       str1("macaddr_in")(s => renderMac(parseMac(s, eight = false))),
       str1("macaddr8_in")(s => renderMac(parseMac(s, eight = true))),
       str1("mac_trunc") { s =>

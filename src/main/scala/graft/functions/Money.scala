@@ -5,9 +5,10 @@ import graft.pgwire.PgException
 /** PostgreSQL `money` (pg §8.2) over the canonical rendered text
   * (`$1,234.56`, lc_monetary C) — round-11 type-family pattern,
   * behavior pinned against live pg 15 (PgParitySpec sweep-21):
-  * half-up cent rounding on input and multiplication, money±money,
-  * money times/over numeric, money/money as a float8 ratio, and the
-  * ::numeric escape.
+  * half-up cent rounding on input, money±money, money times/over a
+  * number (pg's int64-cent arithmetic: an integer divisor truncates,
+  * a float or numeric factor or divisor rounds half-even like rint),
+  * money/money as a float8 ratio, and the ::numeric escape.
   */
 object Money extends Serializable {
 
@@ -38,16 +39,21 @@ object Money extends Serializable {
       if (a == null || b == null) null else render(parse(a).add(parse(b))))
     u.register("money_sub", (a: String, b: String) =>
       if (a == null || b == null) null else render(parse(a).subtract(parse(b))))
+    def cents(a: String): Long = parse(a).unscaledValue.longValue
+    def fromCents(c: Long): String = render(java.math.BigDecimal.valueOf(c, 2))
+    def byZero = throw PgException("22012", "division by zero")
     u.register("money_mul", (a: String, f: Double) =>
-      if (a == null) null
-      else render(parse(a).multiply(java.math.BigDecimal.valueOf(f))))
+      if (a == null) null else fromCents(math.rint(cents(a) * f).toLong))
     u.register("money_div_num", (a: String, f: Double) =>
       if (a == null) null
-      else render(parse(a).divide(java.math.BigDecimal.valueOf(f), 2,
-        java.math.RoundingMode.HALF_UP)))
+      else if (f == 0.0) byZero
+      else fromCents(math.rint(cents(a) / f).toLong))
+    u.register("money_div_int", (a: String, i: Long) =>
+      if (a == null) null else if (i == 0L) byZero else fromCents(cents(a) / i))
     u.register("money_div_money", (a: String, b: String) =>
       (if (a == null || b == null) null
-       else Double.box(parse(a).doubleValue / parse(b).doubleValue)): java.lang.Double)
+       else if (cents(b) == 0L) byZero
+       else Double.box(cents(a).toDouble / cents(b))): java.lang.Double)
     // returns the rendered numeric TEXT (a typed BigDecimal would be
     // Decimal(38,18) and render trailing zeros); the wire tags it
     // with the numeric OID

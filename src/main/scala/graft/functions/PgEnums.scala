@@ -12,12 +12,10 @@ import graft.pgwire.PgException
   * DDL at all).
   *
   * Values are label TEXT at the Spark level; declared-order semantics
-  * (pg §8.7.2) are carried by Compat.rewriteEnumOps, which dispatches
-  * comparisons / ORDER BY / min / max / greatest / least over
-  * syntactically enum-typed operands through the ordinal map below.
-  * Like the other type families, ad-hoc text needs an explicit cast
-  * on at least one operand; STORED enum columns dispatch by their
-  * pg.enum column metadata (PgSemantics, round 13).
+  * (pg §8.7.2) are carried by PgSemantics, which dispatches comparisons
+  * / ORDER BY / min / max / greatest / least over enum-typed operands
+  * (an `::enum` cast, a stored enum column, or a column defined by
+  * either) through the ordinal map below.
   * Multi-JVM note: the registry lives in the driver, and the enum
   * UDF closures capture it — task closures serialize a registry
   * SNAPSHOT at each stage submission (Registry is Serializable), so
@@ -119,10 +117,17 @@ object PgEnums extends Serializable {
     u.register("enum_first_n", (name: String) => defOf(name).labels.head)
     u.register("enum_last_n", (name: String) => defOf(name).labels.last)
     u.register("enum_range_n", (name: String) => defOf(name).labels.toArray)
+    // enum_first/enum_last/enum_range(x) read only x's enum TYPE:
+    // PgSemantics turns them into the `_n` forms above; an argument
+    // with no enum type reaches these
+    def noEnumType = throw PgException("22023", "could not determine actual enum type")
+    u.register("enum_first", (_: String) => noEnumType: String)
+    u.register("enum_last", (_: String) => noEnumType: String)
+    u.register("enum_range", (_: String) => noEnumType: Array[String])
     // declared-order dispatch (pg §8.7.2: "The ordering of the values
     // in an enum type is the order in which the values were listed"):
-    // Compat rewrites comparisons/ORDER BY/min/max over syntactically
-    // enum-typed operands through the ordinal map
+    // PgSemantics rewrites comparisons/ORDER BY/min/max over enum-typed
+    // operands through the ordinal map
     u.register("enum_ord", (name: String, label: String) =>
       (if (label == null) null
       else {

@@ -327,7 +327,7 @@ object PgJsonExpressions {
       extends Expression with PgVariadicDirectGen {
     override def dataType: DataType = StringType
     override def nullable: Boolean = false
-    override def prettyName: String = "json_build_object"
+    override def prettyName: String = if (jsonb) "jsonb_build_object" else "json_build_object"
 
     override def checkInputDataTypes(): TypeCheckResult =
       if (children.length % 2 != 0)
@@ -372,7 +372,7 @@ object PgJsonExpressions {
       extends Expression with PgVariadicDirectGen {
     override def dataType: DataType = StringType
     override def nullable: Boolean = false
-    override def prettyName: String = "json_build_array"
+    override def prettyName: String = if (jsonb) "jsonb_build_array" else "json_build_array"
 
     override def checkInputDataTypes(): TypeCheckResult =
       if (!children.forall(c => supported(c.dataType)))
@@ -703,7 +703,7 @@ object PgJsonExpressions {
   case class PgJsonStripNulls(child: Expression, jsonb: Boolean = false)
       extends UnaryExpression with PgUnaryDirectGen {
     override def dataType: DataType = StringType
-    override def prettyName: String = "json_strip_nulls"
+    override def prettyName: String = if (jsonb) "jsonb_strip_nulls" else "json_strip_nulls"
 
     override def checkInputDataTypes(): TypeCheckResult =
       if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess

@@ -116,11 +116,13 @@ object Trigram extends Serializable {
     u.register("strict_word_similarity", (a: String, b: String) =>
       (if (a == null || b == null) null else Float.box(strictWordSimilarity(a, b))): java.lang.Float)
     u.register("show_limit", () => 0.3f)
-    // operator support functions (Compat.rewriteTrgmOps): the distance
+    // operator support functions (Compat.familyOnlyOps): the distance
     // spellings return 1 - similarity as FLOAT (pg real), and the
     // commutated forms (`a %> b` ≡ word_similarity(b, a) ≥ t) swap
     // their arguments here so the token rewrite never has to reorder
-    // operand spans
+    // operand spans. The boolean operators' pg_trgm functions hold the
+    // extension-default thresholds; on the wire PgSemantics replaces
+    // them with a comparison against the session's threshold GUCs
     def f2(fn: (String, String) => Float): (String, String) => java.lang.Float =
       (a, b) => if (a == null || b == null) null else Float.box(fn(a, b))
     u.register("word_similarity_c", f2((a, b) => wordSimilarity(b, a)))
@@ -128,5 +130,14 @@ object Trigram extends Serializable {
     u.register("trgm_sim_dist", f2((a, b) => 1f - similarity(a, b)))
     u.register("trgm_word_dist", f2((a, b) => 1f - wordSimilarity(a, b)))
     u.register("trgm_word_dist_c", f2((a, b) => 1f - wordSimilarity(b, a)))
+    def op(name: String, threshold: Double)(fn: (String, String) => Float): Unit =
+      u.register(name, (a: String, b: String) =>
+        (if (a == null || b == null) null
+         else Boolean.box(fn(a, b) >= threshold)): java.lang.Boolean)
+    op("similarity_op", 0.3)(similarity)
+    op("word_similarity_op", 0.6)(wordSimilarity)
+    op("word_similarity_commutator_op", 0.6)((a, b) => wordSimilarity(b, a))
+    op("strict_word_similarity_op", 0.5)(strictWordSimilarity)
+    op("strict_word_similarity_commutator_op", 0.5)((a, b) => strictWordSimilarity(b, a))
   }
 }

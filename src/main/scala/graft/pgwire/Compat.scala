@@ -384,14 +384,12 @@ object Compat {
 
   // ---- main rewrite ------------------------------------------------------
 
-  /** Rewrite one pg-dialect statement into Spark SQL. */
   /** Session enum type names for `::name` cast dispatch (set by the
     * two-arg rewrite overload; Compat itself is session-free).
     */
   private val enumTypesTL: ThreadLocal[Set[String]] =
     ThreadLocal.withInitial(() => Set.empty[String])
 
-  /** Rewrite with the calling session's user enum types visible. */
   // ---- pg output column names (FigureColname) ----------------------------
   //
   // pg derives the name of an unlabeled result column from its SYNTAX
@@ -861,6 +859,7 @@ object Compat {
     }
   }
 
+  /** Rewrite with the calling session's user enum types visible. */
   def rewrite(sql: String, enumTypes: Set[String]): String = {
     enumTypesTL.set(enumTypes)
     try rewrite(sql) finally enumTypesTL.set(Set.empty)
@@ -881,6 +880,7 @@ object Compat {
     finally injectNamesTL.set(java.lang.Boolean.FALSE)
   }
 
+  /** Rewrite one pg-dialect statement into Spark SQL. */
   def rewrite(sql: String): String = {
     applyBlacklist(sql) match {
       case Some(repl) => return repl
@@ -923,10 +923,6 @@ object Compat {
     rewriteMathOps(ts)
     rewriteBetweenSymmetric(ts)
     rewriteAnyAll(ts)
-    // enum declared-order dispatch must precede the ordered-agg
-    // rewrite: it wraps aggregate-internal ORDER BY keys in enum_ord
-    // before rewriteJsonAggs lowers them into sorted-struct collects
-    rewriteEnumOps(ts)
     rewriteJsonAggInputOrder(ts)
     rewriteJsonAggs(ts)
     rewriteJsonToRecord(ts)
@@ -937,16 +933,9 @@ object Compat {
     rewriteExtractEpoch(ts)
     rewriteSimilarTo(ts)
     rewriteRegexOps(ts)
-    rewriteJsonbDeleteConcat(ts)
     rewriteArrayElemConcat(ts)
     rewriteFamilyOnlyOps(ts)
-    rewriteEnumFns(ts)
     rewriteTextCalls(ts)
-    rewriteTsOps(ts)
-    // trgm operators run AFTER the text-search pass so a `<->` between
-    // tsquery operands keeps its phrase-distance meaning; whatever
-    // remains with a syntactically-text operand is trigram distance
-    rewriteTrgmOps(ts)
     rewriteTsAccessors(ts)
     rewriteJsonOps(ts)
     rewriteLimitCast(ts)
@@ -4864,78 +4853,6 @@ object Compat {
   private def isValueEnd(t: Tok): Boolean =
     t.kind == Word || t.kind == QIdent || t.kind == Str || t.is(")") || t.is("]")
 
-  /** Function calls whose result is jsonb-typed in pg — used to
-    * resolve the overloaded `-` and `||` operators below. */
-  private val jsonbProducers = Set(
-    "pg_jsonb", "to_jsonb", "jsonb_set", "jsonb_set_lax", "jsonb_insert",
-    "jsonb_delete", "jsonb_delete_path", "jsonb_concat", "jsonb_strip_nulls",
-    "jsonb_build_object", "jsonb_build_array", "jsonb_object",
-    "jsonb_path_query_first", "jsonb_path_query_array", "jsonb_agg",
-    "jsonb_object_agg")
-
-  /** The json KIND of the value expression ENDING at `e`, judged by
-    * its OUTERMOST production only: Some("jsonb") for a `::jsonb`
-    * cast or jsonb-producing call, Some("json") for `::json` or a
-    * json-producing call, None for anything else (bare columns — pg
-    * resolves these operators by static type). A `)` that closes a
-    * plain parenthesized group recurses into the inner expression. */
-  private def jsonKindOf(ts: ArrayBuffer[Tok], e: Int): Option[String] = {
-    if (e < 0) return None
-    val t = ts(e)
-    if (t.kind == Word &&
-      (t.text.equalsIgnoreCase("json") || t.text.equalsIgnoreCase("jsonb"))) {
-      val c = prevIdx(ts, e)
-      if (c >= 0 && ts(c).is("::")) Some(t.text.toLowerCase) else None
-    } else if (t.is(")")) {
-      var depth = 1
-      var j = e - 1
-      while (j >= 0 && depth > 0) {
-        if (ts(j).is(")")) depth += 1
-        else if (ts(j).is("(")) depth -= 1
-        if (depth > 0) j -= 1
-      }
-      if (j < 0) return None
-      val w = prevIdx(ts, j)
-      val fnWord = w >= 0 && ts(w).kind == Word
-      if (fnWord) {
-        val lw = ts(w).text.toLowerCase
-        if (lw == "pg_jsonb" || lw == "to_jsonb" || lw.startsWith("jsonb_"))
-          Some("jsonb")
-        else if (lw == "pg_json" || lw == "to_json" || lw == "row_to_json" ||
-          lw.startsWith("json_")) Some("json")
-        else None
-      } else {
-        // bare paren group: judge the inner expression's tail
-        val inner = prevIdx(ts, e)
-        if (inner > j) jsonKindOf(ts, inner) else None
-      }
-    } else None
-  }
-
-  /** Does the value expression ENDING at `e` carry an explicit jsonb
-    * type — a `::json[b]` cast or a jsonb-returning function call?
-    * (Plain string columns are indistinguishable from jsonb here; pg
-    * resolves these operators by static type, so only annotated
-    * values dispatch.) */
-  private def jsonbMarked(ts: ArrayBuffer[Tok], e: Int): Boolean = {
-    if (e < 0) false
-    else if (ts(e).kind == Word &&
-      (ts(e).text.equalsIgnoreCase("json") || ts(e).text.equalsIgnoreCase("jsonb"))) {
-      val c = prevIdx(ts, e)
-      c >= 0 && ts(c).is("::")
-    } else if (ts(e).is(")")) {
-      var depth = 1
-      var j = e - 1
-      while (j >= 0 && depth > 0) {
-        if (ts(j).is(")")) depth += 1
-        else if (ts(j).is("(")) depth -= 1
-        if (depth > 0) j -= 1
-      }
-      val w = prevIdx(ts, j)
-      w >= 0 && ts(w).kind == Word && jsonbProducers.contains(ts(w).text.toLowerCase)
-    } else false
-  }
-
   /** End index of the value starting at `s`: a call or ARRAY[..]
     * extends to its close; trailing `::type[[]]` casts are absorbed. */
   private def valueEnd(ts: ArrayBuffer[Tok], s: Int): Int = {
@@ -4978,60 +4895,33 @@ object Compat {
     e
   }
 
-  /** pg's overloaded jsonb operators that collide with arithmetic and
-    * string/array concat: `jsonb - text|int|text[]` (delete) and
-    * `jsonb || jsonb` (concat). Dispatch needs a static jsonb type on
-    * an operand — an explicit `::json[b]` cast or a jsonb-producing
-    * call (matching pg, which resolves overloads by operand type).
-    * Runs before rewriteCastTypes so the `::jsonb` spelling is still
-    * visible. */
-  private def rewriteJsonbDeleteConcat(ts: ArrayBuffer[Tok]): Unit = {
-    var i = 0
-    while (i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Op && (t.text == "-" || t.text == "||")) {
-        val p = prevIdx(ts, i)
-        val rhs = nextIdx(ts, i)
-        if (p >= 0 && rhs >= 0 && isValueEnd(ts(p))) {
-          val rhsStart =
-            if (t.text == "-" && ts(rhs).kind == Op && ts(rhs).text == "-") nextIdx(ts, rhs)
-            else rhs
-          val rhsOk = rhsStart >= 0 && (ts(rhsStart).kind == Str ||
-            ts(rhsStart).kind == Num || ts(rhsStart).kind == Word ||
-            ts(rhsStart).kind == QIdent)
-          val rEnd = if (rhsOk) valueEnd(ts, rhsStart) else -1
-          val dispatch = rhsOk && (jsonbMarked(ts, p) ||
-            (t.text == "||" && jsonbMarked(ts, rEnd)))
-          if (dispatch) {
-            val fn = if (t.text == "-") "jsonb_delete" else "jsonb_concat"
-            val start = lhsStart(ts, p)
-            ts.insert(rEnd + 1, Tok(Op, ")"))
-            ts(i) = Tok(Op, ",")
-            ts.insertAll(start, Seq(Tok(Word, fn), Tok(Op, "(")))
-            i = start
-          }
-        }
-      }
-      i += 1
-    }
-  }
-
   /** Range type names (pg §8.17): `::<sub>range` casts and prefixed
     * literals lower to their `<sub>range_in` parsers. */
   private[pgwire] val rangeTypeNames = Set(
     "int4range", "int8range", "numrange", "daterange", "tsrange", "tstzrange")
 
-  /** Operator spellings Spark's parser rejects that belong to one pg
-    * type family — the range-only `-|-` `&<` `&>` and the inet-only
-    * `<<=` `>>=` — → that family's function, whatever the operands (pg
-    * has no other meaning for them, so two bare literals resolve too:
-    * live-pg sweep-30). The overloaded spellings (`@>`, `&&`, `<<`,
-    * `+`, `<`, …) dispatch on operand type in [[PgSemantics]].
-    */
+  /** Operator spellings Spark's parser rejects → one fixed call each,
+    * whatever the operands:
+    *  - those of one pg type family, its function: the range-only `-|-`
+    *    `&<` `&>`, the inet-only `<<=` `>>=`, and the pg_trgm-only `<%`
+    *    `%>` `<<%` `%>>` `<<->` `<->>` (pg has no other meaning for
+    *    them, so two bare literals resolve too: live-pg sweep-30; the
+    *    boolean trigram calls are pg_trgm's own support functions, which
+    *    [[PgSemantics]] compares against the session's thresholds);
+    *  - `<->`, which is trigram distance over text and the phrase
+    *    operator over tsqueries: trgm_sim_dist, which PgSemantics
+    *    retypes over tsquery operands.
+    * The overloaded spellings Spark parses (`@>`, `&&`, `<<`, `+`, `<`,
+    * `%`, `||`, …) dispatch on operand type in PgSemantics. */
   private val familyOnlyOps = Map(
     "-|-" -> "range_adjacent", "&<" -> "range_not_extright",
     "&>" -> "range_not_extleft",
-    "<<=" -> "inet_contained_eq", ">>=" -> "inet_contains_eq")
+    "<<=" -> "inet_contained_eq", ">>=" -> "inet_contains_eq",
+    "<%" -> "word_similarity_op", "%>" -> "word_similarity_commutator_op",
+    "<<%" -> "strict_word_similarity_op",
+    "%>>" -> "strict_word_similarity_commutator_op",
+    "<<->" -> "trgm_word_dist", "<->>" -> "trgm_word_dist_c",
+    "<->" -> "trgm_sim_dist")
 
   private def rewriteFamilyOnlyOps(ts: ArrayBuffer[Tok]): Unit = {
     var i = 0
@@ -5075,617 +4965,16 @@ object Compat {
     }
   }
 
-  /** Text-search type names + the functions whose results are
-    * tsvector/tsquery — syntactic markers for `@@` and length()
-    * dispatch (pg resolves these by argument type).
-    */
-  private val tsVectorFns = Set("to_tsvector", "tsvector_in", "strip", "setweight",
-    "setweight3", "ts_delete", "ts_delete_arr", "ts_filter", "tsvector_concat",
-    "array_to_tsvector")
-  private val tsQueryFns = Set("to_tsquery", "plainto_tsquery",
-    "phraseto_tsquery", "websearch_to_tsquery", "tsquery_in",
-    "tsquery_and", "tsquery_or", "tsquery_phrase", "tsquery_phrase3")
-
-  private def hasTsMarker(ts: ArrayBuffer[Tok], from: Int, to: Int,
-      fns: Set[String], typeName: String): Boolean = {
-    var i = from
-    while (i <= to && i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Word && fns.contains(t.text.toLowerCase)) {
-        val n = nextIdx(ts, i)
-        if (n >= 0 && n <= to && ts(n).is("(")) return true
-      }
-      if (t.is("::")) {
-        val n = nextIdx(ts, i)
-        if (n >= 0 && n <= to && ts(n).isWord(typeName)) return true
-      }
-      i += 1
-    }
-    false
-  }
-
-  /** `@@` between text-search operands → ts_match (pg's tsvector @@
-    * tsquery in any operand order, plus text @@ tsquery which
-    * to_tsvector's the raw side). Runs BEFORE the json pass so the
-    * remaining `@@` instances keep their jsonpath meaning.
-    */
-  /** `enum_range/enum_first/enum_last(NULL::type)` → the name-taking
-    * engine forms (the NULL-cast argument exists only to carry the
-    * type, which the cast pass would otherwise erase).
-    */
-  private def rewriteEnumFns(ts: ArrayBuffer[Tok]): Unit = {
-    val enums = enumTypesTL.get
-    if (enums.isEmpty) return
-    var i = 0
-    while (i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Word && (t.isWord("enum_range") || t.isWord("enum_first") ||
-        t.isWord("enum_last"))) {
-        val open = nextIdx(ts, i)
-        if (open >= 0 && ts(open).is("(")) {
-          val close = matchParen(ts, open)
-          val a1 = nextIdx(ts, open)
-          val cast = if (a1 >= 0) nextIdx(ts, a1) else -1
-          val ty = if (cast >= 0 && ts(cast).is("::")) nextIdx(ts, cast) else -1
-          if (close > 0 && a1 >= 0 && ts(a1).isWord("null") && ty >= 0 &&
-            ts(ty).kind == Word && enums.contains(ts(ty).text.toLowerCase) &&
-            nextIdx(ts, ty) == close) {
-            val name = ts(ty).text.toLowerCase
-            val fn = t.text.toLowerCase + "_n"
-            ts.remove(i, close - i + 1)
-            ts.insert(i, Tok(Word, s"$fn('$name')"))
-          }
-        }
-      }
-      i += 1
-    }
-  }
-
-  /** Enum type name of a syntactically enum-typed span, if any:
-    * a `::<enumtype>` cast (pre-cast-rewrite spelling) or a call to
-    * one of the enum engine functions (including the composite
-    * single-token forms rewriteEnumFns produces).
-    */
-  private def enumTypeOf(ts: ArrayBuffer[Tok], from: Int, to: Int): Option[String] = {
-    val enums = enumTypesTL.get
-    if (enums.isEmpty) return None
-    val fns = Seq("enum_in", "enum_first_n", "enum_last_n", "enum_label_at")
-    var i = from
-    while (i <= to && i < ts.length) {
-      val t = ts(i)
-      if (t.is("::")) {
-        val n = nextIdx(ts, i)
-        if (n >= 0 && n <= to && ts(n).kind == Word &&
-          enums.contains(ts(n).text.toLowerCase))
-          return Some(ts(n).text.toLowerCase)
-      }
-      if (t.kind == Word) {
-        val l = t.text.toLowerCase
-        for (fn <- fns) {
-          if (l == fn) {
-            val o = nextIdx(ts, i)
-            if (o >= 0 && o <= to && ts(o).is("(")) {
-              val a = nextIdx(ts, o)
-              if (a >= 0 && ts(a).kind == Str) {
-                val nm = ts(a).text.drop(1).dropRight(1).toLowerCase
-                if (nm.nonEmpty) return Some(nm)
-              }
-            }
-          }
-        }
-      }
-      i += 1
-    }
-    None
-  }
-
-  /** Enum type of a span when — and only when — the span's OUTERMOST
-    * production is enum-typed. [[enumTypeOf]]'s contains-scan is the
-    * right test inside an argument list (is any operand enum-ish?),
-    * but for dispatch decisions it false-positives on spans that
-    * merely contain an enum cast while producing a non-enum value
-    * (`length(m::mood)`, `CASE WHEN m::mood='sad' THEN 0 … END`,
-    * `x::mood::text`). Rules, in order:
-    *  - a trailing `::type` decides alone: enum type → that type,
-    *    any other type → None (the cast re-typed the value);
-    *  - a fully-parenthesized span recurses on its body;
-    *  - a call to an enum-producing engine function (`enum_in`,
-    *    `enum_label_at`, and the live `enum_first/enum_last(null::ty)`
-    *    spellings, whose type rides the argument cast);
-    *  - enum-preserving functions (min/max/greatest/least/coalesce/
-    *    nullif) recurse on their FIRST top-level argument;
-    *  - anything else → None (bare columns need an explicit cast on
-    *    one operand — the documented family convention).
-    */
-  private def enumTypeOfOuter(ts: ArrayBuffer[Tok], from: Int, to: Int): Option[String] = {
-    val enums = enumTypesTL.get
-    if (enums.isEmpty) return None
-    var a = from
-    while (a <= to && a < ts.length && ts(a).kind == Ws) a += 1
-    var b = math.min(to, ts.length - 1)
-    while (b >= a && ts(b).kind == Ws) b -= 1
-    if (b < a) return None
-    // trailing cast chain: the LAST cast decides the span's type
-    if (ts(b).kind == Word) {
-      val pb = prevIdx(ts, b)
-      if (pb >= a && ts(pb).is("::"))
-        return if (enums.contains(ts(b).text.toLowerCase))
-          Some(ts(b).text.toLowerCase) else None
-    }
-    if (ts(a).is("(") && matchParen(ts, a) == b)
-      return enumTypeOfOuter(ts, a + 1, b - 1)
-    if (ts(a).kind == Word) {
-      val l = ts(a).text.toLowerCase
-      val o = nextIdx(ts, a)
-      if (o >= 0 && o <= b && ts(o).is("(") && matchParen(ts, o) == b) {
-        if (l == "enum_in" || l == "enum_label_at") {
-          val arg = nextIdx(ts, o)
-          if (arg >= 0 && ts(arg).kind == Str) {
-            val nm = ts(arg).text.drop(1).dropRight(1).toLowerCase
-            if (nm.nonEmpty) return Some(nm)
-          }
-        }
-        if (l == "enum_first" || l == "enum_last")
-          return enumTypeOf(ts, o + 1, b - 1)
-        if (l == "min" || l == "max" || l == "greatest" || l == "least" ||
-          l == "coalesce" || l == "nullif") {
-          // first top-level argument carries the result type
-          var j = o + 1; var depth = 0; var end = b - 1
-          var done = false
-          while (j < b && !done) {
-            if (ts(j).is("(")) depth += 1
-            else if (ts(j).is(")")) depth -= 1
-            else if (depth == 0 && ts(j).is(",")) { end = j - 1; done = true }
-            j += 1
-          }
-          var s0 = nextIdx(ts, o)
-          if (s0 >= 0 && ts(s0).isWord("distinct")) s0 = nextIdx(ts, s0)
-          if (s0 >= 0 && s0 <= end) return enumTypeOfOuter(ts, s0, end)
-        }
-      }
-    }
-    None
-  }
-
-  /** pg enum declared-order semantics (§8.7.2): values sort in the
-    * order the labels were listed, not lexically. Labels stay TEXT at
-    * the Spark level, so comparisons / ORDER BY / min / max over a
-    * syntactically enum-typed operand are dispatched through the
-    * session registry's ordinal map:
-    *   - `a < b::ty`      → enum_ord('ty', a) < enum_ord('ty', b::ty)
-    *   - `ORDER BY x::ty` → ORDER BY enum_ord('ty', x::ty)
-    *   - `min(x::ty)`     → enum_label_at('ty', min(enum_ord('ty', x::ty)))
-    * Like the other type families, a bare column needs an explicit
-    * cast on at least one operand (no type info at rewrite time);
-    * `=`/`<>` are order-independent and stay on the label text.
-    */
-  private def rewriteEnumOps(ts: ArrayBuffer[Tok]): Unit = {
-    if (enumTypesTL.get.isEmpty) return
-    val cmpOps = Set("<", "<=", ">", ">=")
-
-    def ordPrefix(name: String) = Seq(Tok(Word, "enum_ord"), Tok(Op, "("),
-      Tok(Str, s"'$name'"), Tok(Op, ","))
-
-    // min/max/greatest/least over enum operands → ordinal-space
-    // computation mapped back to its label (live pg 15: greatest over
-    // a mood enum picks by declared order). Innermost-first so nested
-    // spans stay valid; each top-level argument is wrapped separately.
-    var i = ts.length - 1
-    while (i >= 0) {
-      val t = ts(i)
-      if (t.kind == Word && (t.isWord("min") || t.isWord("max") ||
-        t.isWord("greatest") || t.isWord("least"))) {
-        val o = nextIdx(ts, i)
-        if (o >= 0 && ts(o).is("(")) {
-          val c = matchParen(ts, o)
-          if (c > 0) {
-            val commas = scala.collection.mutable.ArrayBuffer[Int]()
-            var j = o + 1; var depth = 0
-            while (j < c) {
-              if (ts(j).is("(")) depth += 1
-              else if (ts(j).is(")")) depth -= 1
-              else if (depth == 0 && ts(j).is(",")) commas += j
-              j += 1
-            }
-            val bounds = (Seq(o) ++ commas.toSeq ++ Seq(c)).sliding(2).toSeq
-            // dispatch only when some argument is OUTERMOST enum-typed:
-            // a contains-scan would fire on `greatest(length(m::mood),
-            // 3)` and hand enum_ord a non-label integer at runtime
-            val name = bounds.flatMap {
-              case Seq(a, b) =>
-                var s0 = nextIdx(ts, a)
-                if (s0 >= 0 && ts(s0).isWord("distinct")) s0 = nextIdx(ts, s0)
-                if (s0 >= 0 && s0 < b) enumTypeOfOuter(ts, s0, b - 1) else None
-              case _ => None
-            }.headOption
-            name.foreach { nm =>
-              // a FILTER (WHERE …) / OVER (…) tail belongs to the
-              // aggregate call — enum_label_at must close AFTER it
-              // (closing at the arg list would hand the window/filter
-              // clause to a plain scalar function and fail analysis)
-              var end = c
-              var k = nextIdx(ts, end)
-              if (k >= 0 && ts(k).isWord("filter")) {
-                val fo = nextIdx(ts, k)
-                if (fo >= 0 && ts(fo).is("(")) {
-                  val fc = matchParen(ts, fo)
-                  if (fc > 0) { end = fc; k = nextIdx(ts, end) }
-                }
-              }
-              if (k >= 0 && ts(k).isWord("over")) {
-                val wo = nextIdx(ts, k)
-                if (wo >= 0 && ts(wo).is("(")) {
-                  val wc = matchParen(ts, wo)
-                  if (wc > 0) end = wc
-                } else if (wo >= 0 && ts(wo).kind == Word) end = wo
-              }
-              ts.insert(end + 1, Tok(Op, ")")) // closes enum_label_at
-              bounds.reverse.foreach {
-                case Seq(a, b) =>
-                  ts.insert(b, Tok(Op, ")")) // closes this arg's enum_ord
-                  // min(DISTINCT x): the set quantifier stays outside
-                  var s0 = nextIdx(ts, a)
-                  if (s0 >= 0 && ts(s0).isWord("distinct")) s0 = s0 + 1
-                  else s0 = a + 1
-                  ts.insertAll(s0, ordPrefix(nm))
-                case _ =>
-              }
-              ts.insertAll(i, Seq(Tok(Word, "enum_label_at"), Tok(Op, "("),
-                Tok(Str, s"'$nm'"), Tok(Op, ",")))
-            }
-          }
-        }
-      }
-      i -= 1
-    }
-
-    // binary order comparisons: wrap both sides in enum_ord
-    i = 0
-    while (i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Op && cmpOps.contains(t.text)) {
-        val rhs = nextIdx(ts, i)
-        val p = prevIdx(ts, i)
-        if (rhs >= 0 && p >= 0 && isValueEnd(ts(p)) &&
-          (ts(rhs).kind == Str || ts(rhs).kind == Word ||
-            ts(rhs).kind == QIdent || ts(rhs).is("("))) {
-          val start = lhsStart(ts, p)
-          var rhs2 = rhs
-          if (ts(rhs2).is("(")) {
-            val close = matchParen(ts, rhs2)
-            if (close > 0) rhs2 = close
-          } else if (ts(rhs2).kind == Word) {
-            val nxt = nextIdx(ts, rhs2)
-            if (nxt >= 0 && ts(nxt).is("(")) {
-              val close = matchParen(ts, nxt)
-              if (close > 0) rhs2 = close
-            }
-          }
-          var castOp = nextIdx(ts, rhs2)
-          while (castOp >= 0 && ts(castOp).is("::") && {
-            val ty = nextIdx(ts, castOp); ty >= 0 && ts(ty).kind == Word
-          }) { rhs2 = nextIdx(ts, castOp); castOp = nextIdx(ts, rhs2) }
-          // outer-typed only: `x < y::mood::text` compares as text and
-          // `length(m::mood) > 2` as int — wrapping either in enum_ord
-          // would raise 22P02 on a non-label operand at runtime
-          val name = enumTypeOfOuter(ts, start, p)
-            .orElse(enumTypeOfOuter(ts, rhs, rhs2))
-          name.foreach { nm =>
-            ts.insert(rhs2 + 1, Tok(Op, ")"))
-            ts.insertAll(rhs, ordPrefix(nm))
-            ts.insert(p + 1, Tok(Op, ")"))
-            ts.insertAll(start, ordPrefix(nm))
-            i += 5 // past the lhs insertions; scan resumes after the op
-          }
-        }
-      }
-      i += 1
-    }
-
-    // ORDER BY items (plain, window-spec, and aggregate-internal)
-    val itemEnd = Set("asc", "desc", "nulls", "using", "limit", "offset",
-      "fetch", "for", "union", "intersect", "except", "rows", "range",
-      "groups", "window")
-    val clauseEnd = Set("limit", "offset", "fetch", "for", "union",
-      "intersect", "except", "rows", "range", "groups", "window")
-    i = 0
-    while (i < ts.length) {
-      if (ts(i).isWord("order")) {
-        val by = nextIdx(ts, i)
-        if (by >= 0 && ts(by).isWord("by")) {
-          var s = nextIdx(ts, by)
-          var scanning = s >= 0
-          while (scanning) {
-            // span of this item: up to a top-level comma, a suffix
-            // keyword, or the end of the enclosing clause
-            var j = s; var depth = 0; var last = -1; var stop = false
-            while (j < ts.length && !stop) {
-              val tk = ts(j)
-              if (tk.is("(")) depth += 1
-              else if (tk.is(")")) {
-                if (depth == 0) stop = true else { depth -= 1; last = j }
-              }
-              else if (depth == 0 && (tk.is(",") || tk.is(";"))) stop = true
-              else if (depth == 0 && tk.kind == Word &&
-                itemEnd.contains(tk.text.toLowerCase)) stop = true
-              else if (tk.kind != Ws) last = j
-              if (!stop) j += 1
-            }
-            if (last >= s) {
-              val already = ts(s).kind == Word &&
-                ts(s).text.equalsIgnoreCase("enum_ord")
-              enumTypeOfOuter(ts, s, last) match {
-                case Some(name) if !already =>
-                  ts.insert(last + 1, Tok(Op, ")"))
-                  ts.insertAll(s, ordPrefix(name))
-                  j += 5
-                case _ =>
-              }
-            }
-            // advance to the next item (skip suffix keywords) or stop
-            var k = j; var comma = -1; var depth2 = 0; var ended = false
-            while (k < ts.length && comma < 0 && !ended) {
-              val tk = ts(k)
-              if (tk.is("(")) depth2 += 1
-              else if (tk.is(")")) { if (depth2 == 0) ended = true else depth2 -= 1 }
-              else if (depth2 == 0 && tk.is(",")) comma = k
-              else if (depth2 == 0 && (tk.is(";") || (tk.kind == Word &&
-                clauseEnd.contains(tk.text.toLowerCase)))) ended = true
-              if (comma < 0 && !ended) k += 1
-            }
-            if (comma >= 0) { s = nextIdx(ts, comma); scanning = s >= 0 }
-            else scanning = false
-          }
-        }
-      }
-      i += 1
-    }
-  }
-
-  /** Text-returning functions accepted as syntactic "this operand is
-    * text" markers by the trigram operator dispatch. */
-  private val textyFns = Set("lower", "upper", "trim", "btrim", "ltrim",
-    "rtrim", "substr", "substring", "concat", "concat_ws", "replace",
-    "initcap", "left", "right", "unaccent", "reverse", "translate",
-    "repeat", "lpad", "rpad", "format", "quote_literal", "quote_ident")
-
-  private val textyCastNames = Set("text", "varchar", "char", "bpchar",
-    "character", "citext", "string")
-
-  /** Span is SYNTACTICALLY text-typed: a string literal, a trailing
-    * ::text-family cast, or a call to a known string function. The
-    * trigram operators dispatch only on such spans — `5 % 2` must stay
-    * modulo, and pg itself resolves `'5' % 2` numerically (the unknown
-    * literal coerces to int), so a Num on the other side vetoes. */
-  private def isTextySpan(ts: ArrayBuffer[Tok], from: Int, to: Int): Boolean = {
-    var a = from
-    while (a <= to && a < ts.length && ts(a).kind == Ws) a += 1
-    var b = math.min(to, ts.length - 1)
-    while (b >= a && ts(b).kind == Ws) b -= 1
-    if (b < a) return false
-    if (ts(b).kind == Str) return true
-    if (ts(b).kind == Word) {
-      val pb = prevIdx(ts, b)
-      if (pb >= a && ts(pb).is("::"))
-        return textyCastNames.contains(ts(b).text.toLowerCase)
-    }
-    if (ts(a).is("(") && matchParen(ts, a) == b)
-      return isTextySpan(ts, a + 1, b - 1)
-    if (ts(a).kind == Word && textyFns.contains(ts(a).text.toLowerCase)) {
-      val o = nextIdx(ts, a)
-      if (o >= 0 && o <= b && ts(o).is("(") && matchParen(ts, o) == b) return true
-    }
-    false
-  }
-
-  /** pg_trgm operator spellings → the engine's trigram functions
-    * (public pg_trgm docs; thresholds are the extension defaults,
-    * live-pinned in PgParitySpec sweep-23):
-    *   a % b    → similarity(a,b) >= 0.3          (similar)
-    *   a <% b   → word_similarity(a,b) >= 0.6     (word-similar)
-    *   a %> b   → word_similarity(b,a) >= 0.6     (commutator)
-    *   a <<% b  → strict_word_similarity(a,b) >= 0.5
-    *   a %>> b  → strict_word_similarity(b,a) >= 0.5
-    *   a <-> b  → 1 - similarity(a,b)             (distance, real)
-    *   a <<-> b → 1 - word_similarity(a,b)
-    *   a <->> b → 1 - word_similarity(b,a)
-    * Dispatch needs one operand syntactically text-typed (string
-    * literal / ::text cast / string function) and the other side
-    * non-numeric — `5 % 2` and `id % 37` stay modulo, and a `<->`
-    * between tsquery operands was already consumed by rewriteTsOps.
-    * `SET pg_trgm.*_threshold` is wired through [[trgmThresholds]]
-    * (r16): the session's GUC value replaces the extension default
-    * in the rewritten comparison, per operator family.
-    */
-  private val trgmBoolOps = Map(
-    "%" -> ("similarity", "0.3"), "<%" -> ("word_similarity", "0.6"),
-    "%>" -> ("word_similarity_c", "0.6"),
-    "<<%" -> ("strict_word_similarity", "0.5"),
-    "%>>" -> ("strict_word_similarity_c", "0.5"))
-
-  /** GUC behind each boolean trgm operator's threshold. */
-  private val trgmThresholdGuc = Map(
-    "%" -> "pg_trgm.similarity_threshold",
-    "<%" -> "pg_trgm.word_similarity_threshold",
-    "%>" -> "pg_trgm.word_similarity_threshold",
-    "<<%" -> "pg_trgm.strict_word_similarity_threshold",
-    "%>>" -> "pg_trgm.strict_word_similarity_threshold")
-
-  /** Session `SET pg_trgm.*_threshold` values for the operator
-    * rewrites, installed per statement by Handlers.execute
-    * (thread-local — each wire statement runs on its connection's
-    * thread, so the rewrite deep inside runSql sees its own
-    * session's values without threading a context through every
-    * call). Unparseable values fall back to the extension default,
-    * like an unloaded extension would. */
-  val trgmThresholds: ThreadLocal[Map[String, String]] =
-    new ThreadLocal[Map[String, String]] {
-      override def initialValue(): Map[String, String] = Map.empty
-    }
-
-  private def trgmThresholdFor(op: String, default: String): String = {
-    val v = trgmThresholds.get.get(trgmThresholdGuc(op))
-    v.filter(s => scala.util.Try(s.trim.toDouble).toOption
-      .exists(d => d >= 0.0 && d <= 1.0)).map(_.trim).getOrElse(default)
-  }
-  private val trgmDistOps = Map(
-    "<->" -> "trgm_sim_dist", "<<->" -> "trgm_word_dist",
-    "<->>" -> "trgm_word_dist_c")
-
-  private def rewriteTrgmOps(ts: ArrayBuffer[Tok]): Unit = {
-    if (!ts.exists(t => t.kind == Op &&
-      (trgmBoolOps.contains(t.text) || trgmDistOps.contains(t.text)))) return
-    var i = 0
-    while (i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Op &&
-        (trgmBoolOps.contains(t.text) || trgmDistOps.contains(t.text))) {
-        val rhs = nextIdx(ts, i)
-        val p = prevIdx(ts, i)
-        if (rhs >= 0 && p >= 0 && isValueEnd(ts(p)) &&
-          (ts(rhs).kind == Str || ts(rhs).kind == Word ||
-            ts(rhs).kind == QIdent || ts(rhs).is("("))) {
-          val start = lhsStart(ts, p)
-          var rhs2 = extendValue(ts, rhs)
-          // absorb a trailing cast chain into the rhs span
-          var castOp = nextIdx(ts, rhs2)
-          while (castOp >= 0 && ts(castOp).is("::") && {
-            val ty = nextIdx(ts, castOp); ty >= 0 && ts(ty).kind == Word
-          }) { rhs2 = nextIdx(ts, castOp); castOp = nextIdx(ts, rhs2) }
-          val texty = isTextySpan(ts, start, p) || isTextySpan(ts, rhs, rhs2)
-          val numeric = ts(p).kind == Num || ts(rhs).kind == Num
-          if (texty && !numeric) {
-            val (fn, cmp) = trgmBoolOps.get(t.text) match {
-              case Some((f, thr)) => (f, Seq(Tok(Op, ")"), Tok(Op, ">="),
-                Tok(Num, trgmThresholdFor(t.text, thr)), Tok(Op, ")")))
-              case None => (trgmDistOps(t.text), Seq(Tok(Op, ")"), Tok(Op, ")")))
-            }
-            ts.insertAll(rhs2 + 1, cmp)
-            ts(i) = Tok(Op, ",")
-            ts.insertAll(start, Seq(Tok(Op, "("), Tok(Word, fn), Tok(Op, "(")))
-            i += 3 // past the lhs insertions; scan resumes after the op
-          }
-        }
-      }
-      i += 1
-    }
-  }
-
-  private def rewriteTsOps(ts: ArrayBuffer[Tok]): Unit = {
-    if (!ts.exists(t => (t.kind == Word && (tsVectorFns.contains(t.text.toLowerCase) ||
-      tsQueryFns.contains(t.text.toLowerCase) || t.isWord("tsvector") || t.isWord("tsquery"))) ||
-      // pg's text @@ text: both-unknown operands resolve to
-      // to_tsvector(l) @@ plainto_tsquery(r) (live-pg sweep-29), so
-      // the pass must also run when the only marker is the operator
-      (t.kind == Op && t.text == "@@")))
-      return
-    var i = 0
-    while (i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Op && (t.text == "@@" || t.text == "&&" ||
-        t.text == "||" || t.text == "<->")) {
-        val rhs = nextIdx(ts, i)
-        val p = prevIdx(ts, i)
-        if (rhs >= 0 && p >= 0 && isValueEnd(ts(p)) &&
-          (ts(rhs).kind == Str || ts(rhs).kind == Word || ts(rhs).kind == QIdent)) {
-          val start = lhsStart(ts, p)
-          var rhs2 = rhs
-          if (ts(rhs2).kind == Word) {
-            val nxt = nextIdx(ts, rhs2)
-            if (nxt >= 0 && ts(nxt).is("(")) {
-              val close = matchParen(ts, nxt)
-              if (close > 0) rhs2 = close
-            }
-          }
-          var castOp = nextIdx(ts, rhs2)
-          while (castOp >= 0 && ts(castOp).is("::") && {
-            val ty = nextIdx(ts, castOp)
-            ty >= 0 && ts(ty).kind == Word
-          }) {
-            rhs2 = nextIdx(ts, castOp)
-            val b1 = nextIdx(ts, rhs2)
-            if (b1 >= 0 && ts(b1).is("(")) {
-              val b2 = matchParen(ts, b1); if (b2 > 0) rhs2 = b2
-            }
-            castOp = nextIdx(ts, rhs2)
-          }
-          val lVec = hasTsMarker(ts, start, p, tsVectorFns, "tsvector")
-          val lQry = hasTsMarker(ts, start, p, tsQueryFns, "tsquery")
-          val rVec = hasTsMarker(ts, rhs, rhs2, tsVectorFns, "tsvector")
-          val rQry = hasTsMarker(ts, rhs, rhs2, tsQueryFns, "tsquery")
-          if (t.text != "@@") {
-            // tsquery combinators / tsvector concat need BOTH sides
-            // ts-typed (|| is string concat, && array overlap
-            // otherwise); straight (lhs, rhs) wrap, no swap
-            val fnName =
-              if (lQry && rQry) t.text match {
-                case "&&" => "tsquery_and"
-                case "||" => "tsquery_or"
-                case _ => "tsquery_phrase"
-              }
-              else if (lVec && rVec && t.text == "||") "tsvector_concat"
-              else null
-            if (fnName != null) {
-              var opIdx = i
-              if (opIdx - 1 >= 0 && ts(opIdx - 1).kind == Ws) {
-                ts.remove(opIdx - 1); opIdx -= 1; rhs2 -= 1
-              }
-              ts.insert(rhs2 + 1, Tok(Op, ")"))
-              ts(opIdx) = Tok(Op, ",")
-              ts.insertAll(start, Seq(Tok(Word, fnName), Tok(Op, "(")))
-            }
-          } else if (t.text == "@@" && !(lVec || lQry || rVec || rQry) &&
-            ts(p).kind == Str && start == p && ts(rhs).kind == Str && rhs2 == rhs) {
-            // both sides bare string literals: pg's text @@ text =
-            // to_tsvector(l) @@ plainto_tsquery(r). Emit the 1-arg
-            // plainto form; padFunctionArgs supplies the config later.
-            var opIdx = i
-            if (opIdx - 1 >= 0 && ts(opIdx - 1).kind == Ws) {
-              ts.remove(opIdx - 1); opIdx -= 1; rhs2 -= 1
-            }
-            ts.insertAll(rhs2 + 1, Seq(Tok(Op, ")"), Tok(Op, ")")))
-            ts.insertAll(rhs2, Seq(Tok(Word, "plainto_tsquery"), Tok(Op, "(")))
-            ts(opIdx) = Tok(Op, ",")
-            ts.insertAll(start, Seq(Tok(Word, "ts_match_text"), Tok(Op, "(")))
-          } else if (lVec || lQry || rVec || rQry) {
-            // pg operand orders: vector @@ query as-is, query @@
-            // vector swapped; a raw-text document side goes through
-            // ts_match_text (pg's text @@ tsquery: to_tsvector first)
-            val swap = lQry && !lVec
-            val docIsVector = if (swap) rVec else lVec
-            val fnName = if (docIsVector) "ts_match" else "ts_match_text"
-            var opIdx = i
-            if (opIdx - 1 >= 0 && ts(opIdx - 1).kind == Ws) {
-              ts.remove(opIdx - 1); opIdx -= 1; rhs2 -= 1
-            }
-            if (swap) {
-              // query @@ vector → ts_match*(vector, query)
-              val lhsToks = ts.slice(start, opIdx).toVector
-              val rhsToks = ts.slice(opIdx + 1, rhs2 + 1).toVector
-              ts.remove(start, rhs2 + 1 - start)
-              val rebuilt = ArrayBuffer(Tok(Word, fnName), Tok(Op, "(")) ++
-                rhsToks ++ ArrayBuffer(Tok(Op, ",")) ++ lhsToks ++ ArrayBuffer(Tok(Op, ")"))
-              ts.insertAll(start, rebuilt)
-            } else {
-              ts.insert(rhs2 + 1, Tok(Op, ")"))
-              ts(opIdx) = Tok(Op, ",")
-              ts.insertAll(start, Seq(Tok(Word, fnName), Tok(Op, "(")))
-            }
-          }
-        }
-      }
-      i += 1
-    }
-  }
-
-  /** `length(tsvector)` collides with the string builtin: dispatch to
-    * ts_length when the argument is syntactically a tsvector.
+  /** Text-search spellings with no Spark reading: pg's `!!` prefix
+    * (tsquery negation — pg 15 has no other `!!`), and the
+    * `setweight`/`ts_delete` overloads that differ only in an
+    * `ARRAY[…]` argument's shape.
     */
   private def rewriteTsAccessors(ts: ArrayBuffer[Tok]): Unit = {
     var i = 0
     while (i < ts.length) {
       val t = ts(i)
-      // pg's `!!tsquery` prefix: two bang tokens before a ts operand
+      // `!!x` → tsquery_not(x)
       if (t.kind == Op && t.text == "!" && {
         val n = nextIdx(ts, i); n >= 0 && ts(n).kind == Op && ts(n).text == "!"
       }) {
@@ -5703,11 +4992,9 @@ object Compat {
           while (castOp >= 0 && ts(castOp).is("::") && {
             val ty = nextIdx(ts, castOp); ty >= 0 && ts(ty).kind == Word
           }) { end = nextIdx(ts, castOp); castOp = nextIdx(ts, end) }
-          if (hasTsMarker(ts, arg, end, tsQueryFns, "tsquery")) {
-            ts.insert(end + 1, Tok(Op, ")"))
-            ts.remove(i, bang2 - i + 1)
-            ts.insertAll(i, Seq(Tok(Word, "tsquery_not"), Tok(Op, "(")))
-          }
+          ts.insert(end + 1, Tok(Op, ")"))
+          ts.remove(i, bang2 - i + 1)
+          ts.insertAll(i, Seq(Tok(Word, "tsquery_not"), Tok(Op, "(")))
         }
       }
       // setweight(v, w, ARRAY[...]): the 3-arg text[]-literal form is
@@ -5751,14 +5038,6 @@ object Compat {
           val arg2 = if (comma > 0) nextIdx(ts, comma) else -1
           if (arg2 > 0 && ts(arg2).kind == Word && ts(arg2).isWord("array"))
             ts(i) = Tok(Word, "ts_delete_arr")
-        }
-      }
-      if (t.kind == Word && t.isWord("length")) {
-        val open = nextIdx(ts, i)
-        if (open >= 0 && ts(open).is("(")) {
-          val close = matchParen(ts, open)
-          if (close > 0 && hasTsMarker(ts, open + 1, close - 1, tsVectorFns, "tsvector"))
-            ts(i) = Tok(Word, "ts_length")
         }
       }
       i += 1
@@ -5867,17 +5146,10 @@ object Compat {
           val start = lhsStart(ts, p)
           var r = rhs
           if (ts(i - 1).kind == Ws) { ts.remove(i - 1); i -= 1; r -= 1 }
-          // jsonb dispatches on the lhs's OUTERMOST production only —
-          // a trailing ::jsonb cast, a jsonb-producing call, or a
-          // parenthesized group whose inner expression is one (the
-          // earlier whole-span word scan false-positived on a column
-          // merely NAMED jsonb_payload, re-serializing json-typed
-          // text). Bare columns upgrade later via pg.oid_alias
-          // metadata.
-          val jsonbLhs = jsonKindOf(ts, p).contains("jsonb")
-          val fn = (if (jsonbLhs) "jsonb" else "json") +
-            (if (t.text.endsWith(">>")) "_extract_path_text"
-             else "_extract_path")
+          // the json variant; PgSemantics upgrades it over a jsonb
+          // operand
+          val fn =
+            if (t.text.endsWith(">>")) "json_extract_path_text" else "json_extract_path"
           def lit(e: String): String = "'" + e.replace("'", "''") + "'"
           val (args, endIdx) =
             if (ts(r).kind == Num) (lit(ts(r).text), r)
@@ -5908,9 +5180,6 @@ object Compat {
     }
   }
 
-  /** Map pg type names after `::` and inside CAST(... AS t). Handles
-    * `[]` suffix → ARRAY<t> (reference PgOidTypePlanner analogue).
-    */
   /** `LIMIT n::bigint` → `LIMIT n` — postgres_fdw's remote SQL casts
     * every LIMIT to bigint, and Spark requires an INT limit literal. */
   private def rewriteLimitCast(ts: ArrayBuffer[Tok]): Unit = {
@@ -5930,6 +5199,9 @@ object Compat {
     }
   }
 
+  /** Map pg type names after `::` and inside CAST(... AS t). Handles
+    * `[]` suffix → ARRAY<t> (reference PgOidTypePlanner analogue).
+    */
   private def rewriteCastTypes(ts: ArrayBuffer[Tok]): Unit = {
     var i = 0
     while (i < ts.length) {

@@ -99,12 +99,6 @@ object Handlers {
     // forever once graft.cursor_ttl is set (see Session.cursorTtlMs)
     session.sweepExpiredCursors()
 
-    // install this session's trgm thresholds for the `%`-family
-    // operator rewrites (thread-local: the statement executes on this
-    // connection's thread all the way down through runSql)
-    Compat.trgmThresholds.set(
-      session.gucs.toMap.filter(_._1.startsWith("pg_trgm.")))
-
     // aborted-transaction guard (reference: transactions.rs:96-118).
     // 25P02 in_failed_sql_transaction — live-pinned (r18): pg rejects
     // even BEGIN here; only COMMIT/END/ROLLBACK/ABORT pass
@@ -3123,6 +3117,26 @@ HINT:  You might need to specify "USING ${f.name}::${pgTypeDisplay(tySpelling)}"
     -1
   }
 
+  /** A VALUES cell Spark's inline table takes as it stands: a literal
+    * (string, number, optionally signed, NULL/TRUE/FALSE), a typed one
+    * (`DATE '…'`, `TIMESTAMP '…'`, `X'…'`), or a bound parameter's
+    * `CAST('…' AS FLOAT|DOUBLE|DECIMAL(p,s))`. */
+  private def isLiteralCell(cell: String): Boolean = {
+    import Compat.{Num, Str}
+    def literal(t: Seq[Compat.Tok]): Boolean = t match {
+      case Seq(v) => v.kind == Str || v.kind == Num ||
+        Seq("NULL", "TRUE", "FALSE").exists(v.isWord)
+      case Seq(p, v) => ((p.is("-") || p.is("+")) && v.kind == Num) ||
+        (v.kind == Str && Seq("DATE", "TIMESTAMP", "TIMESTAMPTZ", "X").exists(p.isWord))
+      case _ => false
+    }
+    val ts = Compat.tokenize(cell).filter(_.kind != Compat.Ws)
+    val as = ts.indexWhere(_.isWord("AS"))
+    literal(ts) || (ts.length > 4 && ts.head.isWord("CAST") && ts(1).is("(") &&
+      ts.last.is(")") && as > 2 && as + 1 < ts.length && literal(ts.slice(2, as)) &&
+      Seq("FLOAT", "DOUBLE", "DECIMAL").exists(ts(as + 1).isWord))
+  }
+
   private def splitTopStr(s: String): Seq[String] = {
     val out = Seq.newBuilder[String]
     var depth = 0
@@ -4102,8 +4116,9 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
         case _ => cols
       } else cols
     val fams = colsEff.map(familyOf)
-    val hasDefaultKw =
-      valueRows.exists(_.exists(_.exists(_.equalsIgnoreCase("DEFAULT"))))
+    // a DEFAULT, cast, call or other non-literal VALUES cell: Spark's
+    // inline VALUES takes only foldable cells
+    val hasExprCell = valueRows.exists(_.exists(_.exists(c => !isLiteralCell(c))))
     // omitted columns with an implicit (serial) or declared default
     // are filled; plain omitted columns stay NULL via the Spark path
     val fill: Seq[StructField] =
@@ -4111,7 +4126,7 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
       else schema.fields.toSeq.filter(f =>
         (f.metadata.contains("pg.serial") || f.metadata.contains("pg.default")) &&
           !colsEff.exists(_.name.equalsIgnoreCase(f.name)))
-    if (fams.forall(_.isEmpty) && fill.isEmpty && !hasDefaultKw) return sql
+    if (fams.forall(_.isEmpty) && fill.isEmpty && !hasExprCell) return sql
     // Serial allocation for literal VALUES happens HERE, on the
     // driver: one nextval per (row, serial slot) in pg's evaluation
     // order (target-list order = table column position), and the
@@ -4196,12 +4211,13 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
       }
     }
     // DEFAULT cells resolve to expressions that may be
-    // nondeterministic — Spark's inline VALUES requires foldable
-    // cells, so such rows become a UNION ALL of SELECTs (serial cells
-    // are reserved literals and would stay foldable, but non-serial
-    // defaults keep the expression form)
+    // nondeterministic, like any other non-literal cell — Spark's
+    // inline VALUES requires foldable cells, so such rows become a
+    // UNION ALL of SELECTs (serial cells are reserved literals and
+    // would stay foldable, but non-serial defaults keep the
+    // expression form)
     val src = (valueRows, reserved) match {
-      case (Some(rs), Some(rv)) if hasDefaultKw =>
+      case (Some(rs), Some(rv)) if hasExprCell =>
         rs.zip(rv).map { case (row, (cellVals, fillVals)) =>
           val cells = row.zipWithIndex.map { case (e, i) =>
             if (e.equalsIgnoreCase("DEFAULT") && i < colsEff.length)

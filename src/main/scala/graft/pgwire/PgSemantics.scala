@@ -36,8 +36,9 @@ import org.apache.spark.sql.types._
   *  - `date ± interval` → timestamp WITHOUT time zone (pg returns
   *    timestamp; Spark's DateAddInterval stays DATE, truncating the
   *    time-of-day part).
-  *  - range, network and money operators → the family functions, by
-  *    operand type ([[pgTypeOf]]; the families are STRING to Spark).
+  *  - range, network, money, enum, text-search, trigram and jsonb
+  *    operators → the family functions, by operand type ([[pgTypeOf]];
+  *    the families are STRING to Spark). See [[FamilyOps]].
   *
   * Reference anchor: the reference engine inherits these from
   * DataFusion's pg-style arithmetic; here they are reconstructed
@@ -71,9 +72,10 @@ object PgSemantics {
   private def rewriteExpressions(plan: LogicalPlan): LogicalPlan = {
     val ops = new FamilyOps(plan)
     plan.transformAllExpressions {
-      // range, network and money operators by operand type — first,
-      // before the int-division and unknown-literal cases below claim
-      // the analyzer's casts over these STRING-carried values
+      // the type-family operators, orderings and functions by operand
+      // type — first, before the int-division and unknown-literal
+      // cases below claim the analyzer's casts over these
+      // STRING-carried values
       case ops(call) => call
 
       // int / int (both casts analyzer-inserted) → truncating division
@@ -431,20 +433,6 @@ object PgSemantics {
           if !st.resolved && child.resolved && child.dataType == StringType =>
         SecondsToTimestamp(Cast(child, DoubleType))
 
-      // ---- stored-column pg.type metadata (round 13) ----
-      // `@@` over a tsvector/tsquery value went to the jsonpath match
-      case e: Expression
-          if e.children.length >= 2 && e.children.take(2).forall(_.resolved) &&
-            e.prettyName == "jsonb_path_match" &&
-            e.children.take(2).exists(c =>
-              ops.typeOf(c).exists(a => a == "tsvector" || a == "tsquery")) => {
-        val Seq(l, r) = e.children.take(2).map(stripImplicitCasts)
-        if (ops.typeOf(e.children.head).contains("tsvector")) fnCall("ts_match", Seq(l, r))
-        else if (ops.typeOf(e.children(1)).contains("tsvector")) fnCall("ts_match", Seq(r, l))
-        else if (ops.typeOf(e.children.head).contains("tsquery")) fnCall("ts_match", Seq(r, l))
-        else fnCall("ts_match", Seq(l, r))
-      }
-
       // `->` / `#>` over a jsonb value: the token layer emits the json
       // (text-preserving) variant; jsonb re-serializes canonically
       // (sweep-28)
@@ -458,41 +446,6 @@ object PgSemantics {
       case x: graft.functions.PgJsonExpressions.PgJsonEach
           if !x.jsonb && x.child.resolved && ops.typeOf(x.child).contains("jsonb") =>
         x.copy(jsonb = true)
-
-      // order comparisons over enum-typed columns: declared-label
-      // order via the session ordinal map (pg §8.7.2)
-      case cmp: BinaryComparison
-          if cmp.left.resolved && cmp.right.resolved &&
-            !cmp.isInstanceOf[EqualTo] && !cmp.isInstanceOf[EqualNullSafe] &&
-            Seq(cmp.left, cmp.right).exists(c => enumNameOf(c).isDefined) => {
-        val name = Seq(cmp.left, cmp.right).flatMap(enumNameOf).head
-        cmp.withNewChildren(Seq(
-          fnCall("enum_ord", Seq(Literal(name), stripImplicitCasts(cmp.left))),
-          fnCall("enum_ord", Seq(Literal(name), stripImplicitCasts(cmp.right)))))
-      }
-
-      // ORDER BY an enum column sorts by declared order
-      case so @ SortOrder(child, _, _, _)
-          if child.resolved && enumNameOf(child).isDefined =>
-        so.copy(child = fnCall("enum_ord",
-          Seq(Literal(enumNameOf(child).get), stripImplicitCasts(child))))
-
-      // min/max over an enum column: ordinal-space agg mapped back to
-      // its label
-      case ae @ org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression(
-            mf, _, _, _, _)
-          if (mf.isInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.Min] ||
-            mf.isInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.Max]) &&
-            mf.children.length == 1 && mf.children.head.resolved &&
-            enumNameOf(mf.children.head).isDefined => {
-        val name = enumNameOf(mf.children.head).get
-        val ord = fnCall("enum_ord",
-          Seq(Literal(name), stripImplicitCasts(mf.children.head)))
-        fnCall("enum_label_at",
-          Seq(Literal(name), ae.copy(aggregateFunction =
-            mf.withNewChildren(Seq(ord))
-              .asInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction])))
-      }
     }
   }
 
@@ -500,9 +453,10 @@ object PgSemantics {
 
   /** pg type of a family function's result, by function name — the one
     * table behind operator dispatch, RowDescription OIDs and
-    * `pg_typeof`. A range combinator takes its type from its range
-    * inputs ([[rangeCombinators]]); `enum_in` from its type-name
-    * argument. */
+    * `pg_typeof`, looked up by UDF name or, for native expressions,
+    * `prettyName`. A range combinator takes its type from its range
+    * inputs ([[rangeCombinators]]); the enum functions from their
+    * type-name argument ([[enumFns]]). */
   private val fnTypes: Map[String, String] =
     Compat.rangeTypeNames.toSeq.flatMap(n => Seq(n -> n, s"${n}3" -> n, s"${n}_in" -> n))
       .toMap ++ Map(
@@ -515,6 +469,7 @@ object PgSemantics {
       "phraseto_tsquery" -> "tsquery", "websearch_to_tsquery" -> "tsquery",
       "tsquery_in" -> "tsquery", "tsquery_and" -> "tsquery",
       "tsquery_or" -> "tsquery", "tsquery_phrase" -> "tsquery",
+      "tsquery_not" -> "tsquery",
       "tsquery_phrase3" -> "tsquery",
       "inet_in" -> "inet", "broadcast" -> "inet", "netmask" -> "inet",
       "hostmask" -> "inet", "set_masklen" -> "inet", "inet_add" -> "inet",
@@ -533,10 +488,17 @@ object PgSemantics {
       "pg_xmlpi" -> "xml", "pg_xml_forest_item" -> "xml",
       "money_in" -> "money", "money_add" -> "money", "money_sub" -> "money",
       "money_mul" -> "money", "money_div_num" -> "money",
+      "money_div_int" -> "money",
       "money_to_numeric" -> "numeric",
       // variable-scale numeric results render their own text form
       "trim_scale" -> "numeric",
       "pg_time_in" -> "time", "make_time" -> "time") ++
+      // `::jsonb` (pg_jsonb) and the functions returning jsonb
+      Seq("pg_jsonb", "to_jsonb", "jsonb_build_object", "jsonb_build_array",
+        "jsonb_object", "jsonb_extract_path", "jsonb_set", "jsonb_set_lax",
+        "jsonb_insert", "jsonb_delete", "jsonb_delete_path", "jsonb_concat",
+        "jsonb_strip_nulls", "jsonb_path_query_first",
+        "jsonb_path_query_array").map(_ -> "jsonb") ++
       Seq("st_geomfromtext", "st_geometryfromtext", "st_geomfromewkt",
         "st_geometry_in", "st_geomfromwkb", "st_geomfromewkb",
         "st_geomfromtext2", "st_geomfromwkb2",
@@ -546,9 +508,14 @@ object PgSemantics {
   private val rangeCombinators =
     Set("range_union", "range_intersect", "range_minus", "range_merge")
 
+  /** Functions returning a value of the enum type that their first
+    * (literal type-name) argument names. */
+  private val enumFns = Set("enum_in", "enum_label_at", "enum_first_n", "enum_last_n")
+
   /** The pg type of an analyzed expression, where its Spark type does
     * not tell it (the family values are STRING): a stored column's
-    * `pg.oid_alias`, the family function that produced the value, or —
+    * `pg.oid_alias` or `pg.enum`, the family function that produced the
+    * value, or —
     * through Alias, an analyzer-inserted same-type Cast and, by exprId,
     * the subquery, CTE and view projections that define an attribute
     * (`defs`, see [[definedTypes]]) — the expression behind it. */
@@ -557,21 +524,21 @@ object PgSemantics {
     case a: AttributeReference =>
       if (a.metadata.contains(PgType.OID_ALIAS_KEY))
         Some(a.metadata.getString(PgType.OID_ALIAS_KEY))
+      else if (a.metadata.contains("pg.enum")) Some(a.metadata.getString("pg.enum"))
       else defs(a.exprId)
     case Alias(c, _) => pgTypeOf(c, defs)
     case c @ Cast(child, dt, _, _)
         if notUserCast(c) && child.resolved && child.dataType == dt =>
       pgTypeOf(child, defs)
     case u: ScalaUDF => u.udfName.flatMap(n => fnType(n.toLowerCase, u.children, defs))
-    case f: graft.functions.Inet.InetFn => fnType(f.fnName, f.children, defs)
-    case _ => None
+    case f => fnType(f.prettyName, f.children, defs)
   }
 
   private def fnType(name: String, args: Seq[Expression],
       defs: ExprId => Option[String]): Option[String] =
     if (rangeCombinators.contains(name))
       args.iterator.flatMap(pgTypeOf(_, defs)).find(Compat.rangeTypeNames.contains)
-    else if (name == "enum_in")
+    else if (enumFns.contains(name))
       args.headOption.collect { case Literal(v, StringType) if v != null => v.toString }
     else fnTypes.get(name)
 
@@ -603,16 +570,73 @@ object PgSemantics {
     ("money", "+") -> "money_add", ("money", "-") -> "money_sub",
     ("money", "/") -> "money_div_money",
     ("money", "<") -> "money_lt", ("money", "<=") -> "money_le",
-    ("money", ">") -> "money_gt", ("money", ">=") -> "money_ge")
+    ("money", ">") -> "money_gt", ("money", ">=") -> "money_ge",
+    ("tsquery", "&&") -> "tsquery_and", ("tsquery", "||") -> "tsquery_or",
+    ("tsquery", "<->") -> "tsquery_phrase", ("tsvector", "||") -> "tsvector_concat",
+    ("jsonb", "||") -> "jsonb_concat")
 
-  /** The family functions that pg's overloaded range, network and money
-    * operators resolve to, chosen by operand type — Spark parses the
-    * spellings (`+ - * / & | ~ << >> < <= > >=`, and the json pass's
-    * neutral calls for `@> <@ &&`: PgContains and arrays_overlap) and
-    * types them as STRING arithmetic, comparison or bit
-    * operations; this extractor matches the resolved or type-mismatched
-    * node, looking through the analyzer's casts. One instance per rule
-    * application: the plan's [[definedTypes]] are built on first use. */
+  /** The boolean pg_trgm operators' support functions (pg's names; Compat
+    * emits them for `<%` `%>` `<<%` `%>>`, and `%` between two text
+    * operands is `similarity_op`): the operator, the similarity
+    * function, and the session GUC holding the threshold it must reach,
+    * with the extension default. */
+  private val trgmOps: Map[String, (String, String, String, Double)] = Map(
+    "similarity_op" -> ("%", "similarity", "pg_trgm.similarity_threshold", 0.3),
+    "word_similarity_op" ->
+      ("<%", "word_similarity", "pg_trgm.word_similarity_threshold", 0.6),
+    "word_similarity_commutator_op" ->
+      ("%>", "word_similarity_c", "pg_trgm.word_similarity_threshold", 0.6),
+    "strict_word_similarity_op" ->
+      ("<<%", "strict_word_similarity", "pg_trgm.strict_word_similarity_threshold", 0.5),
+    "strict_word_similarity_commutator_op" ->
+      ("%>>", "strict_word_similarity_c", "pg_trgm.strict_word_similarity_threshold", 0.5))
+
+  /** `similarity(a, b) >= threshold` for trigram operator function `fnOp`,
+    * the threshold read from the statement's session ([[TxnCtx]]); a
+    * missing or unparseable value reads as the extension default, like
+    * an unloaded extension. */
+  private def trgmMatch(fnOp: String, a: Expression, b: Expression): Expression = {
+    val (op, fn, guc, default) = trgmOps(fnOp)
+    requireText(op, Seq(a, b))
+    val threshold = TxnCtx.session.flatMap(_.gucs.get(guc))
+      .flatMap(_.trim.toDoubleOption).filter(d => d >= 0.0 && d <= 1.0)
+      .getOrElse(default)
+    GreaterThanOrEqual(fnCall(fn, Seq(a, b)), Literal(threshold))
+  }
+
+  /** pg_trgm's operators take text: another operand type is pg's 42883,
+    * not a trigram match over the value's text (`5 <% 3`). */
+  private def requireText(op: String, args: Seq[Expression]): Unit = {
+    val bare = args.map(stripImplicitCasts)
+    if (bare.exists(a => a.dataType != StringType && a.dataType != NullType)) {
+      def name(a: Expression) = PgFunctions.formatType(PgType.oidOf(a.dataType), -1)
+      throw PgException("42883", s"operator does not exist: ${name(bare(0))} $op ${name(bare(1))}")
+    }
+  }
+
+  /** Functions of an enum value that read only its type: → the forms
+    * taking the type name (`enum_first_n('mood')`). */
+  private val enumTypeFns = Set("enum_first", "enum_last", "enum_range")
+
+  /** The family functions, orderings and functions that pg's overloaded
+    * operators and functions resolve to, chosen by operand type. Spark
+    * parses the spellings (`+ - * / % & | ~ << >> < <= > >= ||`,
+    * `length`, `min`/`max`, `greatest`/`least`, ORDER BY) and types
+    * them as STRING operations; Compat turns the spellings Spark cannot
+    * parse into one neutral call each (PgContains and arrays_overlap for
+    * `@> <@ &&`, jsonb_path_match for `@@`, trgm_sim_dist for `<->`).
+    * This extractor matches the resolved or type-mismatched node,
+    * looking through the analyzer's casts:
+    *  - range, inet/cidr, macaddr, money: the family operators;
+    *  - enum: `< <= > >=`, ORDER BY, min/max, greatest/least by declared
+    *    label position (pg §8.7.2), and enum_first/enum_last/enum_range;
+    *  - tsvector/tsquery: `@@ && || <->`, `length`;
+    *  - pg_trgm: `%` between two text operands and the threshold
+    *    operators, against the session's `pg_trgm.*_threshold`;
+    *  - jsonb: `- ||` (and `->`/`#>`, in the rule above);
+    *  - inet/cidr: ORDER BY and min/max in network order.
+    * One instance per rule application: the plan's [[definedTypes]] are
+    * built on first use. */
   private final class FamilyOps(plan: LogicalPlan) {
     private lazy val defs = definedTypes(plan)
 
@@ -630,19 +654,77 @@ object PgSemantics {
       case t => t
     }
 
+    /** The operand's type when it is one of the session's enum types. */
+    private def enumOf(e: Expression): Option[String] =
+      typeOf(e).filter(t => org.apache.spark.sql.SparkSession.getActiveSession
+        .exists(graft.functions.PgEnums.lookup(_, t).isDefined))
+
+    /** A key that orders the operand's values as pg orders its type,
+      * where that is not their text order: an enum's declared label
+      * position, inet/cidr's network order (pg network_cmp,
+      * [[graft.functions.Inet.cmp]]). */
+    private def sortKey(e: Expression): Option[Expression] =
+      enumOf(e).map(enumOrd(_, e)).orElse(family(e).collect {
+        case "inet" => fnCall("inet_sort_key", Seq(stripImplicitCasts(e)))
+      })
+
     def unapply(e: Expression): Option[Expression] = e match {
       case Add(l, r, _) => arith("+", l, r)
       case Subtract(l, r, _) => arith("-", l, r)
       case Multiply(l, r, _) => arith("*", l, r)
       case Divide(l, r, _) => arith("/", l, r)
+      // `%` between two text operands is pg_trgm's similarity operator;
+      // a number on either side keeps it modulo
+      case Remainder(l, r, _) if isText(l) && isText(r) =>
+        Some(trgmMatch("similarity_op", stripImplicitCasts(l), stripImplicitCasts(r)))
+      case u: ScalaUDF if u.udfName.exists(trgmOps.contains) =>
+        Some(trgmMatch(u.udfName.get, u.children(0), u.children(1)))
+      // `<->` (Compat's trgm_sim_dist): the phrase operator over
+      // tsqueries, distance over geometries, else trigram distance
+      case u: ScalaUDF if u.udfName.contains("trgm_sim_dist") && u.children.forall(_.resolved) =>
+        val args = u.children.map(stripImplicitCasts)
+        if (args.forall(pgTypeOf(_, id => defs(id)).contains("geometry")))
+          Some(fnCall("st_distance", args))
+        else same("<->", args(0), args(1)).orElse { requireText("<->", args); None }
+      case u: ScalaUDF
+          if u.udfName.exists(enumTypeFns.contains) && u.children.head.resolved =>
+        enumOf(u.children.head).map(t => fnCall(u.udfName.get + "_n", Seq(Literal(t))))
       case c: BinaryComparison
           if !c.isInstanceOf[EqualTo] && !c.isInstanceOf[EqualNullSafe] =>
-        same(c.symbol, c.left, c.right)
+        same(c.symbol, c.left, c.right).orElse(enumCompare(c))
+      case Concat(Seq(l, r)) => same("||", l, r)
       case ShiftLeft(l, r) => same("<<", l, r)
       case ShiftRight(l, r) => same(">>", l, r)
       case BitwiseAnd(l, r) => same("&", l, r)
       case BitwiseOr(l, r) => same("|", l, r)
       case ArraysOverlap(l, r) => same("&&", l, r)
+      case m: graft.functions.PgJsonbPathMatch if !m.tz && m.children.length == 2 =>
+        textSearchMatch(m.children(0), m.children(1))
+      case Length(c) if typeOf(c).contains("tsvector") =>
+        Some(fnCall("ts_length", Seq(stripImplicitCasts(c))))
+      case so: SortOrder => sortKey(so.child).map(k => so.copy(child = k))
+      // a windowed or filtered aggregate keeps its AggregateExpression:
+      // only the function inside changes
+      case ae @ aggregate.AggregateExpression(m @ (_: aggregate.Min | _: aggregate.Max),
+            _, _, _, _) =>
+        val v = m.children.head
+        sortKey(v).map(k => ae.copy(aggregateFunction = m match {
+          case _: aggregate.Min => aggregate.MinBy(v, k)
+          case _ => aggregate.MaxBy(v, k)
+        }))
+      case g @ (_: Greatest | _: Least) if g.children.forall(_.resolved) =>
+        g.children.iterator.flatMap(enumOf).nextOption().map(t => fnCall("enum_label_at",
+          Seq(Literal(t), g.withNewChildren(g.children.map(enumOrd(t, _))))))
+      // an ordered aggregate's keys (Compat's sorted collect,
+      // named_struct('n0', k0 IS NULL, 'k0', k0, …, 'v', v)) order like
+      // ORDER BY
+      case s: CreateNamedStruct if isSortedCollect(s) =>
+        val keyed = s.children.grouped(2).flatMap {
+          case Seq(n @ Literal(k, StringType), v) if k.toString.startsWith("k") =>
+            Seq(n, sortKey(v).getOrElse(v))
+          case pair => pair
+        }.toSeq
+        if (keyed == s.children) None else Some(s.withNewChildren(keyed))
       // `@>` / `<@` (PgContains(container, contained)): a range on
       // either side — range_contains tells range from element by shape
       case graft.functions.PgJsonExpressions.PgContains(l, r)
@@ -677,8 +759,8 @@ object PgSemantics {
       case _ => None
     }
 
-    /** `+ - * /`: the mixed-type forms (inet ± integer, money × / number),
-      * then the same-family ones. */
+    /** `+ - * /`: the mixed-type forms (inet ± integer, money × / number,
+      * jsonb − key), then the same-family ones. */
     private def arith(op: String, l: Expression, r: Expression): Option[Expression] = {
       if (!l.resolved || !r.resolved) return None
       val (fl, fr) = (family(l), family(r))
@@ -692,7 +774,12 @@ object PgSemantics {
         case ("-", Some("inet"), None) if integral(r) => call("inet_sub", l, r)
         case ("*", Some("money"), None) if number(r) => call("money_mul", l, r)
         case ("*", None, Some("money")) if number(l) => call("money_mul", r, l)
+        // money / integer truncates (pg cash_div_int*); / float or
+        // numeric and * round half-even (rint)
+        case ("/", Some("money"), None) if integral(r) => call("money_div_int", l, r)
         case ("/", Some("money"), None) if number(r) => call("money_div_num", l, r)
+        // jsonb - text | integer | text[] deletes keys or an element
+        case ("-", Some("jsonb"), None) => call("jsonb_delete", l, r)
         case _ => same(op, l, r)
       }
     }
@@ -710,20 +797,53 @@ object PgSemantics {
       fam.flatMap(f => sameOps.get((f, op)))
         .map(fn => fnCall(fn, Seq(stripImplicitCasts(l), stripImplicitCasts(r))))
     }
+
+    /** An order comparison with an enum operand compares declared label
+      * positions; `=`/`<>` stay on the label text. */
+    private def enumCompare(c: BinaryComparison): Option[Expression] =
+      if (!c.left.resolved || !c.right.resolved) None
+      else enumOf(c.left).orElse(enumOf(c.right)).map(t =>
+        c.withNewChildren(Seq(enumOrd(t, c.left), enumOrd(t, c.right))))
+
+    /** `@@` (Compat's jsonb_path_match) with a text-search side:
+      * tsvector @@ tsquery either way round (an unknown literal after a
+      * tsquery reads as a tsvector), text @@ tsquery (also written
+      * tsquery-first, which pg rejects), and two unknown literals as
+      * text @@ text, `to_tsvector(l) @@ plainto_tsquery(r)`; anything
+      * else stays a jsonpath match. */
+    private def textSearchMatch(l0: Expression, r0: Expression): Option[Expression] = {
+      if (!l0.resolved || !r0.resolved) return None
+      val (l, r) = (stripImplicitCasts(l0), stripImplicitCasts(r0))
+      def call(fn: String, a: Expression, b: Expression) = Some(fnCall(fn, Seq(a, b)))
+      (typeOf(l), typeOf(r)) match {
+        case (Some("tsvector"), _) => call("ts_match", l, r)
+        case (_, Some("tsvector")) => call("ts_match", r, l)
+        case (Some("tsquery"), _) => call(if (isStringLit(r)) "ts_match" else "ts_match_text", r, l)
+        case (_, Some("tsquery")) => call("ts_match_text", l, r)
+        case _ if isStringLit(l) && isStringLit(r) =>
+          call("ts_match_text", l, fnCall("plainto_tsquery", Seq(Literal("english"), r)))
+        case _ => None
+      }
+    }
+
+    private def isText(e: Expression): Boolean =
+      e.resolved && stripImplicitCasts(e).dataType == StringType
+
+    private def isSortedCollect(s: CreateNamedStruct): Boolean = {
+      val names = s.nameExprs.map {
+        case Literal(n, StringType) => String.valueOf(n)
+        case _ => ""
+      }
+      names.lastOption.contains("v") && names.init.grouped(2).zipWithIndex.forall {
+        case (Seq(n, k), i) => n == s"n$i" && k == s"k$i"
+        case _ => false
+      }
+    }
   }
 
-  /** The session enum type name of an enum-tagged column. */
-  private def enumNameOf(e: Expression): Option[String] = {
-    val m = attrMeta(e)
-    if (m.contains("pg.enum")) Some(m.getString("pg.enum")) else None
-  }
-
-  private def attrMeta(e: Expression): Metadata = e match {
-    case a: AttributeReference => a.metadata
-    case Alias(c, _) => attrMeta(c)
-    case c @ Cast(child, _, _, _) if notUserCast(c) => attrMeta(child)
-    case _ => Metadata.empty
-  }
+  /** `enum_ord('type', x)`: x's declared position in its enum type. */
+  private def enumOrd(t: String, e: Expression): Expression =
+    fnCall("enum_ord", Seq(Literal(t), stripImplicitCasts(e)))
 
   private def stripImplicitCasts(e: Expression): Expression = e match {
     case c @ Cast(child, _, _, _) if notUserCast(c) => stripImplicitCasts(child)

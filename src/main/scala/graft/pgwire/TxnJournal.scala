@@ -146,11 +146,11 @@ object TxnJournal {
   }
 }
 
-/** Thread-local transaction context: the statement executes on its
-  * connection's thread all the way down through runSql (the
-  * established invariant — trgm thresholds ride the same way), so the
-  * deep write/check sites reach the session without threading it
-  * through every signature.
+/** Thread-local statement context: the statement executes on its
+  * connection's thread all the way down through runSql, so the deep
+  * write/check sites (and the analyzer rule reading the session's
+  * pg_trgm thresholds, PgSemantics) reach the session without
+  * threading it through every signature.
   */
 object TxnCtx {
   private val cur = new ThreadLocal[Session]

@@ -374,48 +374,4 @@ class CompatSpec extends AnyFunSuite {
     // bare bpchar stays UNLIMITED (no truncation) — pg semantics
     assert(!Compat.rewrite("SELECT 'abc'::bpchar FROM t").contains("rpad"))
   }
-
-  test("enum dispatch requires the cast in OUTERMOST position") {
-    val e = Set("mood")
-    // a span that merely CONTAINS an enum cast but produces a non-enum
-    // value must pass through unrewritten (enum_ord over a non-label
-    // would raise 22P02 at runtime)
-    val len = Compat.rewrite("SELECT * FROM t WHERE length(m::mood) > 2", e)
-    assert(!len.contains("enum_ord"), len)
-    val caseOrd = Compat.rewrite(
-      "SELECT m FROM t ORDER BY CASE WHEN m::mood = 'sad' THEN 0 ELSE 1 END", e)
-    assert(!caseOrd.contains("enum_ord"), caseOrd)
-    val boolOrd = Compat.rewrite("SELECT m FROM t ORDER BY (m::mood = 'sad')", e)
-    assert(!boolOrd.contains("enum_ord"), boolOrd)
-    // a trailing re-cast re-types the operand: ::mood::text is TEXT
-    val retext = Compat.rewrite("SELECT * FROM t WHERE x < y::mood::text", e)
-    assert(!retext.contains("enum_ord"), retext)
-    // …while ::text::mood is enum-typed and dispatches
-    val remood = Compat.rewrite("SELECT * FROM t WHERE y::text::mood < x", e)
-    assert(remood.contains("enum_ord"), remood)
-    // plain outermost casts still dispatch (both arms)
-    assert(Compat.rewrite("SELECT m FROM t ORDER BY m::mood", e).contains("enum_ord"))
-    assert(Compat.rewrite("SELECT * FROM t WHERE m::mood < 'ok'", e).contains("enum_ord"))
-    // parenthesized enum operand dispatches through the recursion
-    assert(Compat.rewrite("SELECT * FROM t WHERE (m::mood) < 'ok'", e)
-      .contains("enum_ord"))
-    // mixed-type argument lists never dispatch (int result)
-    val g = Compat.rewrite("SELECT greatest(length(m::mood), 3) FROM t", e)
-    assert(!g.contains("enum_ord"), g)
-  }
-
-  test("windowed/filtered enum aggregates wrap the whole construct") {
-    val e = Set("mood")
-    def ns(s: String) = s.replaceAll("\\s+", "")
-    // enum_label_at must close AFTER the window spec, not between the
-    // aggregate and OVER (which fails analysis)
-    val over = ns(Compat.rewrite(
-      "SELECT min(m::mood) OVER (PARTITION BY k) FROM t", e))
-    assert(over.contains(
-      "enum_label_at('mood',min(enum_ord('mood',enum_in('mood',m)))OVER(PARTITIONBYk))"), over)
-    val filt = ns(Compat.rewrite(
-      "SELECT min(m::mood) FILTER (WHERE k > 0) FROM t", e))
-    assert(filt.contains(
-      "enum_label_at('mood',min(enum_ord('mood',enum_in('mood',m)))FILTER(WHEREk>0))"), filt)
-  }
 }

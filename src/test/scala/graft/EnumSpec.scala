@@ -104,6 +104,67 @@ class EnumSpec extends SparkSpec with BeforeAndAfterAll {
     c.close()
   }
 
+  /** psql -A -t text: columns `|`-joined, rows newline-joined. */
+  private def text(r: Reply): String =
+    r.rows.map(_.map(_.getOrElse("")).mkString("|")).mkString("\n")
+
+  private def assertPinned(c: Client, pinned: Seq[(String, String)]): Unit =
+    for ((sql, want) <- pinned) {
+      val r = c.query(sql)
+      assert(r.errors === Nil, sql)
+      assert(text(r) === want, sql)
+    }
+
+  test("wire: enum dispatch requires the cast in OUTERMOST position") {
+    // values from live pg 15.18 over the same table; only an operand
+    // whose value IS enum-typed dispatches: a span that merely
+    // contains an enum cast (length, CASE, a comparison, ::mood::text)
+    // orders and compares as its own type. pg rejects length(mood)
+    // without ::text; the pins give pg's length(m::mood::text) values
+    val c = connect()
+    c.query("DROP TABLE IF EXISTS ed")
+    c.query("DROP TYPE IF EXISTS mood")
+    for (setup <- Seq("CREATE TYPE mood AS ENUM ('sad','ok','happy')",
+        "CREATE TABLE ed(m text, k int)",
+        "INSERT INTO ed VALUES ('happy',1),('sad',1),('ok',2)"))
+      assert(c.query(setup).errors === Nil, setup)
+    assertPinned(c, Seq(
+      "SELECT m FROM ed WHERE length(m::mood) > 2 ORDER BY k, m" -> "happy\nsad",
+      "SELECT m FROM ed ORDER BY CASE WHEN m::mood = 'sad' THEN 0 ELSE 1 END, m" ->
+        "sad\nhappy\nok",
+      "SELECT m FROM ed ORDER BY (m::mood = 'sad'), m" -> "happy\nok\nsad",
+      "SELECT m FROM ed WHERE 'ok' < m::mood::text ORDER BY m" -> "sad",
+      "SELECT m FROM ed WHERE m::text::mood < 'happy' ORDER BY m" -> "ok\nsad",
+      "SELECT m FROM ed ORDER BY m::mood" -> "sad\nok\nhappy",
+      "SELECT m FROM ed WHERE m::mood < 'ok'" -> "sad",
+      "SELECT m FROM ed WHERE (m::mood) < 'ok'" -> "sad",
+      "SELECT greatest(length(m::mood), 3) FROM ed ORDER BY k, m" -> "5\n3\n3"))
+    Seq("DROP TABLE ed", "DROP TYPE mood").foreach(c.query)
+    c.close()
+  }
+
+  test("wire: windowed and filtered enum aggregates order by declared position") {
+    // values from live pg 15.18; the OVER and FILTER clauses stay on
+    // the aggregate
+    val c = connect()
+    c.query("DROP TABLE IF EXISTS ew")
+    c.query("DROP TYPE IF EXISTS mood")
+    for (setup <- Seq("CREATE TYPE mood AS ENUM ('sad','ok','happy')",
+        "CREATE TABLE ew(m text, k int)",
+        "INSERT INTO ew VALUES ('happy',1),('sad',1),('ok',2)"))
+      assert(c.query(setup).errors === Nil, setup)
+    assertPinned(c, Seq(
+      "SELECT k, min(m::mood) OVER (PARTITION BY k) FROM ew ORDER BY k, m" ->
+        "1|sad\n1|sad\n2|ok",
+      "SELECT min(m::mood) FILTER (WHERE k > 0), max(m::mood) FILTER (WHERE k = 1) " +
+        "FROM ew" -> "sad|happy",
+      "SELECT m, max(m::mood) OVER (ORDER BY k, m ROWS UNBOUNDED PRECEDING) FROM ew " +
+        "ORDER BY k, m" -> "happy|happy\nsad|happy\nok|happy",
+      "SELECT string_agg(m, ',' ORDER BY m::mood DESC) FROM ew" -> "happy,ok,sad"))
+    Seq("DROP TABLE ew", "DROP TYPE mood").foreach(c.query)
+    c.close()
+  }
+
   test("wire: enum values flow through queries over row data") {
     val c = connect()
     c.query("CREATE TYPE color AS ENUM ('red', 'green', 'blue')")
