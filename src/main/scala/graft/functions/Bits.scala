@@ -8,7 +8,8 @@ import graft.pgwire.PgException
   * sweep-19). The canonical text IS the value, so string
   * length/substring/overlay/position/concat give pg's bit answers
   * for free; only the bitwise operators, casts, and the
-  * byte-counting accessors need engine functions.
+  * byte-counting accessors need engine functions, which the analyzer
+  * rule (`PgSemantics`) picks by operand type.
   */
 object Bits extends Serializable {
 

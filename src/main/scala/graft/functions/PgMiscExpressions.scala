@@ -21,34 +21,19 @@ object PgMiscExpressions {
 
   /** pg_typeof(any) → regtype name. The value never matters — the
     * type is a plan-time property — so this is foldable-free constant
-    * work per row with zero input evaluation. */
-  case class PgTypeOf(child: Expression) extends UnaryExpression with CodegenFallback {
+    * work per row with zero input evaluation. On the wire the analyzer
+    * rule (`PgSemantics`) fills `pgName` from the analyzed plan, where
+    * family types (enum, bit, time, ranges, …) are still visible;
+    * elsewhere the Spark type's pg name answers. */
+  case class PgTypeOf(child: Expression, pgName: Option[String] = None)
+      extends UnaryExpression with CodegenFallback {
     override def dataType: DataType = StringType
     override def nullable: Boolean = false
     override def prettyName: String = "pg_typeof"
     override def checkInputDataTypes(): TypeCheckResult = TypeCheckResult.TypeCheckSuccess
 
-    @transient private lazy val name: UTF8String = UTF8String.fromString(
-      rangeBound(child).orElse(graft.pgwire.PgSemantics.pgTypeOf(child).map {
-        case "time" => "time without time zone"
-        case t => t
-      }).getOrElse(
-        graft.pgwire.PgFunctions.formatType(graft.pgwire.PgType.oidOf(child.dataType), -1)))
-
-    /** `lower(r)` / `upper(r)` yield the range's ELEMENT type. */
-    private def rangeBound(e: Expression): Option[String] = e match {
-      case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF
-          if u.udfName.exists(n => n == "range_lower" || n == "range_upper") =>
-        graft.pgwire.PgSemantics.pgTypeOf(u.children.head).map {
-          case "int4range" => "integer"
-          case "int8range" => "bigint"
-          case "numrange" => "numeric"
-          case "daterange" => "date"
-          case "tsrange" => "timestamp without time zone"
-          case _ => "timestamp with time zone"
-        }
-      case _ => None
-    }
+    @transient private lazy val name: UTF8String = UTF8String.fromString(pgName.getOrElse(
+      graft.pgwire.PgFunctions.formatType(graft.pgwire.PgType.oidOf(child.dataType), -1)))
 
     override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = name
 
@@ -689,6 +674,23 @@ object PgMiscExpressions {
         lm + s * rm, ld + s * rd, lu + s * ru)
     }
     override protected def withNewChildrenInternal(l: Expression, r: Expression): PgIntervalAdd =
+      copy(left = l, right = r)
+  }
+
+  /** pg `time + interval` (time_pl_interval; `time - interval` adds the
+    * negated interval): the interval moves the time of day, wrapping at
+    * 24 h, so whole days and months leave it unchanged. Result is the
+    * TIME carrier. Routed in by PgSemantics. */
+  case class PgTimePlusInterval(left: Expression, right: Expression)
+      extends BinaryExpression with CodegenFallback {
+    override def dataType: DataType = LongType
+    override def prettyName: String = "time_pl_interval"
+    override protected def nullSafeEval(t: Any, iv: Any): Any = {
+      val day = 86400L * 1000000L
+      val (_, _, micros) = PgMiscExpressions.intervalFields(iv, right.dataType)
+      Math.floorMod(t.asInstanceOf[Long] / 1000L + Math.floorMod(micros, day), day) * 1000L
+    }
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): PgTimePlusInterval =
       copy(left = l, right = r)
   }
 

@@ -865,19 +865,20 @@ object Compat {
     try rewrite(sql) finally enumTypesTL.set(Set.empty)
   }
 
-  private val injectNamesTL = new ThreadLocal[java.lang.Boolean] {
+  private val topLevelTL = new ThreadLocal[java.lang.Boolean] {
     override def initialValue: java.lang.Boolean = java.lang.Boolean.FALSE
   }
 
   /** [[rewrite]] for a TOP-LEVEL client statement: additionally injects
     * pg's implicit output-column names ([[injectOutputNames]]) into the
-    * outermost select list. Fragment-level callers (param inference,
-    * oracle fixtures, internal re-rewrites) keep the plain [[rewrite]],
-    * whose output is also what CompatSpec pins. */
+    * outermost select list and spells pg's default NULL placement on
+    * every ORDER BY ([[defaultNullOrdering]]). Fragment-level callers
+    * (param inference, oracle fixtures, internal re-rewrites) keep the
+    * plain [[rewrite]], whose output is also what CompatSpec pins. */
   def rewriteTop(sql: String, enumTypes: Set[String]): String = {
-    injectNamesTL.set(java.lang.Boolean.TRUE)
+    topLevelTL.set(java.lang.Boolean.TRUE)
     try rewrite(sql, enumTypes)
-    finally injectNamesTL.set(java.lang.Boolean.FALSE)
+    finally topLevelTL.set(java.lang.Boolean.FALSE)
   }
 
   /** Rewrite one pg-dialect statement into Spark SQL. */
@@ -887,7 +888,10 @@ object Compat {
       case None =>
     }
     val ts = ArrayBuffer.from(tokenize(sql))
-    if (injectNamesTL.get) injectOutputNames(ts)
+    if (topLevelTL.get) {
+      injectOutputNames(ts)
+      defaultNullOrdering(ts)
+    }
     rewriteDistinctOn(ts)
     rewriteWindowFrames(ts)
     collapseOperatorCall(ts)
@@ -933,7 +937,6 @@ object Compat {
     rewriteExtractEpoch(ts)
     rewriteSimilarTo(ts)
     rewriteRegexOps(ts)
-    rewriteArrayElemConcat(ts)
     rewriteFamilyOnlyOps(ts)
     rewriteTextCalls(ts)
     rewriteTsAccessors(ts)
@@ -941,7 +944,6 @@ object Compat {
     rewriteLimitCast(ts)
     rewriteCastTypes(ts)
     rewriteXmlConstructs(ts)
-    rewriteTimeArithmetic(ts)
     // AT TIME ZONE first: its literal dispatch distinguishes
     // `timestamp '…'` (→ NTZ direction) from `timestamptz '…'`, which
     // the literal rename below collapses
@@ -966,6 +968,69 @@ object Compat {
       else t
     }
     render(out.toSeq)
+  }
+
+  /** pg sorts NULLs last ascending and first descending, Spark the
+    * reverse, and Spark's parser keeps no trace of an omitted NULLS
+    * clause: spell pg's default on every ORDER BY item of a query,
+    * subquery or window that has none. An ORDER BY inside a call's
+    * parentheses (an aggregate's input order, WITHIN GROUP) keeps its
+    * own null handling. Runs first, so the passes that copy ORDER BY
+    * items (DISTINCT ON, WITH TIES, GROUPS frames) carry the clause. */
+  private def defaultNullOrdering(ts: ArrayBuffer[Tok]): Unit = {
+    // per open paren: does an ORDER BY directly inside it sort rows?
+    val rowScopes = scala.collection.mutable.Stack(true)
+    var i = 0
+    while (i < ts.length) {
+      val t = ts(i)
+      if (t.is("(")) {
+        val p = prevIdx(ts, i)
+        val n = nextIdx(ts, i)
+        rowScopes.push(p >= 0 && (ts(p).isWord("OVER") || ts(p).isWord("AS")) ||
+          n >= 0 && (ts(n).isWord("SELECT") || ts(n).isWord("WITH") || ts(n).isWord("VALUES")))
+      } else if (t.is(")")) {
+        if (rowScopes.size > 1) rowScopes.pop()
+      } else if (t.isWord("ORDER") && rowScopes.top) {
+        val by = nextIdx(ts, i)
+        if (by >= 0 && ts(by).isWord("BY")) addDefaultNulls(ts, by)
+      }
+      i += 1
+    }
+  }
+
+  /** Words that end an ORDER BY list (after at least one item token). */
+  private val orderByEnd = Set("LIMIT", "OFFSET", "FETCH", "FOR", "ROWS", "RANGE",
+    "GROUPS", "UNION", "INTERSECT", "EXCEPT", "WINDOW")
+
+  /** Append ` NULLS LAST` (` NULLS FIRST` after DESC) to each item of
+    * the ORDER BY list after token `by` that has no NULLS or USING. */
+  private def addDefaultNulls(ts: ArrayBuffer[Tok], by: Int): Unit = {
+    var j = by + 1
+    var depth = 0
+    var last = -1 // the current item's last token
+    var explicit = false
+    var done = false
+    while (!done) {
+      val t = if (j < ts.length) ts(j) else Tok(Op, ";")
+      if (depth == 0 && (t.is(",") || t.is(")") || t.is(";") ||
+          last >= 0 && t.kind == Word && orderByEnd.contains(t.text.toUpperCase))) {
+        if (last >= 0 && !explicit) {
+          val nulls = if (ts(last).isWord("DESC")) "FIRST" else "LAST"
+          ts.insertAll(last + 1, Seq(Tok(Ws, " "), Tok(Word, "NULLS"), Tok(Ws, " "), Tok(Word, nulls)))
+          j += 4
+        }
+        done = !t.is(",")
+        last = -1
+        explicit = false
+      } else {
+        if (t.is("(")) depth += 1 else if (t.is(")")) depth -= 1
+        if (t.kind != Ws) {
+          last = j
+          explicit ||= depth == 0 && (t.isWord("NULLS") || t.isWord("USING"))
+        }
+      }
+      j += 1
+    }
   }
 
   /** Spark's FunctionRegistry has no overloads, so the reference's
@@ -2647,19 +2712,6 @@ object Compat {
     }
   }
 
-  /** pg `anyarray || element` / `element || anyarray` (§9.19): Spark's
-    * Concat rejects the mixed shape, so route to array_append /
-    * array_prepend. Dispatch needs a SYNTACTICALLY visible array side
-    * — an `array(…)` call (what ARRAY[…] became), an array-returning
-    * builtin, or a trailing `::type[]` cast — matching how pg resolves
-    * the overload by static type; plain column names don't dispatch
-    * (same doctrine as the jsonb operator family above). */
-  private val arrayProducerFns = Set(
-    "array", "array_append", "array_prepend", "array_remove",
-    "pg_array_remove", "array_replace", "array_distinct", "array_sort",
-    "sequence", "array_cat", "concat", "slice", "pg_string_to_array",
-    "string_to_array")
-
   /** pg's `typename 'literal'` prefix-typed-literal syntax for the
     * engine's FAMILY types → `'literal'::typename`, which the cast
     * passes below already lower (sweep-32: `int4range '[1,5)' @> 3`).
@@ -2689,75 +2741,6 @@ object Compat {
           val s = ts(lit)
           ts.remove(i, lit - i + 1)
           ts.insertAll(i, Seq(s, Tok(Op, "::"), Tok(Word, w.text)))
-        }
-      }
-      i += 1
-    }
-  }
-
-  private def arrayMarkedEnd(ts: ArrayBuffer[Tok], e: Int): Boolean = {
-    if (e < 0) false
-    else if (ts(e).kind == Word && {
-      val t = ts(e).text.toUpperCase
-      // composite token left by rewriteArrayLiteralCasts
-      // (`'{1,2}'::int[]` → `CAST(ARRAY('1','2') AS ARRAY<int>)`)
-      t.startsWith("CAST(ARRAY(") || t.startsWith("ARRAY(")
-    }) true
-    else if (ts(e).is("]")) {
-      // `::type[]` cast tail or ARRAY[…] (pre-constructor-pass callers)
-      true
-    } else if (ts(e).is(")")) {
-      var depth = 1
-      var j = e - 1
-      while (j >= 0 && depth > 0) {
-        if (ts(j).is(")")) depth += 1
-        else if (ts(j).is("(")) depth -= 1
-        if (depth > 0) j -= 1
-      }
-      val w = prevIdx(ts, j)
-      w >= 0 && ts(w).kind == Word &&
-        arrayProducerFns.contains(ts(w).text.toLowerCase)
-    } else false
-  }
-
-  private def rewriteArrayElemConcat(ts: ArrayBuffer[Tok]): Unit = {
-    var i = 0
-    while (i < ts.length) {
-      if (ts(i).is("||")) {
-        val p = prevIdx(ts, i)
-        val r = nextIdx(ts, i)
-        if (p >= 0 && r >= 0) {
-          val rEnd = valueEnd(ts, r)
-          val lhsArr = arrayMarkedEnd(ts, p)
-          val rhsArr = arrayMarkedEnd(ts, rEnd)
-          // Str operands are EXCLUDED: pg coerces an unknown literal
-          // beside an array to the ARRAY type via array_in (sweep-32:
-          // `'{1,2}'::int[] || '3'` is malformed-array-literal, not
-          // append) — the PgSemantics Concat rule handles those
-          if (lhsArr && !rhsArr && isValueEnd(ts(p)) &&
-            (ts(r).kind == Word || ts(r).kind == Num ||
-              ts(r).is("(") || ts(r).is("-"))) {
-            // arr || elem → array_append(arr, elem)
-            val ls = lhsStart(ts, p)
-            ts(i) = Tok(Op, ",")
-            ts.insert(rEnd + 1, Tok(Op, ")"))
-            ts.insertAll(ls, Seq(Tok(Word, "array_append"), Tok(Op, "(")))
-            i = rEnd + 3
-          } else if (rhsArr && !lhsArr &&
-            (ts(p).kind == Word || ts(p).kind == Num ||
-              ts(p).is(")"))) {
-            // elem || arr → array_prepend(arr, elem) (Spark arg order)
-            val ls = lhsStart(ts, p)
-            val lhsToks = ts.slice(ls, p + 1).toSeq
-            // drop `lhs ||` and wrap the array side
-            ts.remove(ls, i - ls + 1)
-            val r2 = nextIdx(ts, ls - 1) match { case -1 => ls case x => x }
-            val rEnd2 = valueEnd(ts, r2)
-            ts.insertAll(rEnd2 + 1,
-              Seq(Tok(Op, ","), Tok(Ws, " ")) ++ lhsToks ++ Seq(Tok(Op, ")")))
-            ts.insertAll(r2, Seq(Tok(Word, "array_prepend"), Tok(Op, "(")))
-            i = r2
-          }
         }
       }
       i += 1
@@ -4054,46 +4037,18 @@ object Compat {
     }
   }
 
-  /** pg math operators Spark lacks (or reads differently): `^` is
-    * power in pg but XOR in Spark (a silently-wrong answer), `#` is
-    * pg's XOR, `|/` square root, `||/` cube root, `@` absolute value.
-    * Binary ops reuse the value-extent machinery; the unary ops wrap
-    * the following value. */
-  private val bitFns = Set("bit_in", "bit_in_hex", "pg_bit_cast",
-    "pg_int_to_bit", "pg_bit_and", "pg_bit_or", "pg_bit_xor",
-    "pg_bit_not", "pg_bit_shl", "pg_bit_shr", "pg_bit_set")
-
-  private def isBitish(ts: ArrayBuffer[Tok], from: Int, to: Int): Boolean = {
-    var i = from
-    while (i <= to && i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Word) {
-        val lower = t.text.toLowerCase
-        if (bitFns.contains(lower)) {
-          val n = nextIdx(ts, i)
-          if (n >= 0 && n <= to && ts(n).is("(")) return true
-        }
-        // the literal rewrite emits COMPOSITE call tokens
-        // (`bit_in('1010')` as one Word)
-        if (bitFns.exists(f => lower.startsWith(f + "("))) return true
-      }
-      i += 1
-    }
-    false
-  }
-
-  /** pg bit strings (§8.10.1): `B'1010'` literals → bit_in, the
-    * bitwise operators (& | # ~ << >>) and int/bit casts on bit-ish
-    * operands, and the bit accessor dispatch. Values are the literal
-    * '0'/'1' text, so substring/overlay/position/length/|| come free
-    * from the string builtins. Runs BEFORE rewriteMathOps so the
-    * bit `#` keeps XOR-on-bits while the integer `#` keeps its
-    * integer meaning.
+  /** pg bit strings (§8.10.1), the grammar Spark cannot parse:
+    * `B'1010'` literals → bit_in, `X'1F'::bit(n)` → bit_in_hex, and
+    * `::bit(n)` / `::varbit(n)` → one pg_bit_cast call whatever the
+    * operand (`::bit` / `::varbit` without a length → bit_in). Values
+    * are the literal '0'/'1' text, so substring/overlay/position/
+    * length/|| come free from the string builtins; the analyzer rule
+    * (PgSemantics) dispatches the bit operators, casts and accessors
+    * on operand type.
     */
   private def rewriteBitStrings(ts: ArrayBuffer[Tok]): Unit = {
     // literals first: adjacent Word(B)+Str (no whitespace between)
     var i = 0
-    var sawBit = false
     while (i < ts.length - 1) {
       val t = ts(i)
       if (t.kind == Word && (t.text == "b" || t.text == "B") &&
@@ -4101,7 +4056,6 @@ object Compat {
         val lit = ts(i + 1).text
         ts.remove(i, 2)
         ts.insert(i, Tok(Word, s"bit_in($lit)"))
-        sawBit = true
       } else if (t.kind == Word && (t.text == "x" || t.text == "X") &&
         ts(i + 1).kind == Str && {
           // X'..' is a bit literal only when a ::bit cast follows (it
@@ -4114,138 +4068,46 @@ object Compat {
         val lit = ts(i + 1).text
         ts.remove(i, 2)
         ts.insert(i, Tok(Word, s"bit_in_hex($lit)"))
-        sawBit = true
       }
       i += 1
     }
-    if (!sawBit && !ts.exists(t => t.kind == Word &&
-      (bitFns.contains(t.text.toLowerCase) || t.isWord("bit") || t.isWord("varbit"))))
-      return
-    // casts: ::bit(n) / ::varbit [(n)] / ::int-family on bitish
+    // casts: ::bit(n) / ::varbit [(n)]
     i = 0
     while (i < ts.length) {
       if (ts(i).is("::")) {
         val ty = nextIdx(ts, i)
         val p = prevIdx(ts, i)
-        if (ty >= 0 && p >= 0 && ts(ty).kind == Word &&
+        if (ty >= 0 && p >= 0 && (ts(ty).isWord("bit") || ts(ty).isWord("varbit")) &&
           (isValueEnd(ts(p)) || ts(p).kind == Num)) {
-          val tn = ts(ty).text.toLowerCase
           val start = primaryStart(ts, p)
-          if (tn == "bit" || tn == "varbit") {
-            // optional (n)
-            val open = nextIdx(ts, ty)
-            var end = ty
-            var nTok: Option[String] = None
-            if (open >= 0 && ts(open).is("(")) {
-              val close = matchParen(ts, open)
-              if (close > 0) {
-                nTok = Some(ts.slice(open + 1, close).map(_.text).mkString.trim)
-                end = close
-              }
-            }
-            val bitish = isBitish(ts, start, p)
-            // a Num operand is pg's int→bit conversion; strings and
-            // bit values cast as pattern text
-            val numish = ts(p).kind == Num
-            val fn =
-              if (!bitish && numish && nTok.isDefined) "pg_int_to_bit"
-              else if (nTok.isDefined) "pg_bit_cast"
-              else "bit_in"
-            val tail = nTok.map(n => s", $n)").getOrElse(")")
-            ts.remove(i, end - i + 1)
-            ts.insert(p + 1, Tok(Op, tail))
-            ts.insertAll(start, Seq(Tok(Word, fn), Tok(Op, "(")))
-            i = p + 3
-          } else if ((tn == "int" || tn == "int4" || tn == "integer" ||
-            tn == "bigint" || tn == "int8") && isBitish(ts, start, p)) {
-            ts.remove(i, ty - i + 1)
-            ts.insert(p + 1, Tok(Op, ")"))
-            ts.insertAll(start, Seq(Tok(Word, "pg_bit_to_int"), Tok(Op, "(")))
-            i = p + 3
-          }
-        }
-      }
-      i += 1
-    }
-    // operators & | # << >> and prefix ~
-    i = 0
-    while (i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Op && t.text == "~") {
-        val arg = nextIdx(ts, i)
-        if (arg >= 0 && ts(arg).kind == Word) {
-          var end = arg
-          val nxt = nextIdx(ts, end)
-          if (nxt >= 0 && ts(nxt).is("(")) {
-            val close = matchParen(ts, nxt); if (close > 0) end = close
-          }
-          if (isBitish(ts, arg, end)) {
-            ts.insert(end + 1, Tok(Op, ")"))
-            ts.remove(i)
-            ts.insertAll(i, Seq(Tok(Word, "pg_bit_not"), Tok(Op, "(")))
-          }
-        }
-      }
-      if (t.kind == Op && (t.text == "&" || t.text == "|" || t.text == "#" ||
-        t.text == "<<" || t.text == ">>")) {
-        val rhs = nextIdx(ts, i)
-        val p = prevIdx(ts, i)
-        if (rhs >= 0 && p >= 0 && isValueEnd(ts(p)) &&
-          (ts(rhs).kind == Word || ts(rhs).kind == Num)) {
-          val start = lhsStart(ts, p)
-          var rhs2 = rhs
-          if (ts(rhs2).kind == Word) {
-            val nxt = nextIdx(ts, rhs2)
-            if (nxt >= 0 && ts(nxt).is("(")) {
-              val close = matchParen(ts, nxt)
-              if (close > 0) rhs2 = close
+          // optional (n)
+          val open = nextIdx(ts, ty)
+          var end = ty
+          var nTok: Option[String] = None
+          if (open >= 0 && ts(open).is("(")) {
+            val close = matchParen(ts, open)
+            if (close > 0) {
+              nTok = Some(ts.slice(open + 1, close).map(_.text).mkString.trim)
+              end = close
             }
           }
-          val lBit = isBitish(ts, start, p)
-          val rBit = isBitish(ts, rhs, rhs2)
-          val fn =
-            if ((t.text == "<<" || t.text == ">>") && lBit)
-              Some(if (t.text == "<<") "pg_bit_shl" else "pg_bit_shr")
-            else if (lBit && rBit) t.text match {
-              case "&" => Some("pg_bit_and")
-              case "|" => Some("pg_bit_or")
-              case "#" => Some("pg_bit_xor")
-              case _ => None
-            }
-            else None
-          fn.foreach { fnName =>
-            var opIdx = i
-            if (opIdx - 1 >= 0 && ts(opIdx - 1).kind == Ws) {
-              ts.remove(opIdx - 1); opIdx -= 1; rhs2 -= 1
-            }
-            ts.insert(rhs2 + 1, Tok(Op, ")"))
-            ts(opIdx) = Tok(Op, ",")
-            ts.insertAll(start, Seq(Tok(Word, fnName), Tok(Op, "(")))
-          }
-        }
-      }
-      // accessor dispatch on bit-ish args
-      if (t.kind == Word && (t.isWord("octet_length") || t.isWord("bit_count") ||
-        t.isWord("get_bit") || t.isWord("set_bit") || t.isWord("bit_length"))) {
-        val open = nextIdx(ts, i)
-        if (open >= 0 && ts(open).is("(")) {
-          val close = matchParen(ts, open)
-          if (close > 0 && isBitish(ts, open + 1, close - 1)) {
-            val repl = t.text.toLowerCase match {
-              case "octet_length" => "pg_bit_octet_length"
-              case "bit_count" => "pg_bitstr_count"
-              case "get_bit" => "pg_bit_get"
-              case "set_bit" => "pg_bit_set"
-              case _ => "length" // bit_length(bits) = pattern length
-            }
-            ts(i) = Tok(Word, repl)
-          }
+          val fn = if (nTok.isDefined) "pg_bit_cast" else "bit_in"
+          val tail = nTok.map(n => s", $n)").getOrElse(")")
+          ts.remove(i, end - i + 1)
+          ts.insert(p + 1, Tok(Op, tail))
+          ts.insertAll(start, Seq(Tok(Word, fn), Tok(Op, "(")))
+          i = p + 3
         }
       }
       i += 1
     }
   }
 
+  /** pg math operators Spark lacks (or reads differently): `^` is
+    * power in pg but XOR in Spark (a silently-wrong answer), `#` is
+    * pg's XOR, `|/` square root, `||/` cube root, `@` absolute value.
+    * Binary ops reuse the value-extent machinery; the unary ops wrap
+    * the following value. */
   private def rewriteMathOps(ts: ArrayBuffer[Tok]): Unit = {
     var i = 0
     while (i < ts.length) {
@@ -5443,13 +5305,6 @@ object Compat {
     }
   }
 
-  /** `timestamp ± time` / `date + time` (pg: the time-of-day adds as
-    * an offset, result timestamp): our TIME value is bigint nanos, so
-    * a binary +/- whose RIGHT operand is a pg_time_in call converts
-    * the nanos to a day-time interval. Runs after rewriteCastTypes
-    * (which produces the pg_time_in spelling). Left-operand time and
-    * time±interval stay unsupported (no type info at rewrite time).
-    */
   private val xmlProducerFns = Set("pg_xml_tag", "xml_in", "xmlcomment",
     "pg_xmlpi", "pg_xml_forest_item")
 
@@ -5639,29 +5494,6 @@ object Compat {
         }
       }
       j += 1
-    }
-  }
-
-  private def rewriteTimeArithmetic(ts: ArrayBuffer[Tok]): Unit = {
-    var i = 0
-    while (i < ts.length) {
-      if (ts(i).kind == Op && (ts(i).text == "+" || ts(i).text == "-")) {
-        val p = prevIdx(ts, i)
-        val r = nextIdx(ts, i)
-        if (p >= 0 && isValueEnd(ts(p)) && r >= 0 &&
-          ts(r).kind == Word && ts(r).text.equalsIgnoreCase("pg_time_in")) {
-          val open = nextIdx(ts, r)
-          if (open >= 0 && ts(open).is("(")) {
-            val close = matchParen(ts, open)
-            if (close > 0) {
-              ts.insert(close + 1, Tok(Word, ") / 1000000000.0)"))
-              ts.insert(r, Tok(Word, "make_dt_interval(0, 0, 0, ("))
-              i = close + 2
-            }
-          }
-        }
-      }
-      i += 1
     }
   }
 

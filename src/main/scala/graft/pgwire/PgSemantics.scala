@@ -36,9 +36,13 @@ import org.apache.spark.sql.types._
   *  - `date ± interval` → timestamp WITHOUT time zone (pg returns
   *    timestamp; Spark's DateAddInterval stays DATE, truncating the
   *    time-of-day part).
-  *  - range, network, money, enum, text-search, trigram and jsonb
-  *    operators → the family functions, by operand type ([[pgTypeOf]];
-  *    the families are STRING to Spark). See [[FamilyOps]].
+  *  - range, network, money, enum, text-search, trigram, jsonb and
+  *    bit-string operators → the family functions, and time-of-day
+  *    arithmetic, by operand type ([[pgTypeOf]]; the families are
+  *    STRING to Spark, time is bigint nanos). See [[FamilyOps]].
+  *  - array `||` element / sub-array / NULL → append, prepend or the
+  *    array itself.
+  *  - `pg_typeof(x)` names x's pg type from the analyzed plan.
   *
   * Reference anchor: the reference engine inherits these from
   * DataFusion's pg-style arithmetic; here they are reconstructed
@@ -77,6 +81,18 @@ object PgSemantics {
       // cases below claim the analyzer's casts over these
       // STRING-carried values
       case ops(call) => call
+
+      // array_sort binds its comparator to the element type it first
+      // resolves with; after the sorted collect's keys are retyped
+      // above (a range key is a struct), bind it again
+      case s @ ArraySort(arg, f: LambdaFunction, _)
+          if arg.resolved && f.bound && (arg.dataType match {
+            case ArrayType(et, _) => f.arguments.exists(_.dataType != et)
+            case _ => false
+          }) =>
+        s.copy(function = f.transform {
+          case v: NamedLambdaVariable => UnresolvedNamedLambdaVariable(Seq(v.name))
+        })
 
       // int / int (both casts analyzer-inserted) → truncating division
       case Divide(
@@ -297,22 +313,26 @@ object PgSemantics {
         Concat(c.children.map(ch =>
           if (isStringLit(ch)) pgArrayLiteralExpr(litText(ch), at) else ch))
 
-      // array `||` element / element `||` array → append / prepend
-      // (typed non-array side; the token layer handles syntactically
-      // marked shapes, this covers type-revealed ones)
-      case c: Concat
-          if !c.resolved && c.children.length == 2 &&
-            c.children.forall(_.resolved) &&
-            c.children.count(_.dataType.isInstanceOf[ArrayType]) == 1 &&
-            !c.children.exists(isStringLit) =>
-        val Seq(l, r) = c.children
-        if (l.dataType.isInstanceOf[ArrayType]) {
-          val et = l.dataType.asInstanceOf[ArrayType].elementType
-          ArrayAppend(l, castTo(r, et))
-        } else {
-          val et = r.dataType.asInstanceOf[ArrayType].elementType
-          ArrayPrepend(r, castTo(l, et))
-        }
+      // array `||` NULL (either way round): pg reads the bare NULL as
+      // a NULL array, and array_cat skips it — `ARRAY[1,2] || NULL` is
+      // {1,2}, not an appended NULL element
+      case Concat(Seq(l, r)) if l.resolved && r.resolved &&
+          (arrayDepth(l.dataType) > 0 && isBareNull(r) ||
+            isBareNull(l) && arrayDepth(r.dataType) > 0) =>
+        if (isBareNull(r)) l else r
+
+      // array `||` element / element `||` array → append / prepend, and
+      // T[][] `||` T[] (either way round) appends / prepends the
+      // sub-array
+      case c @ Concat(Seq(l0, r0))
+          if !c.resolved && l0.resolved && r0.resolved &&
+            !c.children.exists(isStringLit) &&
+            arrayDepth(l0.dataType) != arrayDepth(r0.dataType) =>
+        val (l, r) = (stripImplicitCasts(l0), stripImplicitCasts(r0))
+        if (arrayDepth(l.dataType) > arrayDepth(r.dataType))
+          ArrayAppend(l, castTo(r, l.dataType.asInstanceOf[ArrayType].elementType))
+        else
+          ArrayPrepend(r, castTo(l, r.dataType.asInstanceOf[ArrayType].elementType))
 
       // `@>` / `<@` / `&&` with a string literal beside an array
       case p @ graft.functions.PgJsonExpressions.PgContains(l, r)
@@ -446,6 +466,11 @@ object PgSemantics {
       case x: graft.functions.PgJsonExpressions.PgJsonEach
           if !x.jsonb && x.child.resolved && ops.typeOf(x.child).contains("jsonb") =>
         x.copy(jsonb = true)
+    }.transformAllExpressions {
+      // after the rewrites above, so the name is the rewritten value's
+      case p: graft.functions.PgMiscExpressions.PgTypeOf
+          if p.pgName.isEmpty && p.child.resolved =>
+        p.copy(pgName = Some(ops.typeName(p.child)))
     }
   }
 
@@ -492,7 +517,7 @@ object PgSemantics {
       "money_to_numeric" -> "numeric",
       // variable-scale numeric results render their own text form
       "trim_scale" -> "numeric",
-      "pg_time_in" -> "time", "make_time" -> "time") ++
+      "pg_time_in" -> "time", "make_time" -> "time", "time_pl_interval" -> "time") ++
       // `::jsonb` (pg_jsonb) and the functions returning jsonb
       Seq("pg_jsonb", "to_jsonb", "jsonb_build_object", "jsonb_build_array",
         "jsonb_object", "jsonb_extract_path", "jsonb_set", "jsonb_set_lax",
@@ -512,24 +537,30 @@ object PgSemantics {
     * (literal type-name) argument names. */
   private val enumFns = Set("enum_in", "enum_label_at", "enum_first_n", "enum_last_n")
 
+  /** Column metadata keys naming a stored column's pg type. */
+  private val typeKeys = Seq(PgType.OID_ALIAS_KEY, "pg.enum", PgType.PG_TYPE_KEY)
+
   /** The pg type of an analyzed expression, where its Spark type does
-    * not tell it (the family values are STRING): a stored column's
-    * `pg.oid_alias` or `pg.enum`, the family function that produced the
-    * value, or —
-    * through Alias, an analyzer-inserted same-type Cast and, by exprId,
-    * the subquery, CTE and view projections that define an attribute
+    * not tell it (the family values are STRING, time is bigint nanos):
+    * a stored column's `pg.oid_alias`, `pg.enum` or `pg.type`, the
+    * family function that produced the value, or —
+    * through Alias, an analyzer-inserted same-type Cast or null guard,
+    * min/max and, by exprId, the subquery, CTE and view projections
+    * that define an attribute
     * (`defs`, see [[definedTypes]]) — the expression behind it. */
   def pgTypeOf(e: Expression,
       defs: ExprId => Option[String] = _ => None): Option[String] = e match {
     case a: AttributeReference =>
-      if (a.metadata.contains(PgType.OID_ALIAS_KEY))
-        Some(a.metadata.getString(PgType.OID_ALIAS_KEY))
-      else if (a.metadata.contains("pg.enum")) Some(a.metadata.getString("pg.enum"))
-      else defs(a.exprId)
+      typeKeys.find(a.metadata.contains).map(a.metadata.getString).orElse(defs(a.exprId))
     case Alias(c, _) => pgTypeOf(c, defs)
     case c @ Cast(child, dt, _, _)
         if notUserCast(c) && child.resolved && child.dataType == dt =>
       pgTypeOf(child, defs)
+    // the analyzer's null guard around a UDF with primitive parameters
+    case If(IsNull(_), Literal(null, _), v) => pgTypeOf(v, defs)
+    case aggregate.AggregateExpression(f @ (_: aggregate.Min | _: aggregate.Max |
+        _: aggregate.MinBy | _: aggregate.MaxBy), _, _, _, _) =>
+      pgTypeOf(f.children.head, defs)
     case u: ScalaUDF => u.udfName.flatMap(n => fnType(n.toLowerCase, u.children, defs))
     case f => fnType(f.prettyName, f.children, defs)
   }
@@ -573,7 +604,8 @@ object PgSemantics {
     ("money", ">") -> "money_gt", ("money", ">=") -> "money_ge",
     ("tsquery", "&&") -> "tsquery_and", ("tsquery", "||") -> "tsquery_or",
     ("tsquery", "<->") -> "tsquery_phrase", ("tsvector", "||") -> "tsvector_concat",
-    ("jsonb", "||") -> "jsonb_concat")
+    ("jsonb", "||") -> "jsonb_concat",
+    ("bit", "&") -> "pg_bit_and", ("bit", "|") -> "pg_bit_or", ("bit", "#") -> "pg_bit_xor")
 
   /** The boolean pg_trgm operators' support functions (pg's names; Compat
     * emits them for `<%` `%>` `<<%` `%>>`, and `%` between two text
@@ -614,6 +646,14 @@ object PgSemantics {
     }
   }
 
+  /** Each range type's element: its pg name, and the type its bounds'
+    * canonical text sorts as (ISO date/timestamp text sorts in time order). */
+  private val rangeElems: Map[String, (String, DataType)] = Map(
+    "int4range" -> ("integer", LongType), "int8range" -> ("bigint", LongType),
+    "numrange" -> ("numeric", DoubleType), "daterange" -> ("date", StringType),
+    "tsrange" -> ("timestamp without time zone", StringType),
+    "tstzrange" -> ("timestamp with time zone", StringType))
+
   /** Functions of an enum value that read only its type: → the forms
     * taking the type name (`enum_first_n('mood')`). */
   private val enumTypeFns = Set("enum_first", "enum_last", "enum_range")
@@ -634,25 +674,67 @@ object PgSemantics {
     *  - pg_trgm: `%` between two text operands and the threshold
     *    operators, against the session's `pg_trgm.*_threshold`;
     *  - jsonb: `- ||` (and `->`/`#>`, in the rule above);
-    *  - inet/cidr: ORDER BY and min/max in network order.
-    * One instance per rule application: the plan's [[definedTypes]] are
-    * built on first use. */
+    *  - bit/varbit: `& | # ~ << >>`, casts to int/bigint and from an
+    *    integer (Compat's pg_bit_cast), bit_count, octet_length,
+    *    get_bit, set_bit, bit_length;
+    *  - time (bigint nanos): `date + time`, `timestamp ± time` and
+    *    `time - time` read the time as an interval, `time ± interval`
+    *    wraps at 24 h;
+    *  - inet/cidr: ORDER BY and min/max in network order; ranges:
+    *    ORDER BY in range order.
+    * BETWEEN's shared operand (a common-expression reference) types as
+    * its definition. One instance per rule application: the plan's
+    * [[definedTypes]] are built on first use. */
   private final class FamilyOps(plan: LogicalPlan) {
     private lazy val defs = definedTypes(plan)
 
-    /** The pg type of an operand (analyzer-inserted casts stripped);
-      * every family this rule dispatches is a STRING to Spark. */
+    /** The expressions that common-expression references (BETWEEN's
+      * shared operand) stand for. */
+    private lazy val commons: Map[CommonExpressionId, Expression] =
+      plan.flatMap(_.expressions.flatMap(_.collect {
+        case w: With => w.defs.map(d => d.id -> d.child)
+      }.flatten)).toMap
+
+    /** The pg type of an operand (analyzer-inserted casts stripped). */
+    private def pgType(e: Expression): Option[String] = stripImplicitCasts(e) match {
+      case r: CommonExpressionRef => commons.get(r.id).flatMap(pgType)
+      case v => if (v.resolved) pgTypeOf(v, id => defs(id)) else None
+    }
+
+    /** The pg type of a STRING operand: every family this rule
+      * dispatches, apart from time, is a STRING to Spark. */
     def typeOf(e: Expression): Option[String] = {
       val v = stripImplicitCasts(e)
-      if (v.resolved && v.dataType == StringType) pgTypeOf(v, id => defs(id)) else None
+      if (v.resolved && v.dataType == StringType) pgType(v) else None
     }
 
     private def family(e: Expression): Option[String] = typeOf(e).map {
       case r if Compat.rangeTypeNames.contains(r) => "range"
       case "cidr" => "inet"
       case "macaddr8" => "macaddr"
+      case "varbit" => "bit"
       case t => t
     }
+
+    /** A time-of-day operand (the TIME carrier, bigint nanos). */
+    private def isTime(e: Expression): Boolean = {
+      val v = stripImplicitCasts(e)
+      v.resolved && v.dataType == LongType && pgType(v).contains("time")
+    }
+
+    private def isBits(e: Expression): Boolean = e.resolved && family(e).contains("bit")
+
+    /** pg_typeof's answer for an analyzed value. */
+    def typeName(e: Expression): String = (e match {
+      // `lower(r)` / `upper(r)` yield the range's ELEMENT type
+      case u: ScalaUDF if u.udfName.exists(n => n == "range_lower" || n == "range_upper") =>
+        pgType(u.children.head).flatMap(rangeElems.get).map(_._1)
+      case _ => pgType(e).map {
+        case "time" => "time without time zone"
+        case "varbit" => "bit varying"
+        case t => t
+      }
+    }).getOrElse(PgFunctions.formatType(PgType.oidOf(e.dataType), -1))
 
     /** The operand's type when it is one of the session's enum types. */
     private def enumOf(e: Expression): Option[String] =
@@ -668,7 +750,42 @@ object PgSemantics {
         case "inet" => fnCall("inet_sort_key", Seq(stripImplicitCasts(e)))
       })
 
+    /** [[sortKey]], and for ORDER BY (pg has no min/max over ranges) a
+      * range's key in pg's range order: empty first, then the lower
+      * bound (-infinity first, inclusive before exclusive), then the
+      * upper bound (exclusive before inclusive, +infinity last). */
+    private def orderKey(e: Expression): Option[Expression] =
+      sortKey(e).orElse(typeOf(e).flatMap(rangeElems.get).map { case (_, elem) =>
+        val v = stripImplicitCasts(e)
+        def f(fn: String) = fnCall(fn, Seq(v))
+        val key = CreateNamedStruct(Seq(
+          Literal("e"), Not(f("isempty")),
+          Literal("li"), Not(f("lower_inf")), Literal("l"), Cast(f("range_lower"), elem),
+          Literal("lx"), Not(f("lower_inc")),
+          Literal("ui"), f("upper_inf"), Literal("u"), Cast(f("range_upper"), elem),
+          Literal("ux"), f("upper_inc")))
+        If(IsNull(v), Literal(null), key)
+      })
+
     def unapply(e: Expression): Option[Expression] = e match {
+      // time of day: pg casts a time beside a date or timestamp to an
+      // interval; Spark reads `date ± bigint` as date_add/date_sub and
+      // `timestamp - bigint` as a timestamp difference
+      case DateAdd(d, t) if isTime(t) =>
+        Some(TimestampAddInterval(Cast(d, TimestampNTZType), timeInterval(t)))
+      case DateSub(d, t) if isTime(t) =>
+        Some(TimestampAddInterval(Cast(d, TimestampNTZType), UnaryMinus(timeInterval(t))))
+      case Add(ts, t, _) if ts.resolved && isTsType(ts.dataType) && isTime(t) =>
+        Some(TimestampAddInterval(ts, timeInterval(t)))
+      case SubtractTimestamps(ts, t, _, _) if isTime(t) =>
+        Some(TimestampAddInterval(ts, UnaryMinus(timeInterval(t))))
+      case Subtract(l, r, _) if isTime(l) && isTime(r) =>
+        Some(Subtract(timeInterval(l), timeInterval(r)))
+      // `time ± interval` (Spark's datetime-plus/minus-interval shapes)
+      case TimestampAddInterval(t, iv, _) if isTime(t) && iv.resolved =>
+        Some(graft.functions.PgMiscExpressions.PgTimePlusInterval(stripImplicitCasts(t), iv))
+      case DatetimeSub(t, iv, _) if isTime(t) && iv.resolved =>
+        Some(graft.functions.PgMiscExpressions.PgTimePlusInterval(stripImplicitCasts(t), UnaryMinus(iv)))
       case Add(l, r, _) => arith("+", l, r)
       case Subtract(l, r, _) => arith("-", l, r)
       case Multiply(l, r, _) => arith("*", l, r)
@@ -683,7 +800,7 @@ object PgSemantics {
       // tsqueries, distance over geometries, else trigram distance
       case u: ScalaUDF if u.udfName.contains("trgm_sim_dist") && u.children.forall(_.resolved) =>
         val args = u.children.map(stripImplicitCasts)
-        if (args.forall(pgTypeOf(_, id => defs(id)).contains("geometry")))
+        if (args.forall(pgType(_).contains("geometry")))
           Some(fnCall("st_distance", args))
         else same("<->", args(0), args(1)).orElse { requireText("<->", args); None }
       case u: ScalaUDF
@@ -693,16 +810,19 @@ object PgSemantics {
           if !c.isInstanceOf[EqualTo] && !c.isInstanceOf[EqualNullSafe] =>
         same(c.symbol, c.left, c.right).orElse(enumCompare(c))
       case Concat(Seq(l, r)) => same("||", l, r)
-      case ShiftLeft(l, r) => same("<<", l, r)
-      case ShiftRight(l, r) => same(">>", l, r)
+      // a bit string shifts by an integer (Spark's coercion may have
+      // cast the bit operand to int)
+      case ShiftLeft(l, r) => same("<<", l, r).orElse(bitShift("pg_bit_shl", l, r))
+      case ShiftRight(l, r) => same(">>", l, r).orElse(bitShift("pg_bit_shr", l, r))
       case BitwiseAnd(l, r) => same("&", l, r)
       case BitwiseOr(l, r) => same("|", l, r)
+      case BitwiseXor(l, r) => same("#", l, r)
       case ArraysOverlap(l, r) => same("&&", l, r)
       case m: graft.functions.PgJsonbPathMatch if !m.tz && m.children.length == 2 =>
         textSearchMatch(m.children(0), m.children(1))
       case Length(c) if typeOf(c).contains("tsvector") =>
         Some(fnCall("ts_length", Seq(stripImplicitCasts(c))))
-      case so: SortOrder => sortKey(so.child).map(k => so.copy(child = k))
+      case so: SortOrder => orderKey(so.child).map(k => so.copy(child = k))
       // a windowed or filtered aggregate keeps its AggregateExpression:
       // only the function inside changes
       case ae @ aggregate.AggregateExpression(m @ (_: aggregate.Min | _: aggregate.Max),
@@ -721,7 +841,7 @@ object PgSemantics {
       case s: CreateNamedStruct if isSortedCollect(s) =>
         val keyed = s.children.grouped(2).flatMap {
           case Seq(n @ Literal(k, StringType), v) if k.toString.startsWith("k") =>
-            Seq(n, sortKey(v).getOrElse(v))
+            Seq(n, orderKey(v).getOrElse(v))
           case pair => pair
         }.toSeq
         if (keyed == s.children) None else Some(s.withNewChildren(keyed))
@@ -732,6 +852,7 @@ object PgSemantics {
             (family(l).contains("range") || family(r).contains("range")) =>
         Some(fnCall("range_contains", Seq(stripImplicitCasts(l), stripImplicitCasts(r))))
       case BitwiseNot(c) if c.resolved => family(c).collect {
+        case "bit" => fnCall("pg_bit_not", Seq(stripImplicitCasts(c)))
         case "inet" => fnCall("inet_not", Seq(stripImplicitCasts(c)))
         case "macaddr" => fnCall("mac_not", Seq(stripImplicitCasts(c)))
       }
@@ -756,8 +877,34 @@ object PgSemantics {
       case c @ Cast(x, _: DecimalType, _, _)
           if !notUserCast(c) && x.resolved && family(x).contains("money") =>
         Some(fnCall("money_to_numeric", Seq(stripImplicitCasts(x))))
+      // bit → int/bigint reads the bits as a binary number
+      case c @ Cast(x, IntegerType | LongType, _, _) if !notUserCast(c) && isBits(x) =>
+        Some(Cast(fnCall("pg_bit_to_int", Seq(stripImplicitCasts(x))), c.dataType))
+      // `::bit(n)` (Compat's pg_bit_cast): an integer converts to its
+      // low n bits, anything else casts as bit text
+      case u: ScalaUDF if u.udfName.contains("pg_bit_cast") && u.children.forall(_.resolved) &&
+          isIntegral(stripImplicitCasts(u.children.head).dataType) =>
+        Some(fnCall("pg_int_to_bit", u.children.map(stripImplicitCasts)))
+      // the accessors Spark resolves to its integer, text or bytea forms
+      case BitwiseCount(c) if isBits(c) => Some(fnCall("pg_bitstr_count", Seq(stripImplicitCasts(c))))
+      case OctetLength(c) if isBits(c) => Some(fnCall("pg_bit_octet_length", Seq(stripImplicitCasts(c))))
+      case BitLength(c) if isBits(c) => Some(Length(stripImplicitCasts(c)))
+      case u: ScalaUDF if u.udfName.exists(n => n == "get_bit" || n == "set_bit") &&
+          isBits(u.children.head) =>
+        Some(fnCall(if (u.udfName.contains("get_bit")) "pg_bit_get" else "pg_bit_set",
+          u.children.map(stripImplicitCasts)))
       case _ => None
     }
+
+    /** `<<`/`>>` of a bit string by an integer. */
+    private def bitShift(fn: String, l: Expression, r: Expression): Option[Expression] =
+      if (isBits(l) && r.resolved) Some(fnCall(fn, Seq(stripImplicitCasts(l), stripImplicitCasts(r))))
+      else None
+
+    /** The TIME carrier (nanos) as pg's implicit time → interval cast. */
+    private def timeInterval(t: Expression): Expression =
+      fnCall("make_dt_interval", Seq(Literal(0), Literal(0), Literal(0),
+        Divide(Cast(stripImplicitCasts(t), DecimalType(20, 0)), Literal(BigDecimal(1000000000L)))))
 
     /** `+ - * /`: the mixed-type forms (inet ± integer, money × / number,
       * jsonb − key), then the same-family ones. */
@@ -928,6 +1075,18 @@ object PgSemantics {
 
   private def castTo(e: Expression, dt: DataType): Expression =
     if (e.dataType == dt) e else Cast(e, dt)
+
+  /** Array nesting depth of a type (0 for a non-array). */
+  private def arrayDepth(dt: DataType): Int = dt match {
+    case ArrayType(et, _) => 1 + arrayDepth(et)
+    case _ => 0
+  }
+
+  /** A bare NULL (possibly behind the analyzer's casts). */
+  private def isBareNull(e: Expression): Boolean = stripImplicitCasts(e) match {
+    case Literal(null, _) => true
+    case _ => false
+  }
 
   /** An interval operand, with a coercion-claimed unknown literal
     * rerouted through pg's interval input parser. */

@@ -3,10 +3,10 @@ package graft
 import org.scalatest.BeforeAndAfterAll
 import graft.pgwire.PgServer
 
-/** Range, network, money, enum, text-search, trigram and jsonb
-  * operators dispatch on operand TYPE (PgSemantics.pgTypeOf), so
-  * columns work like literals: stored columns, subquery/CTE/view
-  * columns and computed values alike.
+/** Range, network, money, enum, text-search, trigram, jsonb and
+  * bit-string operators, time arithmetic and array `||` dispatch on
+  * operand TYPE (PgSemantics.pgTypeOf), so columns work like literals:
+  * stored columns, subquery/CTE/view columns and computed values alike.
   * Every expected value below is the output of a live PostgreSQL
   * 15.18 (`psql -X -A -t`, UTC), same statements.
   */
@@ -263,5 +263,116 @@ class PgTypeDispatchSpec extends SparkSpec with BeforeAndAfterAll {
       "SELECT count(*) FROM vi WHERE f >= 0 AND f < 1" -> "1"))
     Seq("DROP TABLE vi", "DROP TYPE mood").foreach(c.query)
     c.close()
+  }
+
+  /** Drops the `drops` objects ("TABLE t", "TYPE e") if they exist,
+    * runs `setup`, checks the pins, then drops the objects. */
+  private def withTables(drops: Seq[String], setup: Seq[String])(
+      pinned: Seq[(String, String)]): Unit = {
+    val c = connect()
+    drops.foreach { d =>
+      val Array(kind, name) = d.split(' ')
+      c.query(s"DROP $kind IF EXISTS $name")
+    }
+    for (sql <- setup) assert(c.query(sql).errors === Nil, sql)
+    assertPinned(c, pinned)
+    drops.foreach(d => c.query(s"DROP $d"))
+    c.close()
+  }
+
+  private val bitTable = Seq(
+    "CREATE TABLE bt(a bit(4), b bit(4), v varbit(8), k int)",
+    "INSERT INTO bt VALUES (B'1010', B'0110', B'101', 1)")
+  private val timeTable = Seq(
+    "CREATE TABLE tt(d date, t time, ts timestamp, u time)",
+    "INSERT INTO tt VALUES (DATE '2024-01-02', TIME '10:30:00', " +
+      "TIMESTAMP '2024-01-02 01:00:00', TIME '01:15:00')")
+  private val moodTable = Seq(
+    "CREATE TYPE mood AS ENUM ('sad','ok','happy')",
+    "CREATE TABLE em(m mood, k int)",
+    "INSERT INTO em VALUES ('happy',1),('sad',1),('ok',2)")
+
+  test("bit-string columns: operators, casts and accessors match live pg") {
+    withTables(Seq("TABLE bt"), bitTable)(Seq(
+      "SELECT a & b, a | b, a # b, ~a FROM bt" -> "0010|1110|1100|0101",
+      "SELECT a << 1, a >> 2 FROM bt" -> "0100|0010",
+      "SELECT a::int, k::bit(4) FROM bt" -> "10|0001",
+      "SELECT bit_count(a), octet_length(a) FROM bt" -> "2|1",
+      "SELECT x & y FROM (SELECT a AS x, b AS y FROM bt) s" -> "0010",
+      "WITH c AS (SELECT B'1100' AS x) SELECT x | B'0011' FROM c" -> "1111"))
+  }
+
+  test("time arithmetic over columns and literals matches live pg") {
+    withTables(Seq("TABLE tt"), timeTable)(Seq(
+      "SELECT d + t, t + d FROM tt" -> "2024-01-02 10:30:00|2024-01-02 10:30:00",
+      "SELECT t + INTERVAL '2 hours', t - INTERVAL '2 hours' FROM tt" -> "12:30:00|08:30:00",
+      "SELECT t - TIME '01:00', t - u FROM tt" -> "09:30:00|09:15:00",
+      "SELECT TIME '10:00' - TIME '01:00'" -> "09:00:00",
+      "SELECT d + x FROM (SELECT d, t AS x FROM tt) s" -> "2024-01-02 10:30:00"))
+  }
+
+  test("array || with a computed element, a sub-array or NULL matches live pg") {
+    withTables(Nil, Nil)(Seq(
+      "SELECT ARRAY[1,2] || -1" -> "{1,2,-1}",
+      "SELECT ARRAY[1,2] || (1+1)" -> "{1,2,2}",
+      "SELECT ARRAY[ARRAY[1,2]] || ARRAY[3,4]" -> "{{1,2},{3,4}}",
+      "SELECT ARRAY[1,2] || NULL" -> "{1,2}"))
+  }
+
+  test("shapes the removed token passes handled keep their live-pg values") {
+    withTables(Seq("TABLE tt", "TABLE xa", "TABLE nt"), timeTable ++ Seq(
+        "CREATE TABLE xa(xs int[])", "INSERT INTO xa VALUES (ARRAY[1,2])",
+        "CREATE TABLE nt(x int)", "INSERT INTO nt VALUES (1), (NULL), (0)"))(Seq(
+      "SELECT ARRAY[1,2] || 3, 0 || ARRAY[1,2]" -> "{1,2,3}|{0,1,2}",
+      "SELECT '{1,2}'::int[] || 3, 5 || '{1,2}'::int[]" -> "{1,2,3}|{5,1,2}",
+      "SELECT string_to_array('a,b', ',') || 'c'::text, ARRAY['x'] || lower('Y')" ->
+        "{a,b,c}|{x,y}",
+      "SELECT array_append(xs, 9) || 7 FROM xa" -> "{1,2,9,7}",
+      "SELECT ARRAY[1,2] || '{3}', 'a' || 'b' || 'c', 1 || 'x'" -> "{1,2,3}|abc|1x",
+      "SELECT B'1010' & B'0110', 5::bit(4)" -> "0010|0101",
+      "SELECT DATE '2024-01-02' + '03:00'::time" -> "2024-01-02 03:00:00",
+      "SELECT ts + TIME '01:00', d + '03:00'::time + INTERVAL '1 hour' FROM tt" ->
+        "2024-01-02 02:00:00|2024-01-02 04:00:00",
+      // explicit NULLS clauses and an aggregate's input order
+      "SELECT coalesce(x::text,'N') FROM nt ORDER BY x NULLS FIRST" -> "N\n0\n1",
+      "SELECT coalesce(x::text,'N') FROM nt ORDER BY x DESC NULLS LAST" -> "1\n0\nN",
+      "SELECT string_agg(coalesce(x::text,'N'), ',' ORDER BY x) FROM nt" -> "0,1,N"))
+  }
+
+  test("ORDER BY puts NULLs last ascending and first descending, like live pg") {
+    withTables(Seq("TABLE nt"),
+        Seq("CREATE TABLE nt(x int)", "INSERT INTO nt VALUES (1), (NULL), (0)"))(Seq(
+      "SELECT coalesce(x::text,'N') FROM nt ORDER BY x" -> "0\n1\nN",
+      "SELECT coalesce(x::text,'N') FROM nt ORDER BY x DESC" -> "N\n1\n0",
+      "SELECT coalesce(x::text,'N') FROM (SELECT x FROM nt ORDER BY x LIMIT 2) q ORDER BY 1" ->
+        "0\n1",
+      "SELECT coalesce(x::text,'N'), row_number() OVER (ORDER BY x) FROM nt ORDER BY 2" ->
+        "0|1\n1|2\nN|3"))
+  }
+
+  test("BETWEEN over enum and inet columns compares like live pg") {
+    withTables(Seq("TABLE em", "TYPE mood", "TABLE nw"), moodTable ++ Seq(
+        "CREATE TABLE nw(a inet)",
+        "INSERT INTO nw VALUES ('10.1.2.9'), ('10.1.2.10'), ('9.0.0.1')"))(Seq(
+      "SELECT m FROM em WHERE m BETWEEN 'sad' AND 'ok' ORDER BY m" -> "sad\nok",
+      "SELECT a FROM nw WHERE a BETWEEN '9.0.0.0' AND '10.1.2.9' ORDER BY a" ->
+        "9.0.0.1\n10.1.2.9"))
+  }
+
+  test("pg_typeof and max keep enum, bit and time types, like live pg") {
+    withTables(Seq("TABLE em", "TYPE mood", "TABLE bt", "TABLE tt"),
+        moodTable ++ bitTable ++ timeTable)(Seq(
+      "SELECT pg_typeof(m) FROM em WHERE k = 2" -> "mood",
+      "SELECT pg_typeof(a), pg_typeof(v) FROM bt" -> "bit|bit varying",
+      "SELECT pg_typeof(t) FROM tt" -> "time without time zone",
+      "SELECT max(t) FROM tt" -> "10:30:00",
+      "SELECT pg_typeof(max(t)) FROM tt" -> "time without time zone"))
+  }
+
+  test("ORDER BY over range values sorts in range order, like live pg") {
+    withTables(Seq("TABLE rg"), Seq("CREATE TABLE rg(r int4range)",
+        "INSERT INTO rg VALUES ('[1,10)'), ('[1,2)'), ('empty'), ('[0,3)')"))(Seq(
+      "SELECT r FROM rg ORDER BY r" -> "empty\n[0,3)\n[1,2)\n[1,10)",
+      "SELECT string_agg(r::text, ' ' ORDER BY r) FROM rg" -> "empty [0,3) [1,2) [1,10)"))
   }
 }
