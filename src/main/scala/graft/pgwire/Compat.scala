@@ -998,9 +998,41 @@ object Compat {
     }
   }
 
-  /** Words that end an ORDER BY list (after at least one item token). */
-  private val orderByEnd = Set("LIMIT", "OFFSET", "FETCH", "FOR", "ROWS", "RANGE",
-    "GROUPS", "UNION", "INTERSECT", "EXCEPT", "WINDOW")
+  /** Words that end an ORDER BY list (after at least one item token):
+    * pg's reserved clause starters; the window frame units, which pg
+    * leaves unreserved, end it only before a frame ([[endsOrderBy]]). */
+  private val orderByEnd = Set("LIMIT", "OFFSET", "FETCH", "FOR", "UNION", "INTERSECT",
+    "EXCEPT", "WINDOW")
+  private val frameUnits = Set("ROWS", "RANGE", "GROUPS")
+
+  /** Does the word at `k`, inside an ORDER BY item outside any CASE,
+    * start the next clause? Never after `.` or an operator, where it
+    * names a column (`q.rows`, `x + range`); a frame unit only where a
+    * frame follows: BETWEEN, UNBOUNDED or CURRENT next, or a PRECEDING
+    * or FOLLOWING bound before the window's closing parenthesis. */
+  private def endsOrderBy(ts: ArrayBuffer[Tok], k: Int): Boolean = {
+    val w = ts(k).text.toUpperCase
+    (orderByEnd.contains(w) || frameUnits.contains(w) && frameFollows(ts, k)) && {
+      val p = prevIdx(ts, k)
+      p < 0 || ts(p).kind != Op || ts(p).is(")") || ts(p).is("]")
+    }
+  }
+
+  /** Does a window frame extent follow the frame unit at `k`? */
+  private def frameFollows(ts: ArrayBuffer[Tok], k: Int): Boolean = {
+    val n = nextIdx(ts, k)
+    n >= 0 && Seq("BETWEEN", "UNBOUNDED", "CURRENT").exists(ts(n).isWord) || {
+      var j = k + 1
+      var depth = 0
+      var bound = false
+      while (j < ts.length && depth >= 0 && !bound) {
+        if (ts(j).is("(")) depth += 1 else if (ts(j).is(")")) depth -= 1
+        bound = depth == 0 && (ts(j).isWord("PRECEDING") || ts(j).isWord("FOLLOWING"))
+        j += 1
+      }
+      bound
+    }
+  }
 
   /** Append ` NULLS LAST` (` NULLS FIRST` after DESC) to each item of
     * the ORDER BY list after token `by` that has no NULLS or USING. */
@@ -1009,11 +1041,12 @@ object Compat {
     var depth = 0
     var last = -1 // the current item's last token
     var explicit = false
+    var cases = 0 // open CASE expressions
     var done = false
     while (!done) {
       val t = if (j < ts.length) ts(j) else Tok(Op, ";")
       if (depth == 0 && (t.is(",") || t.is(")") || t.is(";") ||
-          last >= 0 && t.kind == Word && orderByEnd.contains(t.text.toUpperCase))) {
+          last >= 0 && cases == 0 && t.kind == Word && endsOrderBy(ts, j))) {
         if (last >= 0 && !explicit) {
           val nulls = if (ts(last).isWord("DESC")) "FIRST" else "LAST"
           ts.insertAll(last + 1, Seq(Tok(Ws, " "), Tok(Word, "NULLS"), Tok(Ws, " "), Tok(Word, nulls)))
@@ -1024,6 +1057,7 @@ object Compat {
         explicit = false
       } else {
         if (t.is("(")) depth += 1 else if (t.is(")")) depth -= 1
+        if (t.isWord("CASE")) cases += 1 else if (t.isWord("END") && cases > 0) cases -= 1
         if (t.kind != Ws) {
           last = j
           explicit ||= depth == 0 && (t.isWord("NULLS") || t.isWord("USING"))

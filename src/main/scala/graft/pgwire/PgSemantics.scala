@@ -1,5 +1,6 @@
 package graft.pgwire
 
+import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -75,7 +76,7 @@ object PgSemantics {
 
   private def rewriteExpressions(plan: LogicalPlan): LogicalPlan = {
     val ops = new FamilyOps(plan)
-    plan.transformAllExpressions {
+    lazy val rewrite: PartialFunction[Expression, Expression] = {
       // the type-family operators, orderings and functions by operand
       // type — first, before the int-division and unknown-literal
       // cases below claim the analyzer's casts over these
@@ -323,16 +324,20 @@ object PgSemantics {
 
       // array `||` element / element `||` array → append / prepend, and
       // T[][] `||` T[] (either way round) appends / prepends the
-      // sub-array
+      // sub-array; both sides widen to the common element type, as pg
+      // resolves anyarray || anyelement (`ARRAY[1,2] || 3000000000` is
+      // bigint[]); no common type (text beside int) stays an error
       case c @ Concat(Seq(l0, r0))
           if !c.resolved && l0.resolved && r0.resolved &&
             !c.children.exists(isStringLit) &&
-            arrayDepth(l0.dataType) != arrayDepth(r0.dataType) =>
+            arrayDepth(l0.dataType) != arrayDepth(r0.dataType) &&
+            pendType(stripImplicitCasts(l0), stripImplicitCasts(r0)).isDefined =>
         val (l, r) = (stripImplicitCasts(l0), stripImplicitCasts(r0))
+        val at = pendType(l, r).get
         if (arrayDepth(l.dataType) > arrayDepth(r.dataType))
-          ArrayAppend(l, castTo(r, l.dataType.asInstanceOf[ArrayType].elementType))
+          ArrayAppend(castTo(l, at), castTo(r, at.elementType))
         else
-          ArrayPrepend(r, castTo(l, r.dataType.asInstanceOf[ArrayType].elementType))
+          ArrayPrepend(castTo(r, at), castTo(l, at.elementType))
 
       // `@>` / `<@` / `&&` with a string literal beside an array
       case p @ graft.functions.PgJsonExpressions.PgContains(l, r)
@@ -466,12 +471,14 @@ object PgSemantics {
       case x: graft.functions.PgJsonExpressions.PgJsonEach
           if !x.jsonb && x.child.resolved && ops.typeOf(x.child).contains("jsonb") =>
         x.copy(jsonb = true)
-    }.transformAllExpressions {
-      // after the rewrites above, so the name is the rewritten value's
+
+      // pg_typeof names its argument's type once no case above applies
+      // under it any more, so the name is the rewritten value's
       case p: graft.functions.PgMiscExpressions.PgTypeOf
-          if p.pgName.isEmpty && p.child.resolved =>
+          if p.pgName.isEmpty && p.child.resolved && !p.child.exists(rewrite.isDefinedAt) =>
         p.copy(pgName = Some(ops.typeName(p.child)))
     }
+    plan.transformAllExpressions(rewrite)
   }
 
   // ---- the pg type of a value --------------------------------------------
@@ -646,13 +653,17 @@ object PgSemantics {
     }
   }
 
-  /** Each range type's element: its pg name, and the type its bounds'
-    * canonical text sorts as (ISO date/timestamp text sorts in time order). */
-  private val rangeElems: Map[String, (String, DataType)] = Map(
-    "int4range" -> ("integer", LongType), "int8range" -> ("bigint", LongType),
-    "numrange" -> ("numeric", DoubleType), "daterange" -> ("date", StringType),
-    "tsrange" -> ("timestamp without time zone", StringType),
-    "tstzrange" -> ("timestamp with time zone", StringType))
+  /** Each range type's element: its pg name, and the types its bounds'
+    * canonical text sorts as, most significant first. A numrange bound
+    * sorts as a double, then as a decimal(38,18); only bounds that tie
+    * as doubles and differ past 20 integer or 18 fractional digits
+    * compare inexactly. */
+  private val rangeElems: Map[String, (String, Seq[DataType])] = Map(
+    "int4range" -> ("integer", Seq(LongType)), "int8range" -> ("bigint", Seq(LongType)),
+    "numrange" -> ("numeric", Seq(DoubleType, DecimalType(38, 18))),
+    "daterange" -> ("date", Seq(DateType)),
+    "tsrange" -> ("timestamp without time zone", Seq(TimestampNTZType)),
+    "tstzrange" -> ("timestamp with time zone", Seq(TimestampType)))
 
   /** Functions of an enum value that read only its type: → the forms
     * taking the type name (`enum_first_n('mood')`). */
@@ -758,11 +769,14 @@ object PgSemantics {
       sortKey(e).orElse(typeOf(e).flatMap(rangeElems.get).map { case (_, elem) =>
         val v = stripImplicitCasts(e)
         def f(fn: String) = fnCall(fn, Seq(v))
+        def bound(name: String, fn: String) = elem.zipWithIndex.flatMap { case (t, i) =>
+          Seq(Literal(s"$name$i"), Cast(f(fn), t, None, EvalMode.TRY))
+        }
         val key = CreateNamedStruct(Seq(
           Literal("e"), Not(f("isempty")),
-          Literal("li"), Not(f("lower_inf")), Literal("l"), Cast(f("range_lower"), elem),
+          Literal("li"), Not(f("lower_inf"))) ++ bound("l", "range_lower") ++ Seq(
           Literal("lx"), Not(f("lower_inc")),
-          Literal("ui"), f("upper_inf"), Literal("u"), Cast(f("range_upper"), elem),
+          Literal("ui"), f("upper_inf")) ++ bound("u", "range_upper") ++ Seq(
           Literal("ux"), f("upper_inc")))
         If(IsNull(v), Literal(null), key)
       })
@@ -1075,6 +1089,18 @@ object PgSemantics {
 
   private def castTo(e: Expression, dt: DataType): Expression =
     if (e.dataType == dt) e else Cast(e, dt)
+
+  /** The array type `arr || elem` (either way round) yields: the
+    * deeper side's element type widened with the other side's type. */
+  private def pendType(l: Expression, r: Expression): Option[ArrayType] = {
+    val (arr, elem) = if (arrayDepth(l.dataType) > arrayDepth(r.dataType)) (l, r) else (r, l)
+    val at = arr.dataType.asInstanceOf[ArrayType]
+    val (et, ot) = (at.elementType, elem.dataType)
+    // no string promotion: pg has no common type for text beside int
+    if (TypeCoercion.hasStringType(et) != TypeCoercion.hasStringType(ot) &&
+        et != NullType && ot != NullType) None
+    else TypeCoercion.findWiderTypeForTwo(et, ot).map(ArrayType(_, at.containsNull))
+  }
 
   /** Array nesting depth of a type (0 for a non-array). */
   private def arrayDepth(dt: DataType): Int = dt match {

@@ -319,6 +319,14 @@ class PgTypeDispatchSpec extends SparkSpec with BeforeAndAfterAll {
       "SELECT ARRAY[1,2] || NULL" -> "{1,2}"))
   }
 
+  test("array || widens the array to the element's type, like live pg") {
+    withTables(Nil, Nil)(Seq(
+      "SELECT ARRAY[1,2] || 3000000000, 3000000000 || ARRAY[1,2]" ->
+        "{1,2,3000000000}|{3000000000,1,2}",
+      "SELECT ARRAY[ARRAY[1,2]] || ARRAY[3000000000]" -> "{{1,2},{3000000000}}",
+      "SELECT (ARRAY[1,2] || 2.5)[3], pg_typeof(ARRAY[1,2] || 2.5)" -> "2.5|numeric[]"))
+  }
+
   test("shapes the removed token passes handled keep their live-pg values") {
     withTables(Seq("TABLE tt", "TABLE xa", "TABLE nt"), timeTable ++ Seq(
         "CREATE TABLE xa(xs int[])", "INSERT INTO xa VALUES (ARRAY[1,2])",
@@ -350,6 +358,18 @@ class PgTypeDispatchSpec extends SparkSpec with BeforeAndAfterAll {
         "0|1\n1|2\nN|3"))
   }
 
+  test("ORDER BY over columns named like frame units keeps pg's NULL placement") {
+    withTables(Seq("TABLE q"), Seq("CREATE TABLE q(rows int, range int)",
+        "INSERT INTO q VALUES (1, 2), (2, 1), (NULL, 0)"))(Seq(
+      "SELECT coalesce(q.rows::text,'N') FROM q ORDER BY q.rows DESC" -> "N\n2\n1",
+      "SELECT coalesce(rows::text,'N') FROM q ORDER BY q.rows + range DESC, rows" -> "N\n1\n2",
+      "SELECT coalesce(rows::text,'N') FROM q ORDER BY CASE WHEN rows > 1 THEN range ELSE -range END" ->
+        "1\nN\n2",
+      "SELECT coalesce(rows::text,'N'), sum(rows) OVER (ORDER BY rows ROWS 1 PRECEDING) FROM q ORDER BY rows" ->
+        "1|1\n2|3\nN|2",
+      "SELECT coalesce(rows::text,'N') FROM q ORDER BY ARRAY[rows][1] DESC LIMIT 2" -> "N\n2"))
+  }
+
   test("BETWEEN over enum and inet columns compares like live pg") {
     withTables(Seq("TABLE em", "TYPE mood", "TABLE nw"), moodTable ++ Seq(
         "CREATE TABLE nw(a inet)",
@@ -374,5 +394,9 @@ class PgTypeDispatchSpec extends SparkSpec with BeforeAndAfterAll {
         "INSERT INTO rg VALUES ('[1,10)'), ('[1,2)'), ('empty'), ('[0,3)')"))(Seq(
       "SELECT r FROM rg ORDER BY r" -> "empty\n[0,3)\n[1,2)\n[1,10)",
       "SELECT string_agg(r::text, ' ' ORDER BY r) FROM rg" -> "empty [0,3) [1,2) [1,10)"))
+    // numrange bounds that tie as doubles still order exactly
+    withTables(Seq("TABLE nr"), Seq("CREATE TABLE nr(r numrange)",
+        "INSERT INTO nr VALUES ('[1.00000000000000002,2)'), ('[1.00000000000000001,3)')"))(Seq(
+      "SELECT r FROM nr ORDER BY r" -> "[1.00000000000000001,3)\n[1.00000000000000002,2)"))
   }
 }
