@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 /** Library entry point for Spark's extensions mechanism: build a
   * session with `spark.sql.extensions=graft.GraftExtensions` (or
@@ -22,5 +24,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (the pgwire Handlers path), so plain Spark-API queries on the
     // same session keep Spark semantics
     ext.injectResolutionRule(_ => graft.pgwire.PgSemantics.Resolution)
+    // constants read from `references`, not spliced into generated
+    // code; pre-columnar rules run before CollapseCodegenStages, in
+    // the plain preparations and in every AQE stage
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = graft.plans.ReferenceLiterals
+    })
   }
 }

@@ -44,7 +44,11 @@ object Tables {
       // samples). 2000 entries keeps every unit resident; class
       // metadata for ~2000 small classes is a few tens of MB — noise
       // against the 128 GiB heap, and the same knob helps any
-      // production session running a mixed query workload.
+      // production session running a mixed query workload. Entries
+      // are statement SHAPES, not statements: constants reach the
+      // generated code through `references` (plans.ReferenceLiterals),
+      // so a keyed read that comes back with a new key reuses its
+      // classes instead of adding (and evicting) two more.
       "spark.sql.codegen.cache.maxEntries" -> "2000")
 
   /** Read one table as a DataFrame. Pure — requires [[sessionConfs]]

@@ -41,6 +41,9 @@ object Bits extends Serializable {
         val b = checkBits(s)
         if (b.length >= n) b.substring(0, n) else b.padTo(n, '0').mkString
       })
+    // varbit(n) cast: truncate on the right, never pad (pg)
+    u.register("pg_varbit_cast", (s: String, n: Int) =>
+      if (s == null) null else checkBits(s).take(n))
     // int → bit(n): low n bits, two's complement
     u.register("pg_int_to_bit", (v: Long, n: Int) =>
       if (n <= 0) ""

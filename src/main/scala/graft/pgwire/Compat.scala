@@ -3132,12 +3132,13 @@ object Compat {
     }
   }
 
+  private val cmpOps = Set("=", "<>", "!=", "<", "<=", ">", ">=")
+
   /** `x = ANY(arr)` → `array_contains(arr, x)`;
     * `x <> ALL(arr)` / `x != ALL(arr)` → `NOT array_contains(arr, x)`
     * (reference: rules.rs:304-449 — same two supported cases).
     */
   private def rewriteAnyAll(ts: ArrayBuffer[Tok]): Unit = {
-    val cmpOps = Set("=", "<>", "!=", "<", "<=", ">", ">=")
     var i = 0
     while (i < ts.length) {
       if (ts(i).kind == Op && cmpOps.contains(ts(i).text)) {
@@ -4013,43 +4014,69 @@ object Compat {
     * has one; NULL when no match). Spark's FROM/FOR grammar is
     * position-only, so a string-literal FROM operand (with no FOR)
     * reroutes to the pg_substring_re UDF. */
-  /** `x BETWEEN SYMMETRIC a AND b` → `x BETWEEN least(a,b) AND
-    * greatest(a,b)` (Spark has no SYMMETRIC). `a` runs to the
-    * depth-0 AND; `b` is the following value extent. */
+  /** `x [NOT] BETWEEN SYMMETRIC a AND b` → pg's own definition,
+    * `(x BETWEEN a AND b OR x BETWEEN b AND a)`, the NOT form wrapped
+    * in `NOT (…)` (Spark has no SYMMETRIC). Each BETWEEN then compares
+    * in the operands' pg type (an enum's label order, inet's network
+    * order), which a spelled-out least/greatest of the bounds would
+    * not. `a` runs to the depth-0 AND; `b` is the following value
+    * extent. */
   private def rewriteBetweenSymmetric(ts: ArrayBuffer[Tok]): Unit = {
     var i = 0
     while (i < ts.length) {
-      if (ts(i).isWord("BETWEEN")) {
-        val sym = nextIdx(ts, i)
-        if (sym >= 0 && ts(sym).isWord("SYMMETRIC")) {
-          // find the depth-0 AND after SYMMETRIC
-          var j = sym + 1; var depth = 0; var andIdx = -1
-          while (j < ts.length && andIdx < 0) {
-            if (ts(j).is("(") || ts(j).is("[")) depth += 1
-            else if (ts(j).is(")") || ts(j).is("]")) depth -= 1
-            else if (depth == 0 && ts(j).isWord("AND")) andIdx = j
-            j += 1
-          }
-          if (andIdx > 0) {
-            val bStart = nextIdx(ts, andIdx)
-            if (bStart >= 0) {
-              val bEnd = extendValue(ts, bStart)
-              val aToks = ts.slice(sym + 1, andIdx).toVector
-              val bToks = ts.slice(bStart, bEnd + 1).toVector
-              val lo = ArrayBuffer(Tok(Word, " least(")) ++ aToks ++
-                ArrayBuffer(Tok(Op, ",")) ++ bToks ++ ArrayBuffer(Tok(Word, ")"))
-              val hi = ArrayBuffer(Tok(Word, " greatest(")) ++ aToks ++
-                ArrayBuffer(Tok(Op, ",")) ++ bToks ++ ArrayBuffer(Tok(Word, ")"))
-              // splice: BETWEEN <lo> AND <hi>
-              ts.remove(sym, bEnd - sym + 1)
-              ts.insertAll(sym, lo ++ ArrayBuffer(Tok(Word, " AND")) ++ hi)
-              i = sym
-            }
-          }
+      val sym = if (ts(i).isWord("BETWEEN")) nextIdx(ts, i) else -1
+      if (sym >= 0 && ts(sym).isWord("SYMMETRIC")) {
+        // find the depth-0 AND after SYMMETRIC
+        var j = sym + 1; var depth = 0; var andIdx = -1
+        while (j < ts.length && andIdx < 0) {
+          if (ts(j).is("(") || ts(j).is("[")) depth += 1
+          else if (ts(j).is(")") || ts(j).is("]")) depth -= 1
+          else if (depth == 0 && ts(j).isWord("AND")) andIdx = j
+          j += 1
+        }
+        val bStart = if (andIdx > 0) nextIdx(ts, andIdx) else -1
+        val before = prevIdx(ts, i)
+        val negated = before >= 0 && ts(before).isWord("NOT")
+        val xEnd = if (negated) prevIdx(ts, before) else before
+        if (bStart >= 0 && xEnd >= 0) {
+          val bEnd = extendValue(ts, bStart)
+          val xStart = betweenOperandStart(ts, xEnd)
+          val x = ts.slice(xStart, xEnd + 1).toSeq
+          val a = ts.slice(nextIdx(ts, sym), andIdx).toSeq
+          val b = ts.slice(bStart, bEnd + 1).toSeq
+          def word(w: String) = Seq(Tok(Ws, " "), Tok(Word, w), Tok(Ws, " "))
+          def between(lo: Seq[Tok], hi: Seq[Tok]) = x ++ word("BETWEEN") ++ lo ++ word("AND") ++ hi
+          val expr = (if (negated) Seq(Tok(Word, "NOT"), Tok(Ws, " ")) else Nil) ++
+            Seq(Tok(Op, "(")) ++ between(a, b) ++ word("OR") ++ between(b, a) ++ Seq(Tok(Op, ")"))
+          ts.remove(xStart, bEnd - xStart + 1)
+          ts.insertAll(xStart, expr)
+          i = xStart + expr.length - 1
         }
       }
       i += 1
     }
+  }
+
+  /** Start of BETWEEN's left operand ending at `end`: back to the
+    * nearest depth-0 clause keyword, comma, comparison or open paren
+    * (BETWEEN binds looser than arithmetic, tighter than `=`). */
+  private def betweenOperandStart(ts: ArrayBuffer[Tok], end: Int): Int = {
+    var j = end; var depth = 0; var start = end
+    while (j >= 0) {
+      val t = ts(j)
+      if (t.kind != Ws) {
+        if (t.is(")") || t.is("]") || t.isWord("END")) depth += 1
+        else if (t.is("(") || t.is("[") || t.isWord("CASE")) {
+          if (depth == 0) return start
+          depth -= 1
+        } else if (depth == 0 && (t.is(",") ||
+            (t.kind == Op && cmpOps.contains(t.text)) ||
+            (t.kind == Word && lhsClauseKeywords.contains(t.text.toLowerCase)))) return start
+        start = j
+      }
+      j -= 1
+    }
+    start
   }
 
   /** `concat(a, b, …)` → `concat_ws('', a, b, …)`: pg concat skips
@@ -4072,9 +4099,10 @@ object Compat {
   }
 
   /** pg bit strings (§8.10.1), the grammar Spark cannot parse:
-    * `B'1010'` literals → bit_in, `X'1F'::bit(n)` → bit_in_hex, and
-    * `::bit(n)` / `::varbit(n)` → one pg_bit_cast call whatever the
-    * operand (`::bit` / `::varbit` without a length → bit_in). Values
+    * `B'1010'` literals → bit_in, `X'1F'::bit(n)` → bit_in_hex,
+    * `::bit(n)` → one pg_bit_cast call whatever the operand, and
+    * `::varbit(n)` → pg_varbit_cast (`::bit` / `::varbit` without a
+    * length → bit_in). Values
     * are the literal '0'/'1' text, so substring/overlay/position/
     * length/|| come free from the string builtins; the analyzer rule
     * (PgSemantics) dispatches the bit operators, casts and accessors
@@ -4125,7 +4153,10 @@ object Compat {
               end = close
             }
           }
-          val fn = if (nTok.isDefined) "pg_bit_cast" else "bit_in"
+          val fn =
+            if (nTok.isEmpty) "bit_in"
+            else if (ts(ty).isWord("varbit")) "pg_varbit_cast"
+            else "pg_bit_cast"
           val tail = nTok.map(n => s", $n)").getOrElse(")")
           ts.remove(i, end - i + 1)
           ts.insert(p + 1, Tok(Op, tail))

@@ -379,6 +379,36 @@ class PgTypeDispatchSpec extends SparkSpec with BeforeAndAfterAll {
         "9.0.0.1\n10.1.2.9"))
   }
 
+  // expected values below follow pg 15's documented rules (§9.2
+  // BETWEEN SYMMETRIC, §8.10 varbit casts), not a live cluster
+  test("BETWEEN SYMMETRIC compares in the operands' type, like pg") {
+    withTables(Seq("TABLE em", "TYPE mood", "TABLE nw", "TABLE mn"), moodTable ++ Seq(
+        "CREATE TABLE nw(a inet)",
+        "INSERT INTO nw VALUES ('10.1.2.9'), ('10.1.2.10'), ('9.0.0.1')",
+        "CREATE TABLE mn(m money, x int)",
+        "INSERT INTO mn VALUES ('$1.50', 1), ('$12.00', 5), ('$3.25', 10)"))(Seq(
+      "SELECT m FROM em WHERE m BETWEEN SYMMETRIC 'ok' AND 'sad' ORDER BY m" -> "sad\nok",
+      "SELECT m FROM em WHERE m NOT BETWEEN SYMMETRIC 'ok' AND 'sad'" -> "happy",
+      "SELECT a FROM nw WHERE a BETWEEN SYMMETRIC '10.1.2.9' AND '9.0.0.0' ORDER BY a" ->
+        "9.0.0.1\n10.1.2.9",
+      "SELECT x FROM mn WHERE m BETWEEN SYMMETRIC '$12.00' AND '$2.00' ORDER BY x" -> "5\n10",
+      "SELECT x FROM mn WHERE x * 2 BETWEEN SYMMETRIC 12 AND 2 ORDER BY x" -> "1\n5",
+      "SELECT x FROM mn WHERE x = 10 AND x * 2 NOT BETWEEN SYMMETRIC 12 AND 2" -> "10",
+      "SELECT 2 BETWEEN SYMMETRIC 3 AND 1, -1.5 NOT BETWEEN SYMMETRIC 0 AND -2" -> "t|f"))
+  }
+
+  test("an explicit varbit(n) cast truncates, never pads, and is bit varying, like pg") {
+    val c = connect()
+    val r = c.query("SELECT B'101'::varbit(8), B'1010101011'::varbit(4), B'11'::bit varying(1)")
+    assert(r.errors === Nil, r.errors)
+    assert(text(r) === "101|1010|1")
+    assert(r.fields.map(_._2) === Seq(1562, 1562, 1562))
+    assertPinned(c, Seq(
+      "SELECT pg_typeof(B'101'::varbit(8)), length(B'101'::varbit(8))" -> "bit varying|3",
+      "SELECT B'101'::bit(8)" -> "10100000"))
+    c.close()
+  }
+
   test("pg_typeof and max keep enum, bit and time types, like live pg") {
     withTables(Seq("TABLE em", "TYPE mood", "TABLE bt", "TABLE tt"),
         moodTable ++ bitTable ++ timeTable)(Seq(
