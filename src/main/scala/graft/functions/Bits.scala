@@ -27,6 +27,7 @@ object Bits extends Serializable {
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     val u = spark.udf
     u.register("bit_in", (s: String) => if (s == null) null else checkBits(s))
+    u.register("varbit_in", (s: String) => if (s == null) null else checkBits(s))
     u.register("bit_in_hex", (s: String) =>
       if (s == null) null
       else s.flatMap { c =>

@@ -4101,8 +4101,8 @@ object Compat {
   /** pg bit strings (§8.10.1), the grammar Spark cannot parse:
     * `B'1010'` literals → bit_in, `X'1F'::bit(n)` → bit_in_hex,
     * `::bit(n)` → one pg_bit_cast call whatever the operand, and
-    * `::varbit(n)` → pg_varbit_cast (`::bit` / `::varbit` without a
-    * length → bit_in). Values
+    * `::varbit(n)` → pg_varbit_cast (without a length, `::bit` →
+    * bit_in and `::varbit` → varbit_in, typed bit varying). Values
     * are the literal '0'/'1' text, so substring/overlay/position/
     * length/|| come free from the string builtins; the analyzer rule
     * (PgSemantics) dispatches the bit operators, casts and accessors
@@ -4154,9 +4154,8 @@ object Compat {
             }
           }
           val fn =
-            if (nTok.isEmpty) "bit_in"
-            else if (ts(ty).isWord("varbit")) "pg_varbit_cast"
-            else "pg_bit_cast"
+            if (ts(ty).isWord("varbit")) nTok.fold("varbit_in")(_ => "pg_varbit_cast")
+            else nTok.fold("bit_in")(_ => "pg_bit_cast")
           val tail = nTok.map(n => s", $n)").getOrElse(")")
           ts.remove(i, end - i + 1)
           ts.insert(p + 1, Tok(Op, tail))

@@ -1997,12 +1997,13 @@ DETAIL:  Failing row contains ${renderRowDetail(bad(0), schema, zone)}.""")
   }
 
   /** Swap a catalog table for a new schema + contents. `next` READS
-    * the old table, so it spills to a temp directory first; the old
-    * table is then dropped, the new one created with `fields` (the
-    * unique set re-attached to field 0, the CREATE TABLE convention),
-    * and the spill re-inserted positionally. One distributed pass —
-    * nondeterministic fill expressions (nextval, random) evaluate
-    * exactly once, at spill time. */
+    * the old table, so it is written first, cast by position to
+    * `fields`, into a [[TableStage]]; the old table is then dropped,
+    * the new one created with `fields` (the unique set re-attached to
+    * field 0, the CREATE TABLE convention), and the stage swapped in as
+    * its directory. One distributed pass — nondeterministic fill
+    * expressions (nextval, random) evaluate exactly once, and the same
+    * job counts the rows. */
   private def replaceTable(spark: SparkSession, table: String,
       fields: Seq[StructField], uniques: Seq[PgConstraints.Unique],
       next: org.apache.spark.sql.DataFrame,
@@ -2035,25 +2036,17 @@ DETAIL:  Failing row contains ${renderRowDetail(bad(0), schema, zone)}.""")
       attach("pg.checks", PgConstraints.serializeChecks(cks))
     if (fkz.nonEmpty)
       attach("pg.fks", PgConstraints.serializeFks(fkz))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ddl_")
-    val written = try {
-      next.write.mode("overwrite").parquet(tmp.toString)
+    val written = TableStage(spark) { stage =>
+      val (counting, n) = TableStage.counted(next, org.apache.spark.sql.functions.lit(1))
+      val dir = stage.write(table, counting, Some(StructType(cleaned)))
       runSql(spark, s"DROP TABLE ${qid(table)}").collect()
       spark.catalog.createTable(table, "parquet",
         StructType(cleaned), Map.empty[String, String])
       PgConstraints.register(table, uniques)
       PgConstraints.registerChecks(table, cks)
       PgConstraints.registerFks(table, fkz)
-      val spilled = spark.read.parquet(tmp.toString)
-      val n = spilled.count() // parquet footer metadata — no scan
-      spilled.write.mode("overwrite").insertInto(table)
-      n
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => try java.nio.file.Files.deleteIfExists(p) catch {
-          case scala.util.control.NonFatal(_) =>
-        })
+      stage.swapIn(table, dir)
+      n()
     }
     PgSequences.dropTableSerials(tNorm)
     PgSequences.registerTableSerials(tNorm, cleaned.toSeq.map(f => f.name ->
@@ -2339,17 +2332,15 @@ HINT:  Truncate table "$childT" at the same time, or use TRUNCATE ... CASCADE.""
     spark.catalog.createTable(name, "parquet", projected.schema,
       Map.empty[String, String])
     val n = if (withData) {
-      projected.write.mode("append").insertInto(name)
-      outputRowsOf(spark, name)
+      val (counting, n) = TableStage.counted(projected, org.apache.spark.sql.functions.lit(1))
+      TableStage.rewrite(spark, Seq(name -> counting))
+      n()
     } else 0L
     PgMatViews.register(name,
       PgMatViews.MatView(body, rewritten, populated = withData))
     PgCatalog.invalidate()
     Complete(if (withData) s"SELECT $n" else "CREATE MATERIALIZED VIEW")
   }
-
-  private def outputRowsOf(spark: SparkSession, table: String): Long =
-    spark.table(table).count()
 
   private def handleRefreshMatView(spark: SparkSession, sql0: String): PgResult = {
     val sql = sql0.trim.stripSuffix(";").trim
@@ -3420,42 +3411,52 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
   private def storedAs(f: StructField, value: String): String =
     if (familyOf(f).isDefined) value else s"CAST(($value) AS ${f.dataType.sql})"
 
-  /** Replace a catalog table's contents with `next`, spilling through
-    * a temp directory: Spark rejects overwriting a table from a plan
-    * that reads it. */
+  /** Replace a catalog table's contents with `next`. */
   private def overwriteTable(spark: SparkSession, table: String,
       next: org.apache.spark.sql.DataFrame): Unit =
     overwriteTables(spark, Seq(table -> next))
 
-  /** Stage-then-swap multi-table rewrite: EVERY new state materializes
-    * to scratch parquet BEFORE any table is overwritten — a cascade
-    * step reading a parent being rewritten in the same statement would
-    * otherwise re-scan deleted files, and a constraint failure
-    * surfacing during stage N's write would leave stages 1..N-1
-    * applied (pg's statement atomicity; a crash between the final
-    * swaps remains the documented single-writer caveat). */
+  /** Stage-then-swap multi-table rewrite ([[TableStage.rewrite]]):
+    * EVERY new state is written once, beside its table, BEFORE any
+    * table's directory is swapped — a cascade step reading a parent
+    * being rewritten in the same statement would otherwise re-scan
+    * swapped-out files, and a constraint failure surfacing during
+    * stage N's write would leave stages 1..N-1 applied (pg's
+    * statement atomicity; a crash between the final swaps remains the
+    * documented single-writer caveat). Inside a transaction block each
+    * table's pre-state is journaled first. */
   private def overwriteTables(spark: SparkSession,
       writes: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit = {
-    if (writes.isEmpty) return
-    // inside a transaction block: journal each table's pre-state
-    // (hardlink snapshot) before the first write touches it
     writes.foreach { case (t, _) => TxnCtx.journalWrite(spark, t) }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dml_")
-    try {
-      val staged = writes.zipWithIndex.map { case ((t, df), i) =>
-        val p = tmp.resolve(s"w$i").toString
-        df.write.mode("overwrite").parquet(p)
-        t -> p
-      }
-      staged.foreach { case (t, p) =>
-        spark.read.parquet(p).write.mode("overwrite").insertInto(t)
-      }
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => try java.nio.file.Files.deleteIfExists(p) catch {
-          case scala.util.control.NonFatal(_) =>
-        })
+    TableStage.rewrite(spark, writes)
+  }
+
+  /** The flag column of a counted rewrite: true on the rows the
+    * statement matched. */
+  private val MatchedFlag = "__graft_m"
+
+  /** [[overwriteTables]] for a plain UPDATE or DELETE, returning its
+    * command tag's count: the rows of `flagged` whose [[MatchedFlag]]
+    * is true. `writes` holds `next` = `keep(flagged)` without the flag;
+    * the job that writes `next` counts the flags as it goes, so the
+    * count takes no job of its own. (A self-referencing cascade that
+    * rewrote `next` further leaves it out of `writes`; the count then
+    * runs before the write.) */
+  private def overwriteCounted(spark: SparkSession,
+      writes: Seq[(String, DataFrame)], next: DataFrame, flagged: DataFrame,
+      keep: DataFrame => DataFrame): Long = {
+    import org.apache.spark.sql.functions.{col, count, when}
+    val matched = when(col(MatchedFlag), true)
+    if (!writes.exists(_._2 eq next)) {
+      val n = flagged.select(count(matched)).head().getLong(0)
+      overwriteTables(spark, writes)
+      n
+    } else {
+      val (counting, n) = TableStage.counted(flagged, matched)
+      val written = keep(counting).drop(MatchedFlag)
+      overwriteTables(spark,
+        writes.map { case (t, df) => t -> (if (df eq next) written else df) })
+      n()
     }
   }
 
@@ -3874,8 +3875,8 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
     }
     // Nondeterministic SET values (nextval, random, …) must evaluate
     // EXACTLY ONCE per matched row — pg consumes one sequence value
-    // per updated row. The plain path executes the projection twice
-    // (count/RETURNING, then the table rewrite), so those route
+    // per updated row. The plain path may execute the projection more
+    // than once (constraint checks, RETURNING, the table rewrite), so those route
     // through a persisted matched-rows frame unioned with the
     // survivors instead (pinned by the live DML differential:
     // `SET id = DEFAULT WHERE p` allocates pg's exact values).
@@ -3941,7 +3942,9 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
       } finally pairs.unpersist()
     } else {
       val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
-      val next = runSql(spark, s"SELECT $proj$fromSql")
+      val flag = whereOpt.fold("true")(w => s"coalesce(($w), false)")
+      val flagged = runSql(spark, s"SELECT $proj, $flag AS $MatchedFlag$fromSql")
+      val next = flagged.drop(MatchedFlag)
       if (PgConstraints.hasAny(table, schema)) {
         val mn = runSql(spark, matchedSql)
         checkNotNull(mn, schema, table, zone)
@@ -3980,10 +3983,7 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
             overwriteTables(spark, writes)
           }
         case None =>
-          val n = runSql(spark,
-            s"SELECT count(*) FROM ( $matchedSql ) AS __graft_m").collect()(0).getLong(0)
-          overwriteTables(spark, writes)
-          Complete(s"UPDATE $n")
+          Complete(s"UPDATE ${overwriteCounted(spark, writes, next, flagged, identity)}")
       }
     }
   }
@@ -4030,17 +4030,17 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
     val matchedSql =
       s"SELECT *$fromSql${whereOpt.map(w => s" WHERE $w").getOrElse("")}"
     // survivors: pg 3VL — a NULL predicate row is NOT deleted
-    val keepSql = whereOpt match {
-      case Some(w) => s"SELECT *$fromSql WHERE NOT coalesce(($w), false)"
-      case None => s"SELECT *$fromSql WHERE false"
-    }
+    val flag = whereOpt.fold("true")(w => s"coalesce(($w), false)")
+    val flagged = runSql(spark, s"SELECT *, $flag AS $MatchedFlag$fromSql")
+    val keep = (df: DataFrame) => df.where(!org.apache.spark.sql.functions.col(MatchedFlag))
+    val survivors = keep(flagged).drop(MatchedFlag)
     // FK parent gate (r16) + referential ACTIONS (r17): NO ACTION /
     // RESTRICT children still referencing a deleted key refuse the
     // delete (23503) before any write; CASCADE / SET NULL / SET
     // DEFAULT children become extra staged rewrites in the same
     // statement, recursively
     val writes = execFkDeleteActions(spark, table,
-      runSql(spark, matchedSql), runSql(spark, keepSql),
+      runSql(spark, matchedSql), survivors,
       java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone),
       session.connId)
     retList match {
@@ -4054,10 +4054,7 @@ HINT:  Use DROP ... CASCADE to drop the dependent objects too.""")
           overwriteTables(spark, writes)
         }
       case None =>
-        val n = runSql(spark,
-          s"SELECT count(*) FROM ( $matchedSql ) AS __graft_m").collect()(0).getLong(0)
-        overwriteTables(spark, writes)
-        Complete(s"DELETE $n")
+        Complete(s"DELETE ${overwriteCounted(spark, writes, survivors, flagged, keep)}")
     }
   }
 

@@ -513,7 +513,7 @@ object PgSemantics {
       "mac_not" -> "macaddr", "mac_and" -> "macaddr", "mac_or" -> "macaddr",
       "macaddr8_in" -> "macaddr8", "macaddr8_set7bit" -> "macaddr8",
       "bit_in" -> "bit", "bit_in_hex" -> "bit", "pg_bit_cast" -> "bit",
-      "pg_varbit_cast" -> "varbit",
+      "varbit_in" -> "varbit", "pg_varbit_cast" -> "varbit",
       "pg_int_to_bit" -> "bit", "pg_bit_and" -> "bit", "pg_bit_or" -> "bit",
       "pg_bit_xor" -> "bit", "pg_bit_not" -> "bit", "pg_bit_shl" -> "bit",
       "pg_bit_shr" -> "bit", "pg_bit_set" -> "bit",

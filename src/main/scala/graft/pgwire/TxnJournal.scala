@@ -10,14 +10,17 @@ import org.apache.spark.sql.SparkSession
   * The reference has no transactions at all (its BEGIN/COMMIT are a
   * tag state machine, `datafusion-postgres/src/hooks/transactions
   * .rs:24-131`); this engine's DML applies per statement via
-  * stage-all-then-swap. The journal generalizes that to statement
+  * stage-all-then-swap ([[TableStage]]: each new table state is
+  * written once beside the table, then the table's directory is
+  * swapped for it). The journal generalizes that to statement
   * GROUPS: before the first write a statement makes to a table, the
   * table's current files are captured as a HARDLINK tree (O(#files)
   * metadata ops, zero data copied — the bytes are immutable parquet,
-  * and a later overwrite unlinks the table's directory entries while
-  * the journal's links keep the inodes alive). ROLLBACK restores the
-  * links byte-for-byte and refreshes the Spark catalog; COMMIT just
-  * deletes the journal directory. Snapshots are per (table,
+  * and the swap deletes the table's old directory while the
+  * journal's links keep the inodes alive). The table's location
+  * never changes, so ROLLBACK restores the links byte-for-byte into
+  * it and refreshes the Spark catalog; COMMIT just deletes the
+  * journal directory. Snapshots are per (table,
   * statement), so `ROLLBACK TO SAVEPOINT` restores each table to its
   * earliest snapshot AFTER the savepoint's statement mark.
   *
@@ -95,7 +98,7 @@ object TxnJournal {
     new TxnJournal(root)
   }
 
-  private def warehousePath(spark: SparkSession): Path = {
+  private[pgwire] def warehousePath(spark: SparkSession): Path = {
     val raw = spark.conf.get("spark.sql.warehouse.dir")
     val uri = new java.net.URI(raw)
     if (uri.getScheme == null) Paths.get(raw) else Paths.get(uri)
@@ -104,16 +107,8 @@ object TxnJournal {
   /** Filesystem location of a catalog table; None for temp views or
     * non-file tables. */
   private[pgwire] def tableLocation(spark: SparkSession, table: String): Option[Path] =
-    try {
-      val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-      if (spark.sessionState.catalog.isTempView(ident)) None
-      else {
-        val meta = spark.sessionState.catalog.getTableMetadata(ident)
-        val uri = meta.location
-        if (uri.getScheme != null && uri.getScheme != "file") None
-        else Some(Paths.get(uri))
-      }
-    } catch { case NonFatal(_) => None }
+    TableStage.catalogTable(spark, table).flatMap(_.storage.locationUri)
+      .filter(_.getScheme == "file").map(Paths.get(_))
 
   /** Hardlink `src`'s file tree under `dst` (copy fallback for
     * filesystems without link support). */
@@ -137,7 +132,7 @@ object TxnJournal {
     Files.list(dir).iterator().asScala.toSeq.foreach(deleteTree)
   }
 
-  private def deleteTree(p: Path): Unit = {
+  private[pgwire] def deleteTree(p: Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (Files.exists(p))
       Files.walk(p).iterator().asScala.toSeq.reverse.foreach { q =>

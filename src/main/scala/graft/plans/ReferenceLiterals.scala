@@ -53,8 +53,10 @@ case class RefLiteral(literal: Literal) extends LeafExpression {
   *    gets its own pass when Spark prepares it);
   *  - positions: the direct operands of a deterministic comparison,
   *    `IN` or arithmetic, wherever it sits, CASE/IF conditions
-  *    included. A function argument that must stay a `Literal` (a
-  *    scale, a format, a seed) is never a replaced operand.
+  *    included; CASE/IF result values; and the value arguments of
+  *    `coalesce` (and so `nvl`), `greatest` and `least`. A function
+  *    argument that must stay a `Literal` (a scale, a format, a seed,
+  *    `substr`'s positions) is never a replaced operand.
   */
 object ReferenceLiterals extends Rule[SparkPlan] {
 
@@ -70,6 +72,8 @@ object ReferenceLiterals extends Rule[SparkPlan] {
 
   private def operandHolder(e: Expression): Boolean = e.deterministic && (e match {
     case _: BinaryComparison | _: In | _: BinaryArithmetic => true
+    // every child is a condition or a value the node passes through
+    case _: CaseWhen | _: If | _: Coalesce | _: Greatest | _: Least => true
     case _ => false
   })
 

@@ -409,6 +409,19 @@ class PgTypeDispatchSpec extends SparkSpec with BeforeAndAfterAll {
     c.close()
   }
 
+  test("::varbit and ::bit varying without a length are bit varying, like pg") {
+    val c = connect()
+    val r = c.query("SELECT B'101'::varbit, B'101'::bit varying")
+    assert(r.errors === Nil, r.errors)
+    assert(text(r) === "101|101")
+    assert(r.fields.map(_._2) === Seq(1562, 1562))
+    assertPinned(c, Seq(
+      "SELECT pg_typeof(B'101'::varbit), pg_typeof(B'101'::bit varying)" ->
+        "bit varying|bit varying",
+      "SELECT length(B'10110'::varbit), B'10'::varbit || B'01'::varbit" -> "5|1001"))
+    c.close()
+  }
+
   test("pg_typeof and max keep enum, bit and time types, like live pg") {
     withTables(Seq("TABLE em", "TYPE mood", "TABLE bt", "TABLE tt"),
         moodTable ++ bitTable ++ timeTable)(Seq(

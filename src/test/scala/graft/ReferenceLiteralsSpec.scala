@@ -97,7 +97,28 @@ class ReferenceLiteralsSpec extends SparkSpec with BeforeAndAfterAll {
     assertFlat(upd)
     assert(upd.map(_._2) === Seq.fill(3)(Seq("UPDATE 1")))
     assert(run(session, "SELECT id FROM rl_items WHERE v > 100 ORDER BY id") === Seq("3", "11", "18"))
+    // the SET value is the THEN value of the rewrite's projection
+    val set = runKeys(session, Seq(4, 12, 19))(k => s"UPDATE rl_items SET v = ${k * 1000} WHERE id = $k")
+    assertFlat(set)
+    assert(set.map(_._2) === Seq.fill(3)(Seq("UPDATE 1")))
+    assert(run(session, "SELECT id, v FROM rl_items WHERE v >= 1000 ORDER BY id") ===
+      Seq("4|4000", "12|12000", "19|19000"))
     run(session, "DROP TABLE rl_items")
+  }
+
+  test("CASE/IF results and coalesce/nvl/greatest/least values compile on the first run only") {
+    val session = new Session(1, "postgres", "postgres")
+    val xs = Seq(5, 9, 13)
+    val runs = runKeys(session, xs)(x =>
+      s"SELECT k, CASE WHEN i = 1 THEN $x ELSE 0 END, coalesce(NULLIF(i, 0), $x), nvl(i, $x), " +
+        s"greatest(i, $x), least(i, $x) FROM rl_vals ORDER BY k, i")
+    assertFlat(runs)
+    val ki = Seq(0 -> Some(-2), 0 -> Some(-1), 1 -> Some(0), 1 -> Some(1), 2 -> Some(2),
+      2 -> Some(3), 3 -> None)
+    assert(runs.map(_._2) === xs.map(x => ki.map { case (k, i) =>
+      Seq(k, if (i.contains(1)) x else 0, i.filter(_ != 0).getOrElse(x), i.getOrElse(x),
+        i.fold(x)(math.max(_, x)), i.fold(x)(math.min(_, x))).mkString("|")
+    }))
   }
 
   test("EXPLAIN keeps the literal values, in the scan's pushed and partition filters too") {
@@ -153,7 +174,9 @@ class ReferenceLiteralsSpec extends SparkSpec with BeforeAndAfterAll {
           s"SELECT i FROM rl_vals WHERE $c = $v",
           s"SELECT i FROM rl_vals WHERE $c > $v OR $c IN ($v, $v)",
           s"SELECT i, CASE WHEN $c < $v THEN 'lt' WHEN $c = $v THEN 'eq' ELSE 'ge' END FROM rl_vals",
-          s"SELECT a.i, b.i FROM rl_vals a JOIN rl_vals b ON a.k = b.k AND (a.$c < $v OR b.$c = $v)") ++
+          s"SELECT a.i, b.i FROM rl_vals a JOIN rl_vals b ON a.k = b.k AND (a.$c < $v OR b.$c = $v)",
+          s"SELECT i, CASE WHEN k > i THEN $v ELSE $c END, if(k > i, $c, $v), coalesce($c, $v), " +
+            s"greatest($c, $v), least($c, $v) FROM rl_vals") ++
           (if (arithmetic(c)) Seq(s"SELECT i, $c + $v, $c - $v FROM rl_vals") else Nil)
         val referenced = shapes.map(sameAsLiterals)
         if (v.contains("NULL")) assert(!referenced.exists(identity), v)
