@@ -38,11 +38,6 @@ private[pgwire] final class TableStage private (spark: SparkSession, root: Path)
   private var stages = 0
 
   /** Write `df` into a new stage directory, cast by position to
-    * `table`'s catalog schema. */
-  def write(table: String, df: DataFrame): Path =
-    write(table, df, TableStage.catalogTable(spark, table).map(_.schema))
-
-  /** Write `df` into a new stage directory, cast by position to
     * `schema` when given. */
   def write(table: String, df: DataFrame, schema: Option[StructType]): Path = {
     stages += 1
@@ -104,7 +99,7 @@ private[pgwire] object TableStage {
     * any of them changes none. */
   def rewrite(spark: SparkSession, writes: Seq[(String, DataFrame)]): Unit =
     if (writes.nonEmpty) apply(spark) { stage =>
-      writes.map { case (t, df) => t -> stage.write(t, df) }
+      writes.map { case (t, df) => t -> stage.write(t, df, catalogTable(spark, t).map(_.schema)) }
         .foreach { case (t, dir) => stage.swapIn(t, dir) }
     }
 
