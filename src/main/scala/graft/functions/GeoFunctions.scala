@@ -42,7 +42,7 @@ object GeoFunctions {
       if (s == null) null else toEwkb(parseAny(s)))
     u.register("st_geomfromwkb", (b: Array[Byte]) =>
       if (b == null) null else toEwkb(fromEwkb(b)))
-    // 2-arg (value, srid) call shapes — Compat renames the pg
+    // 2-arg (value, srid) call shapes — PgNames routes the pg
     // spellings here (Spark's registry has no overloads)
     u.register("st_geomfromtext2", (s: String, srid: java.lang.Integer) =>
       if (s == null || srid == null) null else toEwkb(parseWkt(s).withSrid(srid)))

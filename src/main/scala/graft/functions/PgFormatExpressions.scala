@@ -623,13 +623,7 @@ object PgFormatExpressions {
     override def left: Expression = fieldExpr
     override def right: Expression = child
     private lazy val field: String =
-      fieldExpr.eval(null).asInstanceOf[UTF8String].toString.toLowerCase
-        .stripSuffix("s") match {
-        case "centurie" => "century" case "millenniums" | "millennia" => "millennium"
-        case "mon" | "month" => "month" case "yr" | "year" => "year"
-        case "hr" | "hour" => "hour" case "min" | "minute" => "minute"
-        case "sec" | "second" => "second" case f => f
-      }
+      PgIntervalPart.unit(fieldExpr.eval(null).asInstanceOf[UTF8String].toString)
     override def prettyName: String = "pg_interval_part"
     override def dataType: DataType = field match {
       case "second" | "epoch" => DecimalType(38, 6)
@@ -690,6 +684,17 @@ object PgFormatExpressions {
     }
     override protected def withNewChildrenInternal(l: Expression, r: Expression): PgIntervalPart =
       copy(fieldExpr = l, child = r)
+  }
+
+  object PgIntervalPart {
+    /** A field name as pg spells its unit: singular, abbreviations
+      * spelled out (`hours` and `hr` are `hour`). */
+    def unit(field: String): String = field.toLowerCase.stripSuffix("s") match {
+      case "centurie" => "century" case "millenniums" | "millennia" => "millennium"
+      case "mon" | "month" => "month" case "yr" | "year" => "year"
+      case "hr" | "hour" => "hour" case "min" | "minute" => "minute"
+      case "sec" | "second" => "second" case f => f
+    }
   }
 
   /** pg date_trunc('field', interval): zero every field finer than
@@ -865,14 +870,6 @@ object PgFormatExpressions {
     (FunctionIdentifier("pg_interval"), info("pg_interval"), { args =>
       require(args.length == 1, "pg_interval requires 1 argument")
       PgIntervalLiteral(args(0))
-    }),
-    (FunctionIdentifier("pg_interval_part"), info("pg_interval_part"), { args =>
-      require(args.length == 2, "pg_interval_part requires 2 arguments")
-      PgIntervalPart(args(0), args(1))
-    }),
-    (FunctionIdentifier("pg_interval_trunc"), info("pg_interval_trunc"), { args =>
-      require(args.length == 2, "pg_interval_trunc requires 2 arguments")
-      PgIntervalTrunc(args(0), args(1))
     }),
     (FunctionIdentifier("date_bin"), info("date_bin"), { args =>
       require(args.length == 3, "date_bin requires 3 arguments")

@@ -262,7 +262,7 @@ object PgMiscExpressions {
     * (result typed at that scale so the wire text matches pg — 42.43,
     * not 42.430000…); with a STRING second argument it falls through
     * to Spark's date-trunc so client SQL like trunc(d, 'MM') keeps
-    * working after Compat renames 2-arg trunc here. */
+    * working after PgNames routes 2-arg trunc here. */
   case class PgTrunc(children: Seq[Expression])
       extends Expression with CodegenFallback {
     private def isDateForm: Boolean =

@@ -296,38 +296,6 @@ object Compat {
     // pg's tz-less now; Spark's localtimestamp() is TimestampNTZ
     "localtimestamp" -> "localtimestamp()")
 
-  /** Function renames applied when followed by '('. */
-  private val fnRename: Map[String, String] = Map(
-    "jsonb_array_length" -> "json_array_length", // Spark builtin twin
-    "starts_with" -> "startswith", // Spark builtin, same semantics
-    "array_cat" -> "concat", // Spark concat concatenates arrays
-    "array_prepend" -> "pg_array_prepend", // Spark's takes (arr, elem)
-    "current_database" -> "pg_current_database",
-    "current_schemas" -> "pg_current_schemas",
-    "array_length" -> "pg_array_length",
-    // sweep-15: Spark's array_position returns 0 when absent (pg:
-    // NULL), array_remove NULLs out on a NULL target (pg: removes
-    // NULLs), size() counts only the outer dimension (pg cardinality
-    // counts leaves across dimensions)
-    "array_position" -> "pg_array_position",
-    "array_remove" -> "pg_array_remove",
-    "cardinality" -> "pg_cardinality",
-    "array_to_string" -> "array_join", // same semantics (NULLs skipped)
-    "string_to_array" -> "pg_string_to_array", // literal (non-regex) delim
-    // pg mod semantics: NULL on zero divisor (reference mod_op.rs:18);
-    // Spark ANSI mode would error instead
-    "mod" -> "pg_mod",
-    // pg freezes both to the transaction start; without cross-statement
-    // transaction state, Spark's query-constant now() is the closest
-    // semantics — and it makes `now() = transaction_timestamp()` true
-    // within a statement, the idiom clients actually test (sweep-5)
-    "transaction_timestamp" -> "now",
-    "statement_timestamp" -> "now",
-    // pg make_timestamp returns timestamp WITHOUT time zone; Spark's
-    // same-named builtin resolves in the session zone (≡ timestamptz
-    // here). The NTZ twin carries pg's type through the wire (OID 1114)
-    "make_timestamp" -> "make_timestamp_ntz")
-
   // ---- blacklist (reference: sql/parser.rs:56-267) -----------------------
 
   /** Known-unplannable client startup queries → canned replacements.
@@ -384,11 +352,19 @@ object Compat {
 
   // ---- main rewrite ------------------------------------------------------
 
-  /** Session enum type names for `::name` cast dispatch (set by the
-    * two-arg rewrite overload; Compat itself is session-free).
+  /** What a rewrite knows of its statement and session.
+    *  - `enumTypes`: the session's enum type names, for `::name` casts;
+    *  - `topLevel`: a client's top-level statement, which gets pg's
+    *    implicit output-column names ([[injectOutputNames]]) and pg's
+    *    default NULL placement on every ORDER BY
+    *    ([[defaultNullOrdering]]); fragments (parameter inference,
+    *    fixtures, CompatSpec's pins) do not;
+    *  - `fileTable`: is a relation a file-backed catalog table, where
+    *    the hidden `_metadata` columns resolve (json_agg's input-order
+    *    key, [[captureInputOrder]]).
     */
-  private val enumTypesTL: ThreadLocal[Set[String]] =
-    ThreadLocal.withInitial(() => Set.empty[String])
+  final case class Ctx(enumTypes: Set[String] = Set.empty, topLevel: Boolean = false,
+      fileTable: String => Boolean = _ => false)
 
   // ---- pg output column names (FigureColname) ----------------------------
   //
@@ -852,48 +828,33 @@ object Compat {
     }
     injections.sortBy(-_._1).foreach { case (after, name) =>
       // always QIdent: a bare Word alias would be picked up by later
-      // word-level passes (bare-var and function renames)
+      // word-level passes (the bare-var rewrite)
       val aliasTok = Tok(QIdent, "\"" + name.replace("\"", "\"\"") + "\"")
       ts.insertAll(after + 1,
         Seq(Tok(Ws, " "), Tok(Word, "AS"), Tok(Ws, " "), aliasTok))
     }
   }
 
-  /** Rewrite with the calling session's user enum types visible. */
-  def rewrite(sql: String, enumTypes: Set[String]): String = {
-    enumTypesTL.set(enumTypes)
-    try rewrite(sql) finally enumTypesTL.set(Set.empty)
-  }
-
-  private val topLevelTL = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue: java.lang.Boolean = java.lang.Boolean.FALSE
-  }
-
-  /** [[rewrite]] for a TOP-LEVEL client statement: additionally injects
-    * pg's implicit output-column names ([[injectOutputNames]]) into the
-    * outermost select list and spells pg's default NULL placement on
-    * every ORDER BY ([[defaultNullOrdering]]). Fragment-level callers
-    * (param inference, oracle fixtures, internal re-rewrites) keep the
-    * plain [[rewrite]], whose output is also what CompatSpec pins. */
-  def rewriteTop(sql: String, enumTypes: Set[String]): String = {
-    topLevelTL.set(java.lang.Boolean.TRUE)
-    try rewrite(sql, enumTypes)
-    finally topLevelTL.set(java.lang.Boolean.FALSE)
-  }
+  /** A top-level statement's rewrite (perfbench's traced replay calls
+    * this form). */
+  def rewriteTop(sql: String, enumTypes: Set[String]): String =
+    rewrite(sql, Ctx(enumTypes, topLevel = true))
 
   /** Rewrite one pg-dialect statement into Spark SQL. */
-  def rewrite(sql: String): String = {
+  def rewrite(sql: String, ctx: Ctx = Ctx()): String = {
     applyBlacklist(sql) match {
       case Some(repl) => return repl
       case None =>
     }
     val ts = ArrayBuffer.from(tokenize(sql))
-    if (topLevelTL.get) {
+    // this call's suffixes for generated aliases (__grpN, __rsN)
+    val seq = Iterator.from(1)
+    if (ctx.topLevel) {
       injectOutputNames(ts)
       defaultNullOrdering(ts)
     }
     rewriteDistinctOn(ts)
-    rewriteWindowFrames(ts)
+    rewriteWindowFrames(ts, seq)
     collapseOperatorCall(ts)
     collapseAnsiTypeSpellings(ts)
     stripCollate(ts)
@@ -913,28 +874,24 @@ object Compat {
     rewriteFetchFirst(ts)
     rewriteTablesample(ts)
     rewriteArraySubquery(ts)
-    // renames must precede ANY/ALL rewriting: the array_contains
+    // bare variables must precede ANY/ALL rewriting: the array_contains
     // replacement renders its operand tokens into one composite token
     // that later word-level passes can no longer see into
     rewriteBareVars(ts)
     // pg concat() skips NULLs (never returns NULL); Spark's concat is
-    // null-on-null. concat_ws('') carries pg's exact semantics. Must
-    // run BEFORE renameFunctions so array_cat -> concat (Spark array
-    // concat) is not re-rewritten.
+    // null-on-null. concat_ws('') carries pg's exact semantics.
     rewriteConcatNullSafe(ts)
-    renameFunctions(ts)
     rewriteBitStrings(ts)
     rewriteMathOps(ts)
     rewriteBetweenSymmetric(ts)
     rewriteAnyAll(ts)
-    rewriteJsonAggInputOrder(ts)
+    rewriteJsonAggInputOrder(ts, ctx.fileTable, seq)
     rewriteJsonAggs(ts)
     rewriteJsonToRecord(ts)
     rewriteSetReturning(ts)
     rewriteSubstringRegex(ts)
     quoteNormalizeForms(ts)
     rewriteIntervalLiterals(ts)
-    rewriteExtractEpoch(ts)
     rewriteSimilarTo(ts)
     rewriteRegexOps(ts)
     rewriteFamilyOnlyOps(ts)
@@ -942,7 +899,7 @@ object Compat {
     rewriteTsAccessors(ts)
     rewriteJsonOps(ts)
     rewriteLimitCast(ts)
-    rewriteCastTypes(ts)
+    rewriteCastTypes(ts, ctx.enumTypes)
     rewriteXmlConstructs(ts)
     // AT TIME ZONE first: its literal dispatch distinguishes
     // `timestamp '…'` (→ NTZ direction) from `timestamptz '…'`, which
@@ -955,8 +912,6 @@ object Compat {
     wrapByteaLiteralArgs(ts)
     rewriteVariadic(ts)
     rewriteTsRankWeights(ts)
-    renameFunctionsByArity(ts)
-    padFunctionArgs(ts)
     shiftArraySubscripts(ts)
     aliasVersionCall(ts)
     stripTvfParens(ts)
@@ -1067,43 +1022,6 @@ object Compat {
     }
   }
 
-  /** Spark's FunctionRegistry has no overloads, so the reference's
-    * multi-arity UDFs (TypeSignature::OneOf) are registered at one
-    * arity and other client call shapes are padded here:
-    * (name, arity-to-pad, tokens, append?).
-    */
-  private val padSpec: Seq[(String, Int, String, Boolean)] = Seq(
-    // text-search 1-arg forms default the config (pg: the
-    // default_text_search_config GUC, which ships as english)
-    ("ts_headline", 2, "'english', ", false),
-    ("to_tsvector", 1, "'english', ", false),
-    ("to_tsquery", 1, "'english', ", false),
-    ("plainto_tsquery", 1, "'english', ", false),
-    ("phraseto_tsquery", 1, "'english', ", false),
-    ("websearch_to_tsquery", 1, "'english', ", false),
-    ("pg_get_expr", 2, ", false", true), // psql 2-arg form → (expr, oid, pretty)
-    ("pg_get_constraintdef", 1, ", false", true),
-    ("obj_description", 1, ", 'pg_class'", true),
-    ("has_table_privilege", 2, "'postgres', ", false), // 2-arg = current user
-    ("has_schema_privilege", 2, "'postgres', ", false),
-    ("has_database_privilege", 2, "'postgres', ", false),
-    ("has_any_column_privilege", 2, "'postgres', ", false),
-    // pg regexp family optional args (start, N, endoption, flags,
-    // subexpr) — renameFunctionsByArity routed these to the pg_
-    // full-arity UDFs; fill the defaults
-    ("pg_regexp_count", 3, ", ''", true),
-    ("pg_regexp_instr", 3, ", 1, 0, '', 0", true),
-    ("pg_regexp_instr", 4, ", 0, '', 0", true),
-    ("pg_regexp_instr", 5, ", '', 0", true),
-    ("pg_regexp_instr", 6, ", 0", true),
-    ("pg_regexp_substr", 3, ", 1, '', 0", true),
-    ("pg_regexp_substr", 4, ", '', 0", true),
-    ("pg_regexp_substr", 5, ", 0", true),
-    ("pg_regexp_replace", 3, ", '', -1, ''", true),
-    ("pg_regexp_replace", 4, ", -1, ''", true),
-    ("pg_regexp_replace", 5, ", ''", true),
-    ("pg_substr", 2, ", 2147483647", true))
-
   /** `f(VARIADIC ARRAY[a, b, …])` → `f(a, b, …)` for the literal
     * array-constructor shape (the only spelling clients emit; a
     * column-valued VARIADIC argument cannot expand statically).
@@ -1128,119 +1046,13 @@ object Compat {
     }
   }
 
-  private def padFunctionArgs(ts: ArrayBuffer[Tok]): Unit = {
-    var i = 0
-    while (i < ts.length) {
-      if (ts(i).kind == Word) {
-        val specs = padSpec.filter(_._1 == ts(i).text.toLowerCase)
-        if (specs.nonEmpty) {
-          val open = nextIdx(ts, i)
-          if (open >= 0 && ts(open).is("(")) {
-            val close = matchParen(ts, open)
-            if (close > 0) {
-              var commas = 0; var depth = 0; var j = open + 1
-              var empty = true
-              while (j < close) {
-                if (ts(j).is("(")) depth += 1
-                else if (ts(j).is(")")) depth -= 1
-                else if (depth == 0 && ts(j).is(",")) commas += 1
-                if (ts(j).kind != Ws) empty = false
-                j += 1
-              }
-              val argc = if (empty) 0 else commas + 1
-              specs.find(_._2 == argc).foreach { case (_, _, pad, append) =>
-                if (append) ts.insert(close, Tok(Word, pad))
-                else ts.insert(open + 1, Tok(Word, pad))
-              }
-            }
-          }
-        }
-      }
-      i += 1
-    }
-  }
-
-  /** Arity-keyed renames: pg overloads a name across arities that
-    * Spark's registry cannot (no overloading of a builtin name). The
-    * call keeps pg spelling; the engine function differs per arity:
-    * width_bucket(op, low, high, count) is Spark's builtin, while the
-    * 2-arg sorted-thresholds form (reference numeric/width_bucket.rs:
-    * 183-227) lives under pg_width_bucket.
-    */
-  private val arityRenameSpec: Seq[(String, Int, String)] = Seq(
-    ("width_bucket", 2, "pg_width_bucket"),
-    // ts_rank normalization-argument forms
-    ("tsquery_phrase", 3, "tsquery_phrase3"),
-    ("setweight", 3, "setweight3"),
-    ("ts_headline", 4, "ts_headline4"),
-    ("ts_rank", 3, "ts_rank3"),
-    ("ts_rank_cd", 3, "ts_rank_cd3"),
-    // range constructors' optional bound-flags argument (pg §8.17.6)
-    ("int4range", 3, "int4range3"),
-    ("int8range", 3, "int8range3"),
-    ("numrange", 3, "numrange3"),
-    ("daterange", 3, "daterange3"),
-    ("tsrange", 3, "tsrange3"),
-    ("tstzrange", 3, "tstzrange3"),
-    // geo constructors' optional-SRID call shapes (SURVEY §2a#9)
-    ("st_geomfromtext", 2, "st_geomfromtext2"),
-    ("st_geometryfromtext", 2, "st_geomfromtext2"),
-    ("st_geomfromwkb", 2, "st_geomfromwkb2"),
-    // 3-arg string_to_array (elements equal to nullStr become NULL);
-    // the name rename to pg_string_to_array has already run
-    ("pg_string_to_array", 3, "pg_string_to_array3"),
-    // pg trunc(numeric[, s]) vs Spark trunc(date, fmt): pg_trunc
-    // dispatches on the second argument's type, so both forms route
-    // through it (Spark has no 1-arg trunc at all)
-    ("trunc", 1, "pg_trunc"),
-    ("trunc", 2, "pg_trunc"),
-    // pg's ONLY 1-arg to_timestamp is to_timestamp(double precision)
-    // — unix epoch → timestamptz (Spark's 1-arg form parses a date
-    // STRING, a different function; sweep-32). PgSemantics casts a
-    // string argument to double, matching pg's unknown-literal
-    // coercion.
-    ("to_timestamp", 1, "timestamp_seconds"),
-    // pg regexp optional-arg forms Spark's builtins can't take (or
-    // take with DIFFERENT meaning — Spark's 3rd regexp_instr arg is a
-    // group index where pg's is a start position; Spark's 3-arg
-    // regexp_replace replaces every match where pg replaces the
-    // first). Renamed here, defaults padded in padSpec.
-    ("regexp_like", 3, "pg_regexp_like"),
-    ("regexp_count", 3, "pg_regexp_count"),
-    ("regexp_count", 4, "pg_regexp_count"),
-    ("regexp_instr", 3, "pg_regexp_instr"),
-    ("regexp_instr", 4, "pg_regexp_instr"),
-    ("regexp_instr", 5, "pg_regexp_instr"),
-    ("regexp_instr", 6, "pg_regexp_instr"),
-    ("regexp_instr", 7, "pg_regexp_instr"),
-    ("regexp_substr", 3, "pg_regexp_substr"),
-    ("regexp_substr", 4, "pg_regexp_substr"),
-    ("regexp_substr", 5, "pg_regexp_substr"),
-    ("regexp_substr", 6, "pg_regexp_substr"),
-    ("regexp_replace", 3, "pg_regexp_replace"),
-    ("regexp_replace", 4, "pg_regexp_replace"),
-    ("regexp_replace", 5, "pg_regexp_replace"),
-    ("regexp_replace", 6, "pg_regexp_replace"),
-    // pg log(x) is base-10 (Spark's is ln — a silently-wrong answer);
-    // the 2-arg log(b, x) form agrees between the two
-    ("log", 1, "log10"),
-    // Spark's 2-arg ltrim/rtrim take (trimStr, srcStr) — reversed
-    ("ltrim", 2, "pg_ltrim"),
-    ("rtrim", 2, "pg_rtrim"),
-    // pg substr counts from-position (0 and negatives clamp into the
-    // string); Spark treats 0 as 1 and negatives as from-the-end
-    ("substr", 2, "pg_substr"),
-    ("substr", 3, "pg_substr"),
-    ("substring", 2, "pg_substr"),
-    ("substring", 3, "pg_substr"))
-
   /** pg's weights-array ts_rank overloads: `ts_rank[_cd]({D,C,B,A}
     * weights, vector, query[, norm])`. Same arity as the
     * normalization forms, so dispatch is by the FIRST argument's
     * shape: a `'{…}'` array literal (converted to a typed ARRAY here)
     * or an ARRAY[...]/array(...) constructor → the `_w` engine
-    * functions. Runs before the arity rename so the weightless
-    * 3-arg form still goes to ts_rank3. */
+    * functions; the weightless 3-arg form resolves to ts_rank3 in the
+    * registry ([[PgNames]]). */
   private def rewriteTsRankWeights(ts: ArrayBuffer[Tok]): Unit = {
     var i = 0
     while (i < ts.length) {
@@ -1268,39 +1080,6 @@ object Compat {
                 if (arrLit) ts(a1) = Tok(Word,
                   arrayLiteralTokens(ts(a1).text, "float"))
                 ts(i) = Tok(Word, base + (if (commas == 2) "_w" else "_w4"))
-              }
-            }
-          }
-        }
-      }
-      i += 1
-    }
-  }
-
-  private def renameFunctionsByArity(ts: ArrayBuffer[Tok]): Unit = {
-    var i = 0
-    while (i < ts.length) {
-      if (ts(i).kind == Word) {
-        val specs = arityRenameSpec.filter(_._1 == ts(i).text.toLowerCase)
-        if (specs.nonEmpty) {
-          val open = nextIdx(ts, i)
-          if (open >= 0 && ts(open).is("(")) {
-            val close = matchParen(ts, open)
-            if (close > 0) {
-              // brackets nest too: ARRAY[a, b] commas are not arg
-              // separators
-              var commas = 0; var depth = 0; var j = open + 1
-              var empty = true
-              while (j < close) {
-                if (ts(j).is("(") || ts(j).is("[")) depth += 1
-                else if (ts(j).is(")") || ts(j).is("]")) depth -= 1
-                else if (depth == 0 && ts(j).is(",")) commas += 1
-                if (ts(j).kind != Ws) empty = false
-                j += 1
-              }
-              val argc = if (empty) 0 else commas + 1
-              specs.find(_._2 == argc).foreach { case (_, _, newName) =>
-                ts(i) = Tok(Word, newName)
               }
             }
           }
@@ -1822,11 +1601,10 @@ object Compat {
     }
   }
 
-  private var grpSeq = 0 // unique suffix for dense_rank aliases
-
   /** Restructure blocks whose select list has a GROUPS frame with
-    * integer offsets: dense_rank() subquery + RANGE over the rank. */
-  private def rewriteGroupsOffsets(ts: ArrayBuffer[Tok]): Unit = {
+    * integer offsets: dense_rank() subquery + RANGE over the rank
+    * (aliases suffixed from `seq`). */
+  private def rewriteGroupsOffsets(ts: ArrayBuffer[Tok], seq: Iterator[Int]): Unit = {
     var guard = 0
     var again = true
     while (again && guard < 32) {
@@ -1848,7 +1626,7 @@ object Compat {
             case Some(fi) if ts(fi.f).isWord("GROUPS") &&
                 (fi.startKind == "OP" || fi.startKind == "OF" ||
                  fi.endKind == "OP" || fi.endKind == "OF") =>
-              rewriteOneGroupsOffset(ts, i, open, close, fi, depths)
+              rewriteOneGroupsOffset(ts, i, open, close, fi, depths, seq)
               again = true // indices shifted; rescan
             case Some(fi) if needsGroupSpaceSplit(ts, i, open, close, fi) =>
               // min/max EXCLUDE GROUP/TIES (r16): not subtractable, so
@@ -1857,7 +1635,7 @@ object Compat {
               // restructure turns the window into RANGE over an
               // integer group column; rewriteOneFrame then splits at
               // ±1 group exactly.
-              rewriteOneGroupsOffset(ts, i, open, close, fi, depths)
+              rewriteOneGroupsOffset(ts, i, open, close, fi, depths, seq)
               again = true
             case _ =>
           }
@@ -1916,7 +1694,7 @@ object Compat {
   }
 
   private def rewriteOneGroupsOffset(ts: ArrayBuffer[Tok], overIdx: Int,
-      open: Int, close: Int, fi: FrameInfo, depths: Array[Int]): Unit = {
+      open: Int, close: Int, fi: FrameInfo, depths: Array[Int], seq: Iterator[Int]): Unit = {
     // split the spec: [PARTITION BY part] ORDER BY ord GROUPS bounds [EXCLUDE ...]
     var orderIdx = -1; var depth = 0
     var j = open + 1
@@ -1967,8 +1745,8 @@ object Compat {
     val bodyEnd = if (tailIdx > 0) tailIdx else end
     val body = ts.slice(fromIdx, bodyEnd).toVector
 
-    grpSeq += 1
-    val g = s"__grp$grpSeq"
+    val n = seq.next()
+    val g = s"__grp$n"
     // new OVER spec: [PARTITION BY part] ORDER BY __grpN RANGE bounds…
     // discrete tokens: the EXCLUDE pass that follows must still see
     // the RANGE keyword (isWord matches whole-token text only)
@@ -1986,7 +1764,7 @@ object Compat {
     newBody ++= ordToks
     newBody += Tok(Word, s") AS $g ")
     newBody ++= body
-    newBody += Tok(Word, s") __grp_t$grpSeq ")
+    newBody += Tok(Word, s") __grp_t$n ")
     // splice the later span first so earlier indices stay valid
     if (fromIdx > close) {
       ts.remove(fromIdx, bodyEnd - fromIdx)
@@ -2004,8 +1782,8 @@ object Compat {
 
   /** GROUPS→RANGE keyword mapping and EXCLUDE decomposition over one
     * OVER(...) span (see the block comment above). */
-  private def rewriteWindowFrames(ts: ArrayBuffer[Tok]): Unit = {
-    rewriteGroupsOffsets(ts)
+  private def rewriteWindowFrames(ts: ArrayBuffer[Tok], seq: Iterator[Int]): Unit = {
+    rewriteGroupsOffsets(ts, seq)
     var i = 0
     while (i < ts.length) {
       if (ts(i).isWord("OVER")) {
@@ -3282,17 +3060,6 @@ object Compat {
     if (end < 0) None else Some((ts.slice(w + 1, end).toVector, end))
   }
 
-  private var rsSeq = 0
-
-  /** Predicate channel (thread-local, like enumTypesTL): is a
-    * relation a FILE-BACKED catalog table where the hidden
-    * `_metadata` columns resolve? Set by Handlers.runSql; the
-    * json_agg input-order capture minting a file-ordinal key needs
-    * it because `_metadata` on a non-file view fails analysis. */
-  val fileTableCheck = new ThreadLocal[String => Boolean] {
-    override def initialValue: String => Boolean = _ => false
-  }
-
   /** pg's no-ORDER-BY `json[b]_agg` follows INPUT order (pg's heap
     * scan). Where that order is well-defined here — the block's FROM
     * is ONE base relation (optionally aliased; WHERE/GROUP BY don't
@@ -3310,7 +3077,8 @@ object Compat {
     * multi-source input has no pg-reproducible order). Residual
     * deviation: pg heap order diverges from parquet file order once
     * pg-side UPDATEs relocate rows — unpinnable, documented. */
-  private def rewriteJsonAggInputOrder(ts: ArrayBuffer[Tok]): Unit = {
+  private def rewriteJsonAggInputOrder(ts: ArrayBuffer[Tok], fileTable: String => Boolean,
+      seq: Iterator[Int]): Unit = {
     val targets = Set("json_agg", "jsonb_agg")
     var guard = 0
     var again = true
@@ -3342,7 +3110,7 @@ object Compat {
               j += 1
             }
             if (!hasOrder && !hasDistinct && !isStar)
-              again = captureInputOrder(ts, depths, i, close)
+              again = captureInputOrder(ts, depths, i, close, fileTable, seq)
           }
         }
         i += 1
@@ -3352,10 +3120,11 @@ object Compat {
 
   /** One no-ORDER-BY json agg: resolve its block's FROM relation; if
     * eligible, wrap it (or reuse an existing __rs wrap) and append
-    * `ORDER BY __rsN` to the call. Returns true when tokens changed
-    * (caller rescans — indices shifted). */
+    * `ORDER BY __rsN` to the call. `_metadata` resolves only on a
+    * `fileTable` relation. Returns true when tokens changed (caller
+    * rescans — indices shifted). */
   private def captureInputOrder(ts: ArrayBuffer[Tok], depths: Array[Int],
-      aggIdx: Int, aggClose: Int): Boolean = {
+      aggIdx: Int, aggClose: Int, fileTable: String => Boolean, seq: Iterator[Int]): Boolean = {
     var s = aggIdx
     while (s >= 0 && !(ts(s).isWord("SELECT") && depths(s) <= depths(aggIdx)))
       s -= 1
@@ -3417,8 +3186,7 @@ object Compat {
           (argToks.head.text.equalsIgnoreCase(alias) ||
             argToks.head.text.equalsIgnoreCase(relText)))
         return false
-      rsSeq += 1
-      val key = s"__rs$rsSeq"
+      val key = s"__rs${seq.next()}"
       // r18: on a FILE-BACKED table the key leads with the file's
       // (mtime, name) ordinal — a multi-STATEMENT insert history
       // spans multiple parquet files whose LISTING order is
@@ -3428,7 +3196,7 @@ object Compat {
       // heap sequence. Non-file relations (views, VALUES) keep the
       // plain id — `_metadata` would not resolve there.
       val idExpr =
-        if (fileTableCheck.get()(relText.split("\\.").last.toLowerCase))
+        if (fileTable(relText.split("\\.").last.toLowerCase))
           "struct(_metadata.file_modification_time AS __mt, " +
             "_metadata.file_name AS __fn, " +
             "monotonically_increasing_id() AS __mi)"
@@ -3535,13 +3303,15 @@ object Compat {
               val desc = orderIdx > 0 && ts.slice(orderIdx, close).exists(tok =>
                 tok.kind == Word && tok.text.equalsIgnoreCase("DESC"))
               val sortFlag = if (desc) "false" else "true"
-              val nullJoin = if (desc) "array_prepend" else "array_append"
+              val set = Tok(Word, "sort_array(collect_set(") +: e :+ Tok(Word, s"), $sortFlag)")
+              // pg's array_prepend takes (element, array)
+              val withNull =
+                if (desc) Tok(Word, "array_prepend(NULL, ") +: set :+ Tok(Word, ")")
+                else Tok(Word, "array_append(") +: set :+ Tok(Word, ", NULL)")
               val rebuilt =
                 ArrayBuffer(Tok(Word, "CASE WHEN count(*) = 0 THEN NULL " +
-                  "WHEN count(*) > count(")) ++ e ++
-                  ArrayBuffer(Tok(Word, s") THEN $nullJoin(sort_array(collect_set(")) ++ e ++
-                  ArrayBuffer(Tok(Word, s"), $sortFlag), NULL) ELSE sort_array(collect_set(")) ++ e ++
-                  ArrayBuffer(Tok(Word, s"), $sortFlag) END"))
+                  "WHEN count(*) > count(")) ++ e ++ ArrayBuffer(Tok(Word, ") THEN ")) ++
+                  withNull ++ ArrayBuffer(Tok(Word, " ELSE ")) ++ set ++ ArrayBuffer(Tok(Word, " END"))
               ts.remove(i, close - i + 1)
               ts.insertAll(i, rebuilt)
               i += rebuilt.length - 1
@@ -3966,7 +3736,7 @@ object Compat {
             val (gen, fn) = wraps(t.text.toLowerCase)
             if (t.text.equalsIgnoreCase("generate_series")) {
               // default step: pad the 2-arg form here (the wrap fuses
-              // the name, so padFunctionArgs can't see it later)
+              // the name into one token with the generator)
               var commas = 0; var depth = 0; var j = open + 1
               while (j < close) {
                 if (ts(j).is("(") || ts(j).is("[")) depth += 1
@@ -4081,8 +3851,8 @@ object Compat {
 
   /** `concat(a, b, …)` → `concat_ws('', a, b, …)`: pg concat skips
     * NULL arguments and never returns NULL; Spark's concat is
-    * null-on-null. Runs before renameFunctions so the array_cat →
-    * concat rename (array concatenation) is unaffected. */
+    * null-on-null. `array_cat` resolves to Spark's concat in the
+    * registry ([[PgNames]]), after this pass. */
   private def rewriteConcatNullSafe(ts: ArrayBuffer[Tok]): Unit = {
     var i = 0
     while (i < ts.length) {
@@ -4308,26 +4078,17 @@ object Compat {
                 ts(fromIdx) = Tok(Op, ",")
                 ts(i) = Tok(Word, "pg_substring_re")
               } else {
-                // positional FROM n [FOR m] — route to pg_substr for
-                // pg's 0/negative-start clamping semantics
-                var forIdx = -1
+                // positional FROM n [FOR m] → the comma call, which the
+                // registry resolves with pg's start clamping (Spark's
+                // parser would build its own Substring from FROM/FOR)
                 var k = fromIdx + 1; var d2 = 0
                 while (k < close) {
                   if (ts(k).is("(") || ts(k).is("[")) d2 += 1
                   else if (ts(k).is(")") || ts(k).is("]")) d2 -= 1
-                  else if (d2 == 0 && ts(k).isWord("FOR")) forIdx = k
+                  else if (d2 == 0 && ts(k).isWord("FOR")) ts(k) = Tok(Op, ",")
                   k += 1
                 }
                 ts(fromIdx) = Tok(Op, ",")
-                if (forIdx > 0) ts(forIdx) = Tok(Op, ",")
-                else {
-                  // insert a REAL comma token — a composite ", N" Word
-                  // hides the comma from padFunctionArgs' arity count,
-                  // which then double-padded the 2-arg FROM form
-                  ts.insert(close, Tok(Word, " 2147483647"))
-                  ts.insert(close, Tok(Op, ","))
-                }
-                ts(i) = Tok(Word, "pg_substr")
               }
             }
           }
@@ -4424,158 +4185,6 @@ object Compat {
               ts.insert(lit + 1, Tok(Op, ")"))
               ts.insert(lit, Tok(Op, "("))
               i = lit + 1
-            }
-          }
-        }
-      }
-      i += 1
-    }
-  }
-
-  /** `EXTRACT(EPOCH FROM expr)` → seconds-since-epoch as double.
-    * Spark's EXTRACT has no EPOCH field at all, and pg clients
-    * (Grafana time math, ORMs) lean on it heavily. The expr is kept
-    * verbatim inside a `CAST(... AS TIMESTAMP)`, so date/timestamp/
-    * string inputs all work; interval inputs are out of scope (no
-    * Spark shape for them).
-    */
-  /** pg EXTRACT fields Spark's EXTRACT lacks (epoch, dow/isodow
-    * numbering, century-family, sub-second aggregates), as
-    * (prefix, suffix) pairs spliced around the kept `(expr)` — the
-    * original Op parens stay so matchParen-based passes remain
-    * consistent; hidden parens in the Word tokens balance in the
-    * final SQL text. All pinned against live pg 15. */
-  private val extractFieldMap: Map[String, (String, String)] = Map(
-    "epoch" -> ("(CAST(unix_micros(CAST(",
-      " AS TIMESTAMP)) AS DOUBLE) / 1000000.0)"),
-    "dow" -> ("(dayofweek", " - 1)"), // pg: 0 = Sunday
-    "isodow" -> ("(weekday", " + 1)"), // pg: 7 = Sunday
-    "isoyear" -> ("pg_isoyear(CAST(", " AS DATE))"),
-    "decade" -> ("CAST(floor(year", " / 10) AS BIGINT)"),
-    "century" -> ("CAST(ceil(year", " / 100.0) AS BIGINT)"),
-    "millennium" -> ("CAST(ceil(year", " / 1000.0) AS BIGINT)"),
-    // seconds-and-finer aggregates ride Spark's fractional SECOND
-    // field, which also works for the TIME type
-    "microseconds" -> ("CAST(extract(SECOND FROM ",
-      ") * 1000000 AS BIGINT)"),
-    "milliseconds" -> ("CAST(extract(SECOND FROM ",
-      ") * 1000 AS DECIMAL(20,3))"),
-    // Julian Date: pg pins 1970-01-01 00:00 → 2440588 with the day
-    // fraction measured from midnight (live-pg: '2024-01-01 18:00' →
-    // 2460311.75, '1969-12-31 12:00' → 2440587.5). Double render
-    // matches pg exactly for dates (integer value) and up to pg's
-    // cosmetic trailing numeric zeros for timestamps.
-    "julian" -> ("(CAST(unix_micros(CAST(",
-      " AS TIMESTAMP)) AS DOUBLE) / 86400000000.0 + 2440588)"))
-
-  private def rewriteExtractEpoch(ts: ArrayBuffer[Tok]): Unit = {
-    var i = 0
-    while (i < ts.length) {
-      val t = ts(i)
-      if (t.kind == Word && t.text.equalsIgnoreCase("date_part")) {
-        // date_part('field', e) — same expansions as EXTRACT
-        val open = nextIdx(ts, i)
-        if (open >= 0 && ts(open).is("(")) {
-          val f = nextIdx(ts, open)
-          val comma = if (f >= 0) nextIdx(ts, f) else -1
-          if (f >= 0 && ts(f).kind == Str && comma >= 0 && ts(comma).is(",")) {
-            val field = ts(f).text.drop(1).dropRight(1).toLowerCase
-            val operand = nextIdx(ts, comma)
-            val isInterval = operand >= 0 && ts(operand).kind == Word &&
-              (ts(operand).text.equalsIgnoreCase("INTERVAL") ||
-                ts(operand).text.equalsIgnoreCase("pg_interval"))
-            if (isInterval) {
-              // same field/arg shape as pg_interval_part — just rename
-              ts(i) = Tok(Word, "pg_interval_part")
-            } else extractFieldMap.get(field).foreach { case (prefix, suffix) =>
-              val close = matchParen(ts, open)
-              if (close > 0) {
-                ts.insert(close + 1, Tok(Word, suffix))
-                ts.remove(f, comma - f + 1)
-                ts(i) = Tok(Word, prefix)
-              }
-            }
-          }
-        }
-      } else if (t.kind == Word && t.text.equalsIgnoreCase("date_trunc")) {
-        // Spark's date_trunc returns NULL for pg's coarse fields;
-        // an interval operand needs pg_interval_trunc entirely
-        val open = nextIdx(ts, i)
-        if (open >= 0 && ts(open).is("(")) {
-          val f = nextIdx(ts, open)
-          val comma = if (f >= 0) nextIdx(ts, f) else -1
-          val operand = if (comma >= 0 && ts(comma).is(",")) nextIdx(ts, comma) else -1
-          if (operand >= 0 && ts(operand).kind == Word &&
-            (ts(operand).text.equalsIgnoreCase("INTERVAL") ||
-              ts(operand).text.equalsIgnoreCase("pg_interval"))) {
-            ts(i) = Tok(Word, "pg_interval_trunc")
-          } else if (f >= 0 && ts(f).kind == Str) {
-            val field = ts(f).text.drop(1).dropRight(1).toLowerCase
-            if (field == "decade" || field == "century" || field == "millennium")
-              ts(i) = Tok(Word, "pg_date_trunc")
-          }
-        }
-      } else if (t.kind == Word && t.text.equalsIgnoreCase("isfinite")) {
-        // isfinite(interval) — every interval value here is finite
-        // (pg's 'infinity' intervals are not representable); the
-        // timestamp-typed isfinite UDF can't take the argument
-        val open = nextIdx(ts, i)
-        if (open >= 0 && ts(open).is("(")) {
-          val a = nextIdx(ts, open)
-          val close = matchParen(ts, open)
-          if (close > 0 && a >= 0 && ts(a).kind == Word &&
-            (ts(a).text.equalsIgnoreCase("INTERVAL") ||
-              ts(a).text.equalsIgnoreCase("pg_interval"))) {
-            ts.remove(i, close - i + 1)
-            ts.insert(i, Tok(Word, "TRUE"))
-          }
-        }
-      } else if (t.kind == Word && t.text.equalsIgnoreCase("EXTRACT")) {
-        val open = nextIdx(ts, i)
-        if (open >= 0 && ts(open).is("(")) {
-          val fieldIdx = nextIdx(ts, open)
-          val fromIdx = if (fieldIdx >= 0) nextIdx(ts, fieldIdx) else -1
-          // EXTRACT(anyfield FROM INTERVAL '…') — pg does NOT
-          // normalize interval fields the way Spark does (hours of
-          // '100 hours' is 100, days is 0; epoch can't go through the
-          // timestamp-cast shape at all): route EVERY interval extract
-          // through pg_interval_part. Must be checked before the
-          // extractFieldMap branch so epoch-from-interval lands here.
-          val intervalOperand = fromIdx >= 0 && ts(fromIdx).kind == Word &&
-            ts(fromIdx).text.equalsIgnoreCase("FROM") && {
-              val operand = nextIdx(ts, fromIdx)
-              operand >= 0 && ts(operand).kind == Word &&
-                (ts(operand).text.equalsIgnoreCase("INTERVAL") ||
-                  ts(operand).text.equalsIgnoreCase("pg_interval"))
-            }
-          if (intervalOperand && fieldIdx >= 0 && ts(fieldIdx).kind == Word) {
-            ts(i) = Tok(Word, "pg_interval_part")
-            ts(fieldIdx) = Tok(Str, "'" + ts(fieldIdx).text.toLowerCase + "'")
-            ts(fromIdx) = Tok(Op, ",")
-          } else if (fieldIdx >= 0 && ts(fieldIdx).kind == Word &&
-            extractFieldMap.contains(ts(fieldIdx).text.toLowerCase) &&
-            fromIdx >= 0 && ts(fromIdx).kind == Word &&
-            ts(fromIdx).text.equalsIgnoreCase("FROM")) {
-            val fieldLower = ts(fieldIdx).text.toLowerCase
-            // pg 14+: EXTRACT returns numeric — epoch renders with 6
-            // fractional digits (1709769600.000000). date_part keeps
-            // float8 (bare 1709769600), so only this branch widens.
-            // (sweep #8, live-pg-pinned)
-            val (prefix, suffix) =
-              if (fieldLower == "epoch")
-                ("(CAST(CAST(unix_micros(CAST(",
-                  " AS TIMESTAMP)) AS DOUBLE) / 1000000.0 AS DECIMAL(24,6)))")
-              else extractFieldMap(fieldLower)
-            val close = matchParen(ts, open)
-            if (close > 0) {
-              // Keep ts(close) as the Op ')' and append the suffix as its
-              // own Word token so matchParen (which counts only Op-kind
-              // tokens) stays balanced for later passes; the hidden
-              // parens in prefix/suffix balance in the final SQL text.
-              ts.insert(close + 1, Tok(Word, suffix))
-              // drop FIELD FROM (and the Ws between them), keep '('
-              ts.remove(fieldIdx, fromIdx - fieldIdx + 1)
-              ts(i) = Tok(Word, prefix)
             }
           }
         }
@@ -5128,7 +4737,7 @@ object Compat {
   /** Map pg type names after `::` and inside CAST(... AS t). Handles
     * `[]` suffix → ARRAY<t> (reference PgOidTypePlanner analogue).
     */
-  private def rewriteCastTypes(ts: ArrayBuffer[Tok]): Unit = {
+  private def rewriteCastTypes(ts: ArrayBuffer[Tok], enumTypes: Set[String]): Unit = {
     var i = 0
     while (i < ts.length) {
       if (ts(i).is("::")) {
@@ -5225,7 +4834,7 @@ object Compat {
           ts.insertAll(start, Seq(Tok(Word, "st_geometry_in"), Tok(Op, "(")))
           i = p + 3
         } else if (t >= 0 && ts(t).kind == Word && p >= 0 &&
-          enumTypesTL.get.contains(ts(t).text.toLowerCase)) {
+          enumTypes.contains(ts(t).text.toLowerCase)) {
           // `expr::<enumtype>` → label validation against the
           // session's enum registry (pg 22P02 on unknown labels)
           val tyName = ts(t).text.toLowerCase
@@ -5717,20 +5326,6 @@ object Compat {
             }
             if (renamed != name) ts(i) = Tok(Word, renamed)
           }
-        }
-      }
-      i += 1
-    }
-  }
-
-  /** Function renames when followed by '('. */
-  private def renameFunctions(ts: ArrayBuffer[Tok]): Unit = {
-    var i = 0
-    while (i < ts.length) {
-      if (ts(i).kind == Word) {
-        fnRename.get(ts(i).text.toLowerCase).foreach { repl =>
-          val nx = nextIdx(ts, i)
-          if (nx >= 0 && ts(nx).is("(")) ts(i) = Tok(Word, repl)
         }
       }
       i += 1

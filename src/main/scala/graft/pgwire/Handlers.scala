@@ -1292,12 +1292,8 @@ object Handlers {
       else sql
     // json_agg input-order capture: which relations are file-backed
     // catalog tables (the `_metadata` file-ordinal key resolves there)
-    if (sql.toLowerCase.contains("json"))
-      Compat.fileTableCheck.set(name =>
-        TxnJournal.tableLocation(spark, name).isDefined)
-    val rewritten =
-      try Compat.rewriteTop(pre, graft.functions.PgEnums.names(spark))
-      finally Compat.fileTableCheck.remove()
+    val rewritten = Compat.rewrite(pre, Compat.Ctx(graft.functions.PgEnums.names(spark),
+      topLevel = true, fileTable = name => TxnJournal.tableLocation(spark, name).isDefined))
     val lower = rewritten.toLowerCase
     if (lower.contains("pg_") || lower.contains("information_schema"))
       PgCatalog.refresh(spark)
@@ -2188,7 +2184,8 @@ HINT:  Truncate table "$childT" at the same time, or use TRUNCATE ... CASCADE.""
     // surfaces pg-shaped errors, and yields the output schema for the
     // optional rename column list
     val df = runSql(spark, body)
-    val rewritten = Compat.rewriteTop(body, graft.functions.PgEnums.names(spark))
+    val rewritten = Compat.rewrite(body,
+      Compat.Ctx(graft.functions.PgEnums.names(spark), topLevel = true))
     val finalSql = Option(m.group(3)) match {
       case Some(colsRaw) =>
         val cols = splitTopLevelText(
@@ -2316,7 +2313,8 @@ HINT:  Truncate table "$childT" at the same time, or use TRUNCATE ... CASCADE.""
       throw PgException("42P07", s"""relation "$name" already exists""")
     }
     val df = runSql(spark, body)
-    val rewritten = Compat.rewriteTop(body, graft.functions.PgEnums.names(spark))
+    val rewritten = Compat.rewrite(body,
+      Compat.Ctx(graft.functions.PgEnums.names(spark), topLevel = true))
     val projected = Option(m.group(3)) match {
       case Some(colsRaw) =>
         val cols = splitTopLevelText(

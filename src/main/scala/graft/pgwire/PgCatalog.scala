@@ -384,6 +384,8 @@ object PgCatalog {
     u.register("pg_get_viewdef",
       (oid: Integer, pretty: Boolean) =>
         if (oid == null) null else Option(viewDefByOid.get(oid)).orNull)
+    // the 1-arg pg_get_constraintdef, over the builder just registered
+    PgNames.install(spark)
   }
 
   private val pgAttributeSchema = StructType(Seq(

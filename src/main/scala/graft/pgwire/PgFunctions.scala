@@ -1232,8 +1232,8 @@ object PgFunctions {
         java.lang.Boolean.valueOf(a1.isBefore(b2) && a2.isBefore(b1))
       })
     // pg regexp optional-arg family (start / N / endoption / flags /
-    // subexpr forms Spark's builtins lack) — Compat renames + pads the
-    // call sites to these full-arity UDFs
+    // subexpr forms Spark's builtins lack) — PgNames routes the pg
+    // call shapes to these full-arity UDFs, defaults written out
     u.register("pg_regexp_like", (s: String, p: String, fl: String) =>
       if (s == null || p == null || fl == null) null
       else java.lang.Boolean.valueOf(pgRegexpLike(s, p, fl)))
@@ -1358,7 +1358,7 @@ object PgFunctions {
     // width_bucket.rs:32-315): count of thresholds <= operand, NULL
     // thresholds never counted, NaN operand sorts below everything.
     // Registered under pg_width_bucket because Spark's registry cannot
-    // overload the 4-arg builtin; Compat rewrites the 2-arg call shape.
+    // overload the 4-arg builtin; PgNames routes the 2-arg call shape.
     u.register("pg_width_bucket", (x: java.lang.Double, thresholds: Seq[java.lang.Double]) =>
       if (x == null || thresholds == null) null
       else Integer.valueOf(thresholds.count(t => t != null && t.doubleValue() <= x.doubleValue())))
@@ -1566,5 +1566,7 @@ object PgFunctions {
         val s = if (stddev == null) 1.0 else stddev.doubleValue()
         java.lang.Double.valueOf(m + s * java.util.concurrent.ThreadLocalRandom.current().nextGaussian())
       }).asNondeterministic()
+    // last: the pg names wrap the builders registered above
+    PgNames.install(spark)
   }
 }

@@ -43,6 +43,8 @@ import org.apache.spark.sql.types._
   *    STRING to Spark, time is bigint nanos). See [[FamilyOps]].
   *  - array `||` element / sub-array / NULL → append, prepend or the
   *    array itself.
+  *  - EXTRACT, `date_part`, `date_trunc` and `isfinite` over an
+  *    interval, a time or a date/timestamp.
   *  - `pg_typeof(x)` names x's pg type from the analyzed plan.
   *
   * Reference anchor: the reference engine inherits these from
@@ -417,20 +419,6 @@ object PgSemantics {
         Subtract(l, graft.functions.PgFormatExpressions.PgIntervalLiteral(
           implicitStrLit(r).get))
 
-      // EXTRACT(EPOCH FROM x) where x turned out interval-typed
-      // (`ts - 'lit'` subtraction): the text rewrite wrapped the
-      // operand as unix_micros(CAST(x AS TIMESTAMP)), and the failing
-      // inner cast keeps the unix_micros parent unresolved — so the
-      // CAST itself retargets to the timestamp whose unix micros ARE
-      // pg's interval epoch (pg has no interval→timestamp cast at
-      // all, so no legitimate query carries this shape)
-      case Cast(iv, TimestampType, _, _)
-          if iv.resolved && isIvType(iv.dataType) =>
-        MicrosToTimestamp(Cast(Multiply(
-          graft.functions.PgFormatExpressions.PgIntervalPart(
-            Literal("epoch"), iv),
-          Literal(1000000L)), LongType))
-
       // interval + unknown AFTER Spark's datetime coercion flipped it
       // into TimestampAddInterval(cast(lit AS TIMESTAMP), interval)
       case TimestampAddInterval(l, itv, _)
@@ -451,7 +439,7 @@ object PgSemantics {
             mixedStrLit(l.children) && widerKnown(l.children).isDefined =>
         Least(coerceStrLits(l.children))
 
-      // 1-arg to_timestamp is pg's epoch→timestamptz (Compat renames
+      // 1-arg to_timestamp is pg's epoch→timestamptz (PgNames routes
       // it to timestamp_seconds); an unknown literal argument coerces
       // to double precision
       case st @ SecondsToTimestamp(child)
@@ -693,7 +681,10 @@ object PgSemantics {
     *    `time - time` read the time as an interval, `time ± interval`
     *    wraps at 24 h;
     *  - inet/cidr: ORDER BY and min/max in network order; ranges:
-    *    ORDER BY in range order.
+    *    ORDER BY in range order;
+    *  - EXTRACT, date_part, date_trunc, isfinite ([[PgNames.TypedCall]]):
+    *    an interval's pg fields, a time's time-of-day fields, a date's or
+    *    timestamp's fields Spark lacks ([[datetimeFields]]).
     * BETWEEN's shared operand (a common-expression reference) types as
     * its definition. One instance per rule application: the plan's
     * [[definedTypes]] are built on first use. */
@@ -783,6 +774,8 @@ object PgSemantics {
       })
 
     def unapply(e: Expression): Option[Expression] = e match {
+      case PgNames.TypedCall(name, args, builtin) if args.forall(_.resolved) =>
+        Some(dateCall(name, args, builtin))
       // time of day: pg casts a time beside a date or timestamp to an
       // interval; Spark reads `date ± bigint` as date_add/date_sub and
       // `timestamp - bigint` as a timestamp difference
@@ -911,6 +904,42 @@ object PgSemantics {
       case _ => None
     }
 
+    /** EXTRACT (`extract('field', x)`), date_part, date_trunc and
+      * isfinite by x's type. pg does not normalize an interval's fields
+      * as Spark does (hours of '100 hours' is 100); date_part is double
+      * precision where EXTRACT is numeric (pg 14+). A time has only its
+      * time-of-day fields. Otherwise a date or timestamp field Spark
+      * lacks or numbers differently, else the builtin. */
+    private def dateCall(name: String, args: Seq[Expression],
+        builtin: Seq[Expression] => Expression): Expression = {
+      val x = args.last
+      val field = args.head match {
+        case Literal(f, StringType) if f != null && args.length == 2 => Some(f.toString.toLowerCase)
+        case _ => None
+      }
+      def part(of: Expression): Expression = {
+        val p = graft.functions.PgFormatExpressions.PgIntervalPart(args.head, of)
+        if (name == "date_part") taggedCast(p, DoubleType) else p
+      }
+      (name, field) match {
+        case ("isfinite", _) if isIvType(x.dataType) => Literal(true)
+        case ("date_trunc", _) if isIvType(x.dataType) =>
+          graft.functions.PgFormatExpressions.PgIntervalTrunc(args.head, x)
+        case ("extract" | "date_part", _) if isIvType(x.dataType) => part(x)
+        case ("extract" | "date_part", Some(f)) if isTime(x) =>
+          if (!timeFields(graft.functions.PgFormatExpressions.PgIntervalPart.unit(f)))
+            throw PgException("0A000", s"""unit "$f" not supported for type time without time zone""")
+          part(timeInterval(x))
+        case ("date_trunc", Some("decade" | "century" | "millennium")) =>
+          fnCall("pg_date_trunc", args)
+        case ("extract", Some("epoch")) =>
+          taggedCast(datetimeField("epoch", x), DecimalType(24, 6))
+        case ("extract" | "date_part", Some(f)) if datetimeFields.contains(f) =>
+          datetimeField(f, x)
+        case _ => builtin(args)
+      }
+    }
+
     /** `<<`/`>>` of a bit string by an integer. */
     private def bitShift(fn: String, l: Expression, r: Expression): Option[Expression] =
       if (isBits(l) && r.resolved) Some(fnCall(fn, Seq(stripImplicitCasts(l), stripImplicitCasts(r))))
@@ -1002,6 +1031,34 @@ object PgSemantics {
       }
     }
   }
+
+  /** The fields pg reads from a time of day. */
+  private val timeFields = Set("hour", "minute", "second", "millisecond", "microsecond", "epoch")
+
+  /** pg fields of a date or timestamp that Spark's EXTRACT lacks or
+    * numbers differently, as SQL over the operand `v` (live-pg-15
+    * pinned); EXTRACT's epoch is this one cast to numeric. */
+  private lazy val datetimeFields: Map[String, Expression] = Map(
+    "epoch" -> "CAST(unix_micros(CAST(v AS TIMESTAMP)) AS DOUBLE) / 1000000.0",
+    "dow" -> "dayofweek(v) - 1", // pg: 0 = Sunday
+    "isodow" -> "weekday(v) + 1", // pg: 7 = Sunday
+    "isoyear" -> "pg_isoyear(CAST(v AS DATE))",
+    "decade" -> "CAST(floor(year(v) / 10) AS BIGINT)",
+    "century" -> "CAST(ceil(year(v) / 100.0) AS BIGINT)",
+    "millennium" -> "CAST(ceil(year(v) / 1000.0) AS BIGINT)",
+    "microseconds" -> "CAST(extract(SECOND FROM v) * 1000000 AS BIGINT)",
+    "milliseconds" -> "CAST(extract(SECOND FROM v) * 1000 AS DECIMAL(20,3))",
+    // Julian Date: 1970-01-01 00:00 is 2440588, the day fraction
+    // measured from midnight
+    "julian" -> "CAST(unix_micros(CAST(v AS TIMESTAMP)) AS DOUBLE) / 86400000000.0 + 2440588"
+  ).map { case (f, sql) =>
+    f -> org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression(sql)
+  }
+
+  private def datetimeField(f: String, x: Expression): Expression =
+    datetimeFields(f).transformUp {
+      case org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(Seq("v")) => x
+    }
 
   /** `enum_ord('type', x)`: x's declared position in its enum type. */
   private def enumOrd(t: String, e: Expression): Expression =

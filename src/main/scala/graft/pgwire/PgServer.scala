@@ -524,9 +524,16 @@ final class PgServer(
   private def writeError(out: DataOutputStream, e: Throwable): Unit = {
     // a PgException thrown inside a UDF (e.g. pg_time_in's 22007)
     // surfaces wrapped in SparkException — walk the cause chain so the
-    // client sees the pg SQLSTATE, not XX000
-    val unwrapped = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-      .take(8).collectFirst { case p: PgException => p }.getOrElse(e)
+    // client sees the pg SQLSTATE, not XX000. Spark's runtime data
+    // errors (class 22: overflow, division by zero, bad cast input)
+    // carry pg's codes already, apart from CAST_INVALID_INPUT's 22018
+    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8).toSeq
+    val unwrapped = chain.collectFirst { case p: PgException => p }
+      .orElse(chain.collectFirst { case d: org.apache.spark.SparkThrowable
+          if Option(d.getSqlState).exists(_.startsWith("22")) =>
+        PgException(if (d.getSqlState == "22018") "22P02" else d.getSqlState,
+          Option(d.getMessage).getOrElse(d.getSqlState))
+      }).getOrElse(e)
     val (code, msg) = unwrapped match {
       case PgException(c, m) => (c, m)
       case ae: org.apache.spark.sql.AnalysisException =>

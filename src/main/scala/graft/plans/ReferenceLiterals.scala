@@ -54,9 +54,10 @@ case class RefLiteral(literal: Literal) extends LeafExpression {
   *  - positions: the direct operands of a deterministic comparison,
   *    `IN` or arithmetic, wherever it sits, CASE/IF conditions
   *    included; CASE/IF result values; and the value arguments of
-  *    `coalesce` (and so `nvl`), `greatest` and `least`. A function
-  *    argument that must stay a `Literal` (a scale, a format, a seed,
-  *    `substr`'s positions) is never a replaced operand.
+  *    `coalesce` (and so `nvl`), `greatest` and `least`; and the
+  *    arguments of a Scala UDF (pg's `substr` is the `pg_substr` UDF).
+  *    A native function's argument that must stay a `Literal` (a
+  *    scale, a format, a seed) is never a replaced operand.
   */
 object ReferenceLiterals extends Rule[SparkPlan] {
 
@@ -74,6 +75,9 @@ object ReferenceLiterals extends Rule[SparkPlan] {
     case _: BinaryComparison | _: In | _: BinaryArithmetic => true
     // every child is a condition or a value the node passes through
     case _: CaseWhen | _: If | _: Coalesce | _: Greatest | _: Least => true
+    // a Scala UDF evaluates its arguments like any column (pg_substr's
+    // positions, the regexp family's defaults)
+    case _: ScalaUDF => true
     case _ => false
   })
 

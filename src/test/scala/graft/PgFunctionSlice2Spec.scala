@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Row
-import graft.pgwire.{Compat, PgFunctions}
+import graft.pgwire.{Compat, Handlers, PgFunctions}
 
 /** Slice #2 of the functions.md roadmap: binary-string pack, uuid
   * pack, SIMILAR TO, pg_typeof/pg_input_is_valid, array P2 rows and
@@ -102,14 +102,12 @@ class PgFunctionSlice2Spec extends SparkSpec {
   test("extract(epoch) rewrite and date_bin") {
     PgFunctions.registerAll(spark)
     // EXTRACT returns numeric at scale 6 (pg 14+; sweep #8)
-    val sql = Compat.rewrite(
-      "SELECT EXTRACT(EPOCH FROM TIMESTAMP '1970-01-02 00:00:00.5') AS e")
-    assert(spark.sql(sql).collect().head.getDecimal(0) ===
+    val sql = "SELECT EXTRACT(EPOCH FROM TIMESTAMP '1970-01-02 00:00:00.5') AS e"
+    assert(Handlers.runSql(spark, sql).collect().head.getDecimal(0) ===
       new java.math.BigDecimal("86400.500000"))
     // nested parens inside the expr survive the rewrite
-    val sql2 = Compat.rewrite(
-      "SELECT extract(epoch from coalesce(TIMESTAMP '1970-01-01 00:01:00', null)) AS e")
-    assert(spark.sql(sql2).collect().head.getDecimal(0) ===
+    val sql2 = "SELECT extract(epoch from coalesce(TIMESTAMP '1970-01-01 00:01:00', null)) AS e"
+    assert(Handlers.runSql(spark, sql2).collect().head.getDecimal(0) ===
       new java.math.BigDecimal("60.000000"))
     val r = spark.sql(
       """SELECT date_bin(INTERVAL '15' MINUTE, TIMESTAMP '2026-08-12 10:07:30',

@@ -114,6 +114,16 @@ class PgServerSpec extends SparkSpec with BeforeAndAfterAll {
     c.close()
   }
 
+  test("Spark runtime data errors reach the client with pg's SQLSTATE (live pg 15)") {
+    val c = connect()
+    for ((sql, code) <- Seq("SELECT 2147483647::int + 1" -> "22003", "SELECT 1/0" -> "22012",
+        "SELECT 'x'::int" -> "22P02")) {
+      assert(c.query(sql).errors.map(_._1) === Seq(code), sql)
+      assert(c.query("SELECT 1").rows === Seq(Seq(Some("1"))), s"after $sql")
+    }
+    c.close()
+  }
+
   test("SET pushes ParameterStatus; SHOW reads it back") {
     val c = connect()
     val r1 = c.query("SET application_name = 'mytool'")

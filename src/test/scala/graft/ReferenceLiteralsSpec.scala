@@ -121,6 +121,17 @@ class ReferenceLiteralsSpec extends SparkSpec with BeforeAndAfterAll {
     }))
   }
 
+  test("substr's positions compile on the first run only (pg's substr is a UDF)") {
+    val session = new Session(1, "postgres", "postgres")
+    val xs = Seq(2, 3, 4)
+    val runs = runKeys(session, xs)(x =>
+      s"SELECT substr(CAST(k AS TEXT) || 'abcdef', $x), substr(CAST(k AS TEXT), 1, $x) " +
+        "FROM rl_vals ORDER BY k")
+    assertFlat(runs)
+    val ks = Seq(0, 0, 1, 1, 2, 2, 3)
+    assert(runs.map(_._2) === xs.map(x => ks.map(k => s"${(k + "abcdef").substring(x - 1)}|$k")))
+  }
+
   test("EXPLAIN keeps the literal values, in the scan's pushed and partition filters too") {
     val session = new Session(1, "postgres", "postgres")
     val pk = run(session, "EXPLAIN SELECT o_custkey FROM rl_orders WHERE o_orderkey = 202").mkString("\n")
@@ -177,7 +188,8 @@ class ReferenceLiteralsSpec extends SparkSpec with BeforeAndAfterAll {
           s"SELECT a.i, b.i FROM rl_vals a JOIN rl_vals b ON a.k = b.k AND (a.$c < $v OR b.$c = $v)",
           s"SELECT i, CASE WHEN k > i THEN $v ELSE $c END, if(k > i, $c, $v), coalesce($c, $v), " +
             s"greatest($c, $v), least($c, $v) FROM rl_vals") ++
-          (if (arithmetic(c)) Seq(s"SELECT i, $c + $v, $c - $v FROM rl_vals") else Nil)
+          (if (arithmetic(c)) Seq(s"SELECT i, $c + $v, $c - $v FROM rl_vals") else Nil) ++
+          (if (c == "i") Seq(s"SELECT i, pg_substr(CAST(k AS STRING), $v, 2) FROM rl_vals") else Nil)
         val referenced = shapes.map(sameAsLiterals)
         if (v.contains("NULL")) assert(!referenced.exists(identity), v)
         else assert(referenced.forall(identity), v)
