@@ -317,7 +317,7 @@ object PgCatalog {
         })
 
   /** oid → definition text, read by the pg_get_indexdef /
-    * pg_get_constraintdef UDFs (driver-map pattern, like
+    * pg_get_constraintdef / pg_get_viewdef UDFs (driver-map pattern, like
     * pg_sequences' live last_value). */
   private val indexDefByOid =
     new java.util.concurrent.ConcurrentHashMap[Int, String]()
@@ -371,11 +371,6 @@ object PgCatalog {
         else if (col == null || col == 0) Option(indexDefByOid.get(oid)).orNull
         else Option(indexKeysByOid.get(oid))
           .flatMap(_.lift(col - 1)).orNull)
-    // replaces PgFunctions' "" stub (last registration wins)
-    u.register("pg_get_constraintdef",
-      (oid: Integer, pretty: Boolean) =>
-        if (oid == null) null
-        else Option(constraintDefByOid.get(oid)).getOrElse(""))
     // psql \d+ on a view: pg_get_viewdef('oid'::pg_catalog.oid, true);
     // pg renders a pretty-printed body terminated with ';'
     u.register("pg_get_viewdef",
@@ -384,9 +379,12 @@ object PgCatalog {
     u.register("pg_get_viewdef",
       (oid: Integer, pretty: Boolean) =>
         if (oid == null) null else Option(viewDefByOid.get(oid)).orNull)
-    // the 1-arg pg_get_constraintdef, over the builder just registered
-    PgNames.install(spark)
   }
+
+  /** pg_get_constraintdef's text for a constraint oid ("" when unknown);
+    * PgFunctions registers the UDF, so PgNames wraps it with the rest. */
+  private[pgwire] def constraintDef(oid: Int): String =
+    Option(constraintDefByOid.get(oid)).getOrElse("")
 
   private val pgAttributeSchema = StructType(Seq(
     StructField("attrelid", IntegerType), StructField("attname", StringType),
@@ -898,6 +896,8 @@ object PgCatalog {
 
   /** Register every static table/view once (server startup). */
   def registerStatic(spark: SparkSession): Unit = {
+    // the UDFs read the oid maps each refresh fills, so once suffices
+    registerIndexDefUdfs(spark)
     register(spark, "pg_namespace", pgNamespace(spark))
     register(spark, "pg_database", pgDatabase(spark))
     register(spark, "pg_type", pgTypeDf(spark))
@@ -1217,7 +1217,6 @@ object PgCatalog {
     val tables = PgSemantics.withPg(names.map(n => n -> spark.table(n).schema))
     val ixRows = indexRows(tables)
     refreshIndexDefs(ixRows, tables)
-    registerIndexDefUdfs(spark)
     // wire CREATE VIEW relations surface as relkind 'v' + pg_views rows
     // (wire-registered data files are also TEMP views but stay relkind
     // 'r' — they play pg's table role; PgViews tracks which is which)

@@ -1395,7 +1395,8 @@ object PgFunctions {
     u.register("pg_total_relation_size", (oid: Int) => 0L)
     u.register("pg_database_size", (name: String) => 0L)
     u.register("pg_stat_get_numscans", (oid: Int) => 0L)
-    u.register("pg_get_constraintdef", (oid: Integer, pretty: Boolean) => "")
+    u.register("pg_get_constraintdef", (oid: Integer, pretty: Boolean) =>
+      if (oid == null) null else PgCatalog.constraintDef(oid))
     u.register("pg_partition_ancestors", (oid: Int) => Array(oid))
     u.register("quote_ident", (s: String) => quoteIdent(s))
     u.register("parse_ident", (s: String) => parseIdent(s))

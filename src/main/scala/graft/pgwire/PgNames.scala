@@ -170,8 +170,8 @@ object PgNames {
   }
 
   /** Put each name's builder over the one registered under it now.
-    * Idempotent; runs again wherever a pack registers a name of the
-    * table over it (PgCatalog's `pg_get_constraintdef`). */
+    * Runs once, last in `PgFunctions.registerAll`, which registers every
+    * name of the table it wraps; idempotent. */
   def install(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     val byArity = routes.groupMap(_._1)(r => r._2 -> r._3).map { case (n, rs) => n -> rs.toMap }

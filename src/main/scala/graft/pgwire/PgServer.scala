@@ -54,11 +54,13 @@ final class PgServer(
         "spark.sql.extensions=graft.GraftExtensions")
     server.bind(new InetSocketAddress(host, port))
     running = true
+    // the pg functions first: restoring a saved wire view analyzes its
+    // pg text (EXTRACT(EPOCH FROM ts), date_part('isodow', ts), ...)
+    PgFunctions.registerAll(spark)
     // warehouse-backed DDL metadata: reload enums/sequences/indexes/
     // matviews/comments/tables when spark.graft.metaDir is set
     PgMeta.attachFromConf(spark)
     PgCatalog.registerAll(spark)
-    PgFunctions.registerAll(spark)
     PgStatStatements.installListener(spark)
     val t = new Thread(() => acceptLoop(), "pgwire-accept")
     t.setDaemon(true)

@@ -111,11 +111,6 @@ class MathFunctionsSpec extends SparkSpec with BeforeAndAfterAll {
     assert(wb("pg_width_bucket(CAST('NaN' AS DOUBLE), array(10.0D))") === Some(0))
     // NULL thresholds are never counted (reference maps them to NaN)
     assert(wb("pg_width_bucket(25.0D, array(10.0D, CAST(NULL AS DOUBLE), 20.0D))") === Some(2))
-    // the pg call shape: the wire path resolves 2-arg width_bucket to
-    // pg_width_bucket while the 4-arg form stays on Spark's builtin
-    def wire(e: String) = graft.pgwire.Handlers.runSql(spark, s"SELECT $e").collect().head.get(0)
-    assert(wire("width_bucket(25.0, ARRAY[10.0, 20.0, 30.0])") === 2)
-    assert(wire("width_bucket(5.35, 0.024, 10.06, 5)") === 3L)
   }
 
   test("random_normal is registered and nondeterministic-safe") {

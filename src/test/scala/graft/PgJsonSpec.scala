@@ -357,9 +357,6 @@ class PgJsonSpec extends SparkSpec {
     // jsonb variant renders canonical (": " spacing, jsonb key order)
     assert(run("SELECT jsonb_object_agg(k, v) AS o " +
       "FROM (VALUES ('a',NULL),('b',2)) t(k,v)") === """{"a": null, "b": 2}""")
-    // jsonb_array_length resolves to the Spark builtin on the wire path
-    assert(graft.pgwire.Handlers.runSql(spark, "SELECT jsonb_array_length('[1,2,3]')")
-      .collect()(0).getInt(0) === 3)
   }
 
   test("json[b]_agg without ORDER BY follows input order on base-table scans (live pg pinned, r17)") {

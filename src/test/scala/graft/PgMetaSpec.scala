@@ -75,6 +75,7 @@ class PgMetaSpec extends SparkSpec with BeforeAndAfterAll {
     try Seq(
       "DROP MATERIALIZED VIEW IF EXISTS pmeta_mv",
       "DROP VIEW IF EXISTS pmeta_v",
+      "DROP VIEW IF EXISTS pmeta_ext",
       "DROP TABLE IF EXISTS pmeta_child",
       "DROP TABLE IF EXISTS pmeta_parent",
       "DROP TABLE IF EXISTS pmeta_moods",
@@ -163,5 +164,22 @@ class PgMetaSpec extends SparkSpec with BeforeAndAfterAll {
     // each JVM's own draws are strictly increasing (per-process order)
     assert(mine.toSeq === mine.toSeq.sorted)
     assert(theirs === theirs.sorted)
+  }
+
+  test("a wire view over EXTRACT(EPOCH) and date_part('isodow') restores when a fresh server starts") {
+    // the saved text keeps pg's field names, which Spark's own
+    // extract/date_part reject: a restart must register the pg
+    // functions before it recreates the view
+    run("CREATE VIEW pmeta_ext AS SELECT EXTRACT(EPOCH FROM ts) AS e, " +
+      "date_part('isodow', ts) AS d FROM (SELECT TIMESTAMP '2024-03-07 12:00:00' AS ts) s")
+    val probe = "SELECT e, d FROM pmeta_ext"
+    assert(rows(probe) === Seq(Seq("1709812800.000000", "4")))
+    val outFile = Files.createTempFile("pgmeta-ext", ".tsv")
+    val (p, log) = spawn("graft.pgwire.PgMetaQueryChild", metaDir, outFile.toString, probe)
+    assert(p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS),
+      s"child JVM timed out\n${logTail(log)}")
+    assert(p.exitValue() === 0, s"child JVM failed:\n${logTail(log)}")
+    assert(new String(Files.readAllBytes(outFile), "UTF-8").trim ===
+      "0\t1709812800.000000|4")
   }
 }

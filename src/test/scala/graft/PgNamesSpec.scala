@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, NamedExpression, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans.logical.Project
-import graft.pgwire.{Handlers, PgCatalog, PgFunctions, PgNames, PgSemantics}
+import graft.pgwire.{Handlers, PgCatalog, PgFunctions, PgNames, PgSemantics, RowSet, Session}
 
 /** The pg name table ([[PgNames.routes]]), row by row: inside the pg
   * dialect each (name, arity) call analyzes to its engine function with
@@ -143,5 +143,29 @@ class PgNamesSpec extends SparkSpec {
       // a call Spark rejects is rejected the same way
       assert(cls(spark.sql(sql)) === cls(plain.sql(sql)), sql)
     }
+  }
+
+  test("renamed and arity-routed calls answer pg's values on the wire path") {
+    def wire(e: String) = Handlers.runSql(spark, s"SELECT $e").collect().head.get(0)
+    // 2-arg width_bucket is pg_width_bucket; the 4-arg form stays Spark's
+    assert(wire("width_bucket(25.0, ARRAY[10.0, 20.0, 30.0])") === 2)
+    assert(wire("width_bucket(5.35, 0.024, 10.06, 5)") === 3L)
+    assert(wire("jsonb_array_length('[1,2,3]')") === 3)
+  }
+
+  test("a catalog refresh keeps the pg_get_constraintdef builder and reads its text") {
+    val reg = spark.sessionState.functionRegistry
+    def builder = reg.lookupFunctionBuilder(FunctionIdentifier("pg_get_constraintdef")).get
+    val before = builder
+    val session = new Session(91, "postgres", "postgres")
+    def run(sql: String) = Handlers.execute(spark, session, sql)
+    run("CREATE TABLE pn_con (id int PRIMARY KEY)")
+    try {
+      PgCatalog.registerAll(spark) // a new fingerprint: refreshes
+      assert(builder eq before)
+      val RowSet(_, rs, _, _) = run(
+        "SELECT pg_get_constraintdef(oid) FROM pg_constraint WHERE conname = 'pn_con_pkey'")
+      assert(rs.map(_.getString(0)).toSeq === Seq("PRIMARY KEY (id)"))
+    } finally run("DROP TABLE pn_con")
   }
 }

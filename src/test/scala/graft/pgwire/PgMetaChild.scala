@@ -24,17 +24,14 @@ object PgMetaSeqChild {
   }
 }
 
-/** Full second-SparkSession child JVM for PgMetaSpec: boots its OWN
-  * SparkSession (fresh catalog, fresh registries — a genuine restart),
-  * attaches the shared meta root, and runs the probe statements whose
-  * answers the parent asserts value-for-value: enum rendering and
-  * declared-order sort, table contents, PK/FK/CHECK enforcement
-  * errors, serial and sequence continuation, pg_indexes/pg_views/
-  * pg_description catalog rows, matview reads. Output: `key<TAB>value`
-  * lines (errors print their SQLSTATE). */
-object PgMetaChildMain {
-  def main(args: Array[String]): Unit = {
-    val Array(metaDir, outFile) = args
+/** A restarted server for PgMetaSpec's child JVMs: its OWN
+  * SparkSession (fresh catalog, fresh registries — a genuine restart)
+  * with `spark.graft.metaDir` set, booted through [[PgServer.start]]
+  * as a deployment boots. [[probe]] writes `key<TAB>answer` for each
+  * probe statement to `outFile` (rows `|`/`;`-joined, errors their
+  * SQLSTATE) and stops. */
+object PgMetaRestart {
+  def probe(metaDir: String, outFile: String, probes: Seq[(String, String)]): Unit = {
     val spark = SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
@@ -43,13 +40,12 @@ object PgMetaChildMain {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-child-wh").toString)
+      .config("spark.graft.metaDir", metaDir)
       .config(graft.Tables.sessionConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // same boot order as PgServer.start
-    PgMeta.attach(spark, metaDir)
-    PgCatalog.registerAll(spark)
-    PgFunctions.registerAll(spark)
+    val server = new PgServer(spark)
+    server.start()
 
     val session = new Session(501, "postgres", "postgres")
     def run(sql: String): String =
@@ -64,7 +60,23 @@ object PgMetaChildMain {
         case PgException(code, _) => s"ERR:$code"
         case e: Throwable => s"FATAL:${e.getClass.getSimpleName}:${Option(e.getMessage).getOrElse("").take(120)}"
       }
+    val out = new java.io.PrintWriter(outFile)
+    probes.foreach { case (k, sql) => out.println(k + "\t" + run(sql)) }
+    out.close()
+    server.stop()
+    spark.stop()
+  }
+}
 
+/** Full second-SparkSession child JVM for PgMetaSpec: restarts over
+  * the shared meta root ([[PgMetaRestart]]) and runs the probe
+  * statements whose answers the parent asserts value-for-value: enum
+  * rendering and declared-order sort, table contents, PK/FK/CHECK
+  * enforcement errors, serial and sequence continuation, pg_indexes/
+  * pg_views/pg_description catalog rows, matview reads. */
+object PgMetaChildMain {
+  def main(args: Array[String]): Unit = {
+    val Array(metaDir, outFile) = args
     val probes = Seq(
       "enum_render" -> "SELECT 'happy'::pmeta_mood",
       "enum_order" -> "SELECT m FROM pmeta_moods ORDER BY m",
@@ -87,9 +99,14 @@ object PgMetaChildMain {
       "seq_listed" ->
         "SELECT sequencename FROM pg_sequences WHERE sequencename LIKE 'pmeta%' ORDER BY 1"
     )
-    val out = new java.io.PrintWriter(outFile)
-    probes.foreach { case (k, sql) => out.println(k + "\t" + run(sql)) }
-    out.close()
-    spark.stop()
+    PgMetaRestart.probe(metaDir, outFile, probes)
   }
+}
+
+/** Child JVM that restarts over the meta root and answers the
+  * statements given after `outFile`, keyed by their position. */
+object PgMetaQueryChild {
+  def main(args: Array[String]): Unit =
+    PgMetaRestart.probe(args(0), args(1), args.drop(2).zipWithIndex.map {
+      case (sql, i) => i.toString -> sql }.toSeq)
 }
